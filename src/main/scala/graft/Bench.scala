@@ -143,20 +143,7 @@ object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    // the graft optimizer rule runs in every harness session, so the
-    // full oracle gate exercises it (see graft.plans.GraftExtensions)
-    spark.experimental.extraOptimizations =
-      spark.experimental.extraOptimizations :+ graft.plans.MaterializeHofDependencies
-    spark.experimental.extraStrategies =
-      spark.experimental.extraStrategies :+ graft.plans.GraftStrategies
+    val spark = GraftSession.local(cpus.toInt)
     OracleCapture.currentDir = Some(sfDir)
     // one tiny action to initialize codegen/scheduler before timing
     spark.range(1000).selectExpr("sum(id)").collect()
@@ -190,88 +177,14 @@ object Bench {
     // prime the probe's codegen, then baseline = min of 3 timed probes
     calibrationProbe(spark)
     val calibBaseline = List.fill(3)(calibrationProbe(spark)).min
-    // Per query: best of 3 back-to-back runs. The host shows multi-second
-    // stalls unrelated to the engine (a 500-row narrow map was observed at
-    // 0.5s and 87s across runs at near-zero CPU pressure; round 2 saw a
-    // query stall in BOTH of 2 runs — 0.29s steady state read as 2.2s), so
-    // min-of-3 reports steady-state throughput instead of host noise.
     // Optional focus filter for local iteration: comma-separated name
     // prefixes, e.g. SPARK_GRAFT_ONLY=q50,q51. Driver runs unfiltered.
     val only = sys.env.get("SPARK_GRAFT_ONLY").map(_.split(",").toSeq)
     val selected = SparkEntry.queries.toSeq.sortBy(_._1).filter { case (n, _) =>
       only.forall(_.exists(n.startsWith))
     }
-    def once(name: String,
-             fn: (SparkSession, String) => org.apache.spark.sql.DataFrame): Double = {
-      val t0 = System.nanoTime()
-      try fn(spark, sfDir).write.format("noop").mode("overwrite").save()
-      catch { case e: Throwable =>
-        System.err.println(s"[bench] $name failed: ${e.getMessage}")
-      }
-      (System.nanoTime() - t0) / 1e9
-    }
-    val timesByName = scala.collection.mutable.LinkedHashMap.empty[String, List[Double]]
-    var calibMax = calibBaseline
-    var resampled = 0
-    selected.grouped(CalibrateEvery).foreach { segment =>
-      segment.foreach { case (name, fn) =>
-        // one untimed warm run first (JMH-style): sample 1 otherwise pays
-        // the query's own codegen-compile + interpreter tier, which the
-        // drift-triggered resamples later beat 2-3x — reading as a "stall"
-        // with no stall anywhere (q04/q73, round-8 drift study). min-of-3
-        // is documented as the STEADY-STATE throughput claim; warming one
-        // run first is what makes that claim true for every query.
-        once(name, fn)
-        var times = List.fill(3)(once(name, fn))
-        // stall guard: when even the best run is slow, take up to two extra
-        // samples — a host stall can span every back-to-back run uniformly
-        // (observed: a 0.96 s query reporting 12 s after one ~40 s stall
-        // covered all three runs, and a 0.29 s query reporting 2.2 s from
-        // two uniform stalls). A genuinely slow query just confirms its
-        // min; the extra cost is bounded to the handful of >2 s queries.
-        var extra = 0
-        while (extra < 2 && times.min > 2.0) {
-          times = once(name, fn) :: times
-          extra += 1
-        }
-        timesByName(name) = times
-      }
-      // segment probe: a drifted probe means the host was loaded while this
-      // segment's queries ran — their mins are suspect, so re-sample each
-      // once after the probe reads clean again (bounded: 3 settle retries)
-      var probe = confirmedProbe(spark, calibBaseline)
-      calibMax = math.max(calibMax, probe)
-      if (probe > DriftLimit * calibBaseline) {
-        var settles = 0
-        while (settles < 3 && probe > DriftLimit * calibBaseline) {
-          Thread.sleep(2000)
-          probe = confirmedProbe(spark, calibBaseline)
-          calibMax = math.max(calibMax, probe)
-          settles += 1
-        }
-        segment.foreach { case (name, fn) =>
-          timesByName(name) = once(name, fn) :: timesByName(name)
-          resampled += 1
-        }
-      }
-    }
-    // min<<median arbitration (round 8): the signature says the samples
-    // DISAGREE — it cannot say whether the min or the medians are the
-    // anomaly. Two fresh samples per flagged query resolve it symmetrically:
-    // if steady state really is the min, the new samples land near it and
-    // the recomputed median follows (flag clears, median now honest); if the
-    // min was the fluke, they land near the median and the flag STANDS.
-    // One pass only — no resample-until-clean.
-    locally {
-      val flagged = timesByName.collect {
-        case (n, ts) if isStalled(ts.min, medianOf(ts)) => n
-      }.toSeq
-      flagged.foreach { n =>
-        val fn = SparkEntry.queries(n)
-        timesByName(n) = once(n, fn) :: once(n, fn) :: timesByName(n)
-      }
-    }
-    val results = timesByName.toSeq
+    val m = measure(spark, sfDir, selected, calibBaseline)
+    val (results, mins, calibMax) = (m.times, m.mins, m.calibMax)
     // Locale.ROOT: the f-interpolator uses the JVM default locale, and a
     // comma-decimal locale would corrupt the JSON line this exists to emit
     def fmt(v: Double): String =
@@ -279,7 +192,6 @@ object Bench {
     def qjson(rs: Seq[(String, Double)]): String =
       rs.map { case (k, v) => "\"" + k + "\":" + fmt(v) }
         .mkString("{", ",", "}")
-    val mins = results.map { case (n, ts) => n -> ts.min }
     // median alongside min (round-5): min is the steady-state throughput
     // claim, but a stall that covers EVERY sample defeats it (r4's committed
     // q107 = 3.97 s vs 1.69 s steady state); min≈median says the samples
@@ -289,11 +201,12 @@ object Bench {
     val stalledNames = mins.zip(medians).collect {
       case ((n, mn), (_, md)) if isStalled(mn, md) => n
     }
-    val total = mins.map(_._2).sum
+    val total = m.total
+    val failedJson = m.failed.map("\"" + _ + "\"").mkString("[", ",", "]")
     val contamination =
       s"""{"stalled_queries":${stalledNames.size},"n_queries":${results.size},""" +
       s""""calib_baseline":${fmt(calibBaseline)},"calib_max":${fmt(calibMax)},""" +
-      s""""calib_drift":${fmt(calibMax / calibBaseline)},"resampled":$resampled,""" +
+      s""""calib_drift":${fmt(calibMax / calibBaseline)},"resampled":${m.resampled},""" +
       s""""stalled":[${stalledNames.map("\"" + _ + "\"").mkString(",")}]}"""
     // The driver stores a bounded TAIL of stdout; at 116+ queries the full
     // per-query map (~3.3 KB) no longer fits it (r3's line arrived
@@ -309,14 +222,15 @@ object Bench {
     // cleaner closing run existed): a run whose OWN contamination block is
     // red must not replace a clean canonical map. "Clean" = calib_drift
     // below CleanDriftLimit AND zero stalled queries — the same bar the
-    // round-close procedure uses. A red run still writes its full map (to
+    // round-close procedure uses — AND no failed lane. A red run still writes its full map (to
     // BENCH_CONTAMINATED.json) so nothing measured is ever discarded, and
     // still prints the stdout line; it just cannot masquerade as canonical
     // while a trustworthy map exists. If the existing canonical map is
     // itself red (or absent/unreadable), the new map replaces it — even a
     // contaminated fresh map beats a stale contaminated one.
-    val runIsClean = isCleanRun(calibMax / calibBaseline, stalledNames.size,
-      calibMax - calibBaseline)
+    val runIsClean = m.failed.isEmpty &&
+      isCleanRun(calibMax / calibBaseline, stalledNames.size,
+        calibMax - calibBaseline)
     val codeFp = codeFingerprint()
     // the canonical map is a measurement AT ONE CORE COUNT: a clean run at
     // a different SPARK_GRAFT_CPUS (the driver's scaling probe runs at 8
@@ -345,7 +259,7 @@ object Bench {
         "BENCH_CONTAMINATED.json"
       } else "BENCH_LATEST.json"
     val full =
-      s"""{"metric":"total","value":${fmt(total)},"unit":"sec","cpus":$cpus,"queries":${qjson(mins)},"medians":${qjson(medians)},"contamination":$contamination,"code":"$codeFp","sf":"$sfDir"}"""
+      s"""{"metric":"total","value":${fmt(total)},"unit":"sec","cpus":$cpus,"queries":${qjson(mins)},"medians":${qjson(medians)},"failed":$failedJson,"contamination":$contamination,"code":"$codeFp","sf":"$sfDir"}"""
     // an unwritable CWD must not discard the measured run: the stdout
     // summary below is the artifact of record either way
     try java.nio.file.Files.writeString(
@@ -376,7 +290,110 @@ object Bench {
       }
     }
     val slowest = mins.sortBy(-_._2).take(12)
-    println(s"""{"metric":"total","value":${fmt(total)},"unit":"sec","cpus":$cpus,"n_queries":${results.size},"queries_shown":${slowest.size},"queries":${qjson(slowest)},"contamination":$contamination,"full":"$outFile","sf":"$sfDir"}""")
+    println(s"""{"metric":"total","value":${fmt(total)},"unit":"sec","cpus":$cpus,"n_queries":${results.size},"queries_shown":${slowest.size},"queries":${qjson(slowest)},"failed":$failedJson,"contamination":$contamination,"full":"$outFile","sf":"$sfDir"}""")
     spark.stop()
+    // a failed lane fails the run, after its map and line are written
+    if (m.failed.nonEmpty) sys.exit(1)
+  }
+
+  type Lane = (SparkSession, String) => org.apache.spark.sql.DataFrame
+
+  /** One noop-sink run of a lane: its elapsed seconds, or None when it
+    * threw. A failed run yields no time at all — a lane that crashes must
+    * never read as a fast lane. */
+  def once(spark: SparkSession, dir: String, name: String, fn: Lane)
+      : Option[Double] = {
+    val t0 = System.nanoTime()
+    try {
+      fn(spark, dir).write.format("noop").mode("overwrite").save()
+      Some((System.nanoTime() - t0) / 1e9)
+    } catch { case e: Throwable =>
+      System.err.println(s"[bench] $name failed: ${e.getMessage}")
+      None
+    }
+  }
+
+  /** Samples per lane (lanes that never failed), the lanes that failed in
+    * any run, and the calibration record of the measuring pass. */
+  final case class Measured(times: Seq[(String, List[Double])],
+                            failed: Seq[String], calibMax: Double,
+                            resampled: Int) {
+    val mins: Seq[(String, Double)] = times.map { case (n, ts) => n -> ts.min }
+    /** Suite total over the lanes that succeeded; failed lanes add nothing. */
+    def total: Double = mins.map(_._2).sum
+  }
+
+  /** Sample every selected lane against `dir`.
+    *
+    * Per query: best of 3 back-to-back runs. The host shows multi-second
+    * stalls unrelated to the engine (a 500-row narrow map was observed at
+    * 0.5s and 87s across runs at near-zero CPU pressure; round 2 saw a
+    * query stall in BOTH of 2 runs — 0.29s steady state read as 2.2s), so
+    * min-of-3 reports steady-state throughput instead of host noise. A
+    * lane that throws in ANY run (warm, sample or re-sample) drops its
+    * samples and is reported under `failed` instead. */
+  def measure(spark: SparkSession, dir: String, selected: Seq[(String, Lane)],
+              calibBaseline: Double): Measured = {
+    val timesByName = scala.collection.mutable.LinkedHashMap.empty[String, List[Double]]
+    val failed = scala.collection.mutable.LinkedHashSet.empty[String]
+    def sample(name: String, fn: Lane): Unit =
+      if (!failed(name)) once(spark, dir, name, fn) match {
+        case Some(t) => timesByName(name) = t :: timesByName.getOrElse(name, Nil)
+        case None => failed += name; timesByName -= name
+      }
+    var calibMax = calibBaseline
+    var resampled = 0
+    selected.grouped(CalibrateEvery).foreach { segment =>
+      segment.foreach { case (name, fn) =>
+        // one untimed warm run first (JMH-style): sample 1 otherwise pays
+        // the query's own codegen-compile + interpreter tier, which the
+        // drift-triggered resamples later beat 2-3x — reading as a "stall"
+        // with no stall anywhere (q04/q73, round-8 drift study). min-of-3
+        // is documented as the STEADY-STATE throughput claim; warming one
+        // run first is what makes that claim true for every query.
+        if (once(spark, dir, name, fn).isEmpty) failed += name
+        for (_ <- 1 to 3) sample(name, fn)
+        // stall guard: when even the best run is slow, take up to two extra
+        // samples — a host stall can span every back-to-back run uniformly
+        // (observed: a 0.96 s query reporting 12 s after one ~40 s stall
+        // covered all three runs, and a 0.29 s query reporting 2.2 s from
+        // two uniform stalls). A genuinely slow query just confirms its
+        // min; the extra cost is bounded to the handful of >2 s queries.
+        var extra = 0
+        while (extra < 2 && timesByName.get(name).exists(_.min > 2.0)) {
+          sample(name, fn)
+          extra += 1
+        }
+      }
+      // segment probe: a drifted probe means the host was loaded while this
+      // segment's queries ran — their mins are suspect, so re-sample each
+      // once after the probe reads clean again (bounded: 3 settle retries)
+      var probe = confirmedProbe(spark, calibBaseline)
+      calibMax = math.max(calibMax, probe)
+      if (probe > DriftLimit * calibBaseline) {
+        var settles = 0
+        while (settles < 3 && probe > DriftLimit * calibBaseline) {
+          Thread.sleep(2000)
+          probe = confirmedProbe(spark, calibBaseline)
+          calibMax = math.max(calibMax, probe)
+          settles += 1
+        }
+        segment.foreach { case (name, fn) =>
+          if (!failed(name)) { sample(name, fn); resampled += 1 }
+        }
+      }
+    }
+    // min<<median arbitration (round 8): the signature says the samples
+    // DISAGREE — it cannot say whether the min or the medians are the
+    // anomaly. Two fresh samples per flagged query resolve it symmetrically:
+    // if steady state really is the min, the new samples land near it and
+    // the recomputed median follows (flag clears, median now honest); if the
+    // min was the fluke, they land near the median and the flag STANDS.
+    // One pass only — no resample-until-clean.
+    val lanes = selected.toMap
+    timesByName.collect {
+      case (n, ts) if isStalled(ts.min, medianOf(ts)) => n
+    }.toSeq.foreach { n => sample(n, lanes(n)); sample(n, lanes(n)) }
+    Measured(timesByName.toSeq, failed.toSeq, calibMax, resampled)
   }
 }

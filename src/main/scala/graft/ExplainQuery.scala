@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Plan-inspection harness: print a contract query's EXECUTED plan against
   * any data directory, optionally after warming the session caches the way
   * a steady-state run would (`warm`), so cold-vs-warm plan diffs — the
@@ -24,20 +22,8 @@ object ExplainQuery {
     val (names, dir) = (args(0).split(",").toSeq.filter(_.nonEmpty), args(1))
     val warm = args.contains("warm")
     val formatted = args.contains("formatted")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_PARTS", cpus))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    spark.experimental.extraOptimizations =
-      spark.experimental.extraOptimizations :+ graft.plans.MaterializeHofDependencies
-    spark.experimental.extraStrategies =
-      spark.experimental.extraStrategies :+ graft.plans.GraftStrategies
+    val spark = GraftSession.local(
+      sys.env.getOrElse("SPARK_GRAFT_CPUS", "8").toInt, logLevel = "ERROR")
     for (name <- names) {
       val q = SparkEntry.queries(name)
       if (warm) {

@@ -126,15 +126,11 @@ object GraftApp {
   def main(args: Array[String]): Unit = {
     val cfg = parseArgs(args.toList, Config())
     if (cfg.help) { println(HelpText); return } // clap prints help and exits 0
-    val spark = SparkSession.builder()
-      .master(sys.env.getOrElse("SPARK_MASTER", "local[*]"))
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    // the master is a deployment setting, not the partition count
+    val spark = GraftSession.local(
+      sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt,
+      conf = Map("spark.master" ->
+        sys.env.getOrElse("SPARK_MASTER", "local[*]")))
     try cfg.predict match {
       case Some(p) => runPredictionMode(spark, cfg, p)
       case None => runFullPipeline(spark, cfg)

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Plan-quality audit: prints the formatted physical plan for each headline
   * query and greps it for the properties that matter at 100 TB —
   * parquet filter pushdown, column-pruned scans, broadcast joins where a
@@ -57,20 +55,8 @@ object PlanAudit {
 
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.001")
-    val spark = SparkSession.builder()
-      .master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    // the graft optimizer rule runs in every harness session, so the
-    // full oracle gate exercises it (see graft.plans.GraftExtensions)
-    spark.experimental.extraOptimizations =
-      spark.experimental.extraOptimizations :+ graft.plans.MaterializeHofDependencies
-    spark.experimental.extraStrategies =
-      spark.experimental.extraStrategies :+ graft.plans.GraftStrategies
+    // 8 cores whatever the host: the expectations assume 8 partitions
+    val spark = GraftSession.local(8, logLevel = "ERROR")
 
     // (substring, mustBePresent) — checked on the pre-execution physical
     // plan (AQE may still improve joins at runtime; codegen stages only

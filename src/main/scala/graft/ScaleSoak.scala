@@ -162,25 +162,14 @@ object ScaleSoak {
     val outDir = java.nio.file.Paths
       .get(if (args.length > 1) args(1) else "/tmp/graft_sf1").toString
     val factor = sys.env.getOrElse("SPARK_GRAFT_SOAK_FACTOR", "10").toInt
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      // zstd shuffle/spill blocks (~2x lz4's ratio): the ×100 soak's
-      // shuffle-heavy lanes (q115's edge self-join) otherwise exceed this
-      // single box's disk — a weak-scaled cluster adds disk per node, one
-      // box does not. Both scales run the same codec, so the exponent is
-      // codec-neutral; raw times shift slightly vs the lz4 bench map.
-      .config("spark.io.compression.codec", "zstd")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    spark.experimental.extraOptimizations =
-      spark.experimental.extraOptimizations :+ graft.plans.MaterializeHofDependencies
-    spark.experimental.extraStrategies =
-      spark.experimental.extraStrategies :+ graft.plans.GraftStrategies
+    // zstd shuffle/spill blocks (~2x lz4's ratio): the ×100 soak's
+    // shuffle-heavy lanes (q115's edge self-join) otherwise exceed this
+    // single box's disk — a weak-scaled cluster adds disk per node, one
+    // box does not. Both scales run the same codec, so the exponent is
+    // codec-neutral; raw times shift slightly vs the lz4 bench map.
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
+    val spark = GraftSession.local(cpus,
+      conf = Map("spark.io.compression.codec" -> "zstd"))
 
     // rebuild unless a COMPLETE build of the SAME factor is present: the
     // marker is written last, so a crashed partial build (or a dataset
@@ -196,17 +185,11 @@ object ScaleSoak {
         .filter(_.getName.startsWith("_SOAK_FACTOR_")).foreach(_.delete())
       System.err.println(s"[soak] building ${factor}x dataset at $outDir ...")
       buildScaled(spark, srcDir, outDir, factor)
-      // derived write-once layouts are keyed by the SOURCE DIR STRING, so
-      // a rebuild at a new factor must invalidate them or q130/q284-class
-      // lanes silently scan the previous factor's layout (the same
-      // A-then-B staleness the _SOAK_FACTOR_ markers prevent above)
-      graft.operators.Layout.invalidateClusteredOrders(outDir)
-      graft.operators.PartitionedEvents.invalidateLayout(outDir)
+      // the source fingerprints would re-stage every derived layout and
+      // stream feed anyway; dropping them up front frees the previous
+      // factor's disk and its bucketed catalog entries
       graft.operators.Staging.invalidate(spark, outDir)
       graft.streaming.EventStreams.invalidateStaged(outDir)
-      graft.sources.SchemaEvolution.invalidateStage(outDir)
-      graft.sources.OrcInterchange.invalidateStage(outDir)
-      graft.operators.Bucketing.invalidateStage(spark, outDir)
       marker.createNewFile()
     }
 
@@ -296,8 +279,8 @@ object ScaleSoak {
       def measure(): (Double, Double, Double, Double) = {
         resetCaches()
         sys.props("graft.stream.part.scale") = "1"
-        val f1 = timeOne(spark, name, srcDir, cpus.toInt)
-        val s1 = timeOne(spark, name, srcDir, cpus.toInt)
+        val f1 = timeOne(spark, name, srcDir, cpus)
+        val s1 = timeOne(spark, name, srcDir, cpus)
         resetCaches()
         // streaming lanes pin their own state-partition counts through
         // runToBatch — scale them with the data like the batch shuffle
@@ -306,14 +289,14 @@ object ScaleSoak {
         // the snapshot bytes (Dedup.shingleBuckets), so the x10 dataset
         // gets ~10x the buckets automatically
         sys.props("graft.stream.part.scale") = factor.toString
-        val f10 = timeOne(spark, name, outDir, cpus.toInt * factor)
+        val f10 = timeOne(spark, name, outDir, cpus * factor)
         // at ×100 the first run's shuffle files (still referenced until a
         // GC lets the async cleaner drop them) plus the steady run's peak
         // can exceed a single box's disk — drain between runs. The ×10
         // protocol is unchanged (keeps r13/r14 sweep comparability);
         // steady stays warm: CacheRegistry frames are strongly held.
         if (factor > 10) { System.gc(); Thread.sleep(300); System.gc() }
-        val s10 = timeOne(spark, name, outDir, cpus.toInt * factor)
+        val s10 = timeOne(spark, name, outDir, cpus * factor)
         (f1, s1, f10, s10)
       }
       var (f1, s1, f10, s10) = measure()

@@ -1,26 +1,12 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    // the graft optimizer rule runs in every harness session, so the
-    // full oracle gate exercises it (see graft.plans.GraftExtensions)
-    spark.experimental.extraOptimizations =
-      spark.experimental.extraOptimizations :+ graft.plans.MaterializeHofDependencies
-    spark.experimental.extraStrategies =
-      spark.experimental.extraStrategies :+ graft.plans.GraftStrategies
+    val spark = GraftSession.local(
+      sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt)
     new java.io.File(outDir).mkdirs()
     // pin the run's dir so dynamically built oracles (literal centroids,
     // sketch estimates) select THIS run's captures — see graft.OracleCapture

@@ -16,54 +16,14 @@ import org.apache.spark.sql.functions._
   * fact table per query and never shuffling it again — the standard layout
   * for a fact table queried daily against the same dimension key.
   *
-  * Tables are written through the session catalog (plain parquet source +
-  * bucket metadata — no Hive needed) to an explicit tmp path, once per
-  * (session, dir); re-registration in a fresh session overwrites cleanly.
+  * Both tables are [[Staging.preparedBucketed]] layouts: written through
+  * the session catalog (plain parquet source + bucket metadata — no Hive
+  * needed) once per source build, re-registered over the same files in a
+  * fresh session.
   */
 object Bucketing {
 
   private val Buckets = 8
-
-  private def ensureBucketed(spark: SparkSession, name: String,
-                             df: => DataFrame, key: String): Unit = {
-    val path = java.nio.file.Paths.get(sys.props("java.io.tmpdir"), name)
-    // the catalog entry alone is not proof the data survived: tmp may have
-    // been cleaned (or a prior write died mid-way) while the entry persists
-    // — verify the backing files exist and contain at least one data file,
-    // else drop and rewrite
-    def backingFilesOk: Boolean =
-      java.nio.file.Files.isDirectory(path) && {
-        val ls = path.toFile.listFiles()
-        ls != null && ls.exists(f => f.getName.endsWith(".parquet") ||
-          f.getName.startsWith("part-"))
-      }
-    if (spark.catalog.tableExists(name) && !backingFilesOk)
-      spark.sql(s"DROP TABLE IF EXISTS $name")
-    if (!spark.catalog.tableExists(name)) {
-      df.write.mode("overwrite").format("parquet")
-        .option("path", path.toString)
-        .bucketBy(Buckets, key).sortBy(key)
-        .saveAsTable(name)
-    }
-  }
-
-  /** Drop the bucketed catalog tables + backing files for `dir` — for
-    * callers that rebuild the source tables under an existing dir string
-    * (ScaleSoak factor rebuilds); the catalog entry would otherwise serve
-    * the previous build's buckets. */
-  private[graft] def invalidateStage(spark: SparkSession, dir: String): Unit = {
-    val tag = graft.streaming.EventStreams.sanitize(dir)
-    def rm(f: java.io.File): Unit = {
-      Option(f.listFiles()).foreach(_.foreach(rm)); f.delete(); ()
-    }
-    Seq(s"graft_bkt_purchases_$tag", s"graft_bkt_customer_$tag").foreach {
-      name =>
-        spark.sql(s"DROP TABLE IF EXISTS $name")
-        val p = java.nio.file.Paths.get(sys.props("java.io.tmpdir"), name)
-          .toFile
-        if (p.exists()) rm(p)
-    }
-  }
 
   /** q151 — purchase revenue by market segment through BUCKETED tables:
     * events (purchases, long-cents) and customer are both written bucketed
@@ -77,20 +37,19 @@ object Bucketing {
     * exactly what the pin catches. Result is identical to the plain join
     * (the oracle), so correctness and layout are gated together. */
   def bucketedSegmentAgg(spark: SparkSession, dir: String): DataFrame = {
-    val tag = graft.streaming.EventStreams.sanitize(dir)
-    val evName = s"graft_bkt_purchases_$tag"
-    val custName = s"graft_bkt_customer_$tag"
-    ensureBucketed(spark, evName,
+    val purchases = Staging.preparedBucketed(spark, "bkt_purchases", dir,
+        Buckets, "user_id", sourceTable = "events") {
       Tables.events(spark, dir)
         .filter(col("event_type") === "purchase")
-        .select(col("user_id"), Rfm.cents(col("value")).as("v_c")),
-      "user_id")
-    ensureBucketed(spark, custName,
+        .select(col("user_id"), Rfm.cents(col("value")).as("v_c"))
+    }
+    val customers = Staging.preparedBucketed(spark, "bkt_customer", dir,
+        Buckets, "c_custkey", sourceTable = "customer") {
       Tables.customer(spark, dir)
-        .select(col("c_custkey"), col("c_mktsegment")),
-      "c_custkey")
-    spark.table(evName)
-      .join(spark.table(custName).hint("merge"),
+        .select(col("c_custkey"), col("c_mktsegment"))
+    }
+    purchases
+      .join(customers.hint("merge"),
         col("user_id") === col("c_custkey"))
       .groupBy(col("c_mktsegment"))
       .agg(count(lit(1)).as("n"), sum(col("v_c")).as("value_cents"))

@@ -92,12 +92,6 @@ object Forget {
   /** The q303/q304 forget cohort, shared across source tables. */
   private def keepCond(key: String) = col(key) % 97 =!= 0
 
-  /** Profiling accessor for [[Scratch]] — stages the q306 sandbox/kept
-    * snapshot exactly as [[cascadeAudit]] does. */
-  private[operators] def debugStage(spark: SparkSession, dir: String,
-                                    keep: Boolean): String =
-    stageSnapshot(spark, dir, if (keep) "fc_sandbox" else "fc_kept", keep)
-
   /** Stage a (documents + embeddings) snapshot dir, marker-gated on BOTH
     * real source fingerprints — the two-table twin of Dedup's
     * stageCorpusSubset scaffold. */

@@ -262,23 +262,6 @@ object Layout {
 
   // ---------------------------------------------------------------- q284
 
-  /** Deterministic per-source location of the date-clustered orders
-    * layout, keyed by the FULL sanitized source path (the
-    * [[graft.streaming.EventStreams.sanitize]] discipline every other
-    * staged artifact uses) — a hashCode key could collide across two
-    * dataset dirs and silently serve the wrong clustered layout behind
-    * the `_SUCCESS` gate. Paths.get-normalized first so a trailing slash
-    * cannot split one source across two keys. */
-  private def clusteredOrdersPath(dir: String): java.io.File = {
-    val canon = java.nio.file.Paths.get(dir).toString
-    // v2: the clustered column became DATE (NTZ stats don't prune) — the
-    // version suffix keys the layout so a v1 _SUCCESS dir is never reused
-    new java.io.File(sys.props("java.io.tmpdir"),
-      s"graft-orders-by-date-v2-${graft.streaming.EventStreams.sanitize(canon)}")
-  }
-
-  private val clusterLock = new Object
-
   /** Number of range buckets in the clustered layout — at sf0.1's ~80
     * months of orders this is ~3.3 months of data per file/row-group, so
     * zone stats stay selective; at 100 TB the same ratio holds because
@@ -286,43 +269,26 @@ object Layout {
     * constant. */
   private val ClusterBuckets = 24
 
-  /** Write-once date-clustered copy of `orders` (round-10 verdict item 3 —
-    * ACT on the q278 audit): `repartitionByRange` + `sortWithinPartitions`
-    * on `o_orderdate`, so every output file covers one contiguous date
-    * slice and its parquet row-group min/max stats are tight on exactly
-    * the column q278 measured as layout-correlated. The `_SUCCESS` marker
-    * gates a complete write (q130/q249's staging discipline); the fixture
-    * tables are immutable per SF, so the layout is reused across
-    * sessions. */
+  /** Date-clustered copy of `orders` (round-10 verdict item 3 — ACT on
+    * the q278 audit): `repartitionByRange` + `sortWithinPartitions` on
+    * `o_orderdate`, so every output file covers one contiguous date slice
+    * and its parquet row-group min/max stats are tight on exactly the
+    * column q278 measured as layout-correlated. Staged once per source
+    * build through [[Staging.stage]]. */
   def clusteredOrdersDir(spark: SparkSession, dir: String): String =
-    clusterLock.synchronized {
-      val path = clusteredOrdersPath(dir)
-      if (!new java.io.File(path, "_SUCCESS").exists()) {
-        // the clustered column is stored as DATE, not TIMESTAMP_NTZ:
-        // measured on Spark 4.1's vectorized reader, NTZ min/max stats do
-        // NOT drive row-group skipping (the pushed filter shows in the
-        // plan but every group is decoded), while DATE stats prune as
-        // documented — and a day-grained order date is a DATE anyway
-        Tables.orders(spark, dir)
-          .withColumn("o_orderdate", to_date(col("o_orderdate")))
-          .repartitionByRange(ClusterBuckets, col("o_orderdate"))
-          .sortWithinPartitions(col("o_orderdate"))
-          .write.mode("overwrite").parquet(path.toString)
-      }
-      path.toString
-    }
-
-  /** Drop the clustered layout for `dir` — callers that REBUILD the
-    * source tables under an existing dir string (ScaleSoak's factor
-    * rebuilds) must invalidate or the _SUCCESS gate would serve the
-    * previous build's layout. */
-  private[graft] def invalidateClusteredOrders(dir: String): Unit =
-    clusterLock.synchronized {
-      def rm(f: java.io.File): Unit = {
-        Option(f.listFiles()).foreach(_.foreach(rm)); f.delete(); ()
-      }
-      val p = clusteredOrdersPath(dir)
-      if (p.exists()) rm(p)
+    // v2: the clustered column became DATE (NTZ stats don't prune)
+    Staging.stage("orders_by_date", dir, sourceTable = "orders",
+        version = "v2") { p =>
+      // the clustered column is stored as DATE, not TIMESTAMP_NTZ:
+      // measured on Spark 4.1's vectorized reader, NTZ min/max stats do
+      // NOT drive row-group skipping (the pushed filter shows in the
+      // plan but every group is decoded), while DATE stats prune as
+      // documented — and a day-grained order date is a DATE anyway
+      Tables.orders(spark, dir)
+        .withColumn("o_orderdate", to_date(col("o_orderdate")))
+        .repartitionByRange(ClusterBuckets, col("o_orderdate"))
+        .sortWithinPartitions(col("o_orderdate"))
+        .write.mode("overwrite").parquet(p)
     }
 
   /** The q278 date predicate, verbatim — the one the audit said skips

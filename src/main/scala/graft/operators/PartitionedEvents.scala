@@ -20,40 +20,13 @@ import org.apache.spark.sql.types._
   */
 object PartitionedEvents {
 
-  /** Deterministic per-source location of the partitioned layout. */
-  private def layoutPath(dir: String): java.io.File =
-    new java.io.File(sys.props("java.io.tmpdir"),
-      s"graft-events-by-day-${Integer.toHexString(dir.hashCode)}")
-
-  private val writeLock = new Object
-
-  /** Write-once Hive-layout date-partitioned copy of `events`. The layout
-    * is keyed by the source dir and reused across sessions of this machine
-    * (the fixture tables are driver-generated and immutable per SF); the
-    * `_SUCCESS` marker gates a complete write. */
+  /** The Hive-layout date-partitioned copy of `events`, staged once per
+    * source build through [[Staging.stage]]. */
   def partitionedEventsDir(spark: SparkSession, dir: String): String =
-    writeLock.synchronized {
-      val path = layoutPath(dir)
-      if (!new java.io.File(path, "_SUCCESS").exists()) {
-        Tables.events(spark, dir)
-          .withColumn("event_date", to_date(col("ts").cast(TimestampType)))
-          .write.mode("overwrite").partitionBy("event_date")
-          .parquet(path.toString)
-      }
-      path.toString
-    }
-
-  /** Drop the partitioned layout for `dir` — for callers that rebuild the
-    * source tables under an existing dir string (ScaleSoak factor
-    * rebuilds); the `_SUCCESS` gate would otherwise serve the previous
-    * build's layout. */
-  private[graft] def invalidateLayout(dir: String): Unit =
-    writeLock.synchronized {
-      def rm(f: java.io.File): Unit = {
-        Option(f.listFiles()).foreach(_.foreach(rm)); f.delete(); ()
-      }
-      val p = layoutPath(dir)
-      if (p.exists()) rm(p)
+    Staging.stage("events_by_day", dir, sourceTable = "events") { p =>
+      Tables.events(spark, dir)
+        .withColumn("event_date", to_date(col("ts").cast(TimestampType)))
+        .write.mode("overwrite").partitionBy("event_date").parquet(p)
     }
 
   /** The partitioned read — `event_date` comes back as a typed DATE

@@ -2,51 +2,56 @@ package graft.operators
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
-/** Write-once, marker-gated PARQUET staging for prepared derived tables —
-  * the persistent-artifact twin of [[graft.CacheRegistry]] (round-11
-  * verdict item 1, generalizing the q284 `Layout.clusteredOrdersDir`
-  * discipline to the dedup signature artifacts).
+/** The repo's one tier of prepared on-disk artifacts: every write-once
+  * layout derived from a source table is staged here, under one freshness
+  * rule, one lock and one invalidator.
   *
-  * Why this exists: the shingle inverted index and the MinHash/SimHash
-  * signature tables are INDEX ARTIFACTS — a production corpus pipeline
-  * builds each once per corpus snapshot and persists it beside the data;
-  * every consumer (the near-dup joins, the calibration audits, the routed
-  * dedup pass) then SCANS the prepared table. Session caching approximated
-  * that dataflow but kept paying the build once per session AND exposed
-  * multi-read lanes to deserialized-columnar-cache thrash (the ×10 soak
-  * measured repeated cache reads at 4–8× the cost of a parquet re-scan on
-  * q261's four-reference shingle plan). A staged parquet layout gives
-  * every reference a plan-native columnar scan with honest file-size
-  * statistics, pushdown, and pruning — the exact physical shape the
-  * 100 TB deployment would have.
+  * What it holds, all keyed by (source dir, artifact name):
+  *  - the corpus index artifacts — the shingle inverted index, MinHash /
+  *    SimHash signature tables, gram and ANN layouts — as plain or
+  *    bucketed parquet ([[prepared]], [[preparedBucketed]]), with the
+  *    append / delete / compact lifecycle a production index pipeline
+  *    runs on them;
+  *  - the physical-layout lanes' copies, written by a caller-supplied
+  *    writer through [[stage]] (or [[prepared]], which is built on it):
+  *    the date-partitioned events (q130), the
+  *    ORC lineitem (q234), the two-generation evolved orders (q249), the
+  *    date-clustered orders (q284), the Z-ordered orders (q290), and
+  *    q151's two bucketed tables;
+  *  - model constants such as PQ codebooks and IVF centroids, as small
+  *    text artifacts ([[preparedText]]).
   *
-  * Freshness: gated by Spark's own `_SUCCESS` plus a `_GRAFT_FP` marker
-  * recording BOTH a builder-version tag and a cheap fingerprint of the
-  * SOURCE table (file count, total bytes, newest mtime — the
-  * [[graft.streaming.EventStreams]] staging discipline). The source
-  * fingerprint catches a source dir rebuilt in place (ScaleSoak factor
-  * rebuilds, spec fixtures reusing a tmp path); the version tag catches
-  * the OTHER staleness axis — a change to the staged BUILDER's logic
-  * (shingle k, signature basis, Z-order interleave), which the source
-  * bytes cannot see (round-12 advice: the staleness class that forced the
-  * '-v2' suffix on `Layout.clusteredOrdersPath`). Every builder call site
-  * passes its own version string and bumps it when its logic changes.
+  * Deliberately outside it: the [[graft.CacheRegistry]] RAM memos (their
+  * life is one session, not one source build); the streaming feed copies
+  * and checkpoint roots of [[graft.streaming.EventStreams]] and
+  * [[graft.streaming.CdcApply]], which a file-stream source must read
+  * from a directory of its own; and the `_GRAFT_BASE` sandboxes of
+  * [[Forget]] and [[Dedup]], which are staged SOURCE snapshots that the
+  * tier then derives layouts from.
+  *
+  * Freshness: a layout is live when Spark's `_SUCCESS`, at least one
+  * `part-*` data file, and a `_GRAFT_FP` marker equal to
+  * `version|extraFp|source fingerprint` (plus the bucket spec for a
+  * bucketed layout) are all present. The source
+  * fingerprint ([[fingerprintOf]]: file count, bytes, newest mtime and a
+  * listing hash) catches a source rebuilt in place with no explicit
+  * invalidation; the caller's `version` catches a change to the writer's
+  * logic, which the source bytes cannot see; `extraFp` chains a derived
+  * layout to its upstream artifact ([[artifactFingerprint]]).
   *
   * Concurrency: a JVM-local lock serializes in-process callers, and a
   * `FileChannel` lock on the per-source root serializes PROCESSES sharing
-  * the same tmpdir (an `sbt test` and a Bench run side by side — round-12
-  * advice). Layouts publish ATOMICALLY: the build writes into a `.__build`
-  * sibling, the marker is written inside it, and one directory rename
-  * flips the layout live — a reader that re-enters the gate never sees a
-  * half-written layout (a frame already mid-scan across the flip keeps
-  * reading the old inode's files on POSIX).
+  * the same tmpdir. Layouts publish ATOMICALLY: the writer fills a
+  * `.__build` sibling, the marker is written inside it, and one directory
+  * rename flips the layout live, so a reader never sees a half-written
+  * layout (a frame already mid-scan across the flip keeps reading the old
+  * inode's files on POSIX).
   *
   * Layouts live under `graft_prepared/<sanitized canonical source
-  * dir>/<artifact name>` in `java.io.tmpdir` — the HARNESS location, not
-  * the architecture: production persists these beside the corpus snapshot
-  * (same bucket/prefix), which is what keying by source dir models. The
-  * per-source key is the FULL sanitized path — never a hashCode — and
-  * invalidation removes exactly one source's subtree.
+  * dir>/<artifact name>` in `java.io.tmpdir` — the harness location;
+  * production persists them beside the corpus snapshot, which is what
+  * keying by source dir models. [[invalidate]] removes exactly one
+  * source's subtree (and its bucketed catalog entries).
   */
 object Staging {
 
@@ -208,9 +213,19 @@ object Staging {
     val marker = new java.io.File(root, "_GRAFT_FP")
     new java.io.File(root, "_SUCCESS").exists() &&
       marker.exists() &&
-      Option(root.listFiles()).exists(_.exists(f =>
-        f.getName.startsWith("part-") && f.getName.endsWith(".parquet"))) &&
+      hasDataFile(root) &&
       java.nio.file.Files.readString(marker.toPath) == fp
+  }
+
+  /** A `part-*` data file anywhere under `dir` — parquet or ORC, flat or
+    * Hive-partitioned. A flat layout answers from the root listing alone;
+    * only a layout with no root-level data descends into its partition
+    * directories, so a gate hit on a flat layout lists exactly once. */
+  private def hasDataFile(dir: java.io.File): Boolean = {
+    val ls = Option(dir.listFiles()).getOrElse(Array.empty[java.io.File])
+    ls.exists(_.getName.startsWith("part-")) ||
+      ls.exists(c => !c.getName.startsWith("_") &&
+        !c.getName.startsWith(".") && c.isDirectory && hasDataFile(c))
   }
 
   /** Atomic publish: `write` builds into a `.__build` sibling, the marker
@@ -226,36 +241,47 @@ object Staging {
     require(tmp.renameTo(root), s"atomic layout publish failed: $tmp -> $root")
   }
 
-  /** Get-or-build the staged parquet layout `name` derived from
-    * `$dir/$sourceTable.parquet`, returning a frame that READS the staged
-    * files (fresh leaf statistics per call — never a lineage into the
-    * build plan). `build` runs at most once per (source build, builder
-    * version, name): first caller pays one parquet write, every later
-    * reference is a plain columnar scan. Bump `version` whenever the
-    * BUILDER's logic changes — the source fingerprint cannot see that. */
-  def prepared(spark: SparkSession, name: String, dir: String,
-               sourceTable: String = "documents", version: String = "v1",
-               extraFp: String = "")
-              (build: => DataFrame): DataFrame = {
+  /** The tier's one primitive: get-or-build the staged layout `name`
+    * derived from `$dir/$sourceTable.parquet` and return its path. On a
+    * miss, `write` receives an empty build directory and must leave a
+    * complete layout there (Spark's `_SUCCESS` plus at least one `part-*`
+    * file, in any format or partitioning); the layout is then published
+    * atomically. `write` runs at most once per (source build, builder
+    * version, name). Bump `version` whenever the writer's logic changes —
+    * the source fingerprint cannot see that. */
+  def stage(name: String, dir: String, sourceTable: String = "documents",
+            version: String = "v1", extraFp: String = "")
+           (write: String => Unit): String = {
     val root = new java.io.File(sourceRoot(dir), name)
     locked(dir) {
       val fp = s"$version|$extraFp|${fingerprint(dir, sourceTable)}"
-      if (!layoutOk(root, fp))
-        publish(root, fp)(p => build.write.mode("overwrite").parquet(p))
+      if (!layoutOk(root, fp)) publish(root, fp)(write)
     }
-    readLayoutCached(spark, root)
+    root.toString
   }
+
+  /** [[stage]] a parquet layout written from `build`, returning a frame
+    * that READS the staged files (fresh leaf statistics per call — never
+    * a lineage into the build plan): the first caller pays one parquet
+    * write, every later reference is a plain columnar scan. */
+  def prepared(spark: SparkSession, name: String, dir: String,
+               sourceTable: String = "documents", version: String = "v1",
+               extraFp: String = "")
+              (build: => DataFrame): DataFrame =
+    readLayoutCached(spark, new java.io.File(
+      stage(name, dir, sourceTable, version, extraFp)(p =>
+        build.write.mode("overwrite").parquet(p))))
 
   /** Get-or-build a staged layout WITH bucket metadata: written through
     * the session catalog as `bucketBy(buckets, bucketCol)` +
     * `sortBy(bucketCol)` parquet, so every equi-join or aggregation on
     * `bucketCol` between readers of this layout runs WITHOUT a live
     * exchange on the staged side — the shuffle moved to write time, once
-    * per corpus snapshot (the [[Bucketing]] q151 discipline applied to
-    * index artifacts; round-12 verdict item 2). On a fresh session whose
-    * catalog lost the entry but whose files survived, the table is
-    * re-registered over the existing files with the same bucket DDL —
-    * bucket ids live in the file names, so no rewrite is needed. */
+    * per corpus snapshot (q151's [[Bucketing]] join and the index
+    * artifacts both rely on it; round-12 verdict item 2). On a fresh
+    * session whose catalog lost the entry but whose files survived, the
+    * table is re-registered over the existing files with the same bucket
+    * DDL — bucket ids live in the file names, so no rewrite is needed. */
   def preparedBucketed(spark: SparkSession, name: String, dir: String,
                        buckets: Int, bucketCol: String,
                        sourceTable: String = "documents",

@@ -1,7 +1,7 @@
 package graft.sources
 
 import graft.Tables
-import graft.operators.Rfm
+import graft.operators.{Rfm, Staging}
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -16,7 +16,7 @@ import org.apache.spark.sql.functions._
   * scan-side economics (read only the projected columns' stripes, skip
   * stripes by min/max on the pushed predicate) are identical. The q234
   * contract gates BOTH fidelity and those economics: lineitem is staged to
-  * ORC once per (session, dir), read BACK through the ORC reader with a
+  * ORC once per source build, read BACK through the ORC reader with a
   * selective predicate, and aggregated; the oracle computes the same
   * aggregate from the original parquet in DuckDB — any loss, widening, or
   * reorder introduced by the ORC round-trip (timestamp affinity, decimal
@@ -27,43 +27,15 @@ import org.apache.spark.sql.functions._
   */
 object OrcInterchange {
 
-  /** Stage lineitem's aggregation columns as an ORC dataset under tmp, once
-    * per (session, dir) — same write-once discipline as
-    * [[graft.operators.Bucketing]]: a stale-path check guards against tmp
-    * cleanup, and the staged files carry a `_SUCCESS` marker so a
-    * half-dead prior write is rewritten, not trusted. */
-  /** Drop the staged ORC dataset for `dir` — for callers that rebuild the
-    * source tables under an existing dir string (ScaleSoak factor
-    * rebuilds); the marker would otherwise serve the previous build. */
-  private[graft] def invalidateStage(dir: String): Unit = this.synchronized {
-    val tag = graft.streaming.EventStreams.sanitize(dir)
-    def rm(f: java.io.File): Unit = {
-      Option(f.listFiles()).foreach(_.foreach(rm)); f.delete(); ()
+  /** Lineitem's aggregation columns as an ORC dataset, staged once per
+    * source build through [[Staging.stage]]. */
+  private[graft] def ensureOrcStage(spark: SparkSession, dir: String): String =
+    Staging.stage("orc_lineitem", dir, sourceTable = "lineitem") { p =>
+      Tables.lineitem(spark, dir)
+        .select(col("l_orderkey"), col("l_returnflag"), col("l_quantity"),
+          Rfm.cents(col("l_extendedprice")).as("price_cents"))
+        .write.mode("overwrite").orc(p)
     }
-    val p = java.nio.file.Paths.get(
-      sys.props("java.io.tmpdir"), s"graft_orc_lineitem_$tag").toFile
-    if (p.exists()) rm(p)
-  }
-
-  private[graft] def ensureOrcStage(spark: SparkSession, dir: String): String = {
-    val tag = graft.streaming.EventStreams.sanitize(dir)
-    val path = java.nio.file.Paths.get(
-      sys.props("java.io.tmpdir"), s"graft_orc_lineitem_$tag")
-    def staged: Boolean =
-      java.nio.file.Files.isRegularFile(path.resolve("_SUCCESS")) && {
-        val ls = path.toFile.listFiles()
-        ls != null && ls.exists(_.getName.endsWith(".orc"))
-      }
-    this.synchronized {
-      if (!staged) {
-        Tables.lineitem(spark, dir)
-          .select(col("l_orderkey"), col("l_returnflag"), col("l_quantity"),
-            Rfm.cents(col("l_extendedprice")).as("price_cents"))
-          .write.mode("overwrite").orc(path.toString)
-      }
-    }
-    path.toString
-  }
 
   /** q234 — returnflag totals for high-quantity lines, THROUGH the ORC
     * round-trip: every value the aggregate touches has crossed

@@ -1,7 +1,7 @@
 package graft.sources
 
 import graft.Tables
-import graft.operators.Rfm
+import graft.operators.{Rfm, Staging}
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -16,10 +16,10 @@ import org.apache.spark.sql.functions._
   * query; with it, the merged schema is the union and old files surface
   * NULL for the added column.
   *
-  * Staging follows the [[OrcInterchange]] write-once discipline, but the
-  * two generations are two WRITES INTO THE SAME DIRECTORY (overwrite, then
-  * append) — genuinely heterogeneous footers side by side, not a
-  * partition-discovery trick. Generation 1 holds even order keys
+  * The dataset is one [[graft.operators.Staging.stage]] layout whose
+  * writer makes the two generations two WRITES INTO THE SAME DIRECTORY
+  * (overwrite, then append) — genuinely heterogeneous footers side by
+  * side, not a partition-discovery trick. Generation 1 holds even order keys
   * (o_orderkey, cents), generation 2 odd keys plus `o_orderpriority`.
   *
   * Scale note: `mergeSchema` lists and reads ALL footers on the driver at
@@ -30,48 +30,21 @@ import org.apache.spark.sql.functions._
   */
 object SchemaEvolution {
 
-  /** Drop the staged evolved dataset for `dir` — for callers that rebuild
-    * the source tables under an existing dir string (ScaleSoak factor
-    * rebuilds); the marker would otherwise serve the previous build. */
-  private[graft] def invalidateStage(dir: String): Unit = this.synchronized {
-    val tag = graft.streaming.EventStreams.sanitize(dir)
-    def rm(f: java.io.File): Unit = {
-      Option(f.listFiles()).foreach(_.foreach(rm)); f.delete(); ()
-    }
-    val p = java.nio.file.Paths.get(
-      sys.props("java.io.tmpdir"), s"graft_evolved_orders_$tag").toFile
-    if (p.exists()) rm(p)
-  }
-
   private[graft] def ensureEvolvedStage(spark: SparkSession,
-                                        dir: String): String = {
-    val tag = graft.streaming.EventStreams.sanitize(dir)
-    val path = java.nio.file.Paths.get(
-      sys.props("java.io.tmpdir"), s"graft_evolved_orders_$tag")
-    val marker = path.resolve("_GRAFT_STAGED")
-    def staged: Boolean =
-      java.nio.file.Files.isRegularFile(marker) && {
-        val ls = path.toFile.listFiles()
-        ls != null && ls.exists(_.getName.endsWith(".parquet"))
-      }
-    this.synchronized {
-      if (!staged) {
-        val orders = Tables.orders(spark, dir)
-          .select(col("o_orderkey"),
-            Rfm.cents(col("o_totalprice")).as("cents"),
-            col("o_orderpriority"))
-        // generation 1: the column does not exist yet
-        orders.filter(col("o_orderkey") % 2 === 0)
-          .select(col("o_orderkey"), col("cents"))
-          .write.mode("overwrite").parquet(path.toString)
-        // generation 2: same producer, one column added
-        orders.filter(col("o_orderkey") % 2 === 1)
-          .write.mode("append").parquet(path.toString)
-        java.nio.file.Files.createFile(marker)
-      }
+                                        dir: String): String =
+    Staging.stage("evolved_orders", dir, sourceTable = "orders") { p =>
+      val orders = Tables.orders(spark, dir)
+        .select(col("o_orderkey"),
+          Rfm.cents(col("o_totalprice")).as("cents"),
+          col("o_orderpriority"))
+      // generation 1: the column does not exist yet
+      orders.filter(col("o_orderkey") % 2 === 0)
+        .select(col("o_orderkey"), col("cents"))
+        .write.mode("overwrite").parquet(p)
+      // generation 2: same producer, one column added
+      orders.filter(col("o_orderkey") % 2 === 1)
+        .write.mode("append").parquet(p)
     }
-    path.toString
-  }
 
   /** q249 — priority totals THROUGH the evolved dataset: the merged read
     * must surface generation-1 rows with a NULL priority (bucketed as

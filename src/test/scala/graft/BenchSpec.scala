@@ -92,4 +92,23 @@ class BenchSpec extends AnyFunSuite {
     assert(fp == Bench.codeFingerprint())
     assert(fp != "unknown" && fp.contains(":"))
   }
+
+  test("a lane that throws gets no time, stays out of the total and is " +
+    "listed as failed") {
+    val spark = GraftTestSession.spark
+    val ok: Bench.Lane = (s, _) => s.range(100).toDF("id")
+    val throwsAtBuild: Bench.Lane =
+      (_, _) => throw new IllegalStateException("injected")
+    val throwsAtRun: Bench.Lane =
+      (s, _) => s.range(1).selectExpr("raise_error('injected') AS x")
+    assert(Bench.once(spark, "", "boom", throwsAtBuild).isEmpty)
+    // a baseline no probe can drift past: no re-sampling in this check
+    val m = Bench.measure(spark, GraftTestSession.Sf0001,
+      Seq("a_ok" -> ok, "b_build" -> throwsAtBuild, "c_run" -> throwsAtRun),
+      calibBaseline = 1e6)
+    assert(m.failed == Seq("b_build", "c_run"))
+    assert(m.times.map(_._1) == Seq("a_ok"))
+    assert(m.times.head._2.size >= 3)
+    assert(m.total == m.times.head._2.min)
+  }
 }

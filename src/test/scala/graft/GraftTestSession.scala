@@ -4,24 +4,10 @@ import org.apache.spark.sql.SparkSession
 
 /** One SparkSession for the whole forked test JVM. */
 object GraftTestSession {
-  lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.warehouse.dir",
-        java.nio.file.Files.createTempDirectory("graft_wh").toString)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s.experimental.extraOptimizations =
-      s.experimental.extraOptimizations :+ graft.plans.MaterializeHofDependencies
-    s.experimental.extraStrategies =
-      s.experimental.extraStrategies :+ graft.plans.GraftStrategies
-    s
-  }
+  lazy val spark: SparkSession = GraftSession.local(4, conf = Map(
+    "spark.app.name" -> "graft-test",
+    "spark.sql.warehouse.dir" ->
+      java.nio.file.Files.createTempDirectory("graft_wh").toString))
   val Sf0001 = "/root/testdata/sf0.001"
   val Sf001 = "/root/testdata/sf0.01"
 

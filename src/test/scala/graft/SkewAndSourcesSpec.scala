@@ -458,7 +458,8 @@ class SkewAndSourcesSpec extends AnyFunSuite {
     assert(!plan.contains("Exchange hashpartitioning(user_id") &&
       !plan.contains("Exchange hashpartitioning(c_custkey"),
       s"bucket co-location lost — join sides reshuffled:\n${plan.take(1200)}")
-    assert(plan.contains("graft_bkt_purchases"), "must read the bucketed table")
+    assert(plan.contains("graft_stg_bkt_purchases"),
+      "must read the bucketed table")
     val expected = Tables.events(spark, dir)
       .filter(col("event_type") === "purchase")
       .join(Tables.customer(spark, dir)

@@ -479,4 +479,69 @@ class StagingSpec extends AnyFunSuite {
       assert(fa.count() == 1 && buildsA() == 1)
     } finally { Staging.invalidate(dirA); Staging.invalidate(dirB) }
   }
+
+  test("the q130/q151/q234/q249/q284 layouts re-stage after the sources " +
+    "are rewritten in place, with no invalidate call in between") {
+    import graft.operators.{Bucketing, Layout, PartitionedEvents}
+    import graft.sources.{OrcInterchange, SchemaEvolution}
+    import java.nio.file.Paths
+    val dir = Files.createTempDirectory("graft_fresh_spec").toString
+    Seq("events", "customer", "lineitem", "orders").foreach(t =>
+      Files.copy(Paths.get(GraftTestSession.Sf0001, s"$t.parquet"),
+        Paths.get(dir, s"$t.parquet")))
+    val layouts = Seq("events_by_day", "bkt_purchases", "bkt_customer",
+      "orc_lineitem", "evolved_orders", "orders_by_date")
+    // each lane's row total through its staged layout ...
+    def lanes(): Seq[Long] = Seq(
+      PartitionedEvents.oneDayHourly(spark, dir).agg(sum("n")),
+      Bucketing.bucketedSegmentAgg(spark, dir).agg(sum("n")),
+      OrcInterchange.orcRoundTrip(spark, dir).agg(sum("n")),
+      SchemaEvolution.evolvedPriorityTotals(spark, dir).agg(sum("n")),
+      Layout.clusteredMonthlyRollup(spark, dir).agg(sum("n_orders"))
+    ).map(_.head.getLong(0))
+    // ... and the same totals straight from the current sources
+    def direct(): Seq[Long] = {
+      val events = Tables.events(spark, dir)
+      val orders = Tables.orders(spark, dir)
+      Seq(
+        events.filter(to_date(col("ts").cast("timestamp")) ===
+          lit(PartitionedEvents.ContractDay).cast("date")).count(),
+        events.filter(col("event_type") === "purchase")
+          .join(Tables.customer(spark, dir),
+            col("user_id") === col("c_custkey")).count(),
+        Tables.lineitem(spark, dir).filter(col("l_quantity") >= 25.0).count(),
+        orders.count(),
+        orders.filter(to_date(col("o_orderdate")) >=
+          lit(java.sql.Date.valueOf(Layout.ClusterCutoff))).count())
+    }
+    def rewrite(table: String, keep: org.apache.spark.sql.Column): Unit = {
+      val next = Paths.get(dir, s"$table.next")
+      spark.read.parquet(s"$dir/$table.parquet").filter(keep)
+        .write.parquet(next.toString)
+      Staging.deleteRecursively(new java.io.File(dir, s"$table.parquet"))
+      Files.move(next, Paths.get(dir, s"$table.parquet"))
+      ()
+    }
+    try {
+      val before = lanes()
+      assert(before == direct())
+      val stagedBefore = layouts.map(Staging.artifactFingerprint(dir, _))
+      rewrite("events", col("user_id") % 2 === 0)
+      rewrite("customer", col("c_custkey") % 3 =!= 0)
+      rewrite("lineitem", col("l_orderkey") % 2 === 0)
+      rewrite("orders", col("o_orderkey") % 3 =!= 0)
+      val after = lanes()
+      assert(after == direct(), "a lane served a layout of the old sources")
+      before.zip(after).foreach { case (b, a) =>
+        assert(a != b, "the rewrite must change every lane's rows")
+      }
+      layouts.zip(stagedBefore).foreach { case (name, fp) =>
+        assert(Staging.artifactFingerprint(dir, name) != fp,
+          s"$name was not re-staged")
+      }
+    } finally {
+      Staging.invalidate(spark, dir)
+      Staging.deleteRecursively(new java.io.File(dir))
+    }
+  }
 }
