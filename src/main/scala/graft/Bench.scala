@@ -95,24 +95,33 @@ object Bench {
         .exists(_.group(1) == currentCode)
     } catch { case _: Exception => false })
 
-  /** Fingerprint of the compiled code this bench measures: recursive
-    * (file count, total bytes) of the classes dir or jar the Bench class
-    * loaded from. mtimes are deliberately excluded so a no-op rebuild of
-    * identical code keeps its canonical map's protection. */
-  def codeFingerprint(): String = try {
-    val root = new java.io.File(
-      getClass.getProtectionDomain.getCodeSource.getLocation.toURI)
-    if (root.isFile) s"jar:${root.length}"
-    else {
-      var n = 0L
-      var bytes = 0L
-      def walk(f: java.io.File): Unit =
-        if (f.isFile) { n += 1; bytes += f.length }
-        else Option(f.listFiles()).getOrElse(Array.empty[java.io.File])
-          .foreach(walk)
-      walk(root)
-      s"$n:$bytes"
+  /** Fingerprint of the code this bench measures: a content hash of the
+    * sources under `src/main/scala` in the working directory, or
+    * `"unknown"` when they cannot be read. Built from the sources, not the
+    * build output, so a fresh rebuild of the same sources keeps its
+    * canonical map's protection; mtimes never enter it. */
+  def codeFingerprint(): String =
+    sourceFingerprint(new java.io.File("src/main/scala"))
+
+  /** SHA-256 over the sorted (relative path, content bytes) of every file
+    * under `root`, as `sha256:<first 16 hex digits>`. */
+  private[graft] def sourceFingerprint(root: java.io.File): String = try {
+    val base = root.toPath
+    val files = {
+      val s = java.nio.file.Files.walk(base)
+      try s.filter(java.nio.file.Files.isRegularFile(_)).toArray
+        .map(p => base.relativize(p.asInstanceOf[java.nio.file.Path]))
+        .sortBy(_.toString)
+      finally s.close()
     }
+    val md = java.security.MessageDigest.getInstance("SHA-256")
+    files.foreach { rel =>
+      val bytes = java.nio.file.Files.readAllBytes(base.resolve(rel))
+      md.update(s"$rel\n${bytes.length}\n"
+        .getBytes(java.nio.charset.StandardCharsets.UTF_8))
+      md.update(bytes)
+    }
+    "sha256:" + md.digest().take(8).map("%02x".format(_)).mkString
   } catch { case _: Exception => "unknown" }
 
   /** Fixed CPU-bound probe, independent of any query or input data: a fused

@@ -26,7 +26,9 @@ import org.apache.spark.sql.functions._
   * density grows 10× — the 100 TB shape.
   *
   * Each query runs TWICE per scale: `first` pays CacheRegistry population
-  * and any plan-specific codegen; `steady` is the warm cost. The exponent
+  * (cached frames plus every memoized fit, sketch and broadcast — all
+  * dropped between scales by `resetCaches`), any staged-layout build and
+  * any plan-specific codegen; `steady` is the warm cost. The exponent
   * is computed on steady (that is the repeated-operation regime the
   * scaladocs' claims describe); first-run times are reported alongside so
   * one-shot cost regressions stay visible too.

@@ -99,8 +99,7 @@ object BpeTrainer {
     * CAPTURED merge literals — training itself is independently gated by
     * q205, so this gate isolates the application semantics. */
   def bpeEncode(spark: SparkSession, dir: String, iters: Int = 8): DataFrame = {
-    val merges = mergeCache.getOrElseUpdate(
-      (spark.sparkContext.applicationId, dir, iters),
+    val merges = graft.CacheRegistry.memo(spark, s"bpe-merges:$iters:$dir")(
       bpeMerges(spark, dir, iters).collect()
         .map(r => (r.getString(1), r.getString(2))).toSeq)
     val words = Tables.documents(spark, dir)
@@ -120,9 +119,6 @@ object BpeTrainer {
       .select(col("source"), col("n_words"), col("n_chars"), col("n_tokens"),
         expr("(n_tokens * 1000000) div n_chars").as("tokens_per_char_ppm"))
   }
-
-  private val mergeCache = scala.collection.concurrent.TrieMap
-    .empty[(String, String, Int), Seq[(String, String)]]
 
   /** The shared training replay: word counts, spaced symbols, and per-round
     * (weighted pair argmax, literal replace) CTE pairs `p1,w1 … pN,wN`.

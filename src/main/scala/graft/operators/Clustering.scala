@@ -113,11 +113,8 @@ object Clustering {
     * invocation — `src/main.rs:52` — but its README flags that as a known
     * limitation; a session-scoped model cache preserves the semantics while
     * avoiding 5× refits in Verify/Bench). */
-  private val fitCache =
-    scala.collection.concurrent.TrieMap.empty[(String, String, Int), Segmentation]
-
   private def fitOnDir(spark: SparkSession, dir: String, k: Int = 4): Segmentation = {
-    val seg = fitCache.getOrElseUpdate((spark.sparkContext.applicationId, dir, k),
+    val seg = graft.CacheRegistry.memo(spark, s"fit:$k:$dir")(
       fit(Rfm.rfmPrepared(spark, dir), k))
     // capture the fit's constants for oracle-literal embedding (below),
     // keyed by (dir, k) so a process that fits on two dirs or non-default k

@@ -121,26 +121,16 @@ object CorpusFilters {
     * in the codebase: the sketch lives outside Catalyst's type system, and
     * the probe sits behind a 99%-selective gate, not in a hot arithmetic
     * loop. */
-  /** One Bloom broadcast per (session, dir, k, fpp): the sketch is a
-    * session-lifetime prepared artifact exactly like the cached frames in
-    * [[graft.CacheRegistry]] — rebuilding (count + bloomFilter aggregation)
-    * and re-broadcasting per call would leak one bitset broadcast per
-    * invocation for the life of the session. Entries of stopped sessions
-    * are purged on access, mirroring the registry. */
-  private val bloomCache = scala.collection.concurrent.TrieMap
-    .empty[(String, String), (org.apache.spark.SparkContext,
-      org.apache.spark.broadcast.Broadcast[org.apache.spark.util.sketch.BloomFilter])]
-
-  private def benchBloom(spark: SparkSession, dir: String, k: Int, fpp: Double) = {
-    bloomCache.filterInPlace { case (_, (sc, _)) => !sc.isStopped }
-    bloomCache.getOrElseUpdate(
-      (spark.sparkContext.applicationId, s"$dir:$k:$fpp"), {
-        val grams = benchGrams(spark, dir, k)
-        val n = math.max(grams.count(), 1L) // sizing pass (cached frame)
-        (spark.sparkContext,
-          spark.sparkContext.broadcast(grams.stat.bloomFilter("gram", n, fpp)))
-      })._2
-  }
+  /** One Bloom broadcast per (session, dir, k, fpp), a
+    * [[graft.CacheRegistry]] memo — rebuilding (count + bloomFilter
+    * aggregation) and re-broadcasting per call would leak one bitset
+    * broadcast per invocation for the life of the session. */
+  private def benchBloom(spark: SparkSession, dir: String, k: Int, fpp: Double) =
+    graft.CacheRegistry.memo(spark, s"decontam-bloom:$k:$fpp:$dir") {
+      val grams = benchGrams(spark, dir, k)
+      val n = math.max(grams.count(), 1L) // sizing pass (cached frame)
+      spark.sparkContext.broadcast(grams.stat.bloomFilter("gram", n, fpp))
+    }
 
   def decontaminateBloom(spark: SparkSession, dir: String, k: Int = 4,
                          fpp: Double = 0.01): DataFrame = {

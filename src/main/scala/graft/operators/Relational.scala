@@ -777,17 +777,15 @@ object Relational {
       .groupBy(col("returnflag"))
       .agg(approx_count_distinct(col("l_partkey"), 0.02).as("approx_parts"),
         count(lit(1)).as("exact_parts"))
-    capturedApprox.put(dir, (), approxCache.getOrElseUpdate(
-      (spark.sparkContext.applicationId, dir),
-      agg.select("returnflag", "approx_parts").collect()
-        .map(r => (r.getString(0), r.getLong(1))).toSeq))
+    capturedApprox.put(dir, (),
+      graft.CacheRegistry.memo(spark, s"approx-distinct:$dir")(
+        agg.select("returnflag", "approx_parts").collect()
+          .map(r => (r.getString(0), r.getLong(1))).toSeq))
     agg.withColumn("within_bound",
       abs(col("approx_parts") - col("exact_parts")) * lit(100L) <=
         lit(5L) * col("exact_parts"))
   }
 
-  private val approxCache = scala.collection.concurrent.TrieMap
-    .empty[(String, String), Seq[(String, Long)]]
   private val capturedApprox =
     new graft.OracleCapture.Captured[Unit, Seq[(String, Long)]]
 

@@ -433,15 +433,6 @@ object SimilaritySearch {
        |FROM lab LEFT JOIN agg ON lab.vec_id = agg.vec_id""".stripMargin
   }
 
-  /** Session cache for the IVF coarse centers + assignment table (both
-    * backed by STAGED artifacts since round 13 — the session map only
-    * avoids re-reading the text artifact per call): the model is an index
-    * artifact — at scale it is FIT ONCE when the table is (re)built and the
-    * assignments are persisted partitioned by `coarse_id`; refitting per
-    * query (the round-1 shape) charged every probe a full K-Means run. */
-  private val ivfCache = scala.collection.concurrent.TrieMap
-    .empty[(String, String, Int), (Array[Array[Double]], DataFrame)]
-
   /** Exact text round-trip for a double matrix (`Double.toString` /
     * `parseDouble` are inverse by JLS contract), one row per line,
     * `;`-separated — the [[Staging.preparedText]] codec for k-means
@@ -507,24 +498,21 @@ object SimilaritySearch {
     * 100 TB: the index build job writes them beside the vectors; query
     * sessions only read). The text codec round-trips doubles exactly, so
     * the captured oracle literals are identical whether this session fit
-    * the model or inherited the artifact. */
+    * the model or inherited the artifact. Every call passes both staging
+    * gates, so a layout rewritten by [[Forget]] is read fresh. */
   private def ivfIndex(spark: SparkSession, dir: String,
                        nlist: Int): (Array[Array[Double]], DataFrame) = {
-    val res = ivfCache.getOrElseUpdate(
-      (spark.sparkContext.applicationId, dir, nlist), {
-        val centers = parseCenters(
-          Staging.preparedText(s"ivf_centers_n$nlist", dir,
-            sourceTable = "embeddings", version = IvfCentersVersion)(
-            serializeCenters(fitCoarse(spark, dir, nlist)
-              .clusterCenters.map(_.toArray))))
-        val assigned = Staging.prepared(spark, s"ivf_assign_n$nlist", dir,
-          sourceTable = "embeddings", version = IvfAssignVersion)(
-          withCoarseId(normalized(spark, dir), centers)
-            .select(col("vec_id"), col("u"), col("coarse_id")))
-        (centers, assigned)
-      })
-    capturedCoarse.put(dir, nlist, res._1)
-    res
+    val centers = parseCenters(
+      Staging.preparedText(s"ivf_centers_n$nlist", dir,
+        sourceTable = "embeddings", version = IvfCentersVersion)(
+        serializeCenters(fitCoarse(spark, dir, nlist)
+          .clusterCenters.map(_.toArray))))
+    val assigned = Staging.prepared(spark, s"ivf_assign_n$nlist", dir,
+      sourceTable = "embeddings", version = IvfAssignVersion)(
+      withCoarseId(normalized(spark, dir), centers)
+        .select(col("vec_id"), col("u"), col("coarse_id")))
+    capturedCoarse.put(dir, nlist, centers)
+    (centers, assigned)
   }
 
   /** Test hook: a FRESH coarse fit plus its explicit-argmin assignment,
@@ -544,9 +532,10 @@ object SimilaritySearch {
 
   /** The IVF coarse-assignment table (vec_id, u, coarse_id) for reuse by
     * [[Dedup.semanticDedup]] — the SemDeDup partitioner is exactly the ANN
-    * index's coarse quantizer, so both share one fitted model per session. */
-  private[operators] def ivfAssignments(spark: SparkSession, dir: String,
-                                        nlist: Int): DataFrame =
+    * index's coarse quantizer, so both share one staged model per corpus
+    * snapshot. */
+  private[graft] def ivfAssignments(spark: SparkSession, dir: String,
+                                    nlist: Int): DataFrame =
     ivfIndex(spark, dir, nlist)._2
 
   /** IVF ANN: seeded coarse K-Means (nlist centroids) over unit vectors;
@@ -1140,11 +1129,6 @@ object SimilaritySearch {
       (ia - ib) * (ia - ib)
     }.reduce(_ + _)
 
-  /** Session cache for the trained PQ codebook, keyed like [[ivfCache]]:
-    * at scale the codebook is an index artifact fit once at build time. */
-  private val pqCache = scala.collection.concurrent.TrieMap
-    .empty[(String, String, Int, Int), Array[Array[Array[Long]]]]
-
   /** Captured PQ codebook for oracle-literal embedding, keyed (m, ncodes)
     * — the q52 coarse-centroid mechanism. */
   private val capturedPq =
@@ -1162,39 +1146,36 @@ object SimilaritySearch {
     * own unit step — and buys the property the whole chain is built on:
     * every encode distance and ADC sum stays EXACT INTEGER arithmetic,
     * hash-identical cross-engine. The codebook is an INDEX ARTIFACT: fit
-    * once per (dir, m, ncodes) per session (at 100 TB: once per index
-    * build, persisted beside the codes), captured as oracle literals so
-    * DuckDB re-derives encoding and retrieval from the same m·ncodes·dsub
-    * integers. */
+    * once per (dir, m, ncodes) per corpus snapshot and staged (at 100 TB:
+    * once per index build, persisted beside the codes), captured as
+    * oracle literals so DuckDB re-derives encoding and retrieval from the
+    * same m·ncodes·dsub integers. */
   private[graft] def pqCodebook(spark: SparkSession, dir: String,
                                 m: Int = 8, ncodes: Int = 16)
       : Array[Array[Array[Long]]] = {
-    val cb = pqCache.getOrElseUpdate(
-      (spark.sparkContext.applicationId, dir, m, ncodes), {
-        // STAGED model constant (round-12 verdict item 3): the m
-        // per-subspace k-means fits are index-BUILD work — run once per
-        // corpus snapshot, persisted as a text artifact; later sessions
-        // parse the integers back instead of refitting
-        val txt = Staging.preparedText(s"pq_codebook_m${m}_n$ncodes", dir,
-          sourceTable = "embeddings", version = PqCodebookVersion) {
-          val coded = int8CodedArray(spark, dir)
-          val d = coded.select(size(col("codes"))).first().getInt(0)
-          val dsub = d / m
-          (0 until m).map { s =>
-            val sub = coded.select(array_to_vector(
-              transform(slice(col("codes"), s * dsub + 1, dsub),
-                x => x.cast(DoubleType))).as("features"))
-            val km = new KMeans().setK(ncodes).setSeed(42L + s)
-              .setDistanceMeasure("euclidean").setFeaturesCol("features")
-              .setPredictionCol("__c").setMaxIter(20)
-            km.fit(sub).clusterCenters.map(_.toArray.map(x =>
-              math.max(-128L, math.min(127L, math.round(x))))
-              .mkString(";")).mkString("|")
-          }.mkString("\n")
-        }
-        txt.split("\n").map(_.split("\\|")
-          .map(_.split(";").map(java.lang.Long.parseLong)))
-      })
+    // STAGED model constant (round-12 verdict item 3): the m per-subspace
+    // k-means fits are index-BUILD work — run once per corpus snapshot,
+    // persisted as a text artifact; later calls parse the integers back
+    // instead of refitting
+    val txt = Staging.preparedText(s"pq_codebook_m${m}_n$ncodes", dir,
+      sourceTable = "embeddings", version = PqCodebookVersion) {
+      val coded = int8CodedArray(spark, dir)
+      val d = coded.select(size(col("codes"))).first().getInt(0)
+      val dsub = d / m
+      (0 until m).map { s =>
+        val sub = coded.select(array_to_vector(
+          transform(slice(col("codes"), s * dsub + 1, dsub),
+            x => x.cast(DoubleType))).as("features"))
+        val km = new KMeans().setK(ncodes).setSeed(42L + s)
+          .setDistanceMeasure("euclidean").setFeaturesCol("features")
+          .setPredictionCol("__c").setMaxIter(20)
+        km.fit(sub).clusterCenters.map(_.toArray.map(x =>
+          math.max(-128L, math.min(127L, math.round(x))))
+          .mkString(";")).mkString("|")
+      }.mkString("\n")
+    }
+    val cb = txt.split("\n").map(_.split("\\|")
+      .map(_.split(";").map(java.lang.Long.parseLong)))
     capturedPq.put(dir, (m, ncodes), cb)
     cb
   }
@@ -1422,9 +1403,6 @@ object SimilaritySearch {
     Forget.Target("embeddings", "ivf_assign_n16", (s, d, tag, r) => {
       Staging.deletePrepared(s, "ivf_assign_n16", d, tag, Seq("vec_id"),
         sourceTable = "embeddings", version = IvfAssignVersion)(r)
-      // the session cache holds a frame over the pre-delete file set —
-      // drop it so the next ivfIndex() re-reads the published layout
-      ivfCache.filterInPlace { case ((_, cachedDir, _), _) => cachedDir != d }
       ()
     }),
     Forget.Target("embeddings", "pqcodes_m8_n16", (s, d, tag, r) => {
@@ -1435,8 +1413,8 @@ object SimilaritySearch {
 
   /** Build every embeddings-derived staged layout under `dir` — the
     * cascade audit's precondition. */
-  private[operators] def buildAnnForgetLayouts(spark: SparkSession,
-                                               dir: String): Unit = {
+  private[graft] def buildAnnForgetLayouts(spark: SparkSession,
+                                           dir: String): Unit = {
     int8CodedArray(spark, dir)
     ivfIndex(spark, dir, 16)
     pqCodesTable(spark, dir, 8, 16)

@@ -73,15 +73,13 @@ object Sketches {
           .as("users_ok"),
         (abs(col("max_daily_est") - col("xd")) * lit(100L) <= lit(5L) * col("xd"))
           .as("daily_ok"))
-    capturedHll.put(dir, lgConfigK, hllCache.getOrElseUpdate(
-      (spark.sparkContext.applicationId, dir, lgConfigK),
-      sk.select("event_type", "est_users", "max_daily_est")
-        .collect().map(r => (r.getString(0), r.getLong(1), r.getLong(2))).toSeq))
+    capturedHll.put(dir, lgConfigK,
+      graft.CacheRegistry.memo(spark, s"hll-est:$lgConfigK:$dir")(
+        sk.select("event_type", "est_users", "max_daily_est")
+          .collect().map(r => (r.getString(0), r.getLong(1), r.getLong(2))).toSeq))
     out
   }
 
-  private val hllCache = scala.collection.concurrent.TrieMap
-    .empty[(String, String, Int), Seq[(String, Long, Long)]]
   private val capturedHll =
     new graft.OracleCapture.Captured[Int, Seq[(String, Long, Long)]]
 
@@ -124,29 +122,17 @@ object Sketches {
     * At 100 TB the exact side of this query is the thing you CANNOT run
     * (that's the point of the sketch); it exists here as the ground truth
     * the estimates are validated against at test scale. */
-  /** One CMS broadcast per (session, dir, params): the sketch build is an
-    * eager full-scan action and the broadcast lives for the session —
-    * rebuilding per call (Bench runs each query 3×, Verify and PlanAudit
-    * once more) would rescan events and leak one broadcast per invocation.
-    * Same prepared-artifact pattern as the Bloom cache in CorpusFilters;
-    * stopped sessions' entries are purged on access. */
-  private val cmsCache = scala.collection.concurrent.TrieMap
-    .empty[(String, String), (org.apache.spark.SparkContext,
-      org.apache.spark.broadcast.Broadcast[org.apache.spark.util.sketch.CountMinSketch])]
-
+  /** One CMS broadcast per (session, dir, params), a
+    * [[graft.CacheRegistry]] memo: the sketch build is an eager full-scan
+    * action and the broadcast lives for the session — rebuilding per call
+    * (Bench runs each query 3×, Verify and PlanAudit once more) would
+    * rescan events and leak one broadcast per invocation. */
   private def cmsSketch(spark: SparkSession, dir: String, eps: Double,
-                        confidence: Double, seed: Int) = {
-    cmsCache.filterInPlace { case (_, (sc, _)) => !sc.isStopped }
-    cmsCache.getOrElseUpdate(
-      (spark.sparkContext.applicationId, s"$dir:$eps:$confidence:$seed"), {
-        val sketch = Tables.events(spark, dir)
-          .stat.countMinSketch(col("user_id"), eps, confidence, seed)
-        (spark.sparkContext, spark.sparkContext.broadcast(sketch))
-      })._2
-  }
+                        confidence: Double, seed: Int) =
+    graft.CacheRegistry.memo(spark, s"cms:$eps:$confidence:$seed:$dir")(
+      spark.sparkContext.broadcast(Tables.events(spark, dir)
+        .stat.countMinSketch(col("user_id"), eps, confidence, seed)))
 
-  private val cmsEstCache = scala.collection.concurrent.TrieMap
-    .empty[(String, String), Seq[(Long, Long)]]
   private val capturedCms =
     new graft.OracleCapture.Captured[(Double, Double, Int), Seq[(Long, Long)]]
 
@@ -168,10 +154,10 @@ object Sketches {
         col("est_n") >= col("true_n") &&
           (col("est_n") - col("true_n")) * lit(invEps) <= col("n_total"))
       .drop("n_total")
-    capturedCms.put(dir, (eps, confidence, seed), cmsEstCache.getOrElseUpdate(
-      (spark.sparkContext.applicationId, s"$dir:$eps:$confidence:$seed"),
-      base.select("user_id", "est_n").collect()
-        .map(r => (r.getLong(0), r.getLong(1))).toSeq))
+    capturedCms.put(dir, (eps, confidence, seed),
+      graft.CacheRegistry.memo(spark, s"cms-est:$eps:$confidence:$seed:$dir")(
+        base.select("user_id", "est_n").collect()
+          .map(r => (r.getLong(0), r.getLong(1))).toSeq))
     out
   }
 
@@ -208,8 +194,7 @@ object Sketches {
     * identically computable by DuckDB (no cross-engine interpolation). */
   def approxQuantiles(spark: SparkSession, dir: String,
                       accuracy: Int = 1000): DataFrame = {
-    val probes = gkCache.getOrElseUpdate(
-      (spark.sparkContext.applicationId, dir, accuracy),
+    val probes = graft.CacheRegistry.memo(spark, s"gk-probes:$accuracy:$dir")(
       Tables.events(spark, dir)
         .groupBy(col("event_type"))
         .agg(expr(s"percentile_approx(value, array(0.5, 0.95, 0.99), $accuracy)")
@@ -240,8 +225,6 @@ object Sketches {
       ok(0.99, col("le99"), col("lt99")).as("p99_ok"))
   }
 
-  private val gkCache = scala.collection.concurrent.TrieMap
-    .empty[(String, String, Int), Seq[(String, Double, Double, Double)]]
   private val capturedGk =
     new graft.OracleCapture.Captured[Int, Seq[(String, Double, Double, Double)]]
 

@@ -21,10 +21,12 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   *  - model constants such as PQ codebooks and IVF centroids, as small
   *    text artifacts ([[preparedText]]).
   *
-  * Deliberately outside it: the [[graft.CacheRegistry]] RAM memos (their
-  * life is one session, not one source build); the streaming feed copies
-  * and checkpoint roots of [[graft.streaming.EventStreams]] and
-  * [[graft.streaming.CdcApply]], which a file-stream source must read
+  * Deliberately outside it: [[graft.CacheRegistry]], the one session-memo
+  * tier for cached frames, model constants and broadcasts (their life is
+  * one session, not one source build — this tier's own reader and roster
+  * memos stay here, keyed by layout or data fingerprint); the streaming
+  * feed copies and checkpoint roots of [[graft.streaming.EventStreams]]
+  * and [[graft.streaming.CdcApply]], which a file-stream source must read
   * from a directory of its own; and the `_GRAFT_BASE` sandboxes of
   * [[Forget]] and [[Dedup]], which are staged SOURCE snapshots that the
   * tier then derives layouts from.

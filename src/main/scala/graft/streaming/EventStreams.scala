@@ -34,19 +34,19 @@ object EventStreams {
     * streaming twin of [[graft.Tables.events]]'s decode rule. A one-off
     * batch read probes the DECODED `ts` type: LongType means nanos-as-long
     * (convert with integer `DIV 1000`; double division would lose precision
-    * above 2^53 ns), TimestampType means parquet micros (pass through). The
-    * probe costs one footer read, once per query build — never per batch. */
-  /** Memoized decode-probe results: the probe is one footer read per
-    * (session, directory), but q83/q137 build TWO sides over the same
-    * staged dir and the bench drives each query 3+ times — the type cannot
-    * change within a session, so cache it. Keyed by session too: a later
-    * session with different decode confs must re-probe. */
-  private val probedTsTypes =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), DataType]
-
+    * above 2^53 ns), TimestampType means parquet micros (pass through).
+    * The probe is a [[graft.CacheRegistry]] memo — one footer read per
+    * (session, directory, decode conf), never per batch or per build:
+    * q83/q137 build TWO sides over the same staged dir and the bench drives
+    * each query 3+ times. The key carries
+    * `spark.sql.legacy.parquet.nanosAsLong` because that conf decides the
+    * decoded type. */
   private[graft] def streamEvents(spark: SparkSession, streamDir: String): DataFrame = {
-    val tsType = probedTsTypes.computeIfAbsent((spark, streamDir),
-      _ => spark.read.parquet(streamDir).schema("ts").dataType)
+    val nanosAsLong =
+      spark.conf.get("spark.sql.legacy.parquet.nanosAsLong", "false")
+    val tsType = graft.CacheRegistry.memo(spark,
+      s"ts-probe:$nanosAsLong:$streamDir")(
+      spark.read.parquet(streamDir).schema("ts").dataType)
     val raw = spark.readStream
       .schema(eventSchemaWith(tsType))
       .parquet(streamDir)

@@ -93,6 +93,31 @@ class BenchSpec extends AnyFunSuite {
     assert(fp != "unknown" && fp.contains(":"))
   }
 
+  test("the source fingerprint ignores mtimes and sees one changed byte") {
+    import java.nio.file.{Files, Path}
+    val root = Files.createTempDirectory("bench_src_fp")
+    val a = root.resolve("graft/A.scala")
+    val b = root.resolve("graft/ops/B.scala")
+    Files.createDirectories(b.getParent)
+    Files.writeString(a, "object A { val x = 1 }\n")
+    Files.writeString(b, "object B { val y = 2 }\n")
+    def fp = Bench.sourceFingerprint(root.toFile)
+    def touch(p: Path, ms: Long) =
+      Files.setLastModifiedTime(p, java.nio.file.attribute.FileTime.fromMillis(ms))
+    try {
+      val base = fp
+      assert(base != "unknown" && base.contains(":"))
+      touch(a, 1000L)
+      touch(b, 2000000000000L)
+      assert(fp == base, "touching mtimes must not change the fingerprint")
+      Files.writeString(b, "object B { val y = 3 }\n")
+      assert(fp != base, "a changed source byte must change the fingerprint")
+      assert(Bench.sourceFingerprint(root.resolve("missing").toFile) == "unknown")
+    } finally {
+      Seq(a, b, b.getParent, a.getParent, root).foreach(Files.deleteIfExists)
+    }
+  }
+
   test("a lane that throws gets no time, stays out of the total and is " +
     "listed as failed") {
     val spark = GraftTestSession.spark

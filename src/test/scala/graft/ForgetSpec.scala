@@ -1,6 +1,6 @@
 package graft
 
-import graft.operators.{Forget, Staging}
+import graft.operators.{Forget, SimilaritySearch, Staging}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import java.nio.file.Files
@@ -48,5 +48,43 @@ class ForgetSpec extends AnyFunSuite {
       assert(Forget.forget(spark, dir, "t1",
         Map("documents" -> roster)) == Seq("simhash"))
     } finally Staging.invalidate(dir)
+  }
+
+  test("the IVF assignments read in the same session after a forget " +
+    "carry none of the forgotten vectors") {
+    import spark.implicits._
+    val dir = Files.createTempDirectory("graft_forget_ivf").toString
+    val src = s"$dir/embeddings.parquet"
+    // the copy puts the forgotten vectors in a source file of their own,
+    // so they fill one layout file: a delete rewrites the files it touches
+    // under their ORIGINAL names (bytes a stale reader would still see
+    // fresh), but a file it empties disappears, which only a reader that
+    // re-lists the published layout survives
+    val emb = spark.read.parquet(s"${GraftTestSession.Sf0001}/embeddings.parquet")
+    val forgotten = emb.select("vec_id").as[Long].collect().sorted.take(3).toSet
+    val isForgotten = col("vec_id").isin(forgotten.toSeq: _*)
+    emb.filter(!isForgotten).coalesce(1).write.parquet(src)
+    emb.filter(isForgotten).coalesce(1).write.mode("append").parquet(src)
+    def ids = SimilaritySearch.ivfAssignments(spark, dir, 16)
+      .select("vec_id").as[Long].collect().toSet
+    try {
+      SimilaritySearch.buildAnnForgetLayouts(spark, dir)
+      val before = ids
+      val idsByFile = Staging.readPrepared(spark, dir, "ivf_assign_n16")
+        .select(input_file_name(), col("vec_id")).as[(String, Long)]
+        .collect().groupBy(_._1).values.map(_.map(_._2).toSet)
+      assert(idsByFile.exists(_ == forgotten),
+        "fixture: the forgotten ids must fill one layout file")
+      val acted = Forget.forget(spark, dir, "ivf_spec",
+        Map("embeddings" -> forgotten.toSeq.toDF("vec_id")))
+      assert(acted.contains("ivf_assign_n16"), s"acted on $acted")
+      val after = ids
+      assert(after.intersect(forgotten).isEmpty,
+        s"forgotten ids still assigned: ${after.intersect(forgotten)}")
+      assert(after == before -- forgotten)
+    } finally {
+      Staging.invalidate(dir)
+      Staging.deleteRecursively(new java.io.File(dir))
+    }
   }
 }
