@@ -188,10 +188,9 @@ object Bench {
     val calibBaseline = List.fill(3)(calibrationProbe(spark)).min
     // Optional focus filter for local iteration: comma-separated name
     // prefixes, e.g. SPARK_GRAFT_ONLY=q50,q51. Driver runs unfiltered.
-    val only = sys.env.get("SPARK_GRAFT_ONLY").map(_.split(",").toSeq)
-    val selected = SparkEntry.queries.toSeq.sortBy(_._1).filter { case (n, _) =>
-      only.forall(_.exists(n.startsWith))
-    }
+    val only = sys.env.get("SPARK_GRAFT_ONLY")
+    val keep = SparkEntry.onlyFilter(only)
+    val selected = SparkEntry.queries.toSeq.sortBy(_._1).filter(q => keep(q._1))
     val m = measure(spark, sfDir, selected, calibBaseline)
     val (results, mins, calibMax) = (m.times, m.mins, m.calibMax)
     // Locale.ROOT: the f-interpolator uses the JVM default locale, and a

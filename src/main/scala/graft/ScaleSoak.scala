@@ -188,10 +188,10 @@ object ScaleSoak {
       System.err.println(s"[soak] building ${factor}x dataset at $outDir ...")
       buildScaled(spark, srcDir, outDir, factor)
       // the source fingerprints would re-stage every derived layout and
-      // stream feed anyway; dropping them up front frees the previous
-      // factor's disk and its bucketed catalog entries
+      // stream feed anyway (all of them live on Staging); dropping them up
+      // front frees the previous factor's disk and its bucketed catalog
+      // entries
       graft.operators.Staging.invalidate(spark, outDir)
-      graft.streaming.EventStreams.invalidateStaged(outDir)
       marker.createNewFile()
     }
 
@@ -236,9 +236,7 @@ object ScaleSoak {
         (fromMap ++ heavies.filterNot(known.contains)).distinct.sorted
       case None => heavies
     }
-    val only = sys.env.get("SPARK_GRAFT_ONLY")
-      .map(_.split(',').map(_.trim).filter(_.nonEmpty).toSeq)
-    val run = lanes.filter(n => only.forall(_.exists(n.startsWith)))
+    val run = lanes.filter(SparkEntry.onlyFilter(sys.env.get("SPARK_GRAFT_ONLY")))
     System.err.println(s"[soak] ${run.size} lanes queued")
 
     // Cache hygiene between SCALES (round 10): both scales run in one JVM,

@@ -16,6 +16,14 @@ object SparkEntry {
   def entry(spark: SparkSession): DataFrame =
     Rfm.rfmOrders(spark, "/root/testdata/sf0.001")
 
+  /** The `SPARK_GRAFT_ONLY` lane filter every main shares: comma-separated
+    * name prefixes, each trimmed, empty entries dropped (an empty prefix
+    * would match every lane); unset keeps every lane. */
+  private[graft] def onlyFilter(spec: Option[String]): String => Boolean = {
+    val prefixes = spec.map(_.split(',').map(_.trim).filter(_.nonEmpty).toSeq)
+    name => prefixes.forall(_.exists(name.startsWith))
+  }
+
   /** One entry per implemented operator from SURVEY.md §2. */
   def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     "q01_clean_filter" -> ((s, dir) => Relational.cleanFilter(s, dir)),

@@ -487,16 +487,12 @@ object MediaAnalysis {
     * state; only fixed-width counters (3 longs per window) reach the
     * state store, so state is O(open clips), not O(bytes). */
   def audioEnergyStream(spark: SparkSession, dir: String): DataFrame = {
-    import java.nio.file.Paths
     import org.apache.spark.sql.streaming.OutputMode
     import spark.implicits._
-    val src = Paths.get(s"$dir/documents.parquet")
-    val staged = Paths.get(sys.props("java.io.tmpdir"),
-      s"graft_stream_docs_${graft.streaming.EventStreams.sanitize(src.toString)}")
-    graft.streaming.EventStreams.stageForStream(spark, src, staged)
-    val schema = spark.read.parquet(src.toString).schema
+    val staged = graft.streaming.EventStreams.streamFeed(dir, "documents")
+    val schema = spark.read.parquet(staged).schema
     val synth = udf((id: Long) => Multimodal.synthWav(id, 8000))
-    val blobs = spark.readStream.schema(schema).parquet(staged.toString)
+    val blobs = spark.readStream.schema(schema).parquet(staged)
       .select(col("doc_id").as("media_id"))
       .filter(col("media_id") % 3 === 1)
       .select(col("media_id"), synth(col("media_id")).as("payload"))

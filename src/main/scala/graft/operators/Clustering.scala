@@ -33,13 +33,14 @@ import org.apache.spark.sql.types._
   * Scale notes: feature building is two narrow passes (1-row stats aggregate
   * broadcast back); each K-Means iteration is one map-reduce over the feature
   * table with centroids broadcast — the textbook distributed Lloyd's. Nothing
-  * here collects more than k centroids, 6 scalars, or the ≤100-row
-  * silhouette sample to the driver.
+  * here collects more than k centroids, 6 scalars and a count, or the
+  * ≤100-row silhouette sample to the driver.
   */
 object Clustering {
 
-  /** Fitted scaler state (reference `StandardScaler`, `src/data.rs:8-12`). */
-  final case class ScalerStats(mu: Array[Double], sd: Array[Double])
+  /** Fitted scaler state (reference `StandardScaler`, `src/data.rs:8-12`),
+    * plus the row count the same stats aggregate yields for free. */
+  final case class ScalerStats(mu: Array[Double], sd: Array[Double], n: Long)
 
   /** Fitted segmentation state (reference `KMeansModel`, `src/model.rs:10-22`). */
   final case class Segmentation(model: KMeansModel, scaler: ScalerStats,
@@ -53,7 +54,8 @@ object Clustering {
     val statsRow = rfm.agg(
       avg("recency"), greatest(stddev_pop("recency"), lit(1e-8)),
       avg("frequency"), greatest(stddev_pop("frequency"), lit(1e-8)),
-      avg("monetary"), greatest(stddev_pop("monetary"), lit(1e-8))).head()
+      avg("monetary"), greatest(stddev_pop("monetary"), lit(1e-8)),
+      count(lit(1))).head()
     val mu = Array(statsRow.getDouble(0), statsRow.getDouble(2), statsRow.getDouble(4))
     val sd = Array(statsRow.getDouble(1), statsRow.getDouble(3), statsRow.getDouble(5))
     val z = FeatureCols.zipWithIndex.foldLeft(rfm) { case (df, (c, i)) =>
@@ -63,7 +65,7 @@ object Clustering {
       .setInputCols(FeatureCols.map(_ + "_z").toArray)
       .setOutputCol("features")
       .transform(z)
-    (assembled, ScalerStats(mu, sd))
+    (assembled, ScalerStats(mu, sd, statsRow.getLong(6)))
   }
 
   /** Reference guards: k ∈ [3,5] (`src/model.rs:138-143`) and n ≥ k
@@ -77,7 +79,7 @@ object Clustering {
   def fit(rfm: DataFrame, k: Int = 4, maxIters: Int = 300,
           tol: Double = 1e-4, seed: Long = 42L): Segmentation = {
     val (features, scaler) = standardize(rfm)
-    val n = rfm.count()
+    val n = scaler.n
     validateK(k, n)
     // k-means|| init samples rows in partition order, and within-partition
     // order after a shuffle is not stable across runs — pin both so a seeded

@@ -1451,15 +1451,10 @@ object Dedup {
       gated.toDF(), sinkName, OutputMode.Append, shufflePartitions = Some(4)))
   }
 
-  def streamingNearDupGate(spark: SparkSession, dir: String): DataFrame = {
-    import java.nio.file.Paths
-    val src = Paths.get(s"$dir/documents.parquet")
-    val staged = Paths.get(sys.props("java.io.tmpdir"),
-      s"graft_stream_docs_${graft.streaming.EventStreams.sanitize(src.toString)}")
-    graft.streaming.EventStreams.stageForStream(spark, src, staged)
-    nearDupGateOn(spark, staged.toString,
+  def streamingNearDupGate(spark: SparkSession, dir: String): DataFrame =
+    nearDupGateOn(spark,
+      graft.streaming.EventStreams.streamFeed(dir, "documents"),
       s"neardup_gate_${graft.streaming.EventStreams.sanitize(dir)}")
-  }
 
   /** [[streamingNearDupGate]]'s oracle: the q33 signature chain + the
     * router bands, with the gate verdict derived in batch — a doc is
@@ -1616,12 +1611,8 @@ object Dedup {
   private def ttlGateSink(spark: SparkSession, dir: String,
       horizonSec: Long = GateHorizonSec): DataFrame =
     graft.CacheRegistry.cached(spark, s"neardup_gate_ttl:$horizonSec:$dir") {
-      import java.nio.file.Paths
-      val src = Paths.get(s"$dir/documents.parquet")
-      val staged = Paths.get(sys.props("java.io.tmpdir"),
-        s"graft_stream_docs_${graft.streaming.EventStreams.sanitize(src.toString)}")
-      graft.streaming.EventStreams.stageForStream(spark, src, staged)
-      ttlGateSinkOn(spark, staged.toString,
+      ttlGateSinkOn(spark,
+        graft.streaming.EventStreams.streamFeed(dir, "documents"),
         s"neardup_gate_ttl_h${horizonSec}_" +
           graft.streaming.EventStreams.sanitize(dir),
         horizonSec = horizonSec)

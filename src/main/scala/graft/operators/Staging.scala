@@ -19,16 +19,20 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   *    date-clustered orders (q284), the Z-ordered orders (q290), and
   *    q151's two bucketed tables;
   *  - model constants such as PQ codebooks and IVF centroids, as small
-  *    text artifacts ([[preparedText]]).
+  *    text artifacts ([[preparedText]]);
+  *  - the file-stream feeds, which a file-stream source must read from a
+  *    directory of its own: `stream_<table>_x<copies>` (byte copies of the
+  *    source's data files, `copies` > 1 for the q106 redelivery —
+  *    [[graft.streaming.EventStreams.streamFeed]]) and
+  *    `stream_events_late` (the q291/q297 out-of-order schedule).
   *
   * Deliberately outside it: [[graft.CacheRegistry]], the one session-memo
   * tier for cached frames, model constants and broadcasts (their life is
   * one session, not one source build — this tier's own reader and roster
   * memos stay here, keyed by layout or data fingerprint); the streaming
-  * feed copies and checkpoint roots of [[graft.streaming.EventStreams]]
-  * and [[graft.streaming.CdcApply]], which a file-stream source must read
-  * from a directory of its own; and the `_GRAFT_BASE` sandboxes of
-  * [[Forget]] and [[Dedup]], which are staged SOURCE snapshots that the
+  * checkpoint and state roots of [[graft.streaming.CdcApply]] and
+  * [[Dedup]], which are per-run scratch; and the `_GRAFT_BASE` sandboxes
+  * of [[Forget]] and [[Dedup]], which are staged SOURCE snapshots that the
   * tier then derives layouts from.
   *
   * Freshness: a layout is live when Spark's `_SUCCESS`, at least one
@@ -209,8 +213,8 @@ object Staging {
 
   /** The staged-layout freshness check: Spark's `_SUCCESS`, at least one
     * data file (markers alone are not proof the data survived tmp
-    * cleanup — the stageForStream discipline), and the `_GRAFT_FP`
-    * marker matching the expected version|fingerprint. */
+    * cleanup), and the `_GRAFT_FP` marker matching the expected
+    * version|fingerprint. */
   private def layoutOk(root: java.io.File, fp: String): Boolean = {
     val marker = new java.io.File(root, "_GRAFT_FP")
     new java.io.File(root, "_SUCCESS").exists() &&

@@ -55,15 +55,9 @@ object CdcApply {
     * table: one row per key with the last-writer value and the lifetime
     * change count. All-integer output; the oracle is the batch
     * re-derivation (argmax per key over the whole feed). */
-  def cdcApplyStreamQuery(spark: SparkSession, dir: String): DataFrame = {
-    import java.nio.file.Paths
-    val src = Paths.get(s"$dir/orders.parquet")
-    val staged = Paths.get(sys.props("java.io.tmpdir"),
-      s"graft_stream_cdc_${EventStreams.sanitize(src.toString)}")
-    EventStreams.stageForStream(spark, src, staged)
-    applyFeed(spark, staged.toString, EventStreams.sanitize(dir),
-      maxFilesPerTrigger = None)
-  }
+  def cdcApplyStreamQuery(spark: SparkSession, dir: String): DataFrame =
+    applyFeed(spark, EventStreams.streamFeed(dir, "orders"),
+      EventStreams.sanitize(dir), maxFilesPerTrigger = None)
 
   /** Drive the CDC apply over a staged feed directory. `maxFilesPerTrigger`
     * splits the feed into one micro-batch per file — the spec uses it to

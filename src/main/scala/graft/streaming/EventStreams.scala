@@ -56,27 +56,12 @@ object EventStreams {
     }
   }
 
-  /** File-based event stream from a testdata dir. Spark's file stream source
-    * requires a DIRECTORY; the testdata ships one parquet FILE per table, so
-    * the file is staged (hard-copied once) into a scratch directory keyed by
-    * the source path. */
-  def readEvents(spark: SparkSession, dir: String): DataFrame = {
-    import java.nio.file.{Files, Paths, StandardCopyOption}
-    val src = Paths.get(s"$dir/events.parquet")
-    val streamDir =
-      if (Files.isDirectory(src)) src
-      else {
-        // keyed by the FULL sanitized source path — a hashCode key could
-        // collide across two sf dirs and silently reuse stale staged data
-        val staged = Paths.get(sys.props("java.io.tmpdir"),
-          s"graft_stream_${sanitize(src.toString)}")
-        Files.createDirectories(staged)
-        Files.copy(src, staged.resolve("events.parquet"),
-          StandardCopyOption.REPLACE_EXISTING)
-        staged
-      }
-    streamEvents(spark, streamDir.toString)
-  }
+  /** File-based event stream from a testdata dir: Spark's file stream
+    * source requires a directory of its own, so this streams the staged
+    * [[streamFeed]] of `events` (built once per source build, then a gate
+    * hit per call). */
+  def readEvents(spark: SparkSession, dir: String): DataFrame =
+    streamEvents(spark, streamFeed(dir, "events"))
 
   /** Tumbling 1-hour windowed aggregate with a 2-hour watermark: the
     * streaming twin of `Events.hourlyAgg`. Late data beyond the watermark is
@@ -300,73 +285,41 @@ object EventStreams {
       .withWatermark("ts", watermarkDelay)
       .dropDuplicatesWithinWatermark("event_id")
 
+  /** The file-stream feed of `$dir/<table>.parquet`: the
+    * [[graft.operators.Staging.stage]] layout `stream_<table>_x<copies>`,
+    * holding every data file of the source `copies` times over (copies > 1
+    * = a deterministic at-least-once redelivery) as
+    * `part-<copy>-<n>.parquet`. The source is a single parquet FILE (the
+    * testdata layout) or each `part-*` file of a Spark-written DIRECTORY
+    * (the soak's ×N dirs); both are byte copies, no Spark job. The
+    * layout's `_SUCCESS` and `_GRAFT_FP` are invisible to the stream:
+    * file-stream sources skip `_`-prefixed names. */
+  private[graft] def streamFeed(dir: String, table: String,
+                                copies: Int = 1): String =
+    graft.operators.Staging.stage(s"stream_${table}_x$copies", dir, table) {
+      out =>
+        import java.nio.file.{Files, Paths}
+        val src = Paths.get(dir, s"$table.parquet").toFile
+        val files =
+          if (src.isFile) Array(src)
+          else Option(src.listFiles()).getOrElse(Array.empty[java.io.File])
+            .filter(_.getName.startsWith("part-")).sortBy(_.getName)
+        require(files.nonEmpty, s"no data files under $src")
+        Files.createDirectories(Paths.get(out))
+        for (c <- 0 until copies; (f, n) <- files.zipWithIndex)
+          Files.copy(f.toPath, Paths.get(out, f"part-$c-$n%05d.parquet"))
+        Files.createFile(Paths.get(out, "_SUCCESS"))
+        ()
+    }
+
   /** q106 — [[dedupStream]] as an oracle-checked contract query: the source
-    * file is staged TWICE (a deterministic at-least-once redelivery — every
+    * feed is staged TWICE (a deterministic at-least-once redelivery — every
     * event arrives two times), streamed through the within-watermark dedup,
     * and the output must collapse back to exactly the original `events`
     * table, row for row. Money rides the long-cents path; output carries no
     * timestamp so micro-batch boundaries cannot move the hash. */
-  /** Stage a testdata table (`$dir/<table>.parquet`) into a scratch
-    * directory usable as a FILE-STREAM source, `copies` times over
-    * (copies > 1 = a deterministic at-least-once redelivery). The source
-    * may be a single parquet FILE (the driver testdata layout — cheap
-    * hard copies) or a Spark-written DIRECTORY (the soak's synthesized ×N
-    * dirs — a raw Files.copy would stage empty dirs, so these stage via
-    * Spark: overwrite the first copy, append the rest, marker written
-    * LAST so a crashed staging never half-serves). */
-  private[graft] def stageForStream(spark: SparkSession,
-                                    src: java.nio.file.Path,
-                                    staged: java.nio.file.Path,
-                                    copies: Int = 1): Unit = {
-    import java.nio.file.{Files, StandardCopyOption}
-    if (Files.isDirectory(src)) {
-      val marker = staged.resolve(s"_STAGED_X$copies")
-      // cheap fingerprint of the SOURCE build (the shared
-      // [[graft.operators.Staging.fingerprintOf]]): a source dir rebuilt
-      // in place by ANY caller — not just ScaleSoak, which calls
-      // invalidateStaged explicitly — changes the fingerprint, so the
-      // freshness check below re-stages instead of silently streaming
-      // the previous build's rows
-      def fingerprint: String =
-        graft.operators.Staging.fingerprintOf(src.toFile)
-      // marker alone is not proof the data survived tmp cleanup — verify
-      // at least one data file backs it (the Bucketing/ORC discipline)
-      // AND that the marker's recorded source fingerprint still matches
-      def ok: Boolean = Files.isRegularFile(marker) && {
-        val ls = staged.toFile.listFiles()
-        ls != null && ls.exists(f => f.getName.endsWith(".parquet") ||
-          f.getName.startsWith("part-"))
-      } && Files.readString(marker) == fingerprint
-      if (!ok) {
-        val df = spark.read.parquet(src.toString)
-        df.write.mode("overwrite").parquet(staged.toString)
-        (1 until copies).foreach(_ =>
-          df.write.mode("append").parquet(staged.toString))
-        Files.writeString(marker, fingerprint)
-        ()
-      }
-    } else {
-      // wipe before copying: staging is keyed by source path, and a file
-      // set left by an older naming scheme (or copy count) would silently
-      // feed extra rows into the stream
-      def rm(f: java.io.File): Unit = {
-        Option(f.listFiles()).foreach(_.foreach(rm)); f.delete(); ()
-      }
-      if (Files.exists(staged)) rm(staged.toFile)
-      Files.createDirectories(staged)
-      (0 until copies).foreach(i =>
-        Files.copy(src, staged.resolve(s"copy_$i.parquet"),
-          StandardCopyOption.REPLACE_EXISTING))
-    }
-  }
-
   def dedupStreamQuery(spark: SparkSession, dir: String): DataFrame = {
-    import java.nio.file.Paths
-    val src = Paths.get(s"$dir/events.parquet")
-    val staged = Paths.get(sys.props("java.io.tmpdir"),
-      s"graft_stream_dup_${sanitize(src.toString)}")
-    stageForStream(spark, src, staged, copies = 2)
-    val doubled = streamEvents(spark, staged.toString)
+    val doubled = streamEvents(spark, streamFeed(dir, "events", copies = 2))
     val deduped = dedupStream(doubled)
       .select(col("event_id"), col("user_id"), col("event_type"),
         round(col("value") * 100).cast(LongType).as("v_c"))
@@ -399,27 +352,16 @@ object EventStreams {
   }
 
   /** Stage `events` as a THREE-FILE feed with a deterministic
-    * out-of-order schedule: files 00/01 carry the on-time rows (split A
+    * out-of-order schedule, the [[graft.operators.Staging.stage]] layout
+    * `stream_events_late`: files 00/01 carry the on-time rows (split A
     * then B), file 02 the late set, with strictly increasing mtimes so
     * the file stream (under `maxFilesPerTrigger = 1`) replays them as
     * three ordered micro-batches. `ts` is normalized to a timestamp type
-    * at write, so the stream-side decode is encoding-independent.
-    * Marker-gated with the source fingerprint (the [[stageForStream]]
-    * discipline). */
-  private def stageLateFeed(spark: SparkSession, src: java.nio.file.Path,
-                            staged: java.nio.file.Path): Unit = {
-    import java.nio.file.{Files, StandardCopyOption}
-    import graft.operators.Staging.{deleteRecursively, fingerprintOf}
-    def fingerprint: String = fingerprintOf(src.toFile)
-    val names = Seq("00_ontime_a.parquet", "01_ontime_b.parquet",
-      "02_late.parquet")
-    val marker = staged.resolve("_STAGED_LATE")
-    val ok = Files.isRegularFile(marker) &&
-      names.forall(n => Files.exists(staged.resolve(n))) &&
-      Files.readString(marker) == fingerprint
-    if (!ok) {
-      if (Files.exists(staged)) deleteRecursively(staged.toFile)
-      Files.createDirectories(staged)
+    * at write, so the stream-side decode is encoding-independent. */
+  private def lateFeed(spark: SparkSession, dir: String): String =
+    graft.operators.Staging.stage("stream_events_late", dir, "events") { out =>
+      import java.nio.file.{Files, Paths}
+      val src = Paths.get(dir, "events.parquet")
       val raw = spark.read.parquet(src.toString)
       val ev = raw.schema("ts").dataType match {
         case LongType =>
@@ -427,37 +369,37 @@ object EventStreams {
         case _ => raw
       }
       def writeOne(df: DataFrame, name: String, mtime: Long): Unit = {
-        val tmp = staged.resolve(s"__tmp_$name")
+        val tmp = Paths.get(out, s"_tmp_$name")
         df.coalesce(1).write.mode("overwrite").parquet(tmp.toString)
         val part = Option(tmp.toFile.listFiles()).getOrElse(Array.empty)
           .find(f => f.getName.startsWith("part-") &&
             f.getName.endsWith(".parquet"))
           .getOrElse(sys.error(s"no part file under $tmp"))
-        Files.move(part.toPath, staged.resolve(name),
-          StandardCopyOption.REPLACE_EXISTING)
-        deleteRecursively(tmp.toFile)
+        val dst = Paths.get(out, name)
+        Files.move(part.toPath, dst)
+        graft.operators.Staging.deleteRecursively(tmp.toFile)
         // the strictly-increasing mtimes ARE the batch order — fail
         // loudly here rather than as a census mismatch far downstream
-        require(staged.resolve(name).toFile.setLastModified(mtime),
+        require(dst.toFile.setLastModified(mtime),
           s"cannot set mtime on $name — the 3-batch replay order " +
             "depends on it")
       }
       // deterministic, strictly increasing mtimes derived from the source
       val t0 = (src.toFile.lastModified / 60000) * 60000
-      writeOne(ev.filter(fileACond), names(0), t0)
-      writeOne(ev.filter(!lateCond && !fileACond), names(1), t0 + 60000)
-      writeOne(ev.filter(lateCond), names(2), t0 + 120000)
-      Files.writeString(marker, fingerprint)
+      writeOne(ev.filter(fileACond), "part-00-ontime-a.parquet", t0)
+      writeOne(ev.filter(!lateCond && !fileACond),
+        "part-01-ontime-b.parquet", t0 + 60000)
+      writeOne(ev.filter(lateCond), "part-02-late.parquet", t0 + 120000)
+      Files.createFile(Paths.get(out, "_SUCCESS"))
       ()
     }
-  }
 
   /** q291 — LATE-DATA CENSUS (round-11 verdict item 5): every watermark
     * lane so far measures the happy path; the first question a streaming
     * user asks at scale is the delay-vs-completeness trade — how many
     * rows does a given watermark delay actually DROP, and how late were
     * they? This lane re-feeds `events` on a deterministic out-of-order
-    * schedule ([[stageLateFeed]]: the md5-selected ~25% late set arrives
+    * schedule ([[lateFeed]]: the md5-selected ~25% late set arrives
     * two micro-batches after the on-time stream begins), drives the
     * standard hourly windowed count through a real three-batch streaming
     * execution (`maxFilesPerTrigger = 1`), and reads the drop census off
@@ -486,18 +428,14 @@ object EventStreams {
   def lateDataCensusQuery(spark: SparkSession, dir: String,
                           delayHours: Int = 2,
                           sinkTag: String = ""): DataFrame = {
-    import java.nio.file.Paths
     import org.apache.spark.sql.types.TimestampType
-    val src = Paths.get(s"$dir/events.parquet")
-    val staged = Paths.get(sys.props("java.io.tmpdir"),
-      s"graft_stream_late_${sanitize(src.toString)}")
-    stageLateFeed(spark, src, staged)
+    val staged = lateFeed(spark, dir)
     // stream: one file per micro-batch, oldest first — the staged order
     val streamed = spark.readStream
-      .schema(spark.read.parquet(staged.toString).schema)
+      .schema(spark.read.parquet(staged).schema)
       .option("maxFilesPerTrigger", 1)
       .option("latestFirst", "false")
-      .parquet(staged.toString)
+      .parquet(staged)
       .withColumn("ts", col("ts").cast(TimestampType))
     val agg = streamed
       .withWatermark("ts", s"$delayHours hours")
@@ -511,7 +449,7 @@ object EventStreams {
     // batch expectations over the SAME staged feed: the drop watermark
     // w0 derives from feed file A ONLY (the measured Spark rule — the
     // late batch N filters against the watermark of batches ≤ N−2)
-    val all = spark.read.parquet(staged.toString)
+    val all = spark.read.parquet(staged)
       .withColumn("ts", col("ts").cast(TimestampType))
       .withColumn("late", lateCond)
     val params = all.agg(
@@ -601,13 +539,9 @@ object EventStreams {
     * delay. */
   private[graft] def analyticLateCensus(spark: SparkSession, dir: String,
       delayHours: Int): DataFrame = {
-    import java.nio.file.Paths
     import org.apache.spark.sql.types.TimestampType
-    val src = Paths.get(s"$dir/events.parquet")
-    val staged = Paths.get(sys.props("java.io.tmpdir"),
-      s"graft_stream_late_${sanitize(src.toString)}")
-    stageLateFeed(spark, src, staged)
-    val all = spark.read.parquet(staged.toString)
+    val staged = lateFeed(spark, dir)
+    val all = spark.read.parquet(staged)
       .withColumn("ts", col("ts").cast(TimestampType))
       .withColumn("late", lateCond)
     val params = all.agg(
@@ -666,29 +600,6 @@ object EventStreams {
          |${lateDataCensusSql(d)}
          |)""".stripMargin
     }.mkString("\nUNION ALL\n")
-
-  /** Drop every marker-gated staged stream dir for `dir` — for callers
-    * that rebuild the source tables under an existing dir string
-    * (ScaleSoak factor rebuilds); the staging markers would otherwise
-    * serve the previous build's rows. */
-  private[graft] def invalidateStaged(dir: String): Unit = {
-    def rm(f: java.io.File): Unit = {
-      Option(f.listFiles()).foreach(_.foreach(rm)); f.delete(); ()
-    }
-    // Paths.get-normalize before sanitizing: the staging sites key from
-    // Paths.get(...).toString, and a raw-string key here would miss them
-    // on a non-canonical dir (trailing slash)
-    def key(table: String) = java.nio.file.Paths
-      .get(s"$dir/$table.parquet").toString
-    Seq(s"graft_stream_dup_${sanitize(key("events"))}",
-        s"graft_stream_late_${sanitize(key("events"))}",
-        s"graft_stream_cdc_${sanitize(key("orders"))}",
-        s"graft_stream_docs_${sanitize(key("documents"))}")
-      .foreach { name =>
-        val staged = java.nio.file.Paths.get(sys.props("java.io.tmpdir"), name)
-        if (java.nio.file.Files.exists(staged)) rm(staged.toFile)
-      }
-  }
 
   /** Contract query: the tumbling-window aggregate executed as a REAL
     * Structured Streaming query (micro-batched file source → watermark →

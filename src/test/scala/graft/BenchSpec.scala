@@ -136,4 +136,15 @@ class BenchSpec extends AnyFunSuite {
     assert(m.times.head._2.size >= 3)
     assert(m.total == m.times.head._2.min)
   }
+
+  test("SPARK_GRAFT_ONLY: a space after a comma still selects the lane") {
+    val keep = SparkEntry.onlyFilter(Some("q50, q51"))
+    assert(keep("q50_x") && keep("q51_y") && !keep("q52_z"))
+  }
+
+  test("SPARK_GRAFT_ONLY: an empty entry does not select every lane") {
+    val keep = SparkEntry.onlyFilter(Some("q50,,q51"))
+    assert(keep("q50_x") && keep("q51_y") && !keep("q52_z"))
+    assert(SparkEntry.onlyFilter(None)("q52_z"))
+  }
 }

@@ -480,25 +480,38 @@ class StagingSpec extends AnyFunSuite {
     } finally { Staging.invalidate(dirA); Staging.invalidate(dirB) }
   }
 
+  // the q106/q156/readEvents stream feeds ride along as more staged inputs
   test("the q130/q151/q234/q249/q284 layouts re-stage after the sources " +
     "are rewritten in place, with no invalidate call in between") {
     import graft.operators.{Bucketing, Layout, PartitionedEvents}
     import graft.sources.{OrcInterchange, SchemaEvolution}
+    import graft.streaming.{CdcApply, EventStreams}
     import java.nio.file.Paths
     val dir = Files.createTempDirectory("graft_fresh_spec").toString
     Seq("events", "customer", "lineitem", "orders").foreach(t =>
       Files.copy(Paths.get(GraftTestSession.Sf0001, s"$t.parquet"),
         Paths.get(dir, s"$t.parquet")))
     val layouts = Seq("events_by_day", "bkt_purchases", "bkt_customer",
-      "orc_lineitem", "evolved_orders", "orders_by_date")
+      "orc_lineitem", "evolved_orders", "orders_by_date",
+      "stream_orders_x1", "stream_events_x2", "stream_events_x1")
+    var drives = 0
     // each lane's row total through its staged layout ...
     def lanes(): Seq[Long] = Seq(
       PartitionedEvents.oneDayHourly(spark, dir).agg(sum("n")),
       Bucketing.bucketedSegmentAgg(spark, dir).agg(sum("n")),
       OrcInterchange.orcRoundTrip(spark, dir).agg(sum("n")),
       SchemaEvolution.evolvedPriorityTotals(spark, dir).agg(sum("n")),
-      Layout.clusteredMonthlyRollup(spark, dir).agg(sum("n_orders"))
-    ).map(_.head.getLong(0))
+      Layout.clusteredMonthlyRollup(spark, dir).agg(sum("n_orders")),
+      // q156 keeps one row per customer, which the orders rewrite below
+      // barely moves; its change total counts every order it applied
+      CdcApply.cdcApplyStreamQuery(spark, dir).agg(sum("n_changes"))
+    ).map(_.head.getLong(0)) ++ Seq(
+      EventStreams.dedupStreamQuery(spark, dir).count(), {
+        drives += 1
+        EventStreams.runToBatch(spark,
+          EventStreams.readEvents(spark, dir).select(col("event_id")),
+          s"feed_count_$drives").count()
+      })
     // ... and the same totals straight from the current sources
     def direct(): Seq[Long] = {
       val events = Tables.events(spark, dir)
@@ -512,7 +525,10 @@ class StagingSpec extends AnyFunSuite {
         Tables.lineitem(spark, dir).filter(col("l_quantity") >= 25.0).count(),
         orders.count(),
         orders.filter(to_date(col("o_orderdate")) >=
-          lit(java.sql.Date.valueOf(Layout.ClusterCutoff))).count())
+          lit(java.sql.Date.valueOf(Layout.ClusterCutoff))).count(),
+        orders.count(),
+        events.count(),
+        events.count())
     }
     def rewrite(table: String, keep: org.apache.spark.sql.Column): Unit = {
       val next = Paths.get(dir, s"$table.next")
@@ -539,6 +555,32 @@ class StagingSpec extends AnyFunSuite {
         assert(Staging.artifactFingerprint(dir, name) != fp,
           s"$name was not re-staged")
       }
+    } finally {
+      Staging.invalidate(spark, dir)
+      Staging.deleteRecursively(new java.io.File(dir))
+    }
+  }
+
+  test("back-to-back readEvents calls rewrite no feed, and invalidate " +
+    "removes the staged feeds") {
+    import graft.streaming.EventStreams
+    import java.nio.file.Paths
+    val dir = Files.createTempDirectory("graft_feed_spec").toString
+    Files.copy(Paths.get(GraftTestSession.Sf0001, "events.parquet"),
+      Paths.get(dir, "events.parquet"))
+    try {
+      val feed = new java.io.File(EventStreams.streamFeed(dir, "events"))
+      val marker = new java.io.File(feed, "_GRAFT_FP")
+      val stamp = marker.lastModified
+      // the filesystem mtime tick: a rebuild would land on a later stamp
+      Thread.sleep(1100)
+      EventStreams.readEvents(spark, dir)
+      EventStreams.readEvents(spark, dir)
+      assert(marker.lastModified == stamp, "a gate hit rewrote the feed")
+      val parts = feed.list().filter(_.startsWith("part-"))
+      assert(parts.toSeq == Seq("part-0-00000.parquet"))
+      Staging.invalidate(spark, dir)
+      assert(!feed.exists(), "invalidate left the stream feed behind")
     } finally {
       Staging.invalidate(spark, dir)
       Staging.deleteRecursively(new java.io.File(dir))
