@@ -187,8 +187,11 @@ object MediaAnalysis {
     * cascade ([[graft.operators.Forget]] tombstones a forgotten doc's
     * media ids — the source id and its [[CopyIdOffset]] twin). */
   private[graft] def phashBands(spark: SparkSession, dir: String): DataFrame =
-    graft.operators.Staging.prepared(spark, "phash_bands", dir)(
+    graft.operators.Staging.prepared(spark, PhashBandsLayout, dir)(
       aHashBands(phashCorpus(spark, dir)).toDF())
+
+  private[graft] val PhashBandsLayout =
+    graft.operators.Staging.Layout("phash_bands")
 
   def imagePhashPairs(spark: SparkSession, dir: String,
                       maxHamming: Int = 3): DataFrame = {

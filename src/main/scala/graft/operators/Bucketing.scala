@@ -16,14 +16,19 @@ import org.apache.spark.sql.functions._
   * fact table per query and never shuffling it again — the standard layout
   * for a fact table queried daily against the same dimension key.
   *
-  * Both tables are [[Staging.preparedBucketed]] layouts: written through
-  * the session catalog (plain parquet source + bucket metadata — no Hive
-  * needed) once per source build, re-registered over the same files in a
-  * fresh session.
+  * Both tables are bucketed [[Staging.Layout]]s: written once per source
+  * build and served through the session catalog (plain parquet source +
+  * bucket metadata — no Hive needed), re-registered over the same files
+  * in a fresh session.
   */
 object Bucketing {
 
   private val Buckets = 8
+
+  private val PurchasesLayout = Staging.Layout("bkt_purchases", "events",
+    buckets = Some(Staging.Buckets(Buckets, "user_id")))
+  private val CustomerLayout = Staging.Layout("bkt_customer", "customer",
+    buckets = Some(Staging.Buckets(Buckets, "c_custkey")))
 
   /** q151 — purchase revenue by market segment through BUCKETED tables:
     * events (purchases, long-cents) and customer are both written bucketed
@@ -37,14 +42,12 @@ object Bucketing {
     * exactly what the pin catches. Result is identical to the plain join
     * (the oracle), so correctness and layout are gated together. */
   def bucketedSegmentAgg(spark: SparkSession, dir: String): DataFrame = {
-    val purchases = Staging.preparedBucketed(spark, "bkt_purchases", dir,
-        Buckets, "user_id", sourceTable = "events") {
+    val purchases = Staging.prepared(spark, PurchasesLayout, dir) {
       Tables.events(spark, dir)
         .filter(col("event_type") === "purchase")
         .select(col("user_id"), Rfm.cents(col("value")).as("v_c"))
     }
-    val customers = Staging.preparedBucketed(spark, "bkt_customer", dir,
-        Buckets, "c_custkey", sourceTable = "customer") {
+    val customers = Staging.prepared(spark, CustomerLayout, dir) {
       Tables.customer(spark, dir)
         .select(col("c_custkey"), col("c_mktsegment"))
     }

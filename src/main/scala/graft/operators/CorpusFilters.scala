@@ -58,7 +58,7 @@ object CorpusFilters {
     * session RAM memo, so the timed consumers pay an honest scan of the
     * prepared artifact exactly like the shingle/prefix index readers. */
   private def benchGrams(spark: SparkSession, dir: String, k: Int): DataFrame =
-    Staging.prepared(spark, s"benchgrams_k$k", dir)(
+    Staging.prepared(spark, Staging.Layout(s"benchgrams_k$k"), dir)(
       gramRows(Tables.documents(spark, dir).filter(isBenchDoc), k,
         distinctPerDoc = true).select(col("gram")).distinct())
 
@@ -513,7 +513,8 @@ object CorpusFilters {
     // memos to real [[Staging.prepared]] layouts so the timed samples
     // measure the honest read-from-prepared-artifact path.
     val grams = Dedup.posGrams(spark, dir, n)
-    val lexicon = Staging.prepared(spark, s"boilerlex_k${n}_df$minDf", dir)(
+    val lexicon = Staging.prepared(spark,
+        Staging.Layout(s"boilerlex_k${n}_df$minDf"), dir)(
       grams.select(col("doc_id"), col("gram")).distinct()
         .groupBy(col("gram")).agg(count(lit(1)).as("df"))
         .filter(col("df") >= minDf)
@@ -532,7 +533,8 @@ object CorpusFilters {
             s => sequence(s, s + lit(n - 1)))))).as("keep"))
       .select(col("doc_id"),
         size(col("ws")).cast(LongType).as("n_words"),
-        size(col("keep")).cast(LongType).as("n_kept"),
+        // a null text has no keep array; the oracle counts 0 kept words
+        coalesce(size(col("keep")), lit(0)).cast(LongType).as("n_kept"),
         (size(col("ws")) - size(col("keep"))).cast(LongType).as("n_removed"),
         md5(concat_ws(" ",
           transform(col("keep"), i => element_at(col("ws"), i + 1)))

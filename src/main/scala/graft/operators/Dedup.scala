@@ -86,7 +86,7 @@ object Dedup {
   }
 
   /** STAGED uncapped shingle index for a testdata dir (write-once parquet
-    * via [[Staging.preparedBucketed]] — round-11 verdict item 1, bucketed
+    * via [[Staging.prepared]] — round-11 verdict item 1, bucketed
     * in round 13 per verdict item 2): shared by [[ngramJaccard]],
     * [[prefixSimJoin]], the calibration lanes,
     * [[graft.operators.CorpusPrep]] and the edit-distance confirm. The
@@ -105,10 +105,18 @@ object Dedup {
     * build reuses the same co-location. At 100 TB this moves the
     * inverted-index shuffle to write time, once per corpus snapshot. */
   private[operators] def shingleIndex(spark: SparkSession, dir: String): DataFrame =
-    Staging.preparedBucketed(spark, "shingles_k3", dir,
-      buckets = shingleBuckets(dir), bucketCol = "shingle",
-      version = ShingleIndexVersion)(
+    Staging.prepared(spark, shingleLayout(dir), dir)(
       shingles(Tables.documents(spark, dir)))
+
+  /** The staged shingle index layout of `dir`. Its builder version is
+    * `b1` — bump it on any change to [[shingles]]' logic. DERIVED layouts
+    * (the prefix index, the shingle arrays) COMPOSE this version into
+    * their own, so an upstream bump cascades: a re-staged shingle
+    * universe can never serve under stale prefixes (round-13 review
+    * finding). */
+  private def shingleLayout(dir: String): Staging.Layout =
+    Staging.Layout("shingles_k3", version = "b1",
+      buckets = Some(Staging.Buckets(shingleBuckets(dir), "shingle")))
 
   /** Source bytes per 32-bucket unit of the staged index layouts —
     * anchored so the sf0.1 harness snapshot (≈580 KB of documents)
@@ -143,13 +151,6 @@ object Dedup {
       math.round(bytes.toDouble / IndexBucketUnitBytes)).toInt
   }
 
-  /** Builder version of the staged shingle index — bump on any change to
-    * [[shingles]]' logic. DERIVED layouts (the prefix index) COMPOSE
-    * this string into their own version, so an upstream bump cascades:
-    * a re-staged shingle universe can never serve under stale prefixes
-    * (round-13 review finding). */
-  private[operators] val ShingleIndexVersion = "b1"
-
   /** Exact deduplication via content hash: one row per distinct text with
     * the surviving (minimum) doc_id and the duplicate count. Hash-groupBy is
     * the 100 TB-safe plan: 16-byte md5 keys in the exchange, map-side
@@ -182,7 +183,9 @@ object Dedup {
     * materialization; the q31 contract query itself stays on the uncached
     * [[ngramJaccard]] so the bench keeps measuring the real self-join. */
   def ngramPairsPrepared(spark: SparkSession, dir: String): DataFrame =
-    Staging.prepared(spark, "ngrampairs", dir)(ngramJaccard(spark, dir))
+    Staging.prepared(spark, NgramPairsLayout, dir)(ngramJaccard(spark, dir))
+
+  private val NgramPairsLayout = Staging.Layout("ngrampairs")
 
   /** [[ngramJaccard]] over an arbitrary documents-shaped frame (doc_id,
     * text). With `maxDf` set, both the candidate join AND the Jaccard
@@ -330,8 +333,11 @@ object Dedup {
     * at production scale: a persisted signature column of the corpus). */
   private[graft] def minhashSignatures(spark: SparkSession, dir: String,
                                        numHashes: Int): DataFrame =
-    Staging.prepared(spark, s"minhash$numHashes", dir)(
+    Staging.prepared(spark, minhashLayout(numHashes), dir)(
       minhashSigOn(Tables.documents(spark, dir), numHashes))
+
+  private def minhashLayout(numHashes: Int): Staging.Layout =
+    Staging.Layout(s"minhash$numHashes")
 
   /** The q32 signature builder over an arbitrary documents-shaped frame —
     * per-document rows (no cross-document dependency), which is what
@@ -1760,23 +1766,12 @@ object Dedup {
         .parquet(feed.toString)
     // one full drive of whatever the feed dir currently holds beyond the
     // checkpoint's committed offsets, into the SAME checkpoint + sink
-    def drive(): Unit = {
-      val key = "spark.sql.shuffle.partitions"
-      val prior = spark.conf.get(key)
-      spark.conf.set(key, "4") // state partition count, fixed at first ckpt
-      // honor the session's state-store flag exactly like runToBatch does
-      // (RocksDB by default; the spec proves recovery on BOTH providers —
-      // their checkpoint formats differ)
-      val provKey = "spark.sql.streaming.stateStore.providerClass"
-      val priorProv = spark.conf.getOption(provKey)
-      if (spark.conf.getOption(graft.streaming.EventStreams.RocksDbFlag)
-        .forall(_.toBoolean)) {
-        spark.conf.set(provKey, "org.apache.spark.sql.execution.streaming." +
-          "state.RocksDBStateStoreProvider")
-        spark.conf.set("spark.sql.streaming.stateStore.rocksdb." +
-          "changelogCheckpointing.enabled", "true")
-      }
-      try {
+    // (4 state partitions, fixed at the first checkpoint; the session's
+    // state-store flag honored like runToBatch — RocksDB by default, and
+    // the spec proves recovery on BOTH providers, whose checkpoint
+    // formats differ)
+    def drive(): Unit =
+      graft.streaming.EventStreams.withStreamConf(spark, Some(4)) {
         val gated = bandedDocStream(spark, feed.toString, None)
           .as[BandRow]
           .groupByKey(r => (r.band, r.key))
@@ -1790,14 +1785,7 @@ object Dedup {
           .option("checkpointLocation", ckpt.toString)
           .start()
         try q.processAllAvailable() finally q.stop()
-      } finally {
-        spark.conf.set(key, prior)
-        priorProv match {
-          case Some(p) => spark.conf.set(provKey, p)
-          case None => spark.conf.unset(provKey)
-        }
       }
-    }
     feedPart(col("doc_id") <= split)
     drive()
     // batch reads over a file-sink dir go through _spark_metadata, so
@@ -1881,35 +1869,15 @@ object Dedup {
         org.apache.spark.sql.streaming.GroupStateTimeout.NoTimeout)(
         (_: (Int, Long), rows, st) => gateBucket(rows, st))
       .toDF()
-    def withStreamConf[T](f: => T): T = {
-      val key = "spark.sql.shuffle.partitions"
-      val prior = spark.conf.get(key)
-      spark.conf.set(key, "4")
-      val provKey = "spark.sql.streaming.stateStore.providerClass"
-      val priorProv = spark.conf.getOption(provKey)
-      if (spark.conf.getOption(graft.streaming.EventStreams.RocksDbFlag)
-        .forall(_.toBoolean)) {
-        spark.conf.set(provKey, "org.apache.spark.sql.execution.streaming." +
-          "state.RocksDBStateStoreProvider")
-        spark.conf.set("spark.sql.streaming.stateStore.rocksdb." +
-          "changelogCheckpointing.enabled", "true")
+    def startQuery() =
+      graft.streaming.EventStreams.withStreamConf(spark, Some(4)) {
+        gatedStream().writeStream
+          .outputMode(OutputMode.Append)
+          .format("parquet")
+          .option("path", sink.toString)
+          .option("checkpointLocation", ckpt.toString)
+          .start()
       }
-      try f finally {
-        spark.conf.set(key, prior)
-        priorProv match {
-          case Some(p) => spark.conf.set(provKey, p)
-          case None => spark.conf.unset(provKey)
-        }
-      }
-    }
-    def startQuery() = withStreamConf {
-      gatedStream().writeStream
-        .outputMode(OutputMode.Append)
-        .format("parquet")
-        .option("path", sink.toString)
-        .option("checkpointLocation", ckpt.toString)
-        .start()
-    }
     var attempt = 0
     var killed: Option[(Long, Long)] = None
     while (killed.isEmpty && attempt < maxAttempts) {
@@ -2189,8 +2157,8 @@ object Dedup {
     * (~75%) and an ingest batch (~25%, md5-routed); the base's staged
     * shingle index (bucketed) and MinHash signature table build from the
     * base alone; the batch's derived rows then APPEND into those layouts
-    * ([[Staging.appendPrepared]]/[[Staging.appendBucketed]] — batch-
-    * sized work, bucket co-location preserved); and the merged layouts
+    * ([[Staging.append]] — batch-sized work, bucket co-location
+    * preserved); and the merged layouts
     * are compared row-for-row against a from-scratch rebuild over the
     * full corpus. Zero diffs is not an accident — it is the design
     * property that makes the layouts append-maintainable: every index
@@ -2213,20 +2181,18 @@ object Dedup {
     shingleIndex(spark, baseDir)
     minhashSignatures(spark, baseDir, 16)
     // merge the batch into both layouts (idempotent per base build)
-    val mergedShingles = Staging.appendBucketed(spark, "shingles_k3",
-      baseDir, "incr_batch", buckets = shingleBuckets(baseDir),
-      bucketCol = "shingle", version = ShingleIndexVersion)(
-      shingles(batchDocs))
-    val mergedMinhash = Staging.appendPrepared(spark, "minhash16",
+    val mergedShingles = Staging.append(spark, shingleLayout(baseDir),
+      baseDir, "incr_batch")(shingles(batchDocs))
+    val mergedMinhash = Staging.append(spark, minhashLayout(16),
       baseDir, "incr_batch")(minhashSigOn(batchDocs, 16))
     (mergedShingles, mergedMinhash, baseDir)
   }
 
   def incrementalIndexAudit(spark: SparkSession, dir: String): DataFrame = {
     val (mergedShingles, mergedMinhash, _) = mergedIncrLayouts(spark, dir)
-    indexDiffRow("shingles_k3", mergedShingles, shingleIndex(spark, dir),
-      Seq("doc_id", "shingle"), coBucketed = true)
-      .unionAll(indexDiffRow("minhash16", mergedMinhash,
+    indexDiffRow(shingleLayout(dir).name, mergedShingles,
+      shingleIndex(spark, dir), Seq("doc_id", "shingle"), coBucketed = true)
+      .unionAll(indexDiffRow(minhashLayout(16).name, mergedMinhash,
         minhashSignatures(spark, dir, 16), Seq("doc_id", "sig")))
   }
 
@@ -2237,11 +2203,10 @@ object Dedup {
     * per-bucket file set, so a layout that absorbs daily batches pays a
     * growing small-file tax on every scan — compaction is the OPTIMIZE
     * pass a production table service runs. This lane compacts both
-    * merged q296 layouts in place ([[Staging.compactBucketed]] rewrites
-    * one file per non-empty bucket with the bucket spec, markers and
-    * absorbed-batch append state preserved; [[Staging.compactPrepared]]
-    * coalesces the plain signature layout through the atomic publish
-    * path) and audits the COMPACTED layouts row-for-row against the
+    * merged q296 layouts ([[Staging.compact]] rewrites the bucketed
+    * shingle index as one file per non-empty bucket with the bucket spec,
+    * markers and absorbed-batch append state preserved, and coalesces the
+    * plain signature layout, both through the atomic publish) and audits the COMPACTED layouts row-for-row against the
     * from-scratch rebuild — compaction must be exactly lossless. The
     * spec additionally pins the file-count collapse, idempotency (a
     * second compaction is a no-op until something appends), and that
@@ -2249,15 +2214,13 @@ object Dedup {
     * rewrite. */
   def compactionAudit(spark: SparkSession, dir: String): DataFrame = {
     val (_, _, baseDir) = mergedIncrLayouts(spark, dir)
-    val compactedShingles = Staging.compactBucketed(spark, "shingles_k3",
-      baseDir, buckets = shingleBuckets(baseDir), bucketCol = "shingle",
-      version = ShingleIndexVersion)
-    val compactedMinhash = Staging.compactPrepared(spark, "minhash16",
+    val compactedShingles = Staging.compact(spark, shingleLayout(baseDir),
       baseDir)
-    indexDiffRow("shingles_k3", compactedShingles,
+    val compactedMinhash = Staging.compact(spark, minhashLayout(16), baseDir)
+    indexDiffRow(shingleLayout(dir).name, compactedShingles,
       shingleIndex(spark, dir), Seq("doc_id", "shingle"),
       coBucketed = true)
-      .unionAll(indexDiffRow("minhash16", compactedMinhash,
+      .unionAll(indexDiffRow(minhashLayout(16).name, compactedMinhash,
         minhashSignatures(spark, dir, 16), Seq("doc_id", "sig")))
   }
 
@@ -2306,7 +2269,7 @@ object Dedup {
     * cascade) must propagate into the persisted shingle and signature
     * layouts WITHOUT a whole-corpus rebuild. The lane stages a sandbox
     * corpus copy, builds both staged layouts over it, runs
-    * [[Staging.deleteBucketed]]/[[Staging.deletePrepared]] with the
+    * [[Staging.delete]] with the
     * forget roster — copy-on-write at file granularity: only part files
     * holding a forgotten doc's rows are rewritten, every other file is
     * hard-linked into the atomically-published new layout — and audits
@@ -2327,10 +2290,9 @@ object Dedup {
     minhashSignatures(spark, sandbox, 16)
     val roster = Tables.documents(spark, dir).filter(forgetCond)
       .select(col("doc_id"))
-    val deletedShingles = Staging.deleteBucketed(spark, "shingles_k3",
-      sandbox, "forget97", Seq("doc_id"), buckets = shingleBuckets(sandbox),
-      bucketCol = "shingle", version = ShingleIndexVersion)(roster)
-    val deletedMinhash = Staging.deletePrepared(spark, "minhash16",
+    val deletedShingles = Staging.delete(spark, shingleLayout(sandbox),
+      sandbox, "forget97", Seq("doc_id"))(roster)
+    val deletedMinhash = Staging.delete(spark, minhashLayout(16),
       sandbox, "forget97", Seq("doc_id"))(roster)
     // rebuild side: the SAME staged builders over the surviving corpus
     // (the q296 comparison discipline — the audit compares LAYOUTS; the
@@ -2341,10 +2303,10 @@ object Dedup {
       df.select(col("artifact"), col("n_incremental").as("n_after_delete"),
         col("n_rebuild"), col("n_only_incremental").as("n_only_deleted"),
         col("n_only_rebuild"))
-    renamed(indexDiffRow("shingles_k3", deletedShingles,
+    renamed(indexDiffRow(shingleLayout(keptDir).name, deletedShingles,
       shingleIndex(spark, keptDir), Seq("doc_id", "shingle"),
       coBucketed = true))
-      .unionAll(renamed(indexDiffRow("minhash16", deletedMinhash,
+      .unionAll(renamed(indexDiffRow(minhashLayout(16).name, deletedMinhash,
         minhashSignatures(spark, keptDir, 16), Seq("doc_id", "sig"))))
   }
 
@@ -2396,32 +2358,28 @@ object Dedup {
     val batchDocs = Tables.documents(spark, dir).filter(incrBatchCond)
     shingleIndex(spark, base)
     minhashSignatures(spark, base, 16)
-    Staging.appendBucketed(spark, "shingles_k3", base, "lc_batch",
-      buckets = shingleBuckets(base), bucketCol = "shingle",
-      version = ShingleIndexVersion)(shingles(batchDocs))
-    Staging.appendPrepared(spark, "minhash16", base, "lc_batch")(
+    val shingleBase = shingleLayout(base)
+    Staging.append(spark, shingleBase, base, "lc_batch")(shingles(batchDocs))
+    Staging.append(spark, minhashLayout(16), base, "lc_batch")(
       minhashSigOn(batchDocs, 16))
     val roster = Tables.documents(spark, dir).filter(forgetCond)
       .select(col("doc_id"))
-    Staging.deleteBucketed(spark, "shingles_k3", base, "lc_forget",
-      Seq("doc_id"), buckets = shingleBuckets(base), bucketCol = "shingle",
-      version = ShingleIndexVersion)(roster)
-    Staging.deletePrepared(spark, "minhash16", base, "lc_forget",
+    Staging.delete(spark, shingleBase, base, "lc_forget", Seq("doc_id"))(
+      roster)
+    Staging.delete(spark, minhashLayout(16), base, "lc_forget",
       Seq("doc_id"))(roster)
-    val compShingles = Staging.compactBucketed(spark, "shingles_k3", base,
-      buckets = shingleBuckets(base), bucketCol = "shingle",
-      version = ShingleIndexVersion)
-    val compMinhash = Staging.compactPrepared(spark, "minhash16", base)
+    val compShingles = Staging.compact(spark, shingleBase, base)
+    val compMinhash = Staging.compact(spark, minhashLayout(16), base)
     // rebuild side: the q303 kept-corpus snapshot's staged layouts
     val keptDir = stageCorpusSubset(spark, dir, "del_kept", !forgetCond)
     def renamed(df: DataFrame): DataFrame =
       df.select(col("artifact"), col("n_incremental").as("n_after_delete"),
         col("n_rebuild"), col("n_only_incremental").as("n_only_deleted"),
         col("n_only_rebuild"))
-    renamed(indexDiffRow("shingles_k3", compShingles,
+    renamed(indexDiffRow(shingleBase.name, compShingles,
       shingleIndex(spark, keptDir), Seq("doc_id", "shingle"),
       coBucketed = true))
-      .unionAll(renamed(indexDiffRow("minhash16", compMinhash,
+      .unionAll(renamed(indexDiffRow(minhashLayout(16).name, compMinhash,
         minhashSignatures(spark, keptDir, 16), Seq("doc_id", "sig"))))
   }
 
@@ -2444,32 +2402,13 @@ object Dedup {
     * only exact option for one (the rarity order is a whole-corpus
     * aggregate). [[Forget.cascadeAudit]] pins that the re-derivation
     * lands row-for-row on the kept-corpus rebuild. */
-  private[operators] def forgetTargets: Seq[Forget.Target] = Seq(
-    Forget.Target("documents", "shingles_k3", (s, d, tag, r) => {
-      Staging.deleteBucketed(s, "shingles_k3", d, tag, Seq("doc_id"),
-        buckets = shingleBuckets(d), bucketCol = "shingle",
-        version = ShingleIndexVersion)(r)
-      ()
-    }),
-    Forget.Target("documents", "minhash16", (s, d, tag, r) => {
-      Staging.deletePrepared(s, "minhash16", d, tag, Seq("doc_id"))(r)
-      ()
-    }),
-    Forget.Target("documents", "simhash", (s, d, tag, r) => {
-      Staging.deletePrepared(s, "simhash", d, tag, Seq("doc_id"))(r)
-      ()
-    }),
-    Forget.Target("documents", "ngrampairs", (s, d, tag, r) => {
-      // a pair row references TWO documents — it must go when EITHER
-      // side is forgotten, so the tombstone applies the roster to each
-      // key column in turn (two file-granular copy-on-write passes;
-      // both idempotent per (tag, roster))
-      Staging.deletePrepared(s, "ngrampairs", d, s"${tag}_a",
-        Seq("doc_a"))(r.toDF("doc_a"))
-      Staging.deletePrepared(s, "ngrampairs", d, s"${tag}_b",
-        Seq("doc_b"))(r.toDF("doc_b"))
-      ()
-    }))
+  private[operators] def forgetTargets(dir: String): Seq[Forget.Target] = Seq(
+    Forget.Target(shingleLayout(dir), Seq("doc_id")),
+    Forget.Target(minhashLayout(16), Seq("doc_id")),
+    Forget.Target(SimhashLayout, Seq("doc_id")),
+    // a pair row references TWO documents — it must go when EITHER side
+    // is forgotten
+    Forget.Target(NgramPairsLayout, Seq("doc_a", "doc_b")))
 
   /** Build every documents-derived staged layout under `dir` — the
     * cascade audit's "deployment with all indexes live" precondition. */
@@ -2492,20 +2431,24 @@ object Dedup {
     * deleted upstream. */
   private[operators] def forgetAuditRowsDocs(spark: SparkSession,
       sandbox: String, kept: String): DataFrame =
-    indexDiffRow("shingles_k3", shingleIndex(spark, sandbox),
+    indexDiffRow(shingleLayout(sandbox).name, shingleIndex(spark, sandbox),
       shingleIndex(spark, kept), Seq("doc_id", "shingle"),
       coBucketed = true)
-      .unionAll(indexDiffRow("minhash16",
+      .unionAll(indexDiffRow(minhashLayout(16).name,
         minhashSignatures(spark, sandbox, 16),
         minhashSignatures(spark, kept, 16), Seq("doc_id", "sig")))
-      .unionAll(indexDiffRow("simhash", simhashSignatures(spark, sandbox),
+      .unionAll(indexDiffRow(SimhashLayout.name,
+        simhashSignatures(spark, sandbox),
         simhashSignatures(spark, kept), Seq("doc_id", "simhash")))
-      .unionAll(indexDiffRow("ngrampairs", ngramPairsPrepared(spark, sandbox),
+      .unionAll(indexDiffRow(NgramPairsLayout.name,
+        ngramPairsPrepared(spark, sandbox),
         ngramPairsPrepared(spark, kept), Seq("doc_a", "doc_b", "jaccard")))
-      .unionAll(indexDiffRow("prefix_k3_t35", prefixIndex(spark, sandbox),
+      .unionAll(indexDiffRow(prefixLayout(sandbox).name,
+        prefixIndex(spark, sandbox),
         prefixIndex(spark, kept), Seq("doc_id", "w", "n"),
         coBucketed = true))
-      .unionAll(indexDiffRow("shingle_arrays", shingleArrays(spark, sandbox),
+      .unionAll(indexDiffRow(shingleArraysLayout(sandbox).name,
+        shingleArrays(spark, sandbox),
         shingleArrays(spark, kept), Seq("doc_id", "sa"),
         coBucketed = true))
 
@@ -2593,7 +2536,9 @@ object Dedup {
     * at production scale: a persisted signature column of the corpus). */
   private[operators] def simhashSignatures(spark: SparkSession,
                                            dir: String): DataFrame =
-    Staging.prepared(spark, "simhash", dir)(simhash(spark, dir))
+    Staging.prepared(spark, SimhashLayout, dir)(simhash(spark, dir))
+
+  private[graft] val SimhashLayout = Staging.Layout("simhash")
 
   /** [[simhash]] over an arbitrary documents-shaped frame (doc_id, text). */
   def simhashOn(docs: DataFrame): DataFrame = {
@@ -3276,7 +3221,7 @@ object Dedup {
     * like the shingle/prefix indexes. */
   private[operators] def posGrams(spark: SparkSession, dir: String,
                                   k: Int): DataFrame =
-    Staging.prepared(spark, s"posgrams_k$k", dir)(
+    Staging.prepared(spark, Staging.Layout(s"posgrams_k$k"), dir)(
       withWords(Tables.documents(spark, dir)).select(col("doc_id"),
         posexplode(gramCol(col("ws"), k)).as(Seq("pos", "gram"))))
 
@@ -3287,7 +3232,7 @@ object Dedup {
     * one explode serves both layouts). */
   private def dupGramLexicon(spark: SparkSession, dir: String,
                              k: Int): DataFrame =
-    Staging.prepared(spark, s"dupgrams_k$k", dir)(
+    Staging.prepared(spark, Staging.Layout(s"dupgrams_k$k"), dir)(
       dupLexiconOf(posGrams(spark, dir, k)))
 
   private def dupLexiconOf(grams: DataFrame): DataFrame =
@@ -3881,14 +3826,12 @@ object Dedup {
     * prefix length depends on it. */
   private[operators] def prefixIndex(spark: SparkSession, dir: String): DataFrame = {
     // ensure the upstream exists, THEN gate on its artifact fingerprint:
-    // a rebuild OR an appendBucketed batch merge into shingles_k3 leaves
-    // the source table untouched but must invalidate this derivation
+    // a rebuild OR a batch append into the shingle index leaves the
+    // source table untouched but must invalidate this derivation
     // (round-13 review pass 2)
     shingleIndex(spark, dir)
-    Staging.preparedBucketed(spark, "prefix_k3_t35", dir,
-      buckets = shingleBuckets(dir), bucketCol = "w",
-      version = s"v1+sh:$ShingleIndexVersion",
-      extraFp = Staging.artifactFingerprint(dir, "shingles_k3")) {
+    Staging.prepared(spark, prefixLayout(dir), dir,
+      extraFp = Staging.artifactFingerprint(dir, shingleLayout(dir).name)) {
       val tok = shingleIndex(spark, dir).toDF("doc_id", "w")
       val df = tok.groupBy(col("w")).agg(count(lit(1)).as("df"))
       tok.join(df, Seq("w"))
@@ -3909,14 +3852,25 @@ object Dedup {
     * fingerprint (rebuilds and batch appends both cascade). */
   private[operators] def shingleArrays(spark: SparkSession, dir: String): DataFrame = {
     shingleIndex(spark, dir)
-    Staging.preparedBucketed(spark, "shingle_arrays", dir,
-      buckets = shingleBuckets(dir), bucketCol = "doc_id",
-      version = s"v1+sh:$ShingleIndexVersion",
-      extraFp = Staging.artifactFingerprint(dir, "shingles_k3"))(
+    Staging.prepared(spark, shingleArraysLayout(dir), dir,
+      extraFp = Staging.artifactFingerprint(dir, shingleLayout(dir).name))(
       shingleIndex(spark, dir)
         .groupBy(col("doc_id"))
         .agg(sort_array(collect_list(col("shingle"))).as("sa")))
   }
+
+  /** The staged layouts derived from the shingle index: the prefix index
+    * bucketed by `w`, the arrays by `doc_id`; both compose the index's
+    * version. */
+  private def prefixLayout(dir: String): Staging.Layout =
+    Staging.Layout("prefix_k3_t35",
+      version = s"v1+sh:${shingleLayout(dir).version}",
+      buckets = Some(Staging.Buckets(shingleBuckets(dir), "w")))
+
+  private def shingleArraysLayout(dir: String): Staging.Layout =
+    Staging.Layout("shingle_arrays",
+      version = s"v1+sh:${shingleLayout(dir).version}",
+      buckets = Some(Staging.Buckets(shingleBuckets(dir), "doc_id")))
 
   def prefixSimJoin(spark: SparkSession, dir: String): DataFrame = {
     // History of this hot spot: the session-cached columnar frame

@@ -13,7 +13,7 @@ import org.apache.spark.sql.functions._
   * from every DERIVED index layout persisted beside it — shingle and
   * signature tables, pair lists, perceptual-hash bands, vector code
   * tables. q303/q304 proved the per-layout tombstone operation
-  * ([[Staging.deletePrepared]]/[[Staging.deleteBucketed]]: file-granular
+  * ([[Staging.delete]]: file-granular
   * copy-on-write, hard-linked untouched files, atomic publish,
   * roster-keyed idempotency markers); what was missing was the MANIFEST:
   * a deployment-level registry of which layouts exist per source table,
@@ -21,8 +21,9 @@ import org.apache.spark.sql.functions._
   * subset the operator remembered.
   *
   * [[manifest]] is that registry. Each owning module contributes its
-  * targets next to its builders (the versions and bucket specs the
-  * delete gates require live there), split by SOURCE table:
+  * targets next to its builders — each target is the module's declared
+  * [[Staging.Layout]] (version, bucket spec and source table live
+  * there) plus its key columns — split by SOURCE table:
   *
   *  - documents → shingles_k3 (bucketed), minhash16, simhash,
   *    ngrampairs (tombstoned on BOTH key columns — a pair dies when
@@ -48,27 +49,26 @@ import org.apache.spark.sql.functions._
   */
 object Forget {
 
-  /** One delete-maintained staged layout: the source table its roster
-    * keys address, the layout name, and the delete hook
-    * `(spark, dir, tag, roster) => Unit` (the roster is a one-column
-    * key frame of that source's subject ids). */
-  final case class Target(source: String, layout: String,
-      delete: (SparkSession, String, String, DataFrame) => Unit)
+  /** One delete-maintained staged layout: the declared layout (its
+    * `sourceTable` is the table whose subject ids the roster holds), the
+    * key columns a forgotten id is tombstoned on — each in turn, so a row
+    * goes when ANY of them holds one — and the map from a one-column
+    * subject roster to key values. */
+  final case class Target(layout: Staging.Layout, keyCols: Seq[String],
+      keys: DataFrame => DataFrame = identity)
 
-  /** Every delete-maintained staged layout in the engine, by source. */
-  def manifest: Seq[Target] =
-    Dedup.forgetTargets ++ SimilaritySearch.forgetTargets ++ Seq(
-      Target("documents", "phash_bands", (s, d, tag, r) => {
-        // a forgotten document's media footprint is its own id plus the
-        // planted perturbed copy's offset id (MediaAnalysis.phashCorpus)
-        val ids = r.toDF("media_id")
-        val medias = ids.union(ids.select(
-          (col("media_id") + graft.multimodal.MediaAnalysis.CopyIdOffset)
-            .as("media_id")))
-        Staging.deletePrepared(s, "phash_bands", d, tag,
-          Seq("media_id"))(medias)
-        ()
-      }))
+  /** Every delete-maintained staged layout under `dir`, by source. */
+  def manifest(dir: String): Seq[Target] =
+    Dedup.forgetTargets(dir) ++ SimilaritySearch.forgetTargets ++ Seq(
+      // a forgotten document's media footprint is its own id plus the
+      // planted perturbed copy's offset id (MediaAnalysis.phashCorpus)
+      Target(graft.multimodal.MediaAnalysis.PhashBandsLayout,
+        Seq("media_id"), { r =>
+          val ids = r.toDF("media_id")
+          ids.union(ids.select(
+            (col("media_id") + graft.multimodal.MediaAnalysis.CopyIdOffset)
+              .as("media_id")))
+        }))
 
   /** Apply one forget request to EVERY present staged layout under
     * `dir`: `rosters` maps each source table to its one-column subject
@@ -80,13 +80,20 @@ object Forget {
     * names acted on. */
   def forget(spark: SparkSession, dir: String, tag: String,
              rosters: Map[String, DataFrame]): Seq[String] =
-    manifest.flatMap { t =>
-      rosters.get(t.source).flatMap { roster =>
-        if (Staging.layoutPresent(dir, t.layout)) {
-          t.delete(spark, dir, tag, roster)
-          Some(t.layout)
-        } else None
-      }
+    manifest(dir).flatMap { t =>
+      rosters.get(t.layout.sourceTable)
+        .filter(_ => Staging.layoutPresent(t.layout, dir))
+        .map { roster =>
+          val ids = t.keys(roster)
+          // one file-granular copy-on-write pass per key column, each
+          // idempotent per (tag, roster)
+          t.keyCols.foreach { k =>
+            Staging.delete(spark, t.layout, dir,
+              if (t.keyCols.size == 1) tag else s"${tag}_$k", Seq(k))(
+              ids.toDF(k))
+          }
+          t.layout.name
+        }
     }
 
   /** The q303/q304 forget cohort, shared across source tables. */
@@ -146,9 +153,11 @@ object Forget {
       .filter(!keepCond("vec_id")).select(col("vec_id"))
     val acted = forget(spark, sandbox, "fc97",
       Map("documents" -> docRoster, "embeddings" -> vecRoster))
-    require(acted.toSet == manifest.map(_.layout).toSet,
-      s"forget cascade skipped layouts: ${manifest.map(_.layout).toSet -- acted}")
-    val phashRow = Dedup.indexDiffRow("phash_bands",
+    val all = manifest(sandbox).map(_.layout.name).toSet
+    require(acted.toSet == all,
+      s"forget cascade skipped layouts: ${all -- acted}")
+    val phashRow = Dedup.indexDiffRow(
+      graft.multimodal.MediaAnalysis.PhashBandsLayout.name,
       graft.multimodal.MediaAnalysis.phashBands(spark, sandbox),
       graft.multimodal.MediaAnalysis.phashBands(spark, kept),
       Seq("media_id", "b0", "b1", "b2", "b3"))

@@ -360,7 +360,7 @@ object Layout {
     * by Z within files — covers a small rectangle of the 2-D key space
     * and carries TIGHT min/max stats on BOTH columns. */
   private[graft] def zorderedOrders(spark: SparkSession, dir: String): DataFrame =
-    Staging.prepared(spark, "zorders", dir, sourceTable = "orders") {
+    Staging.prepared(spark, Staging.Layout("zorders", "orders"), dir) {
       val base = Tables.orders(spark, dir)
         .withColumn("o_orderdate", to_date(col("o_orderdate")))
         .withColumn("__zdays",

@@ -507,8 +507,7 @@ object SimilaritySearch {
         sourceTable = "embeddings", version = IvfCentersVersion)(
         serializeCenters(fitCoarse(spark, dir, nlist)
           .clusterCenters.map(_.toArray))))
-    val assigned = Staging.prepared(spark, s"ivf_assign_n$nlist", dir,
-      sourceTable = "embeddings", version = IvfAssignVersion)(
+    val assigned = Staging.prepared(spark, ivfAssignLayout(nlist), dir)(
       withCoarseId(normalized(spark, dir), centers)
         .select(col("vec_id"), col("u"), col("coarse_id")))
     capturedCoarse.put(dir, nlist, centers)
@@ -1067,9 +1066,15 @@ object SimilaritySearch {
   private val IvfCentersVersion = "v1"
   private val IvfAssignVersion = s"v1+c:$IvfCentersVersion"
 
+  private val Int8CodesLayout =
+    Staging.Layout("int8codes", "embeddings", Int8CodesVersion)
+  private[graft] def ivfAssignLayout(nlist: Int): Staging.Layout =
+    Staging.Layout(s"ivf_assign_n$nlist", "embeddings", IvfAssignVersion)
+  private def pqCodesLayout(m: Int, ncodes: Int): Staging.Layout =
+    Staging.Layout(s"pqcodes_m${m}_n$ncodes", "embeddings", PqCodesVersion)
+
   private[graft] def int8CodedArray(spark: SparkSession, dir: String): DataFrame =
-    Staging.prepared(spark, "int8codes", dir, sourceTable = "embeddings",
-      version = Int8CodesVersion)(
+    Staging.prepared(spark, Int8CodesLayout, dir)(
       int8CodedArrayBuild(spark, dir))
 
   private def int8CodedArrayBuild(spark: SparkSession, dir: String): DataFrame =
@@ -1205,8 +1210,7 @@ object SimilaritySearch {
 
   private def pqCodesTable(spark: SparkSession, dir: String,
                            m: Int, ncodes: Int): DataFrame =
-    Staging.prepared(spark, s"pqcodes_m${m}_n$ncodes", dir,
-      sourceTable = "embeddings", version = PqCodesVersion)(
+    Staging.prepared(spark, pqCodesLayout(m, ncodes), dir)(
       pqEncode(spark, int8CodedArray(spark, dir),
         pqCodebook(spark, dir, m, ncodes), m))
 
@@ -1224,7 +1228,7 @@ object SimilaritySearch {
     * scheduled index rebuilds, never per batch. This lane stages the
     * base vectors' PQ codes (~75%, md5-routed), encodes the ingest
     * batch with the SAME fixed model, APPENDS it
-    * ([[Staging.appendPrepared]], idempotent per base build), and
+    * ([[Staging.append]], idempotent per base build), and
     * audits merged == the full staged code table row-for-row on
     * (vec_id, s, cid). Zero diffs is the design property that makes the
     * code table append-maintainable: each vector's m codes depend on
@@ -1236,14 +1240,13 @@ object SimilaritySearch {
     val cb = pqCodebook(spark, dir, m, ncodes)
     val coded = int8CodedArray(spark, dir)
     // base layout (built once per corpus snapshot from the base slice)
-    Staging.prepared(spark, s"pqcodes_incr_base_m${m}_n$ncodes", dir,
-      sourceTable = "embeddings", version = PqCodesVersion)(
+    val base = Staging.Layout(s"pqcodes_incr_base_m${m}_n$ncodes",
+      "embeddings", PqCodesVersion)
+    Staging.prepared(spark, base, dir)(
       pqEncode(spark, coded.filter(!incrAnnBatchCond), cb, m))
-    val merged = Staging.appendPrepared(spark,
-      s"pqcodes_incr_base_m${m}_n$ncodes", dir, "incr_batch",
-      sourceTable = "embeddings", version = PqCodesVersion)(
+    val merged = Staging.append(spark, base, dir, "incr_batch")(
       pqEncode(spark, coded.filter(incrAnnBatchCond), cb, m))
-    Dedup.indexDiffRow(s"pqcodes_m${m}_n$ncodes", merged,
+    Dedup.indexDiffRow(pqCodesLayout(m, ncodes).name, merged,
       pqCodesTable(spark, dir, m, ncodes), Seq("vec_id", "s", "cid"))
   }
 
@@ -1357,7 +1360,7 @@ object SimilaritySearch {
     * propagate into the persisted PQ code table WITHOUT re-encoding the
     * corpus. The lane stages a sandbox code table over the full corpus
     * (the contract `pqcodes` layout that serves q242/q288 is never
-    * touched), runs [[Staging.deletePrepared]] with the roster — only
+    * touched), runs [[Staging.delete]] with the roster — only
     * part files holding a forgotten vector's codes rewrite; the rest
     * hard-link into the atomically-published layout — and audits the
     * deleted table row-for-row against a re-encode of the surviving
@@ -1368,18 +1371,16 @@ object SimilaritySearch {
                      m: Int = 8, ncodes: Int = 16): DataFrame = {
     val cb = pqCodebook(spark, dir, m, ncodes)
     val coded = int8CodedArray(spark, dir)
-    val name = s"pqcodes_del_sandbox_m${m}_n$ncodes"
-    Staging.prepared(spark, name, dir,
-      sourceTable = "embeddings", version = PqCodesVersion)(
-      pqEncode(spark, coded, cb, m))
+    val sandbox = Staging.Layout(s"pqcodes_del_sandbox_m${m}_n$ncodes",
+      "embeddings", PqCodesVersion)
+    Staging.prepared(spark, sandbox, dir)(pqEncode(spark, coded, cb, m))
     val roster = coded.select(col("vec_id"))
       .filter(col("vec_id") % 97 === 0)
-    val deleted = Staging.deletePrepared(spark, name, dir, "forget97",
-      Seq("vec_id"), sourceTable = "embeddings",
-      version = PqCodesVersion)(roster)
+    val deleted = Staging.delete(spark, sandbox, dir, "forget97",
+      Seq("vec_id"))(roster)
     val rebuilt = pqEncode(spark,
       coded.filter(col("vec_id") % 97 =!= 0), cb, m)
-    Dedup.indexDiffRow(s"pqcodes_m${m}_n$ncodes", deleted, rebuilt,
+    Dedup.indexDiffRow(pqCodesLayout(m, ncodes).name, deleted, rebuilt,
       Seq("vec_id", "s", "cid"))
       .select(col("artifact"), col("n_incremental").as("n_after_delete"),
         col("n_rebuild"), col("n_only_incremental").as("n_only_deleted"),
@@ -1394,22 +1395,9 @@ object SimilaritySearch {
     * encode. The model constants themselves are derived AGGREGATES, not
     * per-subject rows — they are retained (the q300 drift audit is what
     * schedules their refit). */
-  private[operators] def forgetTargets: Seq[Forget.Target] = Seq(
-    Forget.Target("embeddings", "int8codes", (s, d, tag, r) => {
-      Staging.deletePrepared(s, "int8codes", d, tag, Seq("vec_id"),
-        sourceTable = "embeddings", version = Int8CodesVersion)(r)
-      ()
-    }),
-    Forget.Target("embeddings", "ivf_assign_n16", (s, d, tag, r) => {
-      Staging.deletePrepared(s, "ivf_assign_n16", d, tag, Seq("vec_id"),
-        sourceTable = "embeddings", version = IvfAssignVersion)(r)
-      ()
-    }),
-    Forget.Target("embeddings", "pqcodes_m8_n16", (s, d, tag, r) => {
-      Staging.deletePrepared(s, "pqcodes_m8_n16", d, tag, Seq("vec_id"),
-        sourceTable = "embeddings", version = PqCodesVersion)(r)
-      ()
-    }))
+  private[operators] def forgetTargets: Seq[Forget.Target] =
+    Seq(Int8CodesLayout, ivfAssignLayout(16), pqCodesLayout(8, 16))
+      .map(Forget.Target(_, Seq("vec_id")))
 
   /** Build every embeddings-derived staged layout under `dir` — the
     * cascade audit's precondition. */
@@ -1440,15 +1428,14 @@ object SimilaritySearch {
       .select(col("vec_id"), col("u"), col("coarse_id"))
     val cb = pqCodebook(spark, sandbox, 8, 16)
     val pqRebuild = pqEncode(spark, int8Rebuild, cb, 8)
-    Dedup.indexDiffRow("int8codes",
-      Staging.readPrepared(spark, sandbox, "int8codes"),
-      int8Rebuild, Seq("vec_id", "codes"))
-      .unionAll(Dedup.indexDiffRow("ivf_assign_n16",
-        Staging.readPrepared(spark, sandbox, "ivf_assign_n16"),
-        ivfRebuild, Seq("vec_id", "u", "coarse_id")))
-      .unionAll(Dedup.indexDiffRow("pqcodes_m8_n16",
-        Staging.readPrepared(spark, sandbox, "pqcodes_m8_n16"),
-        pqRebuild, Seq("vec_id", "s", "cid")))
+    def row(layout: Staging.Layout, rebuilt: DataFrame,
+            keys: String*): DataFrame =
+      Dedup.indexDiffRow(layout.name,
+        Staging.readPrepared(spark, layout, sandbox), rebuilt, keys)
+    row(Int8CodesLayout, int8Rebuild, "vec_id", "codes")
+      .unionAll(row(ivfAssignLayout(16), ivfRebuild,
+        "vec_id", "u", "coarse_id"))
+      .unionAll(row(pqCodesLayout(8, 16), pqRebuild, "vec_id", "s", "cid"))
   }
 
   /** [[annDeleteAudit]]'s oracle: deleted == re-encoded means the totals

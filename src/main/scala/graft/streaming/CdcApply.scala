@@ -89,9 +89,7 @@ object CdcApply {
     registerForCleanup(stateRoot)
     val stateDir = stateRoot.resolve("current").toString
 
-    val prior = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "4")
-    try {
+    EventStreams.withStreamConf(spark, Some(4)) {
       val q = changes.writeStream
         .foreachBatch { (batch: DataFrame, batchId: Long) =>
           val sp = batch.sparkSession
@@ -136,7 +134,7 @@ object CdcApply {
         }
         .start()
       try q.processAllAvailable() finally q.stop()
-    } finally spark.conf.set("spark.sql.shuffle.partitions", prior)
+    }
     spark.read.parquet(stateDir)
       .select(col("custkey"), col("ts_ms").as("last_ts_ms"),
         col("okey").as("last_okey"), col("price_c"), col("n_changes"))

@@ -1137,22 +1137,27 @@ object EventStreams {
   private val RocksDbProvider =
     "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
 
-  def runToBatch(spark: SparkSession, streamed: DataFrame, name: String,
-                 mode: OutputMode = OutputMode.Append,
-                 shufflePartitions: Option[Int] = None,
-                 awaitStateFlush: Boolean = false): DataFrame = {
-    val key = "spark.sql.shuffle.partitions"
-    val noDataKey = "spark.sql.streaming.noDataMicroBatches.enabled"
-    // the trailing no-data batch RUNS immediately after the watermark
-    // advances, but its progress EVENT is rate-limited by this interval
-    // (default 10 s) — the awaitStateFlush poll below watches
-    // recentProgress, so without lowering it a 2 s query reads as 12 s
-    // of idle waiting (measured on the q291 3-batch census)
-    val noDataEvtKey = "spark.sql.streaming.noDataProgressEventInterval"
-    val prior = spark.conf.get(key)
-    val priorNoData = spark.conf.getOption(noDataKey)
-    val priorNoDataEvt = spark.conf.getOption(noDataEvtKey)
-    val priorProvider = spark.conf.getOption(ProviderKey)
+  /** Run `body` with `settings` applied to the session conf, then
+    * restore each key's prior value (or unset it). */
+  private def withConf[T](spark: SparkSession,
+                          settings: Seq[(String, String)])(body: => T): T = {
+    val prior = settings.map { case (k, _) => k -> spark.conf.getOption(k) }
+    settings.foreach { case (k, v) => spark.conf.set(k, v) }
+    try body finally prior.foreach {
+      case (k, Some(v)) => spark.conf.set(k, v)
+      case (k, None) => spark.conf.unset(k)
+    }
+  }
+
+  /** The one state-store conf scope of every stateful drive
+    * ([[runToBatch]], the q302 checkpoint-restart drives, the CDC apply):
+    * runs `body` — which starts its streaming queries, capturing the conf
+    * — with the shuffle (= state) partition count and the session's
+    * state-store provider settings applied, and restores every key it set
+    * afterwards. */
+  private[graft] def withStreamConf[T](spark: SparkSession,
+                                       shufflePartitions: Option[Int])
+                                      (body: => T): T = {
     // weak-scaling hook for the ×N soak: a pinned partition count that is
     // right for the 1× harness would carry N× the state per task at ×N,
     // conflating plan scaling with single-task memory effects — ScaleSoak
@@ -1162,57 +1167,66 @@ object EventStreams {
     // uses its own checkpoint name via the dir-keyed query name)
     val partScale = sys.props.get("graft.stream.part.scale")
       .map(_.toInt).getOrElse(1)
-    shufflePartitions.foreach(p => spark.conf.set(key, (p * partScale).toString))
+    val rocks = "spark.sql.streaming.stateStore.rocksdb."
+    val provider =
+      if (!spark.conf.getOption(RocksDbFlag).forall(_.toBoolean)) Nil
+      else Seq(ProviderKey -> RocksDbProvider,
+        // changelog checkpointing: commit the per-batch DELTA instead of
+        // a full RocksDB snapshot upload every micro-batch — the
+        // production RocksDB deployment mode, and the difference between
+        // per-batch cost ∝ state size and ∝ batch size (snapshots still
+        // happen, in the background maintenance task)
+        rocks + "changelogCheckpointing.enabled" -> "true",
+        // metrics-only row counting: every RocksDB put/delete otherwise
+        // pays a read-before-write to keep the numRows metric exact —
+        // Spark's own docs recommend disabling it for write-heavy state
+        // at any scale (round 15; results are unaffected, only the
+        // progress-report numRowsTotal goes approximate)
+        rocks + "trackTotalNumberOfRows" -> "false") ++
+        // bounded memory (round 16, verdict item 3): ONE shared block
+        // cache + write-buffer manager for every RocksDB instance on the
+        // executor — Spark's memory-GOVERNANCE mode for executors hosting
+        // many state partitions. Measured and left OPT-IN (set
+        // spark.graft.stateStore.rocksdb.maxMemoryMB to enable): with a
+        // stream-stream join's 16 instances opening concurrently against
+        // one shared LRU cache, the focused bench read q83 1.70→2.17 s and
+        // q286 3.10→3.49 s — the shared-cache lock serializes exactly the
+        // instance-open phase the bench pays per fresh query. At
+        // production state sizes the bound is about not OOMing the
+        // executor, not speed, so the knob stays available. Also
+        // measured for the stream-stream join open premium (round 16)
+        // and left at defaults: allowFAllocate=false + writeBufferSizeMB=8
+        // (the docs' short-lived-stores advice) read as pure probe noise
+        // on the q83/q137/q286 focused bench (A 5.94 s vs B 6.52 s at a
+        // 17% slower probe — null after normalization).
+        spark.conf.getOption("spark.graft.stateStore.rocksdb.maxMemoryMB")
+          .toSeq.flatMap(mb => Seq(rocks + "boundedMemoryUsage" -> "true",
+            rocks + "maxMemoryUsageMB" -> mb))
+    withConf(spark, shufflePartitions.map(p =>
+      "spark.sql.shuffle.partitions" -> (p * partScale).toString).toSeq ++
+      provider)(body)
+  }
+
+  def runToBatch(spark: SparkSession, streamed: DataFrame, name: String,
+                 mode: OutputMode = OutputMode.Append,
+                 shufflePartitions: Option[Int] = None,
+                 awaitStateFlush: Boolean = false): DataFrame = {
     // a query that does not wait for a watermark-advance flush gains
     // nothing from the trailing zero-input micro-batch — skip its whole
     // plan/commit cycle. Queries that DO finalize state on watermark
     // advance (outer-join null padding, session windows) keep it: the
-    // no-data batch IS their emission path.
-    if (!awaitStateFlush) spark.conf.set(noDataKey, "false")
-    else spark.conf.set(noDataEvtKey, "50ms")
-    if (spark.conf.getOption(RocksDbFlag).forall(_.toBoolean)) {
-      spark.conf.set(ProviderKey, RocksDbProvider)
-      // changelog checkpointing: commit the per-batch DELTA instead of a
-      // full RocksDB snapshot upload every micro-batch — the production
-      // RocksDB deployment mode, and the difference between per-batch
-      // cost ∝ state size and ∝ batch size (snapshots still happen, in
-      // the background maintenance task)
-      spark.conf.set("spark.sql.streaming.stateStore.rocksdb." +
-        "changelogCheckpointing.enabled", "true")
-      // metrics-only row counting: every RocksDB put/delete otherwise
-      // pays a read-before-write to keep the numRows metric exact —
-      // Spark's own docs recommend disabling it for write-heavy state
-      // at any scale (round 15; results are unaffected, only the
-      // progress-report numRowsTotal goes approximate)
-      spark.conf.set("spark.sql.streaming.stateStore.rocksdb." +
-        "trackTotalNumberOfRows", "false")
-      // bounded memory (round 16, verdict item 3): ONE shared block
-      // cache + write-buffer manager for every RocksDB instance on the
-      // executor — Spark's memory-GOVERNANCE mode for executors hosting
-      // many state partitions. Measured and left OPT-IN (set
-      // spark.graft.stateStore.rocksdb.maxMemoryMB to enable): with a
-      // stream-stream join's 16 instances opening concurrently against
-      // one shared LRU cache, the focused bench read q83 1.70→2.17 s and
-      // q286 3.10→3.49 s — the shared-cache lock serializes exactly the
-      // instance-open phase the bench pays per fresh query. At
-      // production state sizes the bound is about not OOMing the
-      // executor, not speed, so the knob stays available.
-      spark.conf.getOption("spark.graft.stateStore.rocksdb.maxMemoryMB")
-        .foreach { mb =>
-          spark.conf.set("spark.sql.streaming.stateStore.rocksdb." +
-            "boundedMemoryUsage", "true")
-          spark.conf.set("spark.sql.streaming.stateStore.rocksdb." +
-            "maxMemoryUsageMB", mb)
-        }
-      // also measured for the stream-stream join open premium (round 16)
-      // and left at defaults: allowFAllocate=false + writeBufferSizeMB=8
-      // (the docs' short-lived-stores advice) read as pure probe noise
-      // on the q83/q137/q286 focused bench (A 5.94 s vs B 6.52 s at a
-      // 17% slower probe — null after normalization).
-    }
-    lastProviderHolder.set(spark.conf.getOption(ProviderKey)
-      .getOrElse("HDFSBackedStateStoreProvider(default)"))
-    try {
+    // no-data batch IS their emission path — and its progress EVENT is
+    // rate-limited by noDataProgressEventInterval (default 10 s), which
+    // the awaitStateFlush poll below watches, so without lowering it a
+    // 2 s query reads as 12 s of idle waiting (measured on the q291
+    // 3-batch census)
+    val noData =
+      if (!awaitStateFlush)
+        Seq("spark.sql.streaming.noDataMicroBatches.enabled" -> "false")
+      else Seq("spark.sql.streaming.noDataProgressEventInterval" -> "50ms")
+    withStreamConf(spark, shufflePartitions)(withConf(spark, noData) {
+      lastProviderHolder.set(spark.conf.getOption(ProviderKey)
+        .getOrElse("HDFSBackedStateStoreProvider(default)"))
       val q = streamed.writeStream
         .outputMode(mode)
         .format("memory")
@@ -1252,21 +1266,7 @@ object EventStreams {
       // pile-up across a long sweep is real but is the SWEEP's problem;
       // ScaleSoak drains between lanes, and Spark unloads inactive
       // providers in its maintenance pass.
-    } finally {
-      spark.conf.set(key, prior)
-      priorNoData match {
-        case Some(p) => spark.conf.set(noDataKey, p)
-        case None => spark.conf.unset(noDataKey)
-      }
-      priorNoDataEvt match {
-        case Some(p) => spark.conf.set(noDataEvtKey, p)
-        case None => spark.conf.unset(noDataEvtKey)
-      }
-      priorProvider match {
-        case Some(p) => spark.conf.set(ProviderKey, p)
-        case None => spark.conf.unset(ProviderKey)
-      }
-    }
+    })
     spark.table(name)
   }
 }

@@ -141,6 +141,36 @@ class CorpusFiltersSpec extends AnyFunSuite {
     joined.foreach(r => assert(r.getLong(2) <= r.getLong(1)))
   }
 
+  test("null text: boilerplate removal and the span scrub return the " +
+    "DuckDB oracles' row, with clean_md5 = md5('')") {
+    // what q107/q238's oracles give a null-text document (string_split
+    // of NULL is NULL): n_words / n_tokens and n_removed NULL, n_kept 0,
+    // clean_md5 md5(''), cleaned_text ''
+    import spark.implicits._
+    val scrub = graft.operators.Dedup.spanScrubOn(
+      Seq((1L, "a b c d e f"), (2L, null: String)).toDF("doc_id", "text"))
+      .filter(col("doc_id") === 2L).collect()
+    assert(scrub.length == 1 && scrub(0).isNullAt(1) && scrub(0).isNullAt(2))
+    assert(scrub(0).getString(3) == "")
+    val tmp = java.nio.file.Files.createTempDirectory("graft_null_text")
+    try {
+      val docs = Tables.documents(spark, dir)
+      val nullId = docs.agg(min(col("doc_id"))).head().getLong(0)
+      docs.withColumn("text", when(col("doc_id") === nullId,
+          lit(null).cast("string")).otherwise(col("text")))
+        .write.parquet(s"$tmp/documents.parquet")
+      val row = CorpusFilters.boilerplateRemove(spark, tmp.toString)
+        .filter(col("doc_id") === nullId).collect()
+      assert(row.length == 1)
+      assert(row(0).isNullAt(1) && row(0).isNullAt(3), row(0).toString)
+      assert(!row(0).isNullAt(2) && row(0).getLong(2) == 0L, row(0).toString)
+      assert(row(0).getString(4) == "d41d8cd98f00b204e9800998ecf8427e")
+    } finally {
+      graft.operators.Staging.invalidate(tmp.toString)
+      graft.operators.Staging.deleteRecursively(tmp.toFile)
+    }
+  }
+
   test("quality classifier: feature counting law and sign rule") {
     val docs = Tables.documents(spark, dir)
     val out = graft.operators.TextAnalysis.linearQualityScore(spark, dir)

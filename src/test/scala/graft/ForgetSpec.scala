@@ -1,6 +1,6 @@
 package graft
 
-import graft.operators.{Forget, SimilaritySearch, Staging}
+import graft.operators.{Dedup, Forget, SimilaritySearch, Staging}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import java.nio.file.Files
@@ -14,8 +14,9 @@ class ForgetSpec extends AnyFunSuite {
 
   test("the manifest registers every delete-maintained staged layout " +
     "by source table") {
-    val bySource = Forget.manifest.groupBy(_.source)
-      .map { case (s, ts) => s -> ts.map(_.layout).toSet }
+    val bySource = Forget.manifest(GraftTestSession.Sf0001)
+      .groupBy(_.layout.sourceTable)
+      .map { case (s, ts) => s -> ts.map(_.layout.name).toSet }
     assert(bySource("documents") == Set("shingles_k3", "minhash16",
       "simhash", "ngrampairs", "phash_bands"),
       s"documents-derived targets drifted: ${bySource("documents")}")
@@ -32,7 +33,7 @@ class ForgetSpec extends AnyFunSuite {
       .write.mode("overwrite").parquet(s"$dir/documents.parquet")
     try {
       // only ONE documents-derived layout exists in this deployment
-      Staging.prepared(spark, "simhash", dir)(
+      Staging.prepared(spark, Dedup.SimhashLayout, dir)(
         spark.read.parquet(s"$dir/documents.parquet")
           .select(col("doc_id"), xxhash64(col("text")).as("simhash")))
       val roster = Seq(3L, 8L).toDF("doc_id")
@@ -40,7 +41,7 @@ class ForgetSpec extends AnyFunSuite {
         Map("documents" -> roster))
       assert(acted == Seq("simhash"),
         s"expected only the present layout acted on, got $acted")
-      val ids = Staging.readPrepared(spark, dir, "simhash")
+      val ids = Staging.readPrepared(spark, Dedup.SimhashLayout, dir)
         .select("doc_id").collect().map(_.getLong(0)).toSet
       assert(ids == (1L to 20L).toSet -- Set(3L, 8L))
       // embeddings roster absent from the map: ANN targets contribute
@@ -70,7 +71,8 @@ class ForgetSpec extends AnyFunSuite {
     try {
       SimilaritySearch.buildAnnForgetLayouts(spark, dir)
       val before = ids
-      val idsByFile = Staging.readPrepared(spark, dir, "ivf_assign_n16")
+      val idsByFile = Staging.readPrepared(spark,
+        SimilaritySearch.ivfAssignLayout(16), dir)
         .select(input_file_name(), col("vec_id")).as[(String, Long)]
         .collect().groupBy(_._1).values.map(_.map(_._2).toSet)
       assert(idsByFile.exists(_ == forgotten),

@@ -14,6 +14,9 @@ import java.nio.file.Files
 class StagingSpec extends AnyFunSuite {
   lazy val spark = GraftTestSession.spark
 
+  private val upLayout = Staging.Layout("up",
+    buckets = Some(Staging.Buckets(2, "text")))
+
   private def newSource(rows: Seq[(Long, String)]): String = {
     import spark.implicits._
     val dir = Files.createTempDirectory("graft_staging_spec").toString
@@ -24,7 +27,7 @@ class StagingSpec extends AnyFunSuite {
 
   private def build(dir: String, name: String): (org.apache.spark.sql.DataFrame, () => Int) = {
     var builds = 0
-    val frame = Staging.prepared(spark, name, dir) {
+    val frame = Staging.prepared(spark, Staging.Layout(name), dir) {
       builds += 1
       spark.read.parquet(s"$dir/documents.parquet")
         .select(col("doc_id"), length(col("text")).cast("long").as("n"))
@@ -37,7 +40,7 @@ class StagingSpec extends AnyFunSuite {
     val dir = newSource(Seq((1L, "aa"), (2L, "bbb")))
     try {
       var builds = 0
-      def call(): Set[(Long, Long)] = Staging.prepared(spark, "lenmap", dir) {
+      def call(): Set[(Long, Long)] = Staging.prepared(spark, Staging.Layout("lenmap"), dir) {
         builds += 1
         spark.read.parquet(s"$dir/documents.parquet")
           .select(col("doc_id"), length(col("text")).cast("long").as("n"))
@@ -47,7 +50,7 @@ class StagingSpec extends AnyFunSuite {
       assert(builds == 1, s"expected one build, saw $builds")
       // the served frame is a plain parquet scan (plan-native leaf with
       // honest file statistics — the whole point of staging)
-      val plan = Staging.prepared(spark, "lenmap", dir)(
+      val plan = Staging.prepared(spark, Staging.Layout("lenmap"), dir)(
         sys.error("must not rebuild")).queryExecution.executedPlan.toString
       assert(plan.contains("FileScan parquet"))
     } finally Staging.invalidate(dir)
@@ -59,7 +62,7 @@ class StagingSpec extends AnyFunSuite {
     val dir = newSource(Seq((1L, "aa")))
     try {
       var builds = 0
-      def call(): Set[(Long, Long)] = Staging.prepared(spark, "fp", dir) {
+      def call(): Set[(Long, Long)] = Staging.prepared(spark, Staging.Layout("fp"), dir) {
         builds += 1
         spark.read.parquet(s"$dir/documents.parquet")
           .select(col("doc_id"), length(col("text")).cast("long").as("n"))
@@ -102,7 +105,7 @@ class StagingSpec extends AnyFunSuite {
     try {
       var builds = 0
       def call(version: String): Long =
-        Staging.prepared(spark, "ver", dir, version = version) {
+        Staging.prepared(spark, Staging.Layout("ver", version = version), dir) {
           builds += 1
           spark.read.parquet(s"$dir/documents.parquet")
             .select(col("doc_id"))
@@ -121,8 +124,8 @@ class StagingSpec extends AnyFunSuite {
     try {
       var builds = 0
       def call(): org.apache.spark.sql.DataFrame =
-        Staging.preparedBucketed(spark, "bkt", dir,
-          buckets = 4, bucketCol = "text") {
+        Staging.prepared(spark, Staging.Layout("bkt",
+          buckets = Some(Staging.Buckets(4, "text"))), dir) {
           builds += 1
           spark.read.parquet(s"$dir/documents.parquet")
         }
@@ -155,6 +158,34 @@ class StagingSpec extends AnyFunSuite {
     } finally Staging.invalidate(spark, dir)
   }
 
+  test("a bucketed rebuild that fails at write time leaves the published " +
+    "layout and its catalog table serving the old rows") {
+    val dir = newSource(Seq((1L, "x y"), (2L, "x z")))
+    try {
+      def layout(version: String) = Staging.Layout("atomic",
+        version = version, buckets = Some(Staging.Buckets(2, "text")))
+      Staging.prepared(spark, layout("v1"), dir)(
+        spark.read.parquet(s"$dir/documents.parquet"))
+      val boom = udf((t: String) =>
+        if (t != null) throw new IllegalStateException("build failed") else t)
+      intercept[Exception] {
+        Staging.prepared(spark, layout("v2"), dir)(
+          spark.read.parquet(s"$dir/documents.parquet")
+            .withColumn("text", boom(col("text"))))
+      }
+      val root = new java.io.File(new java.io.File(
+        new java.io.File(sys.props("java.io.tmpdir"), "graft_prepared"),
+        graft.streaming.EventStreams.sanitize(
+          java.nio.file.Paths.get(dir).toString)), "atomic")
+      assert(Files.readString(new java.io.File(root, "_GRAFT_FP").toPath)
+        .startsWith("v1|"), "the v1 layout must still be the published one")
+      val tbl = spark.catalog.listTables().collect()
+        .map(_.name).find(_.startsWith("graft_stg_atomic_")).get
+      assert(spark.table(tbl).select("doc_id").collect()
+        .map(_.getLong(0)).toSet == Set(1L, 2L))
+    } finally Staging.invalidate(spark, dir)
+  }
+
   test("a derived layout gated on its upstream's artifactFingerprint " +
     "re-stages after an appendBucketed into the upstream (append " +
     "cascade — round-13 review pass 2)") {
@@ -162,14 +193,13 @@ class StagingSpec extends AnyFunSuite {
     val dir = newSource(Seq((1L, "a"), (2L, "b"), (3L, "c")))
     try {
       def up(): org.apache.spark.sql.DataFrame =
-        Staging.preparedBucketed(spark, "up", dir,
-          buckets = 2, bucketCol = "text")(
+        Staging.prepared(spark, upLayout, dir)(
           spark.read.parquet(s"$dir/documents.parquet"))
       up()
       var derivedBuilds = 0
       def derived(): Long = {
         up() // ensure upstream before fingerprinting it
-        Staging.prepared(spark, "down", dir,
+        Staging.prepared(spark, Staging.Layout("down"), dir,
           extraFp = Staging.artifactFingerprint(dir, "up")) {
           derivedBuilds += 1
           up().groupBy(col("text")).agg(count(lit(1)).as("n"))
@@ -179,8 +209,7 @@ class StagingSpec extends AnyFunSuite {
       assert(derived() == 3 && derivedBuilds == 1)
       // batch-append into the upstream: the source table is untouched,
       // but the derived layout must re-stage on its next gate pass
-      Staging.appendBucketed(spark, "up", dir, "b1",
-        buckets = 2, bucketCol = "text")(
+      Staging.append(spark, upLayout, dir, "b1")(
         Seq((9L, "z")).toDF("doc_id", "text"))
       assert(derived() == 4 && derivedBuilds == 2,
         "append into the upstream must cascade to the derived layout")
@@ -194,14 +223,13 @@ class StagingSpec extends AnyFunSuite {
     val dir = newSource(Seq((1L, "a"), (2L, "b"), (3L, "c")))
     try {
       def up(): org.apache.spark.sql.DataFrame =
-        Staging.preparedBucketed(spark, "up", dir,
-          buckets = 2, bucketCol = "text")(
+        Staging.prepared(spark, upLayout, dir)(
           spark.read.parquet(s"$dir/documents.parquet"))
       up()
       var derivedBuilds = 0
       def derived(): Long = {
         up()
-        Staging.prepared(spark, "down", dir,
+        Staging.prepared(spark, Staging.Layout("down"), dir,
           extraFp = Staging.artifactFingerprint(dir, "up")) {
           derivedBuilds += 1
           up().groupBy(col("text")).agg(count(lit(1)).as("n"))
@@ -211,8 +239,8 @@ class StagingSpec extends AnyFunSuite {
       // tombstone-delete from the upstream: the source table is
       // untouched and the upstream's _GRAFT_FP survives, but the data
       // files changed — the derived layout must re-stage on its next gate
-      Staging.deleteBucketed(spark, "up", dir, "d1", Seq("doc_id"),
-        buckets = 2, bucketCol = "text")(Seq(2L).toDF("doc_id"))
+      Staging.delete(spark, upLayout, dir, "d1", Seq("doc_id"))(
+        Seq(2L).toDF("doc_id"))
       assert(derived() == 2 && derivedBuilds == 2,
         "a delete from the upstream must cascade to the derived layout")
       assert(derived() == 2 && derivedBuilds == 2)
@@ -225,7 +253,7 @@ class StagingSpec extends AnyFunSuite {
     import spark.implicits._
     val dir = newSource((1L to 40L).map(i => (i, s"doc $i text")))
     try {
-      Staging.prepared(spark, "delmap", dir) {
+      Staging.prepared(spark, Staging.Layout("delmap"), dir) {
         spark.read.parquet(s"$dir/documents.parquet")
           .repartition(4, col("doc_id"))
           .select(col("doc_id"), length(col("text")).cast("long").as("n"))
@@ -246,7 +274,7 @@ class StagingSpec extends AnyFunSuite {
         .filter(col("doc_id") === 7L).head().getString(0)
       val affectedName =
         new java.io.File(new java.net.URI(fileOf7)).getName
-      val after = Staging.deletePrepared(spark, "delmap", dir, "t1",
+      val after = Staging.delete(spark, Staging.Layout("delmap"), dir, "t1",
         Seq("doc_id"))(Seq(7L).toDF("doc_id"))
       assert(after.select("doc_id").collect().map(_.getLong(0)).toSet ==
         (1L to 40L).toSet - 7L)
@@ -259,7 +287,7 @@ class StagingSpec extends AnyFunSuite {
           s"untouched file $n must be the SAME inode (hard link, no copy)")
       }
       // idempotent per tag: a re-entry leaves every file untouched
-      Staging.deletePrepared(spark, "delmap", dir, "t1",
+      Staging.delete(spark, Staging.Layout("delmap"), dir, "t1",
         Seq("doc_id"))(Seq(7L).toDF("doc_id"))
       assert(inodes() == got, "re-entry with the same tag must be a no-op")
     } finally Staging.invalidate(dir)
@@ -270,11 +298,11 @@ class StagingSpec extends AnyFunSuite {
     import spark.implicits._
     val dir = newSource((1L to 30L).map(i => (i, s"t${i % 5}")))
     try {
-      Staging.preparedBucketed(spark, "delb", dir,
-        buckets = 2, bucketCol = "text")(
+      val delb = Staging.Layout("delb",
+        buckets = Some(Staging.Buckets(2, "text")))
+      Staging.prepared(spark, delb, dir)(
         spark.read.parquet(s"$dir/documents.parquet"))
-      val t = Staging.deleteBucketed(spark, "delb", dir, "t1",
-        Seq("doc_id"), buckets = 2, bucketCol = "text")(
+      val t = Staging.delete(spark, delb, dir, "t1", Seq("doc_id"))(
         Seq(3L, 8L).toDF("doc_id"))
       assert(t.select("doc_id").collect().map(_.getLong(0)).toSet ==
         (1L to 30L).toSet -- Set(3L, 8L))
@@ -296,14 +324,14 @@ class StagingSpec extends AnyFunSuite {
     try {
       var builds = 0
       def gate(): org.apache.spark.sql.DataFrame =
-        Staging.prepared(spark, "allgone", dir) {
+        Staging.prepared(spark, Staging.Layout("allgone"), dir) {
           builds += 1
           spark.read.parquet(s"$dir/documents.parquet")
             .select(col("doc_id"), col("text"))
         }
       gate()
       assert(builds == 1)
-      val after = Staging.deletePrepared(spark, "allgone", dir, "wipe",
+      val after = Staging.delete(spark, Staging.Layout("allgone"), dir, "wipe",
         Seq("doc_id"))((1L to 5L).toDF("doc_id"))
       assert(after.count() == 0, "the forget batch covered every row")
       // the critical property: the next gate pass serves the EMPTY
@@ -324,21 +352,21 @@ class StagingSpec extends AnyFunSuite {
     import spark.implicits._
     val dir = newSource((1L to 10L).map(i => (i, s"doc $i")))
     try {
-      Staging.prepared(spark, "roster", dir)(
+      Staging.prepared(spark, Staging.Layout("roster"), dir)(
         spark.read.parquet(s"$dir/documents.parquet")
           .select(col("doc_id"), col("text")))
       def ids(df: org.apache.spark.sql.DataFrame): Set[Long] =
         df.select("doc_id").collect().map(_.getLong(0)).toSet
-      val first = Staging.deletePrepared(spark, "roster", dir, "reused",
+      val first = Staging.delete(spark, Staging.Layout("roster"), dir, "reused",
         Seq("doc_id"))(Seq(3L).toDF("doc_id"))
       assert(ids(first) == (1L to 10L).toSet - 3L)
       // SAME tag, different forget batch — must propagate, not no-op
-      val second = Staging.deletePrepared(spark, "roster", dir, "reused",
+      val second = Staging.delete(spark, Staging.Layout("roster"), dir, "reused",
         Seq("doc_id"))(Seq(8L).toDF("doc_id"))
       assert(ids(second) == (1L to 10L).toSet -- Set(3L, 8L),
         "a changed roster under a reused tag was silently dropped")
       // and same tag + same roster stays the idempotent no-op
-      val third = Staging.deletePrepared(spark, "roster", dir, "reused",
+      val third = Staging.delete(spark, Staging.Layout("roster"), dir, "reused",
         Seq("doc_id"))(Seq(8L).toDF("doc_id"))
       assert(ids(third) == (1L to 10L).toSet -- Set(3L, 8L))
     } finally Staging.invalidate(dir)
@@ -351,14 +379,14 @@ class StagingSpec extends AnyFunSuite {
     val dir = newSource((1L to 10L).map(i => (i, s"doc $i")))
     val rosterDir = Files.createTempDirectory("graft_roster_rw").toString
     try {
-      Staging.prepared(spark, "rosterdata", dir)(
+      Staging.prepared(spark, Staging.Layout("rosterdata"), dir)(
         spark.read.parquet(s"$dir/documents.parquet")
           .select(col("doc_id"), col("text")))
       def ids(df: org.apache.spark.sql.DataFrame): Set[Long] =
         df.select("doc_id").collect().map(_.getLong(0)).toSet
       Seq(3L).toDF("doc_id").coalesce(1)
         .write.mode("overwrite").parquet(s"$rosterDir/r.parquet")
-      val first = Staging.deletePrepared(spark, "rosterdata", dir, "rw",
+      val first = Staging.delete(spark, Staging.Layout("rosterdata"), dir, "rw",
         Seq("doc_id"))(spark.read.parquet(s"$rosterDir/r.parquet"))
       assert(ids(first) == (1L to 10L).toSet - 3L)
       // rewrite the roster files IN PLACE — same path, so a fresh read
@@ -367,7 +395,7 @@ class StagingSpec extends AnyFunSuite {
       // roster hash and the delete marker would silently no-op.
       Seq(8L).toDF("doc_id").coalesce(1)
         .write.mode("overwrite").parquet(s"$rosterDir/r.parquet")
-      val second = Staging.deletePrepared(spark, "rosterdata", dir, "rw",
+      val second = Staging.delete(spark, Staging.Layout("rosterdata"), dir, "rw",
         Seq("doc_id"))(spark.read.parquet(s"$rosterDir/r.parquet"))
       assert(ids(second) == (1L to 10L).toSet -- Set(3L, 8L),
         "stale roster memo no-opped a delete after an in-place rewrite")
@@ -383,7 +411,7 @@ class StagingSpec extends AnyFunSuite {
     import spark.implicits._
     val dir = newSource((1L to 6L).map(i => (i, s"doc $i")))
     try {
-      Staging.prepared(spark, "litter", dir)(
+      Staging.prepared(spark, Staging.Layout("litter"), dir)(
         spark.read.parquet(s"$dir/documents.parquet")
           .select(col("doc_id"), col("text")))
       val root = new java.io.File(new java.io.File(
@@ -398,7 +426,7 @@ class StagingSpec extends AnyFunSuite {
         new java.io.File(root, "_GRAFT_APPEND_ghost").toPath, fp)
       java.nio.file.Files.writeString(
         new java.io.File(root, "_GRAFT_APPEND_ghost.staged").toPath, "")
-      Staging.deletePrepared(spark, "litter", dir, "t1",
+      Staging.delete(spark, Staging.Layout("litter"), dir, "t1",
         Seq("doc_id"))(Seq(2L).toDF("doc_id"))
       val names = root.listFiles().map(_.getName).toSet
       assert(!names.exists(_.endsWith(".staged")),
@@ -413,19 +441,18 @@ class StagingSpec extends AnyFunSuite {
     import spark.implicits._
     val dir = newSource((1L to 20L).map(i => (i, s"t${i % 4}")))
     try {
-      Staging.preparedBucketed(spark, "lcb", dir,
-        buckets = 2, bucketCol = "text")(
+      val lcb = Staging.Layout("lcb",
+        buckets = Some(Staging.Buckets(2, "text")))
+      Staging.prepared(spark, lcb, dir)(
         spark.read.parquet(s"$dir/documents.parquet"))
-      Staging.appendBucketed(spark, "lcb", dir, "b1",
-        buckets = 2, bucketCol = "text")(
+      Staging.append(spark, lcb, dir, "b1")(
         Seq((21L, "t1")).toDF("doc_id", "text"))
-      Staging.deleteBucketed(spark, "lcb", dir, "d1", Seq("doc_id"),
-        buckets = 2, bucketCol = "text")(Seq(5L, 21L).toDF("doc_id"))
+      Staging.delete(spark, lcb, dir, "d1", Seq("doc_id"))(
+        Seq(5L, 21L).toDF("doc_id"))
       val expected = ((1L to 20L).toSet - 5L)
       def ids(df: org.apache.spark.sql.DataFrame): Set[Long] =
         df.select("doc_id").collect().map(_.getLong(0)).toSet
-      val compacted = Staging.compactBucketed(spark, "lcb", dir,
-        buckets = 2, bucketCol = "text")
+      val compacted = Staging.compact(spark, lcb, dir)
       assert(ids(compacted) == expected)
       val root = new java.io.File(new java.io.File(
         new java.io.File(sys.props("java.io.tmpdir"), "graft_prepared"),
@@ -436,11 +463,9 @@ class StagingSpec extends AnyFunSuite {
       assert(new java.io.File(root, "_GRAFT_APPEND_b1").exists(),
         "compaction must carry the append marker")
       // re-entered lifecycle ops after compaction: all no-ops
-      Staging.appendBucketed(spark, "lcb", dir, "b1",
-        buckets = 2, bucketCol = "text")(
+      Staging.append(spark, lcb, dir, "b1")(
         Seq((21L, "t1")).toDF("doc_id", "text"))
-      val again = Staging.deleteBucketed(spark, "lcb", dir, "d1",
-        Seq("doc_id"), buckets = 2, bucketCol = "text")(
+      val again = Staging.delete(spark, lcb, dir, "d1", Seq("doc_id"))(
         Seq(5L, 21L).toDF("doc_id"))
       assert(ids(again) == expected,
         "post-compaction re-append/re-delete must not change the rows")
