@@ -34,7 +34,7 @@ object PlanAudit {
     * hole a bare name-exemption left open: a whitelisted query that
     * later GROWS a new dimension-keyed window beyond its justified set
     * fails the sweep instead of riding the old exemption. Anything not
-    * listed must ride groupedOrdinal / the offset-prefix primitives,
+    * listed must ride OffsetPrefix (ordinal / cumSum / crossing forms),
     * whose miniature windows carry the `__pid` order-key marker. */
   val dimWindowWhitelist: Map[String, (Int, String)] = Map(
     "q147_freq_spectrum" -> (1,
@@ -435,8 +435,8 @@ object PlanAudit {
         "Window" -> false),
       // Mann-Whitney: user + value aggregates, then the offset-prefix
       // cumulative (its windows run per range-partition / over the
-      // partition-count offset table only — the groupedCumSum contract);
-      // no cartesian despite U's all-pairs definition
+      // partition-count offset table only — the OffsetPrefix.cumSum
+      // contract); no cartesian despite U's all-pairs definition
       "q253_mann_whitney" -> Seq("HashAggregate" -> true,
         "CartesianProduct" -> false, "SortMergeJoin" -> false),
       // permutation test: the ×(nPerm+1) fan-out explodes the |users|
@@ -529,7 +529,7 @@ object PlanAudit {
         "BroadcastNestedLoopJoin" -> true, "CartesianProduct" -> false,
         "SortMergeJoin" -> false, "Window" -> false),
       // quantile normalize: BOTH ordinals (within-source rank AND pooled)
-      // ride groupedOrdinal — range partition + broadcast offset miniature;
+      // ride OffsetPrefix.ordinal — range partition + broadcast offsets;
       // n_s is a broadcast per-source count. The Window nodes that remain
       // are the offset-prefix miniatures; the data-sized
       // source-partitioned rank window is regex-forbidden below (the
@@ -546,7 +546,7 @@ object PlanAudit {
       "q270_class_separability" -> Seq("HashAggregate" -> true,
         "BroadcastHashJoin" -> true, "CartesianProduct" -> false,
         "SortMergeJoin" -> false),
-      // sorted neighborhood: the groupedOrdinal range partitioning plus
+      // sorted neighborhood: the OffsetPrefix.ordinal range partitioning plus
       // the xw offset probe equi-join — no cartesian, no name-by-name
       "q271_sorted_neighborhood" -> Seq("HashAggregate" -> true,
         "CartesianProduct" -> false, "BroadcastNestedLoopJoin" -> false),
@@ -571,7 +571,7 @@ object PlanAudit {
         "BroadcastHashJoin" -> true, "CartesianProduct" -> false,
         "SortMergeJoin" -> false),
       // packed-sequence manifest: the corpus prefix sum rides the
-      // groupedCumSum offset-prefix primitive (checkpoint barrier scans
+      // OffsetPrefix.cumSum primitive (checkpoint barrier scans
       // as ExistingRDD); the manifest aggregate keys on high-cardinality
       // seq_id — no unpartitioned or dimension-keyed window anywhere
       "q275_packed_manifest" -> Seq("HashAggregate" -> true,
@@ -714,17 +714,17 @@ object PlanAudit {
         "l_orderkey" -> false, "CartesianProduct" -> false))
 
     // Offset-prefix partitioning pin (machine check for the round-4
-    // ReuseExchange hazard, found by hand in a7b6075): every offset-prefix
-    // primitive (groupedOrdinal, groupedCumSum, crossingMedian,
-    // runningAggDistributed, sequencePacking) range-partitions ONCE and
-    // eagerly localCheckpoints, because two separate evaluations of one
-    // repartitionByRange may SAMPLE DIFFERENT boundaries and corrupt the
-    // offsets. In the executed plan that pin shows as: the checkpoint
-    // barrier is present (Scan ExistingRDD) and NO live range exchange
-    // remains (a `rangepartitioning` Exchange in any consumer plan would
-    // be a second, independently-sampled evaluation site).
+    // ReuseExchange hazard, found by hand in a7b6075): every lane below
+    // rides graft.operators.OffsetPrefix (ordinal, cumSum, the crossing
+    // forms, or its core under runningAggDistributed), whose one core
+    // range-partitions ONCE and eagerly localCheckpoints (the hazard is
+    // stated on OffsetPrefix.pinned). In the executed plan that pin shows
+    // as: the checkpoint barrier is present (Scan ExistingRDD) and NO live
+    // range exchange remains (a `rangepartitioning` Exchange in any
+    // consumer plan would be a second, independently-sampled evaluation
+    // site).
     // Caveats on the two pins (round-6 ADVICE): `Scan ExistingRDD` is any
-    // RDD scan, which in these six plans can only be the checkpoint barrier
+    // RDD scan, which in these plans can only be the checkpoint barrier
     // (no other RDD source exists in them — revisit if one ever appears);
     // the forbidden pattern is anchored to an actual Exchange NODE below so
     // it cannot fire on incidental mentions of range partitioning — but an
@@ -733,14 +733,18 @@ object PlanAudit {
     val offsetPrefixQueries = Seq("q62_events_running", "q74_packing",
       "q75_rank_functions", "q113_weighted_median", "q116_robust_scale",
       "q126_length_batches", "q133_quality_topp", "q158_curriculum",
-      // round 8: crossingQuantile/crossingBoundaries/const-group ordinal
+      // round 8: crossing quantile/boundaries, const-group ordinal
       "q179_winsorized_stats", "q181_equidepth_deciles",
       "q188_interarrival", "q193_revenue_gini",
-      // round 10: both q268 ordinal lanes ride groupedOrdinal; q264's two
-      // medians ride crossingMedian; q87/q112/q262 rank lanes ride
-      // groupedOrdinal (all replacing dimension-keyed data-sized windows)
+      // round 10: both q268 ordinal lanes ride the ordinal; q264's two
+      // medians ride the crossing median; q87/q112/q262 rank lanes ride
+      // the ordinal (all replacing dimension-keyed data-sized windows)
       "q268_quantile_normalize", "q264_theil_sen", "q87_domain_cap",
-      "q112_stratified_sample", "q262_neyman_sample")
+      "q112_stratified_sample", "q262_neyman_sample",
+      // the remaining lanes on the primitive
+      "q138_global_shuffle", "q160_padding_waste", "q199_band_migration",
+      "q253_mann_whitney", "q271_sorted_neighborhood",
+      "q275_packed_manifest")
     val offsetPrefixChecks: Map[String, Seq[(String, Boolean)]] =
       offsetPrefixQueries.map(q => q -> Seq(
         "Scan ExistingRDD" -> true)).toMap
@@ -767,7 +771,7 @@ object PlanAudit {
       // round-10: q268's within-source rank must NOT be a window
       // partitioned by the 20-value source key and ordered by the
       // data-sized score (one corpus/20-row task per group). The
-      // groupedOrdinal miniature window (partitionBy(source),
+      // OffsetPrefix.ordinal miniature window (partitionBy(source),
       // orderBy(__pid) over P×G offset rows) does not match this pattern.
       "q268_quantile_normalize" -> Seq(
         """windowspecdefinition\(source#\d+, avg_e6#""" -> false),
@@ -813,7 +817,7 @@ object PlanAudit {
         else dimMatches.drop(dimAllowed)
           .map(h => s"DIM-WINDOW '${h.take(60)}' (${dimMatches.size} " +
             s"found, $dimAllowed whitelisted — data-sized per-group " +
-            "task: use groupedOrdinal/offset-prefix, or raise the " +
+            "task: use the OffsetPrefix primitive, or raise the " +
             "whitelist entry with a justification)")
       val failures = checks.collect {
         case (s, true) if !plan.contains(s) => s"MISSING '$s'"

@@ -119,7 +119,8 @@ object Events {
   /** [[runningAgg]] WITHOUT the per-type window — the last entry in
     * COVERAGE.md's low-cardinality window inventory (5 event types ⇒ the
     * windowed form serializes each type into one task at any scale).
-    * Range-partition by (type, ts, id) + the P×T offset-prefix miniature:
+    * Rides [[OffsetPrefix.pinned]] over (type, ts, id) — one range
+    * partitioning plus the P×T offset miniature:
     *  - running_n is the distributed ordinal (local row_number + offset);
     *  - the 5-row moving average is frame-local for rows at local rank ≥ 5
     *    (their whole frame sits inside the partition — identical window
@@ -145,27 +146,15 @@ object Events {
     * [[runningAggOn]]). */
   private[graft] def runningAggDistributedOn(base: DataFrame,
                                              partitions: Int): DataFrame = {
-    // localCheckpoint pins ONE materialized range partitioning: the plan
-    // references it from three subtrees (offsets, tails, row ranks), and a
-    // re-evaluated repartitionByRange can SAMPLE DIFFERENT boundaries —
-    // observed: the offsets evaluation split a type 8/194 while the rank
-    // evaluation split it 97/105, corrupting every offset. The checkpoint
-    // is the q74 discipline; at scale this is the persisted sorted layout.
-    val part = base.repartitionByRange(partitions,
-        col("event_type"), col("ts_ms"), col("event_id"))
-      .withColumn("__pid", spark_partition_id())
-      .localCheckpoint(true)
-    val offW = Window.partitionBy(col("event_type")).orderBy(col("__pid"))
-      .rowsBetween(Window.unboundedPreceding, -1)
-    val offsets = part.groupBy(col("__pid"), col("event_type"))
-      .agg(count(lit(1)).as("__c"))
-      .withColumn("__off", coalesce(sum(col("__c")).over(offW), lit(0L)))
-      .select(col("__pid"), col("event_type"), col("__off"), col("__c"))
+    // the pinned range partitioning is referenced from three subtrees
+    // (offsets, tails, row ranks); `__t` is the (partition, type) count
+    val part = OffsetPrefix.pinned(base, "event_type",
+      Seq("ts_ms", "event_id"), count(lit(1)), partitions)
     val inW = Window.partitionBy(col("__pid"), col("event_type"))
       .orderBy(col("ts_ms"), col("event_id"))
     // both window columns compute BEFORE any filter: a window after a
     // filter would see only the surviving rows and restart every frame
-    val ranked = part.join(broadcast(offsets), Seq("__pid", "event_type"))
+    val ranked = part
       .withColumn("__rl", row_number().over(inW).cast(LongType))
       .withColumn("running_n", col("__rl") + col("__off"))
       // frames collect STRUCTS, not bare values: collect_list drops null
@@ -181,7 +170,7 @@ object Events {
       .select(col("event_id"), col("event_type"), col("running_n"),
         col("__mv").as("moving_avg"))
     // per-(pid, type) tail: the partition's last ≤4 rows in time order
-    val tails = ranked.filter(col("__rl") > col("__c") - 4)
+    val tails = ranked.filter(col("__rl") > col("__t") - 4)
       .groupBy(col("__pid"), col("event_type"))
       .agg(transform(
         array_sort(collect_list(struct(col("ts_ms"), col("event_id"),
@@ -191,7 +180,8 @@ object Events {
       when(size(a) > 4, slice(a, -4, 4)).otherwise(a)
     val prevTails = tails
       .withColumn("__carry", last4(coalesce(
-        flatten(collect_list(col("tail")).over(offW)),
+        flatten(collect_list(col("tail")).over(
+          OffsetPrefix.priorPartitions("event_type"))),
         array().cast("array<struct<value:double>>"))))
       .select(col("__pid"), col("event_type"), col("__carry"))
     val need = (lit(4L) - (col("__rl") - 1)).cast(IntegerType)
@@ -642,7 +632,7 @@ object Events {
     * the median flags mechanical traffic). The per-(user, type) lag window
     * partitions on a HIGH-cardinality key (users), so it spreads across any
     * cluster — the low-cardinality serialization trap does not apply — and
-    * the per-TYPE quantiles then ride [[Relational.crossingBoundaries]]
+    * the per-TYPE quantiles then ride [[OffsetPrefix.crossingBoundaries]]
     * (k ∈ {5, 9} of 10), so the 5-group rollup never serializes either. */
   def interarrivalQuantiles(spark: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.expressions.Window
@@ -656,7 +646,7 @@ object Events {
       .select(col("event_type"), col("delta"))
     val counts = deltas.groupBy(col("event_type"))
       .agg(count(lit(1)).as("n_gaps"))
-    Relational.crossingBoundaries(
+    OffsetPrefix.crossingBoundaries(
       deltas, "event_type", "delta", lit(1L), "q_ms", den = 10)
       .filter(col("k").isin(5, 9))
       .groupBy(col("event_type"))
@@ -1506,7 +1496,7 @@ object Events {
     *
     * U is computed WITHOUT ranking rows: collapse users to a per-VALUE
     * count table (|distinct values| rows), take the exclusive cumulative
-    * B-count along the value order via [[Relational.groupedCumSum]] (the
+    * B-count along the value order via [[OffsetPrefix.cumSum]] (the
     * offset-prefix primitive — per-partition prefix + broadcast offsets,
     * NO global window), and sum `ca·(2·cumB< + cb)` — doubled so ties
     * (½ credit) stay integral: `u2 = 2U`. `U_A + U_B = n_A·n_B` closes
@@ -1522,7 +1512,7 @@ object Events {
       .groupBy(col("x"))
       .agg(sum(when(col("variant") === "A", 1L).otherwise(0L)).as("ca"),
         sum(when(col("variant") === "B", 1L).otherwise(0L)).as("cb"))
-    val withCum = Relational.groupedCumSum(
+    val withCum = OffsetPrefix.cumSum(
       vals.withColumn("g", lit(1)), "g", Seq("x"), "cb")
     withCum
       .agg(sum(col("ca")).as("n_a"), sum(col("cb")).as("n_b"),
@@ -2146,7 +2136,7 @@ object Events {
     * Scale shape: ONE scan aggregates the log to the |days|-sized daily
     * frame; the |days|² pair fan-out (435 pairs for a 30-day series; a
     * year is ~66k, a 10-year span 6.6 M) is calendar-bounded but NOT
-    * task-bounded, so both medians ride [[Relational.crossingMedian]] —
+    * task-bounded, so both medians ride [[OffsetPrefix.crossingMedian]] —
     * the distributed crossing search (q74/q113 discipline) — instead of
     * an unpartitioned row_number window that would serialize every pair
     * into one sort task. The crossing median is value-determined and
@@ -2169,14 +2159,14 @@ object Events {
       .withColumn("g", lit(1))
     // __tot of each crossing pass IS the frame count — no separate
     // count aggregates needed
-    val slope = broadcast(Relational.crossingMedian(
+    val slope = broadcast(OffsetPrefix.crossingMedian(
         pairs.select(col("g"), col("slope_e3")), "g", "slope_e3", lit(1L),
         "slope_e3")
       .select(col("slope_e3"), col("__tot").as("n_pairs")))
     val bs = daily.crossJoin(slope)
       .withColumn("b_e3", col("y") * 1000 - col("slope_e3") * col("d"))
       .withColumn("g", lit(1))
-    Relational.crossingMedian(
+    OffsetPrefix.crossingMedian(
         bs.select(col("g"), col("b_e3")), "g", "b_e3", lit(1L),
         "intercept_e3")
       .select(col("intercept_e3"), col("__tot").as("n_days"))

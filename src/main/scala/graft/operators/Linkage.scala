@@ -109,7 +109,7 @@ object Linkage {
     * have caught it — the recall-overlap audit between the two strategies.
     *
     * Scale shape: the global sort ordinal rides
-    * [[TextAnalysis.groupedOrdinal]] — ONE range partitioning plus a
+    * [[OffsetPrefix.ordinal]] — ONE range partitioning plus a
     * broadcast offset miniature, never an unpartitioned window; candidate
     * generation is a ×w offset explode joined back on the ordinal (w
     * map-side equi-joins in one), and the Levenshtein confirm runs on
@@ -125,7 +125,7 @@ object Linkage {
     val names = Tables.part(spark, dir)
       .select(col("p_name").as("name")).distinct()
       .withColumn("g", lit(1))
-    val ord = TextAnalysis.groupedOrdinal(names, "g", Seq("name"))
+    val ord = OffsetPrefix.ordinal(names, "g", Seq("name"))
       .select(col("name"), col("__ord").as("ord"))
     val probes = ord
       .select(col("name").as("name_a"), col("ord"),

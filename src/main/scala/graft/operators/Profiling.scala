@@ -434,7 +434,7 @@ object Profiling {
     * mega-documents; the winsorized mean moves only on real shift). Means
     * are exact integer e2 fixed point.
     *
-    * The percentiles ride [[Relational.crossingQuantile]] — the
+    * The percentiles ride [[OffsetPrefix.crossingQuantile]] — the
     * crossing-median generalized to pNum/pDen — so the grouped p05/p95
     * stay DISTRIBUTED (range-partition + offset-prefix), never a
     * per-source window that would serialize each source's whole slice
@@ -443,9 +443,9 @@ object Profiling {
   def winsorizedStats(spark: SparkSession, dir: String): DataFrame = {
     val docs = Tables.documents(spark, dir)
       .select(col("source"), col("n_chars").cast(LongType).as("n_chars"))
-    val p05 = Relational.crossingQuantile(
+    val p05 = OffsetPrefix.crossingQuantile(
       docs, "source", "n_chars", lit(1L), "p05", 5L, 100L).drop("__tot")
-    val p95 = Relational.crossingQuantile(
+    val p95 = OffsetPrefix.crossingQuantile(
       docs, "source", "n_chars", lit(1L), "p95", 95L, 100L).drop("__tot")
     docs
       .join(broadcast(p05), Seq("source"))

@@ -246,13 +246,13 @@ object Relational {
     * everything is exact integers (prices in long cents, quantities
     * rounded to long), so the oracle is hash-exact.
     *
-    * Runs on [[crossingMedian]] — the distributed crossing-value search —
-    * so no task ever owns a whole flag's rows (the round-3 plan windowed
-    * by the 3-value flag, which serializes each group into ONE task at any
-    * cluster size; the oracle SQL keeps that naive shape, proving the
-    * distributed form value-identical). */
+    * Runs on [[OffsetPrefix.crossingMedian]] — the distributed
+    * crossing-value search — so no task ever owns a whole flag's rows
+    * (the round-3 plan windowed by the 3-value flag, which serializes each
+    * group into ONE task at any cluster size; the oracle SQL keeps that
+    * naive shape, proving the distributed form value-identical). */
   def weightedMedian(spark: SparkSession, dir: String): DataFrame =
-    crossingMedian(
+    OffsetPrefix.crossingMedian(
       Tables.lineitem(spark, dir)
         .select(col("l_returnflag").as("flag"),
           Rfm.cents(col("l_extendedprice")).as("cents"),
@@ -283,167 +283,12 @@ object Relational {
       |       CAST(min(total_w) AS BIGINT) AS total_w
       |FROM cum WHERE cumw * 2 >= total_w GROUP BY flag""".stripMargin
 
-  /** Exact lower (weighted) median per group, scale-safe: the smallest
-    * value v with 2·W(≤ v) ≥ W_total, found by a DISTRIBUTED
-    * crossing-value search instead of a per-group window — a window
-    * partitioned by a low-cardinality group key (3 return flags) puts each
-    * whole group in ONE task at any cluster size, the quiet serialization
-    * trap in exact grouped medians. Shape (the q74 sequence-packing
-    * prefix-scan discipline):
-    *  1. range-partition the raw (group, value, weight) rows by
-    *     (group, value) — ONE shuffle, the same count as the naive form —
-    *     and tag `spark_partition_id`;
-    *  2. per-(partition, group) subtotals — a P×G-row miniature whose
-    *     per-group exclusive-prefix window orders ≤ P rows per group, NOT
-    *     the data-sized serialization it replaces;
-    *  3. broadcast the offsets back; within-partition cumulative + offset
-    *     = global cumulative; crossing value = min(value) with 2·cum ≥
-    *     total (rows tying on value order arbitrarily in the cumulative,
-    *     but the CROSSING VALUE is tie-invariant: a value v crosses iff
-    *     2·W(≤v) ≥ total, regardless of intra-value order).
-    * The range partitioning is pinned with an eager `localCheckpoint`:
-    * the offsets subtree and the row subtree must see the SAME sampled
-    * boundaries, and relying on ReuseExchange to unify two references
-    * proved fragile (the running-agg port observed two evaluations
-    * sampling different splits); the checkpoint is the q74 discipline and
-    * at scale is the persisted sorted layout.
-    *
-    * Round 16 (verdict item 7) built and measured the checkpoint-free
-    * alternative — DETERMINISTIC buckets from each group's broadcast
-    * (min, max), safe to re-evaluate, no pinned materialization — and
-    * REVERTED it: q181 improved 1.64→1.50 s but q116's nested passes
-    * regressed 3.52→4.76 s (the checkpoint is also lineage TRUNCATION:
-    * without it the MAD pass re-evaluates the whole first-median subtree
-    * once per reference, and q268 read 0.50→0.68 s from the same
-    * re-evaluation tax). The eager checkpoint stays; both measurements
-    * are in OPTIMIZATION_r16.md. Every data-sized window is bounded by one
-    * partition's histogram slice. The value returned is rank-determined,
-    * so it equals the naive window-by-group form exactly — the DuckDB
-    * oracles keep the naive shape and hash-match. Returns
-    * (grp, out, __tot). */
-  private[graft] def crossingMedian(df: DataFrame, grp: String,
-                                    valCol: String, w: Column, out: String,
-                                    partitions: Int = 8): DataFrame =
-    crossingQuantile(df, grp, valCol, w, out, 1L, 2L, partitions)
-
-  /** Generalization of the crossing-median to an arbitrary nearest-rank
-    * quantile p = pNum/pDen: the smallest value v with
-    * pDen · W(≤ v) ≥ pNum · W_total — the same tie-invariant crossing rule
-    * (a value crosses iff its INCLUSIVE cumulative weight reaches the
-    * bound, whatever order tied rows take in the cumulative), the same
-    * one-shuffle range-partition + P×G-offset shape, and exact integer
-    * arithmetic so the grouped p05/p95/median all ride one distributed
-    * primitive instead of per-group windows. */
-  private[graft] def crossingQuantile(df: DataFrame, grp: String,
-                                      valCol: String, w: Column, out: String,
-                                      pNum: Long, pDen: Long,
-                                      partitions: Int = 8): DataFrame = {
-    val hist = df.select(col(grp), col(valCol), w.as("__w"))
-      .repartitionByRange(partitions, col(grp), col(valCol))
-      .withColumn("__pid", spark_partition_id())
-      .localCheckpoint(true)
-    val offW = Window.partitionBy(col(grp)).orderBy(col("__pid"))
-      .rowsBetween(Window.unboundedPreceding, -1)
-    val offsets = hist.groupBy(col("__pid"), col(grp))
-      .agg(sum(col("__w")).as("__t"))
-      .withColumn("__off", coalesce(sum(col("__t")).over(offW), lit(0L)))
-      .withColumn("__tot", sum(col("__t")).over(
-        // full-frame total over the same P×G miniature; ordered by __pid
-        // with an explicit unbounded frame so the PlanAudit dimension-
-        // window sweep can tell this miniature apart from a data-sized
-        // group-keyed window (the __pid order key is the marker)
-        Window.partitionBy(col(grp)).orderBy(col("__pid")).rowsBetween(
-          Window.unboundedPreceding, Window.unboundedFollowing)))
-      .select(col("__pid"), col(grp), col("__off"), col("__tot"))
-    val inPart = Window.partitionBy(col("__pid"), col(grp))
-      .orderBy(col(valCol))
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    hist.join(broadcast(offsets), Seq("__pid", grp))
-      .withColumn("__cum", sum(col("__w")).over(inPart) + col("__off"))
-      .filter(col("__cum") * pDen >= col("__tot") * pNum)
-      .groupBy(col(grp))
-      .agg(min(col(valCol)).as(out), min(col("__tot")).as("__tot"))
-  }
-
-  /** ALL den−1 equi-depth boundaries per group in ONE crossing pass — the
-    * k/den nearest-rank boundary for every k ∈ [1, den−1] (den = 10 ⇒
-    * deciles). Same range-partition + offset-prefix shape as
-    * [[crossingQuantile]]; instead of filtering one crossing, each row
-    * derives the RANGE of k values it crosses FIRST — k where the previous
-    * cumulative was still short (pDen·(cum−w) < k·tot ≤ pDen·cum) — and
-    * explodes only those (each k emitted by exactly the rows of its
-    * boundary value; ties collapse via min). Exploded volume is ≤
-    * rows + den−1, never rows × den. Returns (grp, k, out). */
-  private[graft] def crossingBoundaries(df: DataFrame, grp: String,
-                                        valCol: String, w: Column, out: String,
-                                        den: Int,
-                                        partitions: Int = 8): DataFrame = {
-    val hist = df.select(col(grp), col(valCol), w.as("__w"))
-      .repartitionByRange(partitions, col(grp), col(valCol))
-      .withColumn("__pid", spark_partition_id())
-      .localCheckpoint(true)
-    val offW = Window.partitionBy(col(grp)).orderBy(col("__pid"))
-      .rowsBetween(Window.unboundedPreceding, -1)
-    val offsets = hist.groupBy(col("__pid"), col(grp))
-      .agg(sum(col("__w")).as("__t"))
-      .withColumn("__off", coalesce(sum(col("__t")).over(offW), lit(0L)))
-      .withColumn("__tot", sum(col("__t")).over(
-        // full-frame total over the same P×G miniature; ordered by __pid
-        // with an explicit unbounded frame so the PlanAudit dimension-
-        // window sweep can tell this miniature apart from a data-sized
-        // group-keyed window (the __pid order key is the marker)
-        Window.partitionBy(col(grp)).orderBy(col("__pid")).rowsBetween(
-          Window.unboundedPreceding, Window.unboundedFollowing)))
-      .select(col("__pid"), col(grp), col("__off"), col("__tot"))
-    val inPart = Window.partitionBy(col("__pid"), col(grp))
-      .orderBy(col(valCol))
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    hist.join(broadcast(offsets), Seq("__pid", grp))
-      .withColumn("__cum", sum(col("__w")).over(inPart) + col("__off"))
-      // k crossed at this row: prev < k·tot/den ≤ cum, i.e.
-      // k ∈ ( den·prev/tot , den·cum/tot ] — integer-exact bounds
-      .withColumn("__klo",
-        expr(s"CAST(($den * (__cum - __w)) DIV __tot AS INT) + 1"))
-      .withColumn("__khi", expr(s"CAST(($den * __cum) DIV __tot AS INT)"))
-      .filter(col("__khi") >= col("__klo") && col("__klo") <= den - 1)
-      .select(col(grp), col(valCol),
-        explode(sequence(col("__klo"), least(col("__khi"), lit(den - 1))))
-          .as("k"))
-      .groupBy(col(grp), col("k"))
-      .agg(min(col(valCol)).as(out))
-  }
-
-  /** Inclusive running sum of `valCol` per `grp` in `ordCols` order,
-    * distributed — the same range-partition + P×G offset-prefix shape as
-    * [[crossingMedian]], returning every row with its `__cum` instead of
-    * just the crossing one. `ordCols` must be unique per group. */
-  private[graft] def groupedCumSum(df: DataFrame, grp: String,
-                                   ordCols: Seq[String], valCol: String,
-                                   partitions: Int = 8): DataFrame = {
-    val part = df
-      .repartitionByRange(partitions, (col(grp) +: ordCols.map(col)): _*)
-      .withColumn("__pid", spark_partition_id())
-      .localCheckpoint(true)
-    val offW = Window.partitionBy(col(grp)).orderBy(col("__pid"))
-      .rowsBetween(Window.unboundedPreceding, -1)
-    val offsets = part.groupBy(col("__pid"), col(grp))
-      .agg(sum(col(valCol)).as("__t"))
-      .withColumn("__off", coalesce(sum(col("__t")).over(offW), lit(0L)))
-      .select(col("__pid"), col(grp), col("__off"))
-    val inPart = Window.partitionBy(col("__pid"), col(grp))
-      .orderBy(ordCols.map(col): _*)
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    part.join(broadcast(offsets), Seq("__pid", grp))
-      .withColumn("__cum", sum(col(valCol)).over(inPart) + col("__off"))
-      .drop("__pid", "__off")
-  }
-
   /** The q75 rank family WITHOUT per-nation windows — the port the
     * low-cardinality window inventory (COVERAGE.md) promises: every rank
     * function derives from distributed ordinals/cumulatives,
-    *  - rn   = [[TextAnalysis.groupedOrdinal]] over (−bal, custkey);
+    *  - rn   = [[OffsetPrefix.ordinal]] over (−bal, custkey);
     *  - rnk  = 1 + (count of strictly-greater bals), from the per-value
-    *           histogram's [[groupedCumSum]];
+    *           histogram's [[OffsetPrefix.cumSum]];
     *  - drnk = the VALUE's ordinal in the same histogram;
     *  - quartile = Spark's ntile law applied to (rn, n): first n mod 4
     *           tiles carry ⌈n/4⌉ rows;
@@ -456,13 +301,13 @@ object Relational {
       .select(col("c_custkey").as("custkey"),
         col("c_nationkey").cast(LongType).as("nationkey"),
         bal.as("bal"), (-bal).as("negbal"))
-    val withRn = TextAnalysis.groupedOrdinal(
+    val withRn = OffsetPrefix.ordinal(
       base, "nationkey", Seq("negbal", "custkey"))
       .withColumnRenamed("__ord", "rn")
     val hist = base.groupBy(col("nationkey"), col("negbal"))
       .agg(count(lit(1)).as("nv"))
-    val histRanked = TextAnalysis.groupedOrdinal(
-        groupedCumSum(hist, "nationkey", Seq("negbal"), "nv"),
+    val histRanked = OffsetPrefix.ordinal(
+        OffsetPrefix.cumSum(hist, "nationkey", Seq("negbal"), "nv"),
         "nationkey", Seq("negbal"))
       .select(col("nationkey"), col("negbal"),
         (col("__cum") - col("nv") + 1).as("rnk"), col("__ord").as("drnk"))
@@ -484,16 +329,17 @@ object Relational {
           .otherwise(lit(0L)).as("pct_rank_e6"))
   }
 
-  /** Lower median of `valCol` per `grp` — [[crossingMedian]] with unit
-    * weights. 16 range partitions: a round-8 sweep at sf0.1 measured
-    * 8/16/32 within noise of each other (3.2/3.1/3.5 s for the whole
+  /** Lower median of `valCol` per `grp` — [[OffsetPrefix.crossingMedian]]
+    * with unit weights. 16 range partitions: a round-8 sweep at sf0.1
+    * measured 8/16/32 within noise of each other (3.2/3.1/3.5 s for the whole
     * q116 — the localCheckpoint materialization and the two full passes
     * dominate, not window parallelism), so this sits at the middle knob;
     * at cluster scale the count follows data volume. Result is
     * partition-count invariant (spec-pinned). */
   private def lowerMedian(df: DataFrame, grp: String, valCol: String,
                           out: String): DataFrame =
-    crossingMedian(df, grp, valCol, lit(1L), out, partitions = 16).drop("__tot")
+    OffsetPrefix.crossingMedian(df, grp, valCol, lit(1L), out,
+      partitions = 16).drop("__tot")
 
   /** q116 — robust scaling (median / MAD), the outlier-immune scaler a
     * quality pipeline uses where the z-score's mean/σ are skew-fragile:
@@ -505,7 +351,7 @@ object Relational {
     * passes stay in long cents; the one division is IEEE on exact integers
     * ((cents−med)·10⁶ < 2⁵³).
     *
-    * Plan: two [[crossingMedian]] passes — the distributed
+    * Plan: two [[OffsetPrefix.crossingMedian]] passes — the distributed
     * crossing-value search, no per-flag serialization — whose 3-row
     * results broadcast back onto the scan; the big side is never
     * re-shuffled for the scaling itself.
@@ -890,15 +736,16 @@ object Relational {
       |SELECT custkey, 'max_cents' AS metric, max_cents AS value FROM m""".stripMargin
 
   /** q181 — per-flag EQUI-DEPTH decile boundaries of the lineitem price in
-    * one distributed pass: [[crossingBoundaries]] derives, per row, the
-    * exact range of k/10 ranks that row's cumulative weight crosses first
-    * and explodes only those — all nine boundaries per group from ONE
-    * range-partition shuffle, where nine [[crossingQuantile]] calls would
-    * re-shuffle nine times and a per-group window would serialize each
-    * flag's 200k-row slice through one task. The equi-depth histogram is
+    * one distributed pass: [[OffsetPrefix.crossingBoundaries]] derives, per
+    * row, the exact range of k/10 ranks that row's cumulative weight
+    * crosses first and explodes only those — all nine boundaries per group
+    * from ONE range-partition shuffle, where nine
+    * [[OffsetPrefix.crossingQuantile]] calls would re-shuffle nine times
+    * and a per-group window would serialize each flag's 200k-row slice
+    * through one task. The equi-depth histogram is
     * the optimizer-statistics / data-skew primitive (equi-WIDTH is q09). */
   def equidepthDeciles(spark: SparkSession, dir: String): DataFrame =
-    crossingBoundaries(
+    OffsetPrefix.crossingBoundaries(
       Tables.lineitem(spark, dir)
         .select(col("l_returnflag").as("flag"),
           Rfm.cents(col("l_extendedprice")).as("cents")),
@@ -1012,7 +859,7 @@ object Relational {
     * sorted ascending with ordinal i — the inequality/concentration gauge
     * behind "top-1% of accounts" dashboards, plus the exact integer
     * components so any downstream can re-derive Lorenz points. The
-    * ordinal comes from [[TextAnalysis.groupedOrdinal]] on a constant
+    * ordinal comes from [[OffsetPrefix.ordinal]] on a constant
     * group — the DISTRIBUTED rank (range partition + offset prefix), so
     * the customers-sized frame never serializes through one window task
     * even when "customers" means billions. Ties order by custkey in both
@@ -1022,7 +869,7 @@ object Relational {
       .groupBy(col("o_custkey"))
       .agg(sum(Rfm.cents(col("o_totalprice"))).as("rev"))
       .withColumn("__g", lit(1))
-    TextAnalysis.groupedOrdinal(rev, "__g", Seq("rev", "o_custkey"))
+    OffsetPrefix.ordinal(rev, "__g", Seq("rev", "o_custkey"))
       .agg(count(lit(1)).as("n_customers"),
         sum(col("rev")).as("total_cents"),
         sum(col("__ord") * col("rev")).as("sum_irev"))
@@ -1206,7 +1053,7 @@ object Relational {
     * timeline, cross-tabulated — the lifecycle matrix behind churn/
     * upgrade dashboards (band 0 = absent that half, so the new/churned
     * lanes appear as first-band-0 / second-band-0 rows). Each half's
-    * quartile boundaries come from ONE [[crossingBoundaries]] pass
+    * quartile boundaries come from ONE [[OffsetPrefix.crossingBoundaries]] pass
     * (grp = half, den = 4) and broadcast back as a 6-row miniature;
     * banding is `1 + #{boundaries below the customer}` — tie-invariant,
     * identical in the oracle's window form. */
@@ -1221,7 +1068,8 @@ object Relational {
     val halves = o.crossJoin(broadcast(mid))
       .withColumn("half", when(col("day") <= col("mid"), 1L).otherwise(2L))
       .groupBy(col("half"), col("custkey")).agg(sum(col("cents")).as("rev"))
-    val qs = crossingBoundaries(halves, "half", "rev", lit(1L), "qv", den = 4)
+    val qs = OffsetPrefix.crossingBoundaries(halves, "half", "rev", lit(1L),
+      "qv", den = 4)
     val banded = halves.join(broadcast(qs), Seq("half"))
       .groupBy(col("half"), col("custkey"))
       .agg((sum(when(col("rev") > col("qv"), 1L).otherwise(0L)) + 1L)

@@ -230,10 +230,12 @@ object Sampling {
     *
     * Ranking key: q109's length-normalized linear score (`avg_e6`, exact
     * integers), descending, doc_id tiebreak. The running mass uses the
-    * [[Relational.groupedCumSum]] offset-prefix primitive — 20 sources
+    * [[OffsetPrefix.cumSum]] offset-prefix primitive — 20 sources
     * would otherwise serialize into 20 window tasks at any cluster size
     * (the q75/q113 trap); here every data-sized scan is bounded by one
-    * range partition and only the P×G offset miniature is windowed. The
+    * range partition and only the P×G offset miniature is windowed; the
+    * source total is the primitive's `__tot`, summed over that miniature
+    * instead of a second aggregate over the documents ⋈ scores join. The
     * oracle keeps the naive window shape, proving the distributed form
     * value-identical. Keep rule in exact integers:
     * `cum·pDen ≤ total·pNum`. */
@@ -246,10 +248,7 @@ object Sampling {
       .select(col("doc_id"), col("avg_e6"))
     val base = docs.join(scores, "doc_id")
       .withColumn("neg_avg", -col("avg_e6"))
-    val cum = Relational.groupedCumSum(base, "source",
-      Seq("neg_avg", "doc_id"), "tokens")
-    val tot = base.groupBy(col("source")).agg(sum(col("tokens")).as("__tot"))
-    cum.join(broadcast(tot), "source")
+    OffsetPrefix.cumSum(base, "source", Seq("neg_avg", "doc_id"), "tokens")
       .filter(col("__cum") * pDen <= col("__tot") * pNum)
       .select(col("doc_id"), col("source"), col("avg_e6"), col("tokens"),
         col("__cum").as("cum_tokens"))
@@ -282,7 +281,7 @@ object Sampling {
     * md5 variate instead of `rand()`, so reruns and retried partitions
     * agree.
     *
-    * Plan: the per-source rank rides [[TextAnalysis.groupedOrdinal]] —
+    * Plan: the per-source rank rides [[OffsetPrefix.ordinal]] —
     * `source` has ~20 values, so a `Window.partitionBy(source)` would
     * serialize corpus/20 rows into one task per group (the q268/q62/q75
     * trap); the range-partition + broadcast-offset form spreads each
@@ -291,7 +290,7 @@ object Sampling {
     * aggregator (k·|sources| shuffle rows instead of n; proven equivalent
     * to rank filtering in its spec). */
   def domainCap(spark: SparkSession, dir: String, cap: Int = 10): DataFrame =
-    TextAnalysis.groupedOrdinal(
+    OffsetPrefix.ordinal(
       Tables.documents(spark, dir)
         .select(col("doc_id"), col("source"), hashUnit(col("doc_id")).as("u")),
       "source", Seq("u", "doc_id"))
@@ -362,7 +361,7 @@ object Sampling {
     *
     * Plan: per-source counts (|sources| rows) → remainder ranking via one
     * tiny window → quotas broadcast back onto the doc ranking, which rides
-    * [[TextAnalysis.groupedOrdinal]] (range partition + broadcast offset
+    * [[OffsetPrefix.ordinal]] (range partition + broadcast offset
     * miniature — NEVER a window partitioned by the 20-value `source` key,
     * the q268/q62/q75 serialization trap) → rank ≤ quota. At 100 TB: one
     * scan, one range exchange (salt if a mega-source dominates —
@@ -388,7 +387,7 @@ object Sampling {
       .select(col("source"),
         (col("q0") + when(col("spill_rank") <= col("spill"), 1L)
           .otherwise(0L)).as("quota"))
-    TextAnalysis.groupedOrdinal(
+    OffsetPrefix.ordinal(
       docs.select(col("doc_id"), col("source"), hashUnit(col("doc_id")).as("u")),
       "source", Seq("u", "doc_id"))
       .withColumn("rk", col("__ord"))
@@ -440,7 +439,7 @@ object Sampling {
     * zipWithIndex would not survive a task retry).
     *
     * Scale shape: shard assignment is a narrow map (no exchange); the
-    * within-shard position uses [[TextAnalysis.groupedOrdinal]] — ONE
+    * within-shard position uses [[OffsetPrefix.ordinal]] — ONE
     * range partitioning plus a broadcast-back P×S offset miniature, never
     * a one-task-per-shard window and never a global sort. Writing
     * `partitionBy(shard)` sorted by pos then streams each shard file in
@@ -454,7 +453,7 @@ object Sampling {
           col("doc_id").cast(StringType))), 1, 8), 16, 10)
           .cast(LongType).as("u32"))
       .withColumn("shard", pmod(col("u32"), lit(shards.toLong)))
-    TextAnalysis.groupedOrdinal(seeded, "shard", Seq("u32", "doc_id"))
+    OffsetPrefix.ordinal(seeded, "shard", Seq("u32", "doc_id"))
       .select(col("doc_id"), col("u32"), col("shard"),
         col("__ord").as("pos"))
   }
@@ -848,7 +847,7 @@ object Sampling {
     *
     * Plan: one scan → 5-row moment aggregate → driver-free miniature window
     * for the spill → broadcast quotas onto the per-segment rank, which
-    * rides [[TextAnalysis.groupedOrdinal]] (the [[stratifiedSample]]
+    * rides [[OffsetPrefix.ordinal]] (the [[stratifiedSample]]
     * discipline; salt a mega-stratum via [[graft.operators.Skew]] at
     * 100 TB). */
   def neymanSample(spark: SparkSession, dir: String,
@@ -900,10 +899,10 @@ object Sampling {
       .select(col("segment"), col("w_h"),
         (col("q0") + when(col("spill_rank") <= col("spill"), 1L)
           .otherwise(0L)).as("quota"))
-    // the per-segment rank rides groupedOrdinal — `segment` has 5 values,
-    // so a Window.partitionBy(segment) would serialize customers/5 rows
-    // into one task per group (the q268/q62/q75 trap)
-    TextAnalysis.groupedOrdinal(
+    // the per-segment rank rides OffsetPrefix.ordinal — `segment` has 5
+    // values, so a Window.partitionBy(segment) would serialize
+    // customers/5 rows into one task per group (the q268/q62/q75 trap)
+    OffsetPrefix.ordinal(
       cust.select(col("c_custkey"), col("segment"),
         hashU32(col("c_custkey")).as("u32")),
       "segment", Seq("u32", "c_custkey"))

@@ -372,9 +372,9 @@ object TextAnalysis {
     * source documents.
     *
     * Scale shape: the global token offset is a PREFIX SUM in doc_id order
-    * and rides [[graft.operators.Relational.groupedCumSum]] (range
-    * partition + broadcast per-partition offset miniature — never an
-    * unpartitioned corpus window, the q75/q268 discipline); the
+    * and rides [[OffsetPrefix.cumSum]] (range partition + broadcast
+    * per-partition offset miniature — never an unpartitioned corpus
+    * window, the q75/q268 discipline); the
     * bin-overlap explode emits ⌈n_tokens/budget⌉+1 ≤ tokens/budget rows
     * per doc (O(total tokens / budget) overall); the final aggregate keys
     * on seq_id — HIGH-cardinality, grows with the data, partitions with
@@ -383,7 +383,7 @@ object TextAnalysis {
                              budget: Int = 64): DataFrame = {
     require(budget >= 1, s"budget must be >= 1: $budget")
     val b = budget.toLong
-    val spans = Relational.groupedCumSum(
+    val spans = OffsetPrefix.cumSum(
         Tables.documents(spark, dir)
           .select(col("doc_id"),
             // degenerate-doc guard (round-10 ADVICE): null text makes
@@ -798,53 +798,33 @@ object TextAnalysis {
        |       string_agg(CAST(id AS VARCHAR), ',' ORDER BY pos) AS ids_str
        |FROM enc GROUP BY doc_id""".stripMargin
 
-  /** q74 — sequence packing: assign documents (in doc_id order) to
-    * fixed-capacity training bins by running token count; a doc lands in
-    * the bin where its tokens START (contiguous fill, capacity 2048).
-    *
-    * The running sum is a TWO-PHASE DISTRIBUTED PREFIX SCAN, not a global
-    * single-partition window (`Window.orderBy` with no partition key drags
-    * the whole table through one task — the classic scale trap for cumsum):
-    *  1. range-repartition by doc_id so partition i holds an ordered slice;
-    *  2. per-partition token totals → collected (one row per partition) →
-    *     exclusive prefix offsets computed driver-side and broadcast back;
-    *  3. within-partition window cumsum + the partition's offset.
-    * Identical values to the naive global window (the DuckDB oracle), at
-    * any partition count. */
   /** Bin capacity shared by [[sequencePacking]]'s default and the oracle
     * SQL — a caller passing a custom capacity must not compare against
     * [[sequencePackingSql]], which pins this value. */
   val PackingCapacity = 2048L
 
+  /** q74 — sequence packing: assign documents (in doc_id order) to
+    * fixed-capacity training bins by running token count; a doc lands in
+    * the bin where its tokens START (contiguous fill, capacity 2048).
+    *
+    * The running sum is [[OffsetPrefix.cumSum]] over a constant group (the
+    * q275 shape), not a global single-partition window (`Window.orderBy`
+    * with no partition key drags the whole table through one task — the
+    * classic scale trap for cumsum). `bin_id` is the oracle's own
+    * `floor((cum - n_tokens) / capacity)`, so a null-token doc gets a
+    * NULL bin and adds nothing to the sum. Identical values to the naive
+    * global window (the DuckDB oracle), at any partition count. */
   def sequencePacking(spark: SparkSession, dir: String,
                       capacity: Long = PackingCapacity,
                       partitions: Int = 8): DataFrame = {
-    // localCheckpoint pins ONE materialized range partitioning: the offsets
-    // collect and the final query must observe identical partition
-    // boundaries, and two separate evaluations of repartitionByRange may
-    // sample different range splits. Token counts come from the cached
-    // textBase projection (same `size(split)` expression) rather than a
-    // fresh re-split of the raw text.
+    // token counts come from the cached textBase projection (same
+    // `size(split)` expression) rather than a fresh re-split of the text
     val toks = textBase(spark, dir)
-      .select(col("doc_id"), col("n_words").as("n_tokens"))
-      .repartitionByRange(partitions, col("doc_id"))
-      .withColumn("pid", spark_partition_id())
-      .localCheckpoint(true)
-    val totals = toks.groupBy(col("pid")).agg(sum(col("n_tokens")).as("t"))
-      .collect().map(r => r.getInt(0) -> r.getLong(1)).toMap
-    val nParts = toks.rdd.getNumPartitions
-    // exclusive prefix over ALL partition ids (empty partitions count 0)
-    val offs = (0 until nParts).map(totals.getOrElse(_, 0L))
-      .scanLeft(0L)(_ + _).dropRight(1)
-    val offsetCol = element_at(array(offs.map(lit): _*), col("pid") + 1)
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("pid")).orderBy(col("doc_id"))
-      .rowsBetween(org.apache.spark.sql.expressions.Window.unboundedPreceding, -1)
-    toks
-      .withColumn("start_tok",
-        coalesce(sum(col("n_tokens")).over(w), lit(0L)) + offsetCol)
+      .select(col("doc_id"), col("n_words").as("n_tokens"), lit(1).as("g"))
+    OffsetPrefix.cumSum(toks, "g", Seq("doc_id"), "n_tokens", partitions)
       .select(col("doc_id"), col("n_tokens"),
-        floor(col("start_tok") / capacity).cast(LongType).as("bin_id"))
+        floor((col("__cum") - col("n_tokens")) / capacity).cast(LongType)
+          .as("bin_id"))
   }
 
   val sequencePackingSql: String =
@@ -858,40 +838,6 @@ object TextAnalysis {
        |               CAST(len(string_split(text, ' ')) AS BIGINT) AS n_tokens
        |        FROM documents))""".stripMargin
 
-  /** Distributed dense per-group ordinal (1-based rank of each row within
-    * its group under `ordCols` order) WITHOUT a per-group window — the
-    * serialization-free twin of `row_number().over(partitionBy(grp))`,
-    * built on the [[sequencePacking]] offset discipline in one plan:
-    * range-partition by (grp, ordCols), per-(partition, group) counts form
-    * a P×G miniature whose per-group exclusive-prefix window orders ≤ P
-    * rows, broadcast back, within-partition row_number + offset. The range
-    * partitioning is pinned by an eager `localCheckpoint` so every
-    * reference sees the same sampled boundaries (ReuseExchange proved
-    * fragile for this — see `Relational.crossingMedian`); `ordCols` MUST be a total
-    * order per group (include a unique id) — equal keys could otherwise
-    * land on either side of a range boundary and make ordinals unstable. */
-  private[graft] def groupedOrdinal(df: DataFrame, grp: String,
-                                    ordCols: Seq[String],
-                                    partitions: Int = 8): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val part = df
-      .repartitionByRange(partitions, (col(grp) +: ordCols.map(col)): _*)
-      .withColumn("__pid", spark_partition_id())
-      .localCheckpoint(true)
-    val offW = Window.partitionBy(col(grp)).orderBy(col("__pid"))
-      .rowsBetween(Window.unboundedPreceding, -1)
-    val offsets = part.groupBy(col("__pid"), col(grp))
-      .agg(count(lit(1)).as("__c"))
-      .withColumn("__off", coalesce(sum(col("__c")).over(offW), lit(0L)))
-      .select(col("__pid"), col(grp), col("__off"))
-    val inPart = Window.partitionBy(col("__pid"), col(grp))
-      .orderBy(ordCols.map(col): _*)
-    part.join(broadcast(offsets), Seq("__pid", grp))
-      .withColumn("__ord",
-        row_number().over(inPart).cast(LongType) + col("__off"))
-      .drop("__pid", "__off")
-  }
-
   /** q126 — length-bucketed batch assembly: documents bucketed by word
     * count (`bucketWidth`-wide ranges), then packed into fixed-size
     * batches of `batchSize` docs in (length, id) order within each bucket
@@ -899,8 +845,8 @@ object TextAnalysis {
     * sequences in a batch pad to the batch max, so batching similar
     * lengths bounds pad waste by `bucketWidth` tokens per sequence.
     *
-    * The per-bucket ordinal comes from [[groupedOrdinal]] — buckets are
-    * few (lengths/width), exactly the low-cardinality group shape where a
+    * The per-bucket ordinal comes from [[OffsetPrefix.ordinal]] — buckets
+    * are few (lengths/width), exactly the low-cardinality group shape where a
     * plain window would serialize each bucket into one task. Everything
     * is integer arithmetic; the oracle mirrors with a naive window. */
   def lengthBatches(spark: SparkSession, dir: String,
@@ -909,7 +855,7 @@ object TextAnalysis {
     val toks = textBase(spark, dir)
       .select(col("doc_id"), col("n_words"))
       .withColumn("bucket", expr(s"n_words div $bucketWidth"))
-    groupedOrdinal(toks, "bucket", Seq("n_words", "doc_id"))
+    OffsetPrefix.ordinal(toks, "bucket", Seq("n_words", "doc_id"))
       .select(col("doc_id"), col("n_words"), col("bucket"),
         expr(s"(__ord - 1) div $batchSize").as("batch_id"))
   }
@@ -1142,8 +1088,8 @@ object TextAnalysis {
     * table a staged pre-training run consumes, and the ordered complement
     * of q133's top-p CUTOFF (which selects; this schedules everything).
     *
-    * The per-source rank comes from [[groupedOrdinal]] — sources are the
-    * canonical low-cardinality group shape where `row_number().over
+    * The per-source rank comes from [[OffsetPrefix.ordinal]] — sources are
+    * the canonical low-cardinality group shape where `row_number().over
     * (partitionBy(source))` would serialize each source into ONE task at
     * any cluster size; the offset-prefix primitive keeps it distributed
     * (PlanAudit pins the checkpoint barrier and forbids a live range
@@ -1158,7 +1104,7 @@ object TextAnalysis {
       .withColumn("neg_q", -col("avg_e6"))
     val totals = scored.groupBy(col("source"))
       .agg(count(lit(1)).as("n_src"))
-    groupedOrdinal(scored, "source", Seq("neg_q", "doc_id"))
+    OffsetPrefix.ordinal(scored, "source", Seq("neg_q", "doc_id"))
       .join(broadcast(totals), "source")
       .withColumn("decile", expr("(__ord - 1) * 10 DIV n_src"))
       .groupBy(col("source"), col("decile"))
@@ -1772,16 +1718,17 @@ object TextAnalysis {
     * the position key, never an array index.
     *
     * Scale shape: scores are the session-cached q109 artifact; BOTH
-    * ordinals ride [[groupedOrdinal]] — `source` has ~20 distinct values,
-    * so a `Window.partitionBy(source)` rank would serialize corpus/20 rows
-    * into one task per group (the q62/q75 low-cardinality-window trap);
+    * ordinals ride [[OffsetPrefix.ordinal]] — `source` has ~20 distinct
+    * values, so a `Window.partitionBy(source)` rank would serialize
+    * corpus/20 rows into one task per group (the q62/q75
+    * low-cardinality-window trap);
     * the range-partition + broadcast-offset form spreads each source
     * across all partitions instead. `n_s` is a broadcast
     * `groupBy(source).count()` miniature, and the final position join is
     * key-equi. */
   def quantileNormalize(spark: SparkSession, dir: String): DataFrame = {
     // registry-cached: the scored frame feeds FOUR independent subtrees
-    // (the groupedOrdinal rank lane, the per-source count miniature, the
+    // (the ordinal rank lane, the per-source count miniature, the
     // global count, the pooled ordinal) and Spark shares no un-cached
     // lineage across them — without the cache the documents join would
     // run once per consumer
@@ -1794,11 +1741,12 @@ object TextAnalysis {
     // exchange the rank lane avoids)
     val srcCounts = broadcast(
       scored.groupBy(col("source")).agg(count(lit(1)).as("n_s")))
-    val ranked = groupedOrdinal(scored, "source", Seq("avg_e6", "doc_id"))
+    val ranked = OffsetPrefix.ordinal(scored, "source",
+        Seq("avg_e6", "doc_id"))
       .withColumnRenamed("__ord", "rk")
       .join(srcCounts, Seq("source"))
     val nAll = broadcast(scored.agg(count(lit(1)).as("n")))
-    val pooled = groupedOrdinal(scored.withColumn("g", lit(1)), "g",
+    val pooled = OffsetPrefix.ordinal(scored.withColumn("g", lit(1)), "g",
         Seq("avg_e6", "doc_id"))
       .select(col("__ord").as("pos"), col("avg_e6").as("norm_e6"))
     ranked.crossJoin(nAll)

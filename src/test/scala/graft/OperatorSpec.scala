@@ -761,11 +761,11 @@ class OperatorSpec extends AnyFunSuite {
       val partial = rows.groupBy(_._4).count(_._2.length < 16)
       assert(partial <= 1, s"bucket $b has $partial partial batches")
     }
-    // groupedOrdinal is partition-count invariant (unique ord keys): the
-    // same batch assignment at 2, 8, and 32 range partitions
+    // OffsetPrefix.ordinal is partition-count invariant (unique ord keys):
+    // the same batch assignment at 2, 8, and 32 range partitions
     val toks = (1L to 5000L).map(i => (i, (i * 37) % 200))
       .toDF("doc_id", "n_words").withColumn("bucket", expr("n_words div 32"))
-    def ords(p: Int) = TextAnalysis.groupedOrdinal(
+    def ords(p: Int) = OffsetPrefix.ordinal(
         toks, "bucket", Seq("n_words", "doc_id"), partitions = p)
       .select("doc_id", "__ord").collect()
       .map(r => r.getLong(0) -> r.getLong(1)).toMap
@@ -837,10 +837,44 @@ class OperatorSpec extends AnyFunSuite {
       }
     }
     Seq(2, 8, 32).foreach { p =>
-      val got = Relational.crossingMedian(df, "flag", "cents", col("wq"),
+      val got = OffsetPrefix.crossingMedian(df, "flag", "cents", col("wq"),
         "med", partitions = p)
         .collect().map(r => r.getString(0) -> (r.getLong(1), r.getLong(2))).toMap
       assert(got == naive(), s"partitions=$p")
+    }
+    // the other two forms on the same skewed frame: all nine weighted
+    // nearest-rank deciles (smallest v with 10·W(≤ v) ≥ k·W_total) and the
+    // running sum in (cents, id) order against a scanLeft
+    val deciles: Map[(String, Int), Long] = rows.groupBy(_._1).flatMap {
+      case (g, rs) =>
+        val sorted = rs.map(r => (r._2, r._3)).sortBy(_._1)
+        val tot = sorted.map(_._2).sum
+        val cum = sorted.map(_._2).scanLeft(0L)(_ + _).tail
+        (1 to 9).map { k =>
+          (g, k) -> sorted(cum.indexWhere(_ * 10 >= k * tot))._1
+        }
+    }
+    val ided = rows.zipWithIndex
+      .map { case ((g, c, w), i) => (g, c, w, i.toLong) }
+    val cums: Map[Long, (Long, Long)] =
+      ided.groupBy(_._1).values.flatMap { rs =>
+        val sorted = rs.sortBy(r => (r._2, r._4))
+        val tot = sorted.map(_._3).sum
+        sorted.zip(sorted.map(_._3).scanLeft(0L)(_ + _).tail)
+          .map { case (r, c) => r._4 -> (c, tot) }
+      }.toMap
+    val idf = ided.toDF("flag", "cents", "wq", "id")
+    Seq(2, 8, 32).foreach { p =>
+      val got = OffsetPrefix.crossingBoundaries(df, "flag", "cents",
+          col("wq"), "b", den = 10, partitions = p)
+        .collect().map(r => (r.getString(0), r.getInt(1)) -> r.getLong(2))
+        .toMap
+      assert(got == deciles, s"deciles partitions=$p")
+      val gotCum = OffsetPrefix.cumSum(idf, "flag", Seq("cents", "id"), "wq",
+          partitions = p)
+        .select("id", "__cum", "__tot").collect()
+        .map(r => r.getLong(0) -> (r.getLong(1), r.getLong(2))).toMap
+      assert(gotCum == cums, s"cumSum partitions=$p")
     }
   }
 
@@ -1643,6 +1677,39 @@ class OperatorSpec extends AnyFunSuite {
     binTokens.foreach { case (bin, total) =>
       val maxDoc = p8.filter(_._3 == bin).map(_._2).max
       assert(total < 2048 + maxDoc, s"bin $bin holds $total tokens")
+    }
+  }
+
+  test("q74 sequence packing: a range partition of null-text docs keeps " +
+    "the global-window bins (NULL bin where n_tokens is NULL)") {
+    // the lowest-doc_id half has null text, so at 8 and 32 range
+    // partitions whole partitions hold only null-token docs
+    val tmp = java.nio.file.Files.createTempDirectory("graft_nullpack").toString
+    val docs = Tables.documents(spark, dir)
+    val ids = docs.select("doc_id").collect().map(_.getLong(0)).sorted
+    val mid = ids((ids.length - 1) / 2)
+    docs.withColumn("text",
+        when(col("doc_id") > mid, col("text")).otherwise(lit(null)))
+      .write.parquet(s"$tmp/documents.parquet")
+    // the oracle's form: one global running-sum window, bin from cum − n
+    val naive = Tables.documents(spark, tmp)
+      .select(col("doc_id"),
+        size(split(col("text"), " ")).cast("long").as("n_tokens"))
+      .withColumn("cum", sum(col("n_tokens")).over(
+        org.apache.spark.sql.expressions.Window.orderBy(col("doc_id"))
+          .rowsBetween(Long.MinValue, 0)))
+      .select(col("doc_id"), col("n_tokens"),
+        floor((col("cum") - col("n_tokens")) / TextAnalysis.PackingCapacity)
+          .cast("long").as("bin_id"))
+    def canon(df: org.apache.spark.sql.DataFrame) =
+      df.collect().map(r => (r.getLong(0), Option(r.get(1)), Option(r.get(2))))
+        .sortBy(_._1).toSeq
+    val want = canon(naive)
+    assert(want.count(_._2.isEmpty) * 2 >= want.size)
+    assert(want.forall(t => t._2.isEmpty == t._3.isEmpty))
+    Seq(2, 8, 32).foreach { p =>
+      assert(canon(TextAnalysis.sequencePacking(spark, tmp, partitions = p))
+        == want, s"partitions=$p")
     }
   }
 

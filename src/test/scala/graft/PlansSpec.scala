@@ -366,7 +366,7 @@ class PlansSpec extends AnyFunSuite {
     val oldNs = "windowspecdefinition(source#2047, specifiedwindowframe(" +
       "RowFrame, unboundedpreceding$(), unboundedfollowing$()))"
     assert(PlanAudit.dimWindowRe.findFirstIn(oldNs).isDefined)
-    // groupedOrdinal / crossingQuantile miniatures carry the __pid order
+    // OffsetPrefix's miniature windows carry the __pid order
     // marker — P×G offset rows, not data — and must NOT trip the sweep
     val offsetsW = "windowspecdefinition(source#11, __pid#44 ASC NULLS " +
       "FIRST, specifiedwindowframe(RowFrame, unboundedpreceding$(), -1))"
