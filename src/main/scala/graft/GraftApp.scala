@@ -85,37 +85,47 @@ object GraftApp {
     * `src/main.rs:84-162`, which calls `generate_visualization_report` —
     * `src/viz.rs:199-215` — writing the scatter PNG at `--output` and the
     * size chart at the `_sizes`-suffixed path). Returns the fitted
-    * segmentation and prints the S6 report. */
+    * segmentation and prints the S6 report; `--verbose` adds the stage
+    * times in BASELINE.md's split (load+RFM, fit, report, charts). */
   def runFullPipeline(spark: SparkSession, cfg: Config): Clustering.Segmentation = {
-    val t0 = System.nanoTime()
-    val seg = fitFromConfig(spark, cfg)
+    def timed[A](body: => A): (A, Double) = {
+      val t0 = System.nanoTime()
+      val a = body
+      (a, (System.nanoTime() - t0) / 1e9)
+    }
+    val (rfm, loadS) = timed(loadRfm(spark, cfg.input))
+    val (seg, fitS) = timed(Clustering.fit(rfm, cfg.clusters, cfg.maxIters, cfg.tolerance))
     // reference order: Step 3 prints cluster statistics, Step 4 renders the
     // charts (`src/main.rs:124-151`) — keep the console output sequence
-    val report = Clustering.clusterReport(seg)
+    val (report, reportS) = timed(Clustering.clusterReport(seg))
     println(report)
-    operators.Charts.visualizationReport(seg, cfg.output)
-    if (cfg.verbose)
-      println(f"Total pipeline time: ${(System.nanoTime() - t0) / 1e9}%.2f s")
+    val (_, chartsS) = timed(operators.Charts.visualizationReport(seg, cfg.output))
+    if (cfg.verbose) {
+      // the fit's path: driver-side up to Clustering.LocalFitRows rows
+      val path = if (Clustering.fitsLocally(seg.scaler.n)) "local" else "distributed"
+      print(f"""Load + RFM: $loadS%.2f s
+               |K-Means fit ($path, ${seg.model.summary.numIter} iterations): $fitS%.2f s
+               |Report: $reportS%.2f s
+               |Charts: $chartsS%.2f s
+               |Total pipeline time: ${loadS + fitS + reportS + chartsS}%.2f s
+               |""".stripMargin)
+    }
     seg
   }
 
-  /** Load + fit only — shared by both modes. Prediction mode deliberately
-    * does NOT render charts (reference `run_prediction_mode`,
-    * `src/main.rs:31-81`, fits and prints but never touches `src/viz.rs`). */
-  private def fitFromConfig(spark: SparkSession, cfg: Config): Clustering.Segmentation =
-    Clustering.fit(loadRfm(spark, cfg.input), cfg.clusters, cfg.maxIters,
-      cfg.tolerance)
-
   /** Prediction mode: full refit then classify one point (reference
     * `src/main.rs:31-81` — the model is re-trained per invocation there;
-    * the session fit-cache in [[Clustering]] is our documented deviation). */
+    * the session fit-cache in [[Clustering]] is our documented deviation).
+    * It deliberately renders no charts: the reference fits and prints but
+    * never touches `src/viz.rs`. */
   def runPredictionMode(spark: SparkSession, cfg: Config, rfmStr: String): Int = {
     val point = parseRfmValues(rfmStr)
-    val seg = fitFromConfig(spark, cfg)
+    val seg = Clustering.fit(loadRfm(spark, cfg.input), cfg.clusters,
+      cfg.maxIters, cfg.tolerance)
     val cluster = Clustering.predictCluster(seg, point)
     val size = seg.predictions
       .filter(org.apache.spark.sql.functions.col("prediction") === cluster).count()
-    val total = seg.predictions.count()
+    val total = seg.scaler.n
     println(f"Predicted cluster: $cluster ($size customers, " +
       f"${size.toDouble / total * 100}%.1f%% of base)")
     cluster

@@ -1,11 +1,12 @@
 package graft.operators
 
-import org.apache.spark.ml.clustering.{KMeans, KMeansModel}
+import org.apache.spark.ml.clustering.{GraftKMeansBridge, KMeans, KMeansModel}
 import org.apache.spark.ml.feature.VectorAssembler
 import org.apache.spark.ml.linalg.{Vector, Vectors}
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
+import org.apache.spark.storage.StorageLevel
 
 /** Customer-segmentation ML stage — the reference's core "query" surface
   * (SURVEY §2.4), re-expressed on Spark MLlib.
@@ -19,8 +20,9 @@ import org.apache.spark.sql.types._
   *    enforced (reference `src/model.rs:138-150`), max-iter default 300 and
   *    tolerance 1e-4 (reference `src/cli.rs:27-32`).
   *  - The reference's random init (`src/model.rs:158`) is nondeterministic;
-  *    here init is seeded k-means|| — strictly better quality and
-  *    reproducible, which the reference's own tests could not assume.
+  *    here init is seeded k-means++ below the bound ([[LocalFitRows]]),
+  *    k-means|| above — strictly better quality and reproducible, which the
+  *    reference's own tests could not assume.
   *  - Single-point prediction scales the new point by the TRAINING scaler
   *    then takes argmin over centroids (reference `src/model.rs:26-50`,
   *    `src/model.rs:188-195`).
@@ -30,11 +32,15 @@ import org.apache.spark.sql.types._
   *    driver-side; MLlib's ClusteringEvaluator (squared Euclidean, full
   *    data) is intentionally not used.
   *
-  * Scale notes: feature building is two narrow passes (1-row stats aggregate
-  * broadcast back); each K-Means iteration is one map-reduce over the feature
-  * table with centroids broadcast — the textbook distributed Lloyd's. Nothing
-  * here collects more than k centroids, 6 scalars and a count, or the
-  * ≤100-row silhouette sample to the driver.
+  * Scale notes: the fit reads its RFM input once (cached for the call);
+  * feature building is a 1-row stats aggregate broadcast back plus one
+  * repartition. Up to [[LocalFitRows]] rows the z-points (24 bytes a row,
+  * 25 MB at the bound) are collected and the whole Lloyd's loop runs on the
+  * driver — the bound's scaladoc has the measurement that places it. Above
+  * it each K-Means iteration is one map-reduce over the feature table with
+  * centroids broadcast — the textbook distributed Lloyd's — and nothing
+  * collects more than k centroids, 6 scalars and a count, or the ≤100-row
+  * silhouette sample to the driver.
   */
 object Clustering {
 
@@ -75,40 +81,190 @@ object Clustering {
     require(n >= k, s"Need at least $k data points, got $n")
   }
 
+  /** Largest RFM table, in rows, that [[fit]] fits on the driver: it
+    * collects the z-points of the features cache and runs [[lloyd]], with no
+    * Spark job per iteration. Above it, MLlib's distributed `KMeans.fit`.
+    *
+    * Measured as the whole [[fitWith]] call (stats aggregate, features
+    * cache, fit, predictions) on a cached RFM input, each path forced, k=4,
+    * seed 42, `local[4]` on a 4-core VM, 3 GB heap; seconds are the two warm
+    * repetitions after one warm-up, iterations in brackets:
+    *
+    * | rows | input | collect + driver fit | MLlib fit |
+    * |---|---|---|---|
+    * | 4,338 | perfbench retail CSV, seed 1 | 0.70–0.80 s (4) | 3.01–3.11 s (25) |
+    * | 14,999 | sf0.1 `Rfm.rfmOrders` | 0.64–0.73 s (48) | 3.35–3.53 s (31) |
+    * | 100,000 | synthetic, 4 planted blobs | 0.88–0.95 s (3) | 2.17–2.28 s (2) |
+    * | 1,000,000 | synthetic, 4 planted blobs | 2.40–2.98 s (3) | 5.86–6.06 s (2) |
+    *
+    * The driver fit still wins 2× at 10⁶ rows. Each MLlib iteration is a
+    * Spark job, where a driver iteration is one pass over the collected
+    * array, so more iterations widen the gap (at 14,999 rows the driver ran
+    * 48 iterations and still won 5×). The bound stops just past the largest
+    * measured size, where the collected z-points are 25 MB; it is not
+    * pushed further because a larger table risks the driver's memory,
+    * which these runs did not measure. */
+  val LocalFitRows: Long = 1L << 20
+
+  /** Whether a fit of `n` rows runs on the driver (see [[LocalFitRows]]). */
+  def fitsLocally(n: Long): Boolean = n <= LocalFitRows
+
   /** Fit the full segmentation (reference `fit_kmeans`, `src/model.rs:132-177`). */
   def fit(rfm: DataFrame, k: Int = 4, maxIters: Int = 300,
-          tol: Double = 1e-4, seed: Long = 42L): Segmentation = {
-    val (features, scaler) = standardize(rfm)
-    val n = scaler.n
-    validateK(k, n)
-    // k-means|| init samples rows in partition order, and within-partition
-    // order after a shuffle is not stable across runs — pin both so a seeded
-    // fit is bit-reproducible (the reference is unseeded and nondeterministic,
-    // SURVEY §7.4; we promise strictly more). Partition count follows data
-    // size: every Lloyd's iteration is one job over these partitions, and
-    // hundreds of near-empty tasks per iteration dominated wall-clock on
-    // small-SF fits. Rows here are 3 doubles — ~64k rows/task is still only
-    // ~1.5 MB, so iteration cost is scheduling-bound until well past that
-    // (a billion-customer table still yields ~15k tasks via this formula).
-    val numParts = math.max(1, math.min(1 << 14, n / 65536)).toInt
-    val cached = features
-      .repartition(numParts, col("custkey"))
-      .sortWithinPartitions(col("custkey"))
-      .cache()
+          tol: Double = 1e-4, seed: Long = 42L): Segmentation =
+    fitWith(rfm, k, maxIters, tol, seed)(fitsLocally)
+
+  /** [[fit]] with the path chosen by `local(n)`, so specs can reach both
+    * paths on the same input. The two paths share one data flow and differ
+    * only in the call that turns the features cache into a model. */
+  private[graft] def fitWith(rfm: DataFrame, k: Int, maxIters: Int, tol: Double,
+                             seed: Long)(local: Long => Boolean): Segmentation = {
+    // the stats aggregate, the features cache and the predictions all read
+    // the RFM table: cache it for this call so its lineage (a CSV or parquet
+    // scan plus an aggregate) runs once. A caller's cache is left alone, and
+    // ours is dropped on the way out, so a later call on an equal plan can
+    // never hit it.
+    val ownCache = rfm.storageLevel == StorageLevel.NONE
+    if (ownCache) rfm.cache()
     try {
-      val model = new KMeans()
-        .setK(k).setMaxIter(maxIters).setTol(tol)
-        .setDistanceMeasure("euclidean").setSeed(seed)
-        .setFeaturesCol("features").setPredictionCol("prediction")
-        .fit(cached)
-      // materialize predictions while the feature cache is alive: every
-      // downstream stat (sizes, silhouette, predict-mode counts) re-actions
-      // this frame, and without the cache each action replays the whole
-      // scan+aggregate+transform lineage
-      val predictions = model.transform(cached).cache()
-      predictions.count()
-      Segmentation(model, scaler, predictions, model.summary.trainingCost)
-    } finally cached.unpersist()
+      val (features, scaler) = standardize(rfm)
+      val n = scaler.n
+      validateK(k, n)
+      // k-means|| init samples rows in partition order, and within-partition
+      // order after a shuffle is not stable across runs — pin both so a
+      // seeded fit is bit-reproducible (the reference is unseeded and
+      // nondeterministic, SURVEY §7.4; we promise strictly more); the
+      // driver-side fit reads the rows in the same pinned order. Partition
+      // count follows data size: every distributed Lloyd's iteration is one
+      // job over these partitions, and rows here are 3 doubles — ~64k
+      // rows/task is still only ~1.5 MB.
+      val numParts = math.max(1, math.min(1 << 14, n / 65536)).toInt
+      val cached = features
+        .repartition(numParts, col("custkey"))
+        .sortWithinPartitions(col("custkey"))
+        .cache()
+      try {
+        val fitted =
+          if (local(n)) lloyd(cached, k, maxIters, tol, seed)
+          else new KMeans()
+            .setK(k).setMaxIter(maxIters).setTol(tol)
+            .setDistanceMeasure("euclidean").setSeed(seed)
+            .setFeaturesCol("features").setPredictionCol("prediction")
+            .fit(cached)
+        // k-means|| keeps only distinct initial centers, so an input with
+        // fewer than k distinct points gets fewer than k from MLlib; the
+        // missing ones repeat the last center — empty clusters, as the
+        // driver-side fit leaves them
+        val model =
+          if (fitted.clusterCenters.length == k) fitted
+          else GraftKMeansBridge.model(
+            fitted.clusterCenters.padTo(k, fitted.clusterCenters.last),
+            fitted.summary.numIter, fitted.summary.trainingCost, cached)
+        // materialize predictions while the feature cache is alive: every
+        // downstream stat (sizes, silhouette, predict-mode counts) re-actions
+        // this frame, and without the cache each action replays the whole
+        // scan+aggregate+transform lineage
+        val predictions = model.transform(cached).cache()
+        predictions.count()
+        Segmentation(model, scaler, predictions, model.summary.trainingCost)
+      } finally cached.unpersist()
+    } finally if (ownCache) rfm.unpersist()
+  }
+
+  /** Squared euclidean distance of point `i` of the row-major `xs` to
+    * center `j` of `cs`, summed in feature order — the `((dr² + df²) + dm²)`
+    * shape of [[distCol]]. */
+  private def sqdist(xs: Array[Double], i: Int, cs: Array[Double], j: Int, d: Int): Double = {
+    var s = 0.0
+    var f = 0
+    while (f < d) {
+      val t = xs(i * d + f) - cs(j * d + f)
+      s += t * t
+      f += 1
+    }
+    s
+  }
+
+  /** Index of the nearest center, first index on ties (reference
+    * `src/model.rs:26-50`). */
+  private def nearest(xs: Array[Double], i: Int, cs: Array[Double], k: Int, d: Int): Int = {
+    var best = 0
+    var bestD = sqdist(xs, i, cs, 0, d)
+    var j = 1
+    while (j < k) {
+      val dj = sqdist(xs, i, cs, j, d)
+      if (dj < bestD) { best = j; bestD = dj }
+      j += 1
+    }
+    best
+  }
+
+  /** Driver-side K-Means over the collected z-points of `cached`:
+    *  - seeded k-means++ init: the first center uniform, each next one drawn
+    *    with probability ∝ squared distance to the nearest center chosen so
+    *    far (uniform again once every point sits on a center, so a
+    *    degenerate input still gets k finite centers);
+    *  - Lloyd's iterations with first-min assignment; a cluster that loses
+    *    all its points keeps its center;
+    *  - stops once no center moves more than `tol` (MLlib's rule:
+    *    squared move ≤ tol²) or after `maxIters` iterations;
+    *  - training cost is the reference's inertia (`src/model.rs:198-215`):
+    *    Σ squared distance of each point to its final assigned center. */
+  private def lloyd(cached: DataFrame, k: Int, maxIters: Int, tol: Double,
+                    seed: Long): KMeansModel = {
+    val d = FeatureCols.length
+    val rows = cached.select(FeatureCols.map(c => col(s"${c}_z")): _*).collect()
+    val n = rows.length
+    val xs = new Array[Double](n * d)
+    for (i <- 0 until n; f <- 0 until d) xs(i * d + f) = rows(i).getDouble(f)
+
+    val rnd = new scala.util.Random(seed)
+    val cs = new Array[Double](k * d)
+    def place(j: Int, i: Int): Unit = System.arraycopy(xs, i * d, cs, j * d, d)
+    place(0, rnd.nextInt(n))
+    val d2 = Array.tabulate(n)(i => sqdist(xs, i, cs, 0, d))
+    for (j <- 1 until k) {
+      val total = d2.sum
+      val pick =
+        if (total > 0.0) {
+          val r = rnd.nextDouble() * total
+          var acc = 0.0
+          var i = 0
+          var last = 0
+          while (i < n && acc <= r) {
+            if (d2(i) > 0.0) { acc += d2(i); last = i }
+            i += 1
+          }
+          last
+        } else rnd.nextInt(n)
+      place(j, pick)
+      for (i <- 0 until n) d2(i) = math.min(d2(i), sqdist(xs, i, cs, j, d))
+    }
+
+    var iter = 0
+    var converged = false
+    val sums = new Array[Double](k * d)
+    val counts = new Array[Long](k)
+    while (iter < maxIters && !converged) {
+      java.util.Arrays.fill(sums, 0.0)
+      java.util.Arrays.fill(counts, 0L)
+      for (i <- 0 until n) {
+        val j = nearest(xs, i, cs, k, d)
+        counts(j) += 1
+        for (f <- 0 until d) sums(j * d + f) += xs(i * d + f)
+      }
+      converged = true
+      for (j <- 0 until k if counts(j) > 0) {
+        for (f <- 0 until d) sums(j * d + f) /= counts(j)
+        if (sqdist(sums, j, cs, j, d) > tol * tol) converged = false
+        System.arraycopy(sums, j * d, cs, j * d, d)
+      }
+      iter += 1
+    }
+    var cost = 0.0
+    for (i <- 0 until n) cost += sqdist(xs, i, cs, nearest(xs, i, cs, k, d), d)
+    val centers = Array.tabulate(k)(j => Vectors.dense(cs.slice(j * d, (j + 1) * d)))
+    GraftKMeansBridge.model(centers, iter, cost, cached)
   }
 
   /** One fit serves all ML queries in a session (the reference refits per
@@ -176,7 +332,7 @@ object Clustering {
     * centroids ([[clusterSizesSql]]). */
   def clusterSizes(spark: SparkSession, dir: String): DataFrame = {
     val seg = fitOnDir(spark, dir)
-    val total = seg.predictions.count().toDouble
+    val total = seg.scaler.n.toDouble
     labeledPredictions(seg).groupBy(col("cluster"))
       .agg(count(lit(1)).as("size"))
       .withColumn("pct", round(col("size") / total * 100.0, 2))
@@ -237,7 +393,7 @@ object Clustering {
     val seg = fitOnDir(spark, dir)
     val cluster = predictCluster(seg, Array(30.0, 10.0, 500.0))
     val size = labeledPredictions(seg).filter(col("cluster") === cluster).count()
-    val total = seg.predictions.count()
+    val total = seg.scaler.n
     val pct = math.rint(size.toDouble / total * 10000.0) / 100.0
     spark.createDataFrame(Seq((cluster.toLong, size, pct)))
       .toDF("cluster", "cluster_size", "cluster_pct")

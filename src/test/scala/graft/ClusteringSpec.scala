@@ -1,6 +1,11 @@
 package graft
 
-import graft.operators.{Clustering, Rfm}
+import graft.operators.{Clustering, Retail, Rfm}
+import org.apache.spark.GraftListenerBus
+import org.apache.spark.ml.linalg.Vectors
+import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted}
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.storage.StorageLevel
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Ports of the reference's model fixtures and invariants
@@ -119,5 +124,158 @@ class ClusteringSpec extends AnyFunSuite {
     assert(report.contains("Inertia"))
     assert(report.contains("Silhouette"))
     assert(report.contains("Centroid 3"))
+  }
+
+  // ---- the driver-side fit below Clustering.LocalFitRows, and MLlib above --
+
+  /** The z-points of the fitted rows, in predictions order. */
+  private def zPoints(s: Clustering.Segmentation): Array[Array[Double]] =
+    s.predictions.select("recency_z", "frequency_z", "monetary_z").collect()
+      .map(r => Array(r.getDouble(0), r.getDouble(1), r.getDouble(2)))
+
+  private def sqdist(p: Array[Double], c: Array[Double]): Double = {
+    val dr = p(0) - c(0); val df = p(1) - c(1); val dm = p(2) - c(2)
+    dr * dr + df * df + dm * dm
+  }
+
+  /** First-min nearest center (reference src/model.rs:26-50). */
+  private def nearest(p: Array[Double], cs: Array[Array[Double]]): Int =
+    cs.indices.minBy(j => sqdist(p, cs(j)))
+
+  /** The MLlib path on the same input, reached below the bound. */
+  private def fitMllib(df: DataFrame, k: Int): Clustering.Segmentation =
+    Clustering.fitWith(df, k, 300, 1e-4, 42L)(_ => false)
+
+  test("the sf0.001 fit runs on the driver and is a Lloyd fixed point") {
+    assert(Clustering.fitsLocally(seg.scaler.n))
+    val cs = seg.model.clusterCenters.map(_.toArray)
+    val pts = zPoints(seg)
+    val numIter = seg.model.summary.numIter
+    if (numIter < 300) cs.indices.foreach { j =>
+      val mine = pts.filter(p => nearest(p, cs) == j)
+      if (mine.nonEmpty) {
+        val mean = Array.tabulate(3)(f => mine.map(_(f)).sum / mine.length)
+        assert(math.sqrt(sqdist(mean, cs(j))) <= 1e-4,
+          s"center $j is ${math.sqrt(sqdist(mean, cs(j)))} from its rows' mean")
+      }
+    }
+  }
+
+  test("the driver-side model carries k, numIter and trainingCost like MLlib's") {
+    assert(seg.model.getK == 4)
+    assert(seg.model.hasSummary)
+    val numIter = seg.model.summary.numIter
+    assert(numIter >= 1 && numIter <= 300, s"numIter $numIter")
+    assert(seg.model.summary.trainingCost == seg.inertia)
+    assert(java.lang.Double.isFinite(seg.inertia) && seg.inertia > 0)
+    assert(seg.model.summary.clusterSizes.sum == seg.scaler.n)
+  }
+
+  test("driver-side inertia is the reference's Σ squared distance to the final assigned centroid") {
+    // reference compute_inertia, src/model.rs:198-215
+    val cs = seg.model.clusterCenters.map(_.toArray)
+    val expected = zPoints(seg).map(p => sqdist(p, cs(nearest(p, cs)))).sum
+    assert(math.abs(seg.inertia - expected) <= 1e-12 * expected,
+      s"inertia ${seg.inertia} vs recomputed $expected")
+  }
+
+  test("the MLlib path, called directly, meets the label, size and shape invariants") {
+    val m = fitMllib(rfm, 4)
+    val labels = m.predictions.select("prediction").collect().map(_.getInt(0))
+    assert(labels.length == rfm.count())
+    assert(labels.forall(l => l >= 0 && l < 4))
+    assert(m.model.getK == 4)
+    assert(m.model.clusterCenters.length == 4 && m.model.clusterCenters.forall(_.size == 3))
+    assert(m.model.summary.clusterSizes.sum == labels.length)
+    assert(m.inertia >= 0 && java.lang.Double.isFinite(m.inertia))
+    // the same input, so the same scaler on both paths
+    assert(m.scaler.mu.sameElements(seg.scaler.mu) &&
+      m.scaler.sd.sameElements(seg.scaler.sd) && m.scaler.n == seg.scaler.n)
+  }
+
+  // ---- fit's resource contract ---------------------------------------------
+
+  /** A small Online-Retail-shaped CSV (200 customers, 3,000 lines) under a
+    * fresh temp dir, so no other spec's cache can hold its plan. */
+  private lazy val retailCsv: String = {
+    val dir = java.nio.file.Files.createTempDirectory("graft_fit_csv")
+    val rnd = new scala.util.Random(7)
+    val lines = (0 until 3000).map { i =>
+      val cust = 10000 + rnd.nextInt(200)
+      val qty = 1 + rnd.nextInt(12)
+      val price = 0.25 * (1 + rnd.nextInt(200))
+      f"${500000 + i / 3},S$i,ITEM,$qty,${1 + rnd.nextInt(12)}%02d/${1 + rnd.nextInt(28)}%02d/2011 10:00:00,$price,$cust,United Kingdom"
+    }
+    val p = dir.resolve("retail.csv")
+    java.nio.file.Files.writeString(p,
+      (Retail.retailSchema.fieldNames.mkString(",") +: lines).mkString("", "\n", "\n"))
+    p.toString
+  }
+
+  private def csvRfm(): DataFrame =
+    Retail.loadAndProcess(spark, retailCsv).withColumnRenamed("CustomerID", "custkey")
+
+  /** Records read by the stages of `body` that scan a file. */
+  private def fileRecordsRead(body: => Any): Long = {
+    val sc = spark.sparkContext
+    GraftListenerBus.drain(sc)
+    val records = new java.util.concurrent.atomic.AtomicLong
+    val listener = new SparkListener {
+      override def onStageCompleted(e: SparkListenerStageCompleted): Unit =
+        if (e.stageInfo.rddInfos.exists(_.name.contains("FileScanRDD")))
+          records.addAndGet(e.stageInfo.taskMetrics.inputMetrics.recordsRead)
+    }
+    sc.addSparkListener(listener)
+    try { body; GraftListenerBus.drain(sc) } finally sc.removeSparkListener(listener)
+    records.get
+  }
+
+  test("fit reads a CSV-derived RFM's rows exactly once") {
+    val once = fileRecordsRead(csvRfm().write.format("noop").mode("overwrite").save())
+    assert(once > 0)
+    val inFit = fileRecordsRead(Clustering.fit(csvRfm(), k = 3))
+    assert(inFit == once, s"fit read $inFit CSV records; one scan reads $once")
+  }
+
+  test("fit leaves a caller's cache in place and no cache entry of its own") {
+    val cachedIn = csvRfm().cache()
+    try {
+      Clustering.fit(cachedIn, k = 3)
+      assert(cachedIn.storageLevel != StorageLevel.NONE)
+    } finally cachedIn.unpersist()
+    val uncached = csvRfm()
+    assert(uncached.storageLevel == StorageLevel.NONE)
+    Clustering.fit(uncached, k = 3)
+    assert(uncached.storageLevel == StorageLevel.NONE,
+      "fit left a CacheManager entry for its input's plan")
+  }
+
+  // ---- adversarial inputs, on both paths ------------------------------------
+
+  private def adversarial(name: String, rows: Seq[(Long, Double, Double, Double)]): Unit = {
+    import spark.implicits._
+    val df = rows.toDF("custkey", "recency", "frequency", "monetary")
+    Seq("driver-side" -> Clustering.fit(df, k = 4),
+      "MLlib" -> fitMllib(df, 4)).foreach { case (path, s) =>
+      val cs = s.model.clusterCenters
+      assert(cs.length == 4, s"$name, $path: ${cs.length} centers")
+      assert(cs.forall(_.toArray.forall(x => java.lang.Double.isFinite(x))),
+        s"$name, $path: centers ${cs.mkString(" ")}")
+      val labels = s.predictions.select("prediction").collect().map(_.getInt(0))
+      assert(labels.length == rows.length && labels.forall(l => l >= 0 && l < 4),
+        s"$name, $path: labels ${labels.mkString(",")}")
+      assert(java.lang.Double.isFinite(s.inertia) && s.inertia >= 0,
+        s"$name, $path: inertia ${s.inertia}")
+      assert(Clustering.predictScaled(s.model, Vectors.dense(0.0, 0.0, 0.0)) < 4)
+    }
+  }
+
+  test("all-identical rows give k finite centers on both paths") {
+    adversarial("identical", (0 until 10).map(i => (i.toLong, 5.0, 2.0, 100.0)))
+  }
+
+  test("fewer distinct points than k give k finite centers on both paths") {
+    adversarial("two distinct", (0 until 10).map(i =>
+      if (i % 2 == 0) (i.toLong, 5.0, 2.0, 100.0) else (i.toLong, 50.0, 9.0, 900.0)))
   }
 }

@@ -72,9 +72,18 @@ class RetailSpec extends AnyFunSuite {
     val path = writeCsv(integrationCsv)
     val outDir = Files.createTempDirectory("graft_charts")
     val outPng = outDir.resolve("cluster_plot.png").toString
-    val seg = GraftApp.runFullPipeline(spark,
-      GraftApp.Config(input = path, clusters = 3, output = outPng))
+    val console = new java.io.ByteArrayOutputStream
+    val seg = Console.withOut(console)(GraftApp.runFullPipeline(spark,
+      GraftApp.Config(input = path, clusters = 3, output = outPng, verbose = true)))
     assert(seg.model.getK == 3)
+    // --verbose: BASELINE.md's stage split, the fit's path and iterations
+    val out = console.toString
+    Seq("""Load \+ RFM: \d+\.\d\d s""",
+      s"""K-Means fit \\(local, ${seg.model.summary.numIter} iterations\\): \\d+\\.\\d\\d s""",
+      """Report: \d+\.\d\d s""", """Charts: \d+\.\d\d s""",
+      """Total pipeline time: \d+\.\d\d s""").foreach { re =>
+      assert(re.r.findFirstIn(out).isDefined, s"no line /$re/ in:\n$out")
+    }
     assert(seg.predictions.count() == 4)
     assert(seg.predictions.columns.contains("custkey"))
     // --output honored: both chart files created (reference src/viz.rs:268-302)
