@@ -123,8 +123,7 @@ object GraftApp {
     val seg = Clustering.fit(loadRfm(spark, cfg.input), cfg.clusters,
       cfg.maxIters, cfg.tolerance)
     val cluster = Clustering.predictCluster(seg, point)
-    val size = seg.predictions
-      .filter(org.apache.spark.sql.functions.col("prediction") === cluster).count()
+    val size = seg.sizes(cluster)
     val total = seg.scaler.n
     println(f"Predicted cluster: $cluster ($size customers, " +
       f"${size.toDouble / total * 100}%.1f%% of base)")

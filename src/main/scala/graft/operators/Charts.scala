@@ -5,7 +5,6 @@ import java.awt.{BasicStroke, Color, Font, RenderingHints}
 import java.io.File
 import javax.imageio.ImageIO
 
-import org.apache.spark.sql.Row
 import org.apache.spark.sql.functions._
 
 /** S4/S5 — chart-file sinks (reference `src/viz.rs`).
@@ -21,9 +20,12 @@ import org.apache.spark.sql.functions._
   *
   * Re-expressed with the JDK's `BufferedImage`/`ImageIO` (no imaging
   * dependency; headless-safe). Chart rendering is inherently a driver-side
-  * sink, so the scale discipline is in what reaches the driver:
-  *  - plot BOUNDS are computed distributed (one min/max aggregate over the
-  *    full data — same ±0.5 padding as A9/q07);
+  * sink, so the scale discipline is in what reaches the driver. The fit
+  * computes every input below (`Clustering.Segmentation`), so rendering
+  * runs no Spark job:
+  *  - plot BOUNDS are the full data's min/max — on the driver's arrays up
+  *    to `Clustering.LocalFitRows` rows, one min/max aggregate above (same
+  *    ±0.5 padding as A9/q07);
   *  - the POINT SAMPLE is capped at [[MaxRenderPoints]] rows chosen by
   *    md5(custkey) rank (the [[Sampling]] content-addressed variate idea):
   *    deterministic AND population-uniform — the first-N-by-custkey cap
@@ -65,6 +67,26 @@ object Charts {
     predictions
       .orderBy(md5(col("custkey").cast("string")), col("custkey"))
       .limit(n)
+
+  /** [[scatterSample]]'s order on the driver: the indices of the first `n`
+    * of `keys` (custkeys in ascending order) by md5 of the key's decimal
+    * string, then by index — the custkey tiebreak. A hex digest compares as
+    * its bytes do unsigned, so the digests are compared as bytes; a bounded
+    * max-heap keeps the `n` smallest. */
+  private[graft] def scatterOrder(keys: Array[Long], n: Int): Array[Int] = {
+    val md = java.security.MessageDigest.getInstance("MD5")
+    val digests = keys.map(k => md.digest(k.toString.getBytes("UTF-8")))
+    val order: Ordering[Int] = (a, b) => {
+      val c = java.util.Arrays.compareUnsigned(digests(a), digests(b))
+      if (c != 0) c else Integer.compare(a, b)
+    }
+    val heap = scala.collection.mutable.PriorityQueue.empty[Int](order)
+    keys.indices.foreach { i =>
+      if (heap.size < n) heap.enqueue(i)
+      else if (order.lt(i, heap.head)) { heap.dequeue(); heap.enqueue(i) }
+    }
+    heap.toArray.sorted(order)
+  }
 
   private def newCanvas(w: Int, h: Int): (BufferedImage, java.awt.Graphics2D) = {
     val img = new BufferedImage(w, h, BufferedImage.TYPE_INT_RGB)
@@ -135,7 +157,7 @@ object Charts {
   /** S4 — scatter PNG (reference `create_cluster_visualization`,
     * `src/viz.rs:20-115`). `points` are (frequency_z, monetary_z, cluster);
     * `centroids` are (frequency_z, monetary_z) per cluster id; bounds are the
-    * FULL-data min/max (computed distributed by the caller), padded ±0.5
+    * FULL-data min/max (`Clustering.Segmentation.bounds`), padded ±0.5
     * exactly as the reference (`src/viz.rs:38-51`). */
   def renderScatter(points: Seq[(Double, Double, Int)],
                     centroids: Seq[(Double, Double)],
@@ -200,23 +222,17 @@ object Charts {
 
   /** S4+S5+S6 — full visualization report (reference
     * `generate_visualization_report`, `src/viz.rs:199-215`): scatter at
-    * `basePath`, size chart at `basePath` with `_sizes` suffix. The caller
-    * (GraftApp) prints the S6 console statistics. */
+    * `basePath`, size chart at `basePath` with `_sizes` suffix, both drawn
+    * from the segmentation's read-outs. The caller (GraftApp) prints the S6
+    * console statistics. */
   def visualizationReport(seg: Clustering.Segmentation, basePath: String): Unit = {
-    val b = seg.predictions.agg(
-      min("frequency_z"), max("frequency_z"),
-      min("monetary_z"), max("monetary_z")).head()
-    val sample = scatterSample(seg.predictions, MaxRenderPoints)
-      .select(col("frequency_z"), col("monetary_z"), col("prediction"))
-      .collect()
-      .map((r: Row) => (r.getDouble(0), r.getDouble(1), r.getInt(2)))
-      .toSeq
+    val b = seg.bounds
     val cents = seg.model.clusterCenters.map(c => (c(1), c(2))).toSeq
-    renderScatter(sample, cents,
-      b.getDouble(0) - 0.5, b.getDouble(1) + 0.5,
-      b.getDouble(2) - 0.5, b.getDouble(3) + 0.5, basePath)
-    val sizes = seg.predictions.groupBy("prediction").count()
-      .collect().map(r => (r.getInt(0), r.getLong(1))).toSeq.sortBy(_._1)
-    renderSizeChart(sizes, sizesPath(basePath))
+    renderScatter(seg.scatter, cents,
+      b.frequencyMin - 0.5, b.frequencyMax + 0.5,
+      b.monetaryMin - 0.5, b.monetaryMax + 0.5, basePath)
+    // the bars of the clusters that have rows, as a group-by lists them
+    renderSizeChart(seg.sizes.zipWithIndex.collect { case (n, c) if n > 0 => (c, n) },
+      sizesPath(basePath))
   }
 }

@@ -4,6 +4,7 @@ import org.apache.spark.ml.clustering.{GraftKMeansBridge, KMeans, KMeansModel}
 import org.apache.spark.ml.feature.VectorAssembler
 import org.apache.spark.ml.linalg.{Vector, Vectors}
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
+import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import org.apache.spark.storage.StorageLevel
@@ -32,15 +33,18 @@ import org.apache.spark.storage.StorageLevel
   *    driver-side; MLlib's ClusteringEvaluator (squared Euclidean, full
   *    data) is intentionally not used.
   *
-  * Scale notes: the fit reads its RFM input once (cached for the call);
-  * feature building is a 1-row stats aggregate broadcast back plus one
-  * repartition. Up to [[LocalFitRows]] rows the z-points (24 bytes a row,
-  * 25 MB at the bound) are collected and the whole Lloyd's loop runs on the
-  * driver — the bound's scaladoc has the measurement that places it. Above
-  * it each K-Means iteration is one map-reduce over the feature table with
-  * centroids broadcast — the textbook distributed Lloyd's — and nothing
-  * collects more than k centroids, 6 scalars and a count, or the ≤100-row
-  * silhouette sample to the driver.
+  * Scale notes: the fit reads its RFM input once (cached for the call) and
+  * computes the scaler in one 1-row stats aggregate. Up to [[LocalFitRows]]
+  * rows it then collects the RFM rows once, and the z-scores, the whole
+  * Lloyd's loop, the labels and every read-out the report and the charts
+  * need are computed on the driver; `predictions` is a local frame built
+  * from those arrays, so report and charts run no Spark job — the bound's
+  * scaladoc has the measurement that places it. Above it the features are
+  * one repartitioned cache, each K-Means iteration is one map-reduce over it
+  * with centroids broadcast — the textbook distributed Lloyd's — and the
+  * read-outs are aggregates and sort-limits that collect no more than k
+  * sizes, 4 bounds, the ≤100-row silhouette sample and the
+  * ≤[[Charts.MaxRenderPoints]]-row scatter sample to the driver.
   */
 object Clustering {
 
@@ -48,9 +52,23 @@ object Clustering {
     * plus the row count the same stats aggregate yields for free. */
   final case class ScalerStats(mu: Array[Double], sd: Array[Double], n: Long)
 
-  /** Fitted segmentation state (reference `KMeansModel`, `src/model.rs:10-22`). */
+  /** Fitted segmentation state (reference `KMeansModel`, `src/model.rs:10-22`)
+    * plus the bounded read-outs [[clusterReport]] and
+    * [[Charts.visualizationReport]] draw, so neither runs a Spark job:
+    *  - `sizes`: rows per `prediction`, indexed by cluster id, 0 when empty;
+    *  - `bounds`: the full-data min and max of `frequency_z`, `monetary_z`;
+    *  - `silhouette`: [[silhouetteSampled]] of [[labeledPredictions]];
+    *  - `scatter`: (frequency_z, monetary_z, prediction) of the
+    *    [[Charts.scatterSample]] rows, in its order. */
   final case class Segmentation(model: KMeansModel, scaler: ScalerStats,
-                                predictions: DataFrame, inertia: Double)
+                                predictions: DataFrame, inertia: Double,
+                                sizes: IndexedSeq[Long], bounds: PlotBounds,
+                                silhouette: Double,
+                                scatter: IndexedSeq[(Double, Double, Int)])
+
+  /** Full-data range of the scatter chart's two axes. */
+  final case class PlotBounds(frequencyMin: Double, frequencyMax: Double,
+                              monetaryMin: Double, monetaryMax: Double)
 
   val FeatureCols: Seq[String] = Seq("recency", "frequency", "monetary")
 
@@ -82,27 +100,40 @@ object Clustering {
   }
 
   /** Largest RFM table, in rows, that [[fit]] fits on the driver: it
-    * collects the z-points of the features cache and runs [[lloyd]], with no
-    * Spark job per iteration. Above it, MLlib's distributed `KMeans.fit`.
+    * collects the RFM rows once and computes the z-scores, [[lloyd]], the
+    * labels, the [[Segmentation]] read-outs and a local `predictions` frame
+    * there, with no Spark job per iteration. Above it, MLlib's distributed
+    * `KMeans.fit`.
     *
-    * Measured as the whole [[fitWith]] call (stats aggregate, features
-    * cache, fit, predictions) on a cached RFM input, each path forced, k=4,
-    * seed 42, `local[4]` on a 4-core VM, 3 GB heap; seconds are the two warm
-    * repetitions after one warm-up, iterations in brackets:
+    * Measured as the whole [[fitWith]] call on a cached RFM input, each path
+    * forced, k=4, seed 42, `local[4]` on a 4-core VM, 3 GB heap; seconds are
+    * warm repetitions, iterations in brackets. Up to 10⁵ rows, measured with
+    * the earlier flow, which collected only the z-points and cached
+    * `predictions` in Spark:
     *
     * | rows | input | collect + driver fit | MLlib fit |
     * |---|---|---|---|
     * | 4,338 | perfbench retail CSV, seed 1 | 0.70–0.80 s (4) | 3.01–3.11 s (25) |
     * | 14,999 | sf0.1 `Rfm.rfmOrders` | 0.64–0.73 s (48) | 3.35–3.53 s (31) |
     * | 100,000 | synthetic, 4 planted blobs | 0.88–0.95 s (3) | 2.17–2.28 s (2) |
-    * | 1,000,000 | synthetic, 4 planted blobs | 2.40–2.98 s (3) | 5.86–6.06 s (2) |
     *
-    * The driver fit still wins 2× at 10⁶ rows. Each MLlib iteration is a
-    * Spark job, where a driver iteration is one pass over the collected
-    * array, so more iterations widen the gap (at 14,999 rows the driver ran
-    * 48 iterations and still won 5×). The bound stops just past the largest
-    * measured size, where the collected z-points are 25 MB; it is not
-    * pushed further because a larger table risks the driver's memory,
+    * With this flow, on synthetic 4-blob tables; the peak is the used heap
+    * sampled every 2 ms during the call, garbage included, and the last
+    * column is a `groupBy("prediction").count()` over `predictions` after
+    * the call, which ships the local rows to the tasks:
+    *
+    * | rows | driver path | peak heap | groupBy after | MLlib path |
+    * |---|---|---|---|---|
+    * | 100,000 | 0.66 s (3) | 0.31 GB | 0.45–0.61 s | — |
+    * | 1,000,000 | 3.11–3.67 s (3) | 1.71–1.72 GB | 3.77–3.79 s | 7.29–8.47 s (2) |
+    * | 1,048,576 | 3.16–3.27 s (3) | 0.96–2.06 GB | 3.38–3.87 s | — |
+    *
+    * At 10⁶ rows the earlier driver flow took 2.62–3.36 s (2) with a
+    * 1.22–1.26 GB peak and a 0.28–0.29 s groupBy, in the same session; the order of
+    * the rows differs above 131,072 rows, hence the iteration counts. The
+    * driver path still wins 2× at 10⁶ rows and the bound's 2²⁰ rows fit in
+    * the 3 GB heap with a third to spare, so the bound stays where the
+    * largest measured size is; a larger table risks the driver's memory,
     * which these runs did not measure. */
   val LocalFitRows: Long = 1L << 20
 
@@ -115,60 +146,139 @@ object Clustering {
     fitWith(rfm, k, maxIters, tol, seed)(fitsLocally)
 
   /** [[fit]] with the path chosen by `local(n)`, so specs can reach both
-    * paths on the same input. The two paths share one data flow and differ
-    * only in the call that turns the features cache into a model. */
+    * paths on the same input. Both start from the same stats aggregate, so
+    * the scaler is the same on both; they differ from there on. */
   private[graft] def fitWith(rfm: DataFrame, k: Int, maxIters: Int, tol: Double,
                              seed: Long)(local: Long => Boolean): Segmentation = {
-    // the stats aggregate, the features cache and the predictions all read
-    // the RFM table: cache it for this call so its lineage (a CSV or parquet
-    // scan plus an aggregate) runs once. A caller's cache is left alone, and
-    // ours is dropped on the way out, so a later call on an equal plan can
-    // never hit it.
-    val ownCache = rfm.storageLevel == StorageLevel.NONE
+    // the stats aggregate and then the collect (driver path) or the
+    // features cache (MLlib path) read the RFM table: cache it for this call
+    // so its lineage (a CSV or parquet scan plus an aggregate) runs once. A
+    // caller's cache is left alone, and ours is dropped on the way out, so
+    // a later call on an equal plan can never hit it. A checkpoint (what
+    // `Retail.requireNonEmpty` returns) is a plain read already; caching it
+    // again would only cost one more job.
+    val ownCache = rfm.storageLevel == StorageLevel.NONE &&
+      !rfm.queryExecution.analyzed.isInstanceOf[LogicalRDD]
     if (ownCache) rfm.cache()
     try {
       val (features, scaler) = standardize(rfm)
-      val n = scaler.n
-      validateK(k, n)
-      // k-means|| init samples rows in partition order, and within-partition
-      // order after a shuffle is not stable across runs — pin both so a
-      // seeded fit is bit-reproducible (the reference is unseeded and
-      // nondeterministic, SURVEY §7.4; we promise strictly more); the
-      // driver-side fit reads the rows in the same pinned order. Partition
-      // count follows data size: every distributed Lloyd's iteration is one
-      // job over these partitions, and rows here are 3 doubles — ~64k
-      // rows/task is still only ~1.5 MB.
-      val numParts = math.max(1, math.min(1 << 14, n / 65536)).toInt
-      val cached = features
-        .repartition(numParts, col("custkey"))
-        .sortWithinPartitions(col("custkey"))
-        .cache()
-      try {
-        val fitted =
-          if (local(n)) lloyd(cached, k, maxIters, tol, seed)
-          else new KMeans()
-            .setK(k).setMaxIter(maxIters).setTol(tol)
-            .setDistanceMeasure("euclidean").setSeed(seed)
-            .setFeaturesCol("features").setPredictionCol("prediction")
-            .fit(cached)
-        // k-means|| keeps only distinct initial centers, so an input with
-        // fewer than k distinct points gets fewer than k from MLlib; the
-        // missing ones repeat the last center — empty clusters, as the
-        // driver-side fit leaves them
-        val model =
-          if (fitted.clusterCenters.length == k) fitted
-          else GraftKMeansBridge.model(
-            fitted.clusterCenters.padTo(k, fitted.clusterCenters.last),
-            fitted.summary.numIter, fitted.summary.trainingCost, cached)
-        // materialize predictions while the feature cache is alive: every
-        // downstream stat (sizes, silhouette, predict-mode counts) re-actions
-        // this frame, and without the cache each action replays the whole
-        // scan+aggregate+transform lineage
-        val predictions = model.transform(cached).cache()
-        predictions.count()
-        Segmentation(model, scaler, predictions, model.summary.trainingCost)
-      } finally cached.unpersist()
+      validateK(k, scaler.n)
+      if (local(scaler.n)) fitOnDriver(rfm, features, scaler, k, maxIters, tol, seed)
+      else fitDistributed(features, scaler, k, maxIters, tol, seed)
     } finally if (ownCache) rfm.unpersist()
+  }
+
+  /** The MLlib path: k-means|| and Lloyd's over a features cache, then the
+    * [[Segmentation]] read-outs as Spark aggregates over the predictions. */
+  private def fitDistributed(features: DataFrame, scaler: ScalerStats, k: Int,
+                             maxIters: Int, tol: Double, seed: Long): Segmentation = {
+    // k-means|| init samples rows in partition order, and within-partition
+    // order after a shuffle is not stable across runs — pin both so a
+    // seeded fit is bit-reproducible (the reference is unseeded and
+    // nondeterministic, SURVEY §7.4; we promise strictly more). Partition
+    // count follows data size: every distributed Lloyd's iteration is one
+    // job over these partitions, and rows here are 3 doubles — ~64k
+    // rows/task is still only ~1.5 MB.
+    val numParts = math.max(1, math.min(1 << 14, scaler.n / 65536)).toInt
+    val cached = features
+      .repartition(numParts, col("custkey"))
+      .sortWithinPartitions(col("custkey"))
+      .cache()
+    try {
+      val fitted = new KMeans()
+        .setK(k).setMaxIter(maxIters).setTol(tol)
+        .setDistanceMeasure("euclidean").setSeed(seed)
+        .setFeaturesCol("features").setPredictionCol("prediction")
+        .fit(cached)
+      // k-means|| keeps only distinct initial centers, so an input with
+      // fewer than k distinct points gets fewer than k from MLlib; the
+      // missing ones repeat the last center — empty clusters, as the
+      // driver-side fit leaves them
+      val model =
+        if (fitted.clusterCenters.length == k) fitted
+        else GraftKMeansBridge.model(
+          fitted.clusterCenters.padTo(k, fitted.clusterCenters.last),
+          fitted.summary.numIter, fitted.summary.trainingCost, cached)
+      // materialize predictions while the feature cache is alive: the
+      // read-outs below and every later stat re-action this frame, and
+      // without the cache each action replays the whole
+      // scan+aggregate+transform lineage
+      val predictions = model.transform(cached).cache()
+      predictions.count()
+      val counts = predictions.groupBy("prediction").count()
+        .collect().map(r => r.getInt(0) -> r.getLong(1)).toMap
+      val b = predictions.agg(
+        min("frequency_z"), max("frequency_z"),
+        min("monetary_z"), max("monetary_z")).head()
+      val scatter = Charts.scatterSample(predictions, Charts.MaxRenderPoints)
+        .select(col("frequency_z"), col("monetary_z"), col("prediction"))
+        .collect().map(r => (r.getDouble(0), r.getDouble(1), r.getInt(2)))
+      Segmentation(model, scaler, predictions, model.summary.trainingCost,
+        (0 until k).map(c => counts.getOrElse(c, 0L)),
+        PlotBounds(b.getDouble(0), b.getDouble(1), b.getDouble(2), b.getDouble(3)),
+        silhouetteSampled(labeled(predictions, model)), scatter.toIndexedSeq)
+    } finally cached.unpersist()
+  }
+
+  /** The driver path: one collect of the RFM rows, sorted by custkey — for
+    * fewer than 131,072 rows the order of the single-partition
+    * `sortWithinPartitions` this path used before, so a seeded fit keeps its
+    * centers. From those rows, on the driver:
+    *  - the z-scores `(x − μ)/σ`, the IEEE ops of [[standardize]]'s columns;
+    *  - [[lloyd]], then the first-min label of every row and, from the
+    *    labels, the sizes and the inertia;
+    *  - the plot bounds, the silhouette of the first 100 rows (custkey
+    *    order, as [[silhouetteSampled]] takes them) and the scatter sample
+    *    in [[Charts.scatterOrder]].
+    * `predictions` is a local frame of those arrays with the MLlib path's
+    * columns and types (`features` as [[VectorAssembler]] builds it, an Int
+    * `prediction`), so queries on it run on the driver's rows. */
+  private def fitOnDriver(rfm: DataFrame, features: DataFrame, sc: ScalerStats,
+                          k: Int, maxIters: Int, tol: Double,
+                          seed: Long): Segmentation = {
+    val d = FeatureCols.length
+    // Spark resolves the feature columns case-insensitively (the CSV surface
+    // has `Recency`, ...), so the row indices do too
+    def at(c: String) = rfm.schema.fieldNames.indexWhere(_.equalsIgnoreCase(c))
+    val (keyAt, featAt) = (at("custkey"), FeatureCols.map(at).toArray)
+    val key = (r: Row) => r.getAs[Number](keyAt).longValue
+    val rows = rfm.collect().sortBy(key)
+    val n = rows.length
+    val xs = new Array[Double](n * d)
+    for (i <- 0 until n; f <- 0 until d)
+      xs(i * d + f) = (rows(i).getAs[Number](featAt(f)).doubleValue - sc.mu(f)) / sc.sd(f)
+
+    val (cs, numIter) = lloyd(xs, n, k, maxIters, tol, seed)
+    val labels = Array.tabulate(n)(i => nearest(xs, i, cs, k, d))
+    val sizes = new Array[Long](k)
+    var cost = 0.0
+    for (i <- 0 until n) {
+      sizes(labels(i)) += 1
+      cost += sqdist(xs, i, cs, labels(i), d)
+    }
+    def range(f: Int): (Double, Double) = {
+      var (lo, hi) = (xs(f), xs(f))
+      for (i <- 1 until n) { val x = xs(i * d + f); if (x < lo) lo = x; if (x > hi) hi = x }
+      (lo, hi)
+    }
+    val ((fLo, fHi), (mLo, mHi)) = (range(1), range(2))
+    val point = (i: Int) => java.util.Arrays.copyOfRange(xs, i * d, (i + 1) * d)
+    val silhouette = silhouetteOf(
+      Array.tabulate(math.min(n, 100))(i => (point(i), labels(i).toLong)))
+    val scatter = Charts.scatterOrder(rows.map(key), Charts.MaxRenderPoints)
+      .map(i => (xs(i * d + 1), xs(i * d + 2), labels(i)))
+
+    val centers = Array.tabulate(k)(j => Vectors.dense(cs.slice(j * d, (j + 1) * d)))
+    val model = GraftKMeansBridge.model(centers, numIter, cost, features)
+    val out = new java.util.ArrayList[Row](n)
+    for (i <- 0 until n) {
+      val z = point(i)
+      out.add(Row.fromSeq(rows(i).toSeq ++ z :+ Vectors.dense(z).compressed :+ labels(i)))
+    }
+    val predictions = rfm.sparkSession.createDataFrame(out,
+      model.transform(features).schema)
+    Segmentation(model, sc, predictions, cost, sizes.toIndexedSeq,
+      PlotBounds(fLo, fHi, mLo, mHi), silhouette, scatter.toIndexedSeq)
   }
 
   /** Squared euclidean distance of point `i` of the row-major `xs` to
@@ -199,7 +309,7 @@ object Clustering {
     best
   }
 
-  /** Driver-side K-Means over the collected z-points of `cached`:
+  /** Driver-side K-Means over the `n` row-major z-points `xs`:
     *  - seeded k-means++ init: the first center uniform, each next one drawn
     *    with probability ∝ squared distance to the nearest center chosen so
     *    far (uniform again once every point sits on a center, so a
@@ -207,17 +317,11 @@ object Clustering {
     *  - Lloyd's iterations with first-min assignment; a cluster that loses
     *    all its points keeps its center;
     *  - stops once no center moves more than `tol` (MLlib's rule:
-    *    squared move ≤ tol²) or after `maxIters` iterations;
-    *  - training cost is the reference's inertia (`src/model.rs:198-215`):
-    *    Σ squared distance of each point to its final assigned center. */
-  private def lloyd(cached: DataFrame, k: Int, maxIters: Int, tol: Double,
-                    seed: Long): KMeansModel = {
+    *    squared move ≤ tol²) or after `maxIters` iterations.
+    * Returns the row-major centers and the iteration count. */
+  private def lloyd(xs: Array[Double], n: Int, k: Int, maxIters: Int, tol: Double,
+                    seed: Long): (Array[Double], Int) = {
     val d = FeatureCols.length
-    val rows = cached.select(FeatureCols.map(c => col(s"${c}_z")): _*).collect()
-    val n = rows.length
-    val xs = new Array[Double](n * d)
-    for (i <- 0 until n; f <- 0 until d) xs(i * d + f) = rows(i).getDouble(f)
-
     val rnd = new scala.util.Random(seed)
     val cs = new Array[Double](k * d)
     def place(j: Int, i: Int): Unit = System.arraycopy(xs, i * d, cs, j * d, d)
@@ -261,10 +365,7 @@ object Clustering {
       }
       iter += 1
     }
-    var cost = 0.0
-    for (i <- 0 until n) cost += sqdist(xs, i, cs, nearest(xs, i, cs, k, d), d)
-    val centers = Array.tabulate(k)(j => Vectors.dense(cs.slice(j * d, (j + 1) * d)))
-    GraftKMeansBridge.model(centers, iter, cost, cached)
+    (cs, iter)
   }
 
   /** One fit serves all ML queries in a session (the reference refits per
@@ -319,9 +420,12 @@ object Clustering {
 
   /** Predictions + per-centroid `__d{i}` squared distances + the explicit
     * argmin `cluster` label (reference `src/model.rs:26-50`). */
-  def labeledPredictions(seg: Segmentation): DataFrame = {
-    val centers = seg.model.clusterCenters.map(_.toArray)
-    val withD = centers.zipWithIndex.foldLeft(seg.predictions) {
+  def labeledPredictions(seg: Segmentation): DataFrame =
+    labeled(seg.predictions, seg.model)
+
+  private def labeled(predictions: DataFrame, model: KMeansModel): DataFrame = {
+    val centers = model.clusterCenters.map(_.toArray)
+    val withD = centers.zipWithIndex.foldLeft(predictions) {
       case (df, (c, i)) => df.withColumn(s"__d$i", distCol(c))
     }
     withD.withColumn("cluster", firstMin(centers.length))
@@ -415,15 +519,19 @@ object Clustering {
     * within the first min(n,100) rows only, 0 for degenerate points
     * (reference `src/model.rs:64-119`; sample size `src/main.rs:131-133`).
     * "First" rows are made deterministic by custkey order. */
-  def silhouetteSampled(labeled: DataFrame, sampleSize: Int = 100): Double = {
-    val sample: Array[(Array[Double], Long)] = labeled
+  def silhouetteSampled(labeled: DataFrame, sampleSize: Int = 100): Double =
+    silhouetteOf(labeled
       .orderBy(col("custkey"))
       .select(col("recency_z"), col("frequency_z"), col("monetary_z"),
         col("cluster"))
       .limit(sampleSize)
       .collect()
       .map(r => (Array(r.getDouble(0), r.getDouble(1), r.getDouble(2)),
-        r.getLong(3)))
+        r.getLong(3))))
+
+  /** [[silhouetteSampled]]'s score of a sample already drawn: (z-point,
+    * cluster) pairs in sample order. */
+  private[graft] def silhouetteOf(sample: Array[(Array[Double], Long)]): Double = {
     val n = sample.length
     if (n < 2) return 0.0
     // ((dr² + df²) + dm²) then sqrt — the shape the oracle SQL mirrors
@@ -464,18 +572,14 @@ object Clustering {
   /** S6 — console cluster-statistics report (reference
     * `print_cluster_statistics`, `src/viz.rs:163-193`). */
   def clusterReport(seg: Segmentation): String = {
-    val sizes = seg.predictions.groupBy("prediction").count()
-      .collect().map(r => r.getInt(0) -> r.getLong(1)).toMap
-    val total = sizes.values.sum.toDouble
-    val silhouette = silhouetteSampled(labeledPredictions(seg))
+    val total = seg.sizes.sum.toDouble
     val sb = new StringBuilder
     sb.append(s"Number of clusters: ${seg.model.getK}\n")
-    (0 until seg.model.getK).foreach { c =>
-      val n = sizes.getOrElse(c, 0L)
+    seg.sizes.zipWithIndex.foreach { case (n, c) =>
       sb.append(f"Cluster $c: $n customers (${n / total * 100}%.1f%%)\n")
     }
     sb.append(f"Inertia (WCSS): ${seg.inertia}%.2f\n")
-    sb.append(f"Silhouette (100-sample): $silhouette%.3f\n")
+    sb.append(f"Silhouette (100-sample): ${seg.silhouette}%.3f\n")
     seg.model.clusterCenters.zipWithIndex.foreach { case (c, i) =>
       sb.append(f"Centroid $i: R=${c(0)}%.3f F=${c(1)}%.3f M=${c(2)}%.3f\n")
     }

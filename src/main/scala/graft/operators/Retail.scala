@@ -28,9 +28,10 @@ import org.apache.spark.sql.types._
   *    Monetary > 0` (reference `src/data.rs:177-183`).
   *
   * Scale notes: the whole stage is one narrow scan + one hash aggregate keyed
-  * on CustomerID — the only shuffle. At 100 TB the aggregate runs map-side
-  * partial first (Spark's default HashAggregate partial/final split), so the
-  * exchange carries one row per (partition, customer), not per transaction.
+  * on CustomerID — the only shuffle. By design (not measured past the 41 MB
+  * benchmark CSV) the aggregate runs map-side partial first (Spark's default
+  * HashAggregate partial/final split), so the exchange carries one row per
+  * (partition, customer), not one per transaction, whatever the input size.
   */
 object Retail {
 
@@ -103,11 +104,18 @@ object Retail {
                      referenceDate: String = DefaultReferenceDate): DataFrame =
     rfmFeatures(cleanTransactions(loadCsv(spark, path)), referenceDate)
 
-  /** Reference empty-result guard (`src/data.rs:128-130`, `186-188`). */
+  /** Reference empty-result guard (`src/data.rs:128-130`, `186-188`).
+    * The check needs `df` computed, so it computes it once: `df` is
+    * materialized by an eager local checkpoint, the check runs on that copy,
+    * and the copy is returned, so a caller that goes on with the result
+    * (`Clustering.fit` in `GraftApp.loadRfm`) reads the checkpoint instead
+    * of running the scan and aggregate a second time. The checkpoint's
+    * blocks live until the returned frame is garbage-collected. */
   def requireNonEmpty(df: DataFrame, stage: String): DataFrame = {
-    if (df.isEmpty)
+    val materialized = df.localCheckpoint(eager = true)
+    if (materialized.isEmpty)
       throw new IllegalArgumentException(s"No valid data after $stage")
-    df
+    materialized
   }
 
   // ---------------------------------------------------------------------------

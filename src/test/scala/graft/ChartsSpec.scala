@@ -48,6 +48,9 @@ class ChartsSpec extends AnyFunSuite {
     val s1 = draw()
     assert(s1.toSeq == draw().toSeq)
     assert(s1.length == 4000 && s1.distinct.length == 4000)
+    // the driver-side order picks the same keys in the same order
+    val keys = (1L to 40000L).toArray
+    assert(Charts.scatterOrder(keys, 4000).map(keys(_)).toSeq == s1.toSeq)
     // population coverage: each key-range quartile carries ~25% of the
     // sample (md5 variate is uniform and key-independent) — the
     // first-N-by-custkey cap this replaces would put 100% in quartile 0

@@ -1,10 +1,11 @@
 package graft
 
-import graft.operators.{Clustering, Retail, Rfm}
+import graft.operators.{Charts, Clustering, Retail, Rfm}
 import org.apache.spark.GraftListenerBus
 import org.apache.spark.ml.linalg.Vectors
-import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted}
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerStageCompleted}
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.functions.{col, max, min}
 import org.apache.spark.storage.StorageLevel
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -215,18 +216,23 @@ class ClusteringSpec extends AnyFunSuite {
   private def csvRfm(): DataFrame =
     Retail.loadAndProcess(spark, retailCsv).withColumnRenamed("CustomerID", "custkey")
 
-  /** Records read by the stages of `body` that scan a file. */
-  private def fileRecordsRead(body: => Any): Long = {
+  /** Runs `body` with `listener` attached until every event of `body` has
+    * reached it. */
+  private def listening(listener: SparkListener)(body: => Any): Unit = {
     val sc = spark.sparkContext
     GraftListenerBus.drain(sc)
+    sc.addSparkListener(listener)
+    try { body; GraftListenerBus.drain(sc) } finally sc.removeSparkListener(listener)
+  }
+
+  /** Records read by the stages of `body` that scan a file. */
+  private def fileRecordsRead(body: => Any): Long = {
     val records = new java.util.concurrent.atomic.AtomicLong
-    val listener = new SparkListener {
+    listening(new SparkListener {
       override def onStageCompleted(e: SparkListenerStageCompleted): Unit =
         if (e.stageInfo.rddInfos.exists(_.name.contains("FileScanRDD")))
           records.addAndGet(e.stageInfo.taskMetrics.inputMetrics.recordsRead)
-    }
-    sc.addSparkListener(listener)
-    try { body; GraftListenerBus.drain(sc) } finally sc.removeSparkListener(listener)
+    })(body)
     records.get
   }
 
@@ -235,6 +241,92 @@ class ClusteringSpec extends AnyFunSuite {
     assert(once > 0)
     val inFit = fileRecordsRead(Clustering.fit(csvRfm(), k = 3))
     assert(inFit == once, s"fit read $inFit CSV records; one scan reads $once")
+  }
+
+  test("the empty check and the fit together read a CSV-derived RFM's rows once") {
+    val once = fileRecordsRead(csvRfm().write.format("noop").mode("overwrite").save())
+    val inPipeline = fileRecordsRead(
+      Clustering.fit(Retail.requireNonEmpty(csvRfm(), "RFM aggregation"), k = 3))
+    assert(inPipeline == once,
+      s"requireNonEmpty + fit read $inPipeline CSV records; one scan reads $once")
+  }
+
+  /** Spark jobs started by `body`. */
+  private def jobsIn(body: => Any): Int = {
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    listening(new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = jobs.incrementAndGet()
+    })(body)
+    jobs.get
+  }
+
+  test("below the bound, fit on a materialized input runs at most 3 jobs, report and charts none") {
+    val rfmIn = Retail.requireNonEmpty(csvRfm(), "RFM aggregation")
+    var s: Clustering.Segmentation = null
+    val fitJobs = jobsIn { s = Clustering.fit(rfmIn, k = 3) }
+    assert(Clustering.fitsLocally(s.scaler.n))
+    assert(fitJobs <= 3, s"fit ran $fitJobs jobs")
+    val png = java.nio.file.Files.createTempDirectory("graft_jobs").resolve("plot.png").toString
+    val outJobs = jobsIn {
+      Clustering.clusterReport(s)
+      Charts.visualizationReport(s, png)
+    }
+    assert(outJobs == 0, s"report and charts ran $outJobs jobs")
+  }
+
+  /** The read-outs a segmentation carries equal the frame computations over
+    * its `predictions`, on both paths. */
+  private def assertReadOuts(name: String, input: DataFrame): Unit = {
+    val (z, _) = Clustering.standardize(input)
+    Seq("driver-side" -> Clustering.fit(input, k = 4),
+      "MLlib" -> fitMllib(input, 4)).foreach { case (path, s) =>
+      val p = s.predictions
+      val counts = p.groupBy("prediction").count().collect()
+        .map(r => r.getInt(0) -> r.getLong(1)).toMap
+      assert(s.sizes == (0 until 4).map(c => counts.getOrElse(c, 0L)),
+        s"$name, $path: sizes ${s.sizes} vs $counts")
+      val b = p.agg(min("frequency_z"), max("frequency_z"),
+        min("monetary_z"), max("monetary_z")).head()
+      assert(s.bounds == Clustering.PlotBounds(b.getDouble(0), b.getDouble(1),
+        b.getDouble(2), b.getDouble(3)), s"$name, $path: bounds ${s.bounds} vs $b")
+      val sil = Clustering.silhouetteSampled(Clustering.labeledPredictions(s))
+      assert(s.silhouette == sil, s"$name, $path: silhouette ${s.silhouette} vs $sil")
+      val scatter = Charts.scatterSample(p, Charts.MaxRenderPoints)
+        .select("frequency_z", "monetary_z", "prediction").collect()
+        .map(r => (r.getDouble(0), r.getDouble(1), r.getInt(2))).toSeq
+      assert(s.scatter == scatter, s"$name, $path: scatter sample differs")
+      // the z columns bit-equal to standardize's, row by row
+      val zs = Seq("recency_z", "frequency_z", "monetary_z")
+      val joined = p.select(col("custkey") +: zs.map(c => col(c).as(s"p_$c")): _*)
+        .join(z.select(col("custkey") +: zs.map(col): _*), "custkey").collect()
+      val mismatched = joined.count(r => (1 to 3).exists(i =>
+        java.lang.Double.doubleToRawLongBits(r.getDouble(i)) !=
+          java.lang.Double.doubleToRawLongBits(r.getDouble(i + 3))))
+      assert(joined.length == s.scaler.n && mismatched == 0,
+        s"$name, $path: ${joined.length} rows joined, $mismatched with z unlike standardize's")
+    }
+  }
+
+  test("the carried read-outs equal the frame computations on sf0.001, both paths") {
+    assertReadOuts("sf0.001", rfm)
+  }
+
+  test("the carried read-outs equal the frame computations on the CSV fixture, both paths") {
+    // materialized as the pipeline feeds it: the stats aggregate over the
+    // lazy CSV lineage and over the fit's cache of it group the partial
+    // sums differently, so their μ and σ can differ in the last bit
+    assertReadOuts("csv", Retail.requireNonEmpty(csvRfm(), "RFM aggregation"))
+  }
+
+  test("the driver path's predictions have the MLlib path's schema and MLlib's labels") {
+    val m = fitMllib(rfm, 4)
+    assert(seg.predictions.schema == m.predictions.schema,
+      s"${seg.predictions.schema.treeString} vs ${m.predictions.schema.treeString}")
+    // the driver's first-min labels against MLlib's transform with the same centers
+    val mllib = seg.model.summary.predictions.select(col("custkey"), col("prediction").as("m"))
+    val differ = seg.predictions.join(mllib, "custkey")
+      .filter(col("prediction") =!= col("m")).count()
+    assert(differ == 0, s"$differ rows labeled differently")
   }
 
   test("fit leaves a caller's cache in place and no cache entry of its own") {

@@ -95,6 +95,18 @@ class RetailSpec extends AnyFunSuite {
     assert(cluster >= 0 && cluster < 3)
   }
 
+  test("empty guard fires on a CSV-derived RFM with no row left, with the reference's message") {
+    val bad =
+      """InvoiceNo,StockCode,Description,Quantity,InvoiceDate,UnitPrice,CustomerID,Country
+        |C1,X,CANCELLED,-1,12/01/2010 08:26:00,2.55,17850,UK
+        |2,X,NO PRICE,3,12/01/2010 08:26:00,0.00,17850,UK
+        |""".stripMargin
+    val e = intercept[IllegalArgumentException] {
+      Retail.requireNonEmpty(Retail.loadAndProcess(spark, writeCsv(bad)), "RFM aggregation")
+    }
+    assert(e.getMessage == "No valid data after RFM aggregation")
+  }
+
   test("empty guard fires on all-filtered input") {
     val bad =
       """InvoiceNo,StockCode,Description,Quantity,InvoiceDate,UnitPrice,CustomerID,Country
