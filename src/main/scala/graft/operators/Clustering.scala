@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.ml.clustering.{GraftKMeansBridge, KMeans, KMeansModel}
+import org.apache.spark.ml.clustering.{GraftKMeansBridge, KMeansModel}
 import org.apache.spark.ml.feature.VectorAssembler
 import org.apache.spark.ml.linalg.{Vector, Vectors}
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
@@ -10,7 +10,8 @@ import org.apache.spark.sql.types._
 import org.apache.spark.storage.StorageLevel
 
 /** Customer-segmentation ML stage — the reference's core "query" surface
-  * (SURVEY §2.4), re-expressed on Spark MLlib.
+  * (SURVEY §2.4), re-expressed on Spark, with MLlib's `KMeansModel` as the
+  * fitted model type.
   *
   * Semantics preserved from the reference:
   *  - Standardization uses POPULATION std with a 1e-8 floor
@@ -21,8 +22,10 @@ import org.apache.spark.storage.StorageLevel
   *    enforced (reference `src/model.rs:138-150`), max-iter default 300 and
   *    tolerance 1e-4 (reference `src/cli.rs:27-32`).
   *  - The reference's random init (`src/model.rs:158`) is nondeterministic;
-  *    here init is seeded k-means++ below the bound ([[LocalFitRows]]),
-  *    k-means|| above — strictly better quality and reproducible, which the
+  *    here one algorithm serves every scale: seeded k-means++ on the whole
+  *    table up to [[LocalFitRows]] rows, or on a content-addressed sample of
+  *    at most that many above it, then first-min Lloyd's over the whole
+  *    table — strictly better quality and reproducible, which the
   *    reference's own tests could not assume.
   *  - Single-point prediction scales the new point by the TRAINING scaler
   *    then takes argmin over centroids (reference `src/model.rs:26-50`,
@@ -39,11 +42,12 @@ import org.apache.spark.storage.StorageLevel
   * Lloyd's loop, the labels and every read-out the report and the charts
   * need are computed on the driver; `predictions` is a local frame built
   * from those arrays, so report and charts run no Spark job — the bound's
-  * scaladoc has the measurement that places it. Above it the features are
-  * one repartitioned cache, each K-Means iteration is one map-reduce over it
-  * with centroids broadcast — the textbook distributed Lloyd's — and the
-  * read-outs are aggregates and sort-limits that collect no more than k
-  * sizes, 4 bounds, the ≤100-row silhouette sample and the
+  * scaladoc has the measurement that places it. Above it the RFM rows are
+  * one cache pinned by custkey; k-means++ and Lloyd's run on the driver
+  * over at most [[LocalFitRows]] sampled z-points, each full-table Lloyd's
+  * step is then one aggregate over the cache with the centroids as
+  * literals, and the read-outs are aggregates and sort-limits that collect
+  * no more than k sizes, 4 bounds, the ≤100-row silhouette sample and the
   * ≤[[Charts.MaxRenderPoints]]-row scatter sample to the driver.
   */
 object Clustering {
@@ -75,13 +79,10 @@ object Clustering {
   /** Population-std z-scoring of the RFM table, keeping features as columns
     * plus an assembled `features` vector (reference M1–M3+M5). */
   def standardize(rfm: DataFrame): (DataFrame, ScalerStats) = {
-    val statsRow = rfm.agg(
-      avg("recency"), greatest(stddev_pop("recency"), lit(1e-8)),
-      avg("frequency"), greatest(stddev_pop("frequency"), lit(1e-8)),
-      avg("monetary"), greatest(stddev_pop("monetary"), lit(1e-8)),
-      count(lit(1))).head()
-    val mu = Array(statsRow.getDouble(0), statsRow.getDouble(2), statsRow.getDouble(4))
-    val sd = Array(statsRow.getDouble(1), statsRow.getDouble(3), statsRow.getDouble(5))
+    val statsRow = rfm.agg(count(lit(1)), FeatureCols.flatMap(c =>
+      Seq(avg(c), greatest(stddev_pop(c), lit(1e-8)))): _*).head()
+    val mu = Array.tabulate(FeatureCols.length)(f => statsRow.getDouble(1 + 2 * f))
+    val sd = Array.tabulate(FeatureCols.length)(f => statsRow.getDouble(2 + 2 * f))
     val z = FeatureCols.zipWithIndex.foldLeft(rfm) { case (df, (c, i)) =>
       df.withColumn(s"${c}_z", (col(c) - lit(mu(i))) / lit(sd(i)))
     }
@@ -89,7 +90,7 @@ object Clustering {
       .setInputCols(FeatureCols.map(_ + "_z").toArray)
       .setOutputCol("features")
       .transform(z)
-    (assembled, ScalerStats(mu, sd, statsRow.getLong(6)))
+    (assembled, ScalerStats(mu, sd, statsRow.getLong(0)))
   }
 
   /** Reference guards: k ∈ [3,5] (`src/model.rs:138-143`) and n ≥ k
@@ -102,39 +103,52 @@ object Clustering {
   /** Largest RFM table, in rows, that [[fit]] fits on the driver: it
     * collects the RFM rows once and computes the z-scores, [[lloyd]], the
     * labels, the [[Segmentation]] read-outs and a local `predictions` frame
-    * there, with no Spark job per iteration. Above it, MLlib's distributed
-    * `KMeans.fit`.
+    * there, with no Spark job per iteration. Above it, [[lloyd]] runs on a
+    * sample of at most this many rows and Lloyd's steps over the whole
+    * table refine it, one Spark aggregate each.
     *
-    * Measured as the whole [[fitWith]] call on a cached RFM input, each path
-    * forced, k=4, seed 42, `local[4]` on a 4-core VM, 3 GB heap; seconds are
-    * warm repetitions, iterations in brackets. Up to 10⁵ rows, measured with
-    * the earlier flow, which collected only the z-points and cached
+    * Measured as the whole [[fitWith]] call on a cached RFM input, k=4,
+    * seed 42, `local[4]` on a 4-core VM, 3 GB heap; seconds are warm
+    * repetitions, iterations in brackets. Up to 10⁵ rows, measured with the
+    * earlier flow, which collected only the z-points and cached
     * `predictions` in Spark:
     *
-    * | rows | input | collect + driver fit | MLlib fit |
-    * |---|---|---|---|
-    * | 4,338 | perfbench retail CSV, seed 1 | 0.70–0.80 s (4) | 3.01–3.11 s (25) |
-    * | 14,999 | sf0.1 `Rfm.rfmOrders` | 0.64–0.73 s (48) | 3.35–3.53 s (31) |
-    * | 100,000 | synthetic, 4 planted blobs | 0.88–0.95 s (3) | 2.17–2.28 s (2) |
+    * | rows | input | collect + driver fit |
+    * |---|---|---|
+    * | 4,338 | perfbench retail CSV, seed 1 | 0.70–0.80 s (4) |
+    * | 14,999 | sf0.1 `Rfm.rfmOrders` | 0.64–0.73 s (48) |
+    * | 100,000 | synthetic, 4 planted blobs | 0.88–0.95 s (3) |
     *
     * With this flow, on synthetic 4-blob tables; the peak is the used heap
     * sampled every 2 ms during the call, garbage included, and the last
     * column is a `groupBy("prediction").count()` over `predictions` after
     * the call, which ships the local rows to the tasks:
     *
-    * | rows | driver path | peak heap | groupBy after | MLlib path |
-    * |---|---|---|---|---|
-    * | 100,000 | 0.66 s (3) | 0.31 GB | 0.45–0.61 s | — |
-    * | 1,000,000 | 3.11–3.67 s (3) | 1.71–1.72 GB | 3.77–3.79 s | 7.29–8.47 s (2) |
-    * | 1,048,576 | 3.16–3.27 s (3) | 0.96–2.06 GB | 3.38–3.87 s | — |
+    * | rows | driver path | peak heap | groupBy after |
+    * |---|---|---|---|
+    * | 100,000 | 0.66 s (3) | 0.31 GB | 0.45–0.61 s |
+    * | 1,000,000 | 3.11–3.67 s (3) | 1.71–1.72 GB | 3.77–3.79 s |
+    * | 1,048,576 | 3.16–3.27 s (3) | 0.96–2.06 GB | 3.38–3.87 s |
     *
     * At 10⁶ rows the earlier driver flow took 2.62–3.36 s (2) with a
-    * 1.22–1.26 GB peak and a 0.28–0.29 s groupBy, in the same session; the order of
-    * the rows differs above 131,072 rows, hence the iteration counts. The
-    * driver path still wins 2× at 10⁶ rows and the bound's 2²⁰ rows fit in
-    * the 3 GB heap with a third to spare, so the bound stays where the
-    * largest measured size is; a larger table risks the driver's memory,
-    * which these runs did not measure. */
+    * 1.22–1.26 GB peak and a 0.28–0.29 s groupBy, in the same session; the
+    * order of the rows differs above 131,072 rows, hence the iteration
+    * counts. Above the bound, on 10⁶ planted rows (four segments, one of
+    * them 0.4% "whale" rows) held as a 4-partition checkpoint, forced with
+    * a bound of 2¹⁸, 3 GB heap, alternating in one session with the MLlib
+    * fit this path replaced: the sampled path took 9.19–12.01 s (3
+    * full-table steps) with a 1.43–1.89 GB peak, MLlib 10.82–14.81 s (4)
+    * with a 1.40–2.20 GB peak, over 5 warm pairs, the sampled path faster
+    * in each (medians 10.36 and 12.50 s); both reached the same WCSS.
+    * Timed by phase in two more runs of 7.9–8.1 s: the pinned cache and
+    * its stats 0.7 s, drawing the sample 2.4–2.5 s, k-means++ and Lloyd's
+    * on its 2¹⁸ points 0.1–0.2 s, the four full-table aggregates
+    * 1.0–1.1 s, predictions and bounds 1.0 s, the scatter sample's md5
+    * sort 2.4–2.5 s. The driver path's 3.11–3.67 s at 10⁶ rows stays well
+    * under either, and the bound's 2²⁰ rows fit in the 3 GB heap with a
+    * third to spare, so the bound stays where the largest measured size
+    * is; a larger table risks the driver's memory, which these runs did
+    * not measure. */
   val LocalFitRows: Long = 1L << 20
 
   /** Whether a fit of `n` rows runs on the driver (see [[LocalFitRows]]). */
@@ -143,81 +157,102 @@ object Clustering {
   /** Fit the full segmentation (reference `fit_kmeans`, `src/model.rs:132-177`). */
   def fit(rfm: DataFrame, k: Int = 4, maxIters: Int = 300,
           tol: Double = 1e-4, seed: Long = 42L): Segmentation =
-    fitWith(rfm, k, maxIters, tol, seed)(fitsLocally)
+    fitWith(rfm, k, maxIters, tol, seed)(LocalFitRows)
 
-  /** [[fit]] with the path chosen by `local(n)`, so specs can reach both
-    * paths on the same input. Both start from the same stats aggregate, so
-    * the scaler is the same on both; they differ from there on. */
+  /** [[fit]] with the row bound as a parameter, so specs reach the sampled
+    * path on small inputs: up to `bound` rows [[fitOnDriver]], above it
+    * [[fitSampled]] on a sample of at most `bound` rows. */
   private[graft] def fitWith(rfm: DataFrame, k: Int, maxIters: Int, tol: Double,
-                             seed: Long)(local: Long => Boolean): Segmentation = {
+                             seed: Long)(bound: Long): Segmentation = {
     // the stats aggregate and then the collect (driver path) or the
-    // features cache (MLlib path) read the RFM table: cache it for this call
-    // so its lineage (a CSV or parquet scan plus an aggregate) runs once. A
-    // caller's cache is left alone, and ours is dropped on the way out, so
-    // a later call on an equal plan can never hit it. A checkpoint (what
-    // `Retail.requireNonEmpty` returns) is a plain read already; caching it
-    // again would only cost one more job.
+    // pinned cache (sampled path) read the RFM table: cache it for this
+    // call so its lineage (a CSV or parquet scan plus an aggregate) runs
+    // once. A caller's cache is left alone, and ours is dropped on the way
+    // out, so a later call on an equal plan can never hit it. A checkpoint
+    // (what `Retail.requireNonEmpty` returns) is a plain read already;
+    // caching it again would only cost one more job.
     val ownCache = rfm.storageLevel == StorageLevel.NONE &&
       !rfm.queryExecution.analyzed.isInstanceOf[LogicalRDD]
     if (ownCache) rfm.cache()
     try {
       val (features, scaler) = standardize(rfm)
       validateK(k, scaler.n)
-      if (local(scaler.n)) fitOnDriver(rfm, features, scaler, k, maxIters, tol, seed)
-      else fitDistributed(features, scaler, k, maxIters, tol, seed)
+      if (scaler.n <= bound) fitOnDriver(rfm, features, scaler, k, maxIters, tol, seed)
+      else fitSampled(rfm, scaler.n, bound, k, maxIters, tol, seed)
     } finally if (ownCache) rfm.unpersist()
   }
 
-  /** The MLlib path: k-means|| and Lloyd's over a features cache, then the
-    * [[Segmentation]] read-outs as Spark aggregates over the predictions. */
-  private def fitDistributed(features: DataFrame, scaler: ScalerStats, k: Int,
-                             maxIters: Int, tol: Double, seed: Long): Segmentation = {
-    // k-means|| init samples rows in partition order, and within-partition
-    // order after a shuffle is not stable across runs — pin both so a
-    // seeded fit is bit-reproducible (the reference is unseeded and
-    // nondeterministic, SURVEY §7.4; we promise strictly more). Partition
-    // count follows data size: every distributed Lloyd's iteration is one
-    // job over these partitions, and rows here are 3 doubles — ~64k
-    // rows/task is still only ~1.5 MB.
-    val numParts = math.max(1, math.min(1 << 14, scaler.n / 65536)).toInt
-    val cached = features
-      .repartition(numParts, col("custkey"))
-      .sortWithinPartitions(col("custkey"))
-      .cache()
+  /** The path above the bound, over one cache of the RFM rows:
+    *  - [[lloyd]] on the z-points of the rows whose md5(custkey) variate is
+    *    below bound/n (at most `bound` of them, by that variate), in custkey
+    *    order;
+    *  - then full-table Lloyd's steps from those centers under [[lloyd]]'s
+    *    update and stop rule, each step one aggregate ([[step]]), and one
+    *    more at the final centers for the inertia and the sizes;
+    *  - the other [[Segmentation]] read-outs as Spark aggregates and
+    *    sort-limits over the predictions.
+    * Every partition of the cache holds the rows of its custkey hash in
+    * custkey order, and the scaler is recomputed over it, so the fit
+    * depends on the table's content only, not on its partitioning (the
+    * scaler's merge of its per-partition partials follows the shuffle
+    * read's block order, which a local session keeps in partition order). */
+  private def fitSampled(rfm: DataFrame, n: Long, bound: Long, k: Int,
+                         maxIters: Int, tol: Double, seed: Long): Segmentation = {
+    // one step is one task per partition: ~64k rows of 3 doubles, ~1.5 MB
+    val numParts = math.max(1, math.min(1 << 14, n / 65536)).toInt
+    val cached = rfm.repartition(numParts, col("custkey"))
+      .sortWithinPartitions(col("custkey")).cache()
     try {
-      val fitted = new KMeans()
-        .setK(k).setMaxIter(maxIters).setTol(tol)
-        .setDistanceMeasure("euclidean").setSeed(seed)
-        .setFeaturesCol("features").setPredictionCol("prediction")
-        .fit(cached)
-      // k-means|| keeps only distinct initial centers, so an input with
-      // fewer than k distinct points gets fewer than k from MLlib; the
-      // missing ones repeat the last center — empty clusters, as the
-      // driver-side fit leaves them
-      val model =
-        if (fitted.clusterCenters.length == k) fitted
-        else GraftKMeansBridge.model(
-          fitted.clusterCenters.padTo(k, fitted.clusterCenters.last),
-          fitted.summary.numIter, fitted.summary.trainingCost, cached)
-      // materialize predictions while the feature cache is alive: the
-      // read-outs below and every later stat re-action this frame, and
-      // without the cache each action replays the whole
-      // scan+aggregate+transform lineage
-      val predictions = model.transform(cached).cache()
-      predictions.count()
-      val counts = predictions.groupBy("prediction").count()
-        .collect().map(r => r.getInt(0) -> r.getLong(1)).toMap
-      val b = predictions.agg(
-        min("frequency_z"), max("frequency_z"),
+      val (features, scaler) = standardize(cached)
+      val d = FeatureCols.length
+      // the leading 52 bits of the digest Charts.scatterSample ranks by
+      val variate = conv(substring(md5(col("custkey").cast(StringType)), 1, 13), 16, 10)
+        .cast(DoubleType) / math.pow(2, 52)
+      val drawn = cached.withColumn("__v", variate).filter(col("__v") < bound.toDouble / n)
+      val (_, _, xs) = zPoints(drawn.collect().sortBy(_.getAs[Double]("__v"))
+        .take(bound.toInt), drawn.schema, scaler)
+      require(xs.length >= k * d, s"The sample holds ${xs.length / d} rows, fewer than k = $k")
+      val (cs, _) = lloyd(xs, xs.length / d, k, maxIters, tol, seed)
+      val numIter = lloydSteps(cs, k, maxIters, tol)(step(features, cs, k)(_, _))
+      // the sizes are the first-min labels' counts at the final centers
+      val sizes = new Array[Long](k)
+      val cost = step(features, cs, k)(new Array[Double](k * d), sizes)
+      val model = GraftKMeansBridge.model(vectors(cs), numIter, cost, features)
+      // cached while the RFM cache is alive: the read-outs below and every
+      // later stat re-action this frame
+      val predictions = model.transform(features).cache()
+      val b = predictions.agg(min("frequency_z"), max("frequency_z"),
         min("monetary_z"), max("monetary_z")).head()
       val scatter = Charts.scatterSample(predictions, Charts.MaxRenderPoints)
         .select(col("frequency_z"), col("monetary_z"), col("prediction"))
         .collect().map(r => (r.getDouble(0), r.getDouble(1), r.getInt(2)))
-      Segmentation(model, scaler, predictions, model.summary.trainingCost,
-        (0 until k).map(c => counts.getOrElse(c, 0L)),
+      Segmentation(model, scaler, predictions, cost, sizes.toIndexedSeq,
         PlotBounds(b.getDouble(0), b.getDouble(1), b.getDouble(2), b.getDouble(3)),
-        silhouetteSampled(labeled(predictions, model)), scatter.toIndexedSeq)
+        silhouetteSampled(labeled(predictions, cs.grouped(d).toArray)), scatter.toIndexedSeq)
     } finally cached.unpersist()
+  }
+
+  /** One full-table first-min Lloyd's step as one aggregate over the
+    * row-major centers `cs`, with [[labeled]]'s expressions: adds each
+    * (partition, cluster)'s row count into `counts` and z sums into `sums`,
+    * and returns the Σ of squared distances to the nearest center. Each
+    * double sum stays in one task, in the cache's row order, and the driver
+    * adds the partials in partition order, so no sum depends on the order
+    * in which shuffle blocks arrive. */
+  private def step(features: DataFrame, cs: Array[Double], k: Int)(
+      sums: Array[Double], counts: Array[Long]): Double = {
+    val d = FeatureCols.length
+    labeled(features, cs.grouped(d).toArray)
+      .groupBy(spark_partition_id().as("pid"), col("cluster"))
+      .agg(count(lit(1)), FeatureCols.map(c => sum(s"${c}_z")) :+
+        sum(least((0 until k).map(j => col(s"__d$j")): _*)): _*)
+      .collect().sortBy(r => (r.getInt(0), r.getLong(1)))
+      .foldLeft(0.0) { (cost, r) =>
+        val j = r.getLong(1).toInt
+        counts(j) += r.getLong(2)
+        for (f <- 0 until d) sums(j * d + f) += r.getDouble(3 + f)
+        cost + r.getDouble(3 + d)
+      }
   }
 
   /** The driver path: one collect of the RFM rows, sorted by custkey — for
@@ -237,17 +272,8 @@ object Clustering {
                           k: Int, maxIters: Int, tol: Double,
                           seed: Long): Segmentation = {
     val d = FeatureCols.length
-    // Spark resolves the feature columns case-insensitively (the CSV surface
-    // has `Recency`, ...), so the row indices do too
-    def at(c: String) = rfm.schema.fieldNames.indexWhere(_.equalsIgnoreCase(c))
-    val (keyAt, featAt) = (at("custkey"), FeatureCols.map(at).toArray)
-    val key = (r: Row) => r.getAs[Number](keyAt).longValue
-    val rows = rfm.collect().sortBy(key)
+    val (rows, keys, xs) = zPoints(rfm.collect(), rfm.schema, sc)
     val n = rows.length
-    val xs = new Array[Double](n * d)
-    for (i <- 0 until n; f <- 0 until d)
-      xs(i * d + f) = (rows(i).getAs[Number](featAt(f)).doubleValue - sc.mu(f)) / sc.sd(f)
-
     val (cs, numIter) = lloyd(xs, n, k, maxIters, tol, seed)
     val labels = Array.tabulate(n)(i => nearest(xs, i, cs, k, d))
     val sizes = new Array[Long](k)
@@ -265,21 +291,39 @@ object Clustering {
     val point = (i: Int) => java.util.Arrays.copyOfRange(xs, i * d, (i + 1) * d)
     val silhouette = silhouetteOf(
       Array.tabulate(math.min(n, 100))(i => (point(i), labels(i).toLong)))
-    val scatter = Charts.scatterOrder(rows.map(key), Charts.MaxRenderPoints)
+    val scatter = Charts.scatterOrder(keys, Charts.MaxRenderPoints)
       .map(i => (xs(i * d + 1), xs(i * d + 2), labels(i)))
 
-    val centers = Array.tabulate(k)(j => Vectors.dense(cs.slice(j * d, (j + 1) * d)))
-    val model = GraftKMeansBridge.model(centers, numIter, cost, features)
-    val out = new java.util.ArrayList[Row](n)
-    for (i <- 0 until n) {
+    val model = GraftKMeansBridge.model(vectors(cs), numIter, cost, features)
+    val out = Array.tabulate(n) { i =>
       val z = point(i)
-      out.add(Row.fromSeq(rows(i).toSeq ++ z :+ Vectors.dense(z).compressed :+ labels(i)))
+      Row.fromSeq(rows(i).toSeq ++ z :+ Vectors.dense(z).compressed :+ labels(i))
     }
-    val predictions = rfm.sparkSession.createDataFrame(out,
+    val predictions = rfm.sparkSession.createDataFrame(java.util.Arrays.asList(out: _*),
       model.transform(features).schema)
     Segmentation(model, sc, predictions, cost, sizes.toIndexedSeq,
       PlotBounds(fLo, fHi, mLo, mHi), silhouette, scatter.toIndexedSeq)
   }
+
+  /** RFM rows of `schema` sorted by custkey, their custkeys and their
+    * row-major z-points `(x − μ)/σ`, the IEEE ops of [[standardize]]'s
+    * columns. */
+  private def zPoints(collected: Array[Row], schema: StructType,
+                      sc: ScalerStats): (Array[Row], Array[Long], Array[Double]) = {
+    val d = FeatureCols.length
+    // Spark resolves the feature columns case-insensitively (the CSV surface
+    // has `Recency`, ...), so the row indices do too
+    def at(c: String) = schema.fieldNames.indexWhere(_.equalsIgnoreCase(c))
+    val (keyAt, featAt) = (at("custkey"), FeatureCols.map(at).toArray)
+    val rows = collected.sortBy(_.getAs[Number](keyAt).longValue)
+    val xs = new Array[Double](rows.length * d)
+    for (i <- rows.indices; f <- 0 until d)
+      xs(i * d + f) = (rows(i).getAs[Number](featAt(f)).doubleValue - sc.mu(f)) / sc.sd(f)
+    (rows, rows.map(_.getAs[Number](keyAt).longValue), xs)
+  }
+
+  /** The row-major centers `cs` as one vector per center. */
+  private def vectors(cs: Array[Double]) = cs.grouped(FeatureCols.length).map(Vectors.dense).toArray
 
   /** Squared euclidean distance of point `i` of the row-major `xs` to
     * center `j` of `cs`, summed in feature order — the `((dr² + df²) + dm²)`
@@ -314,10 +358,7 @@ object Clustering {
     *    with probability ∝ squared distance to the nearest center chosen so
     *    far (uniform again once every point sits on a center, so a
     *    degenerate input still gets k finite centers);
-    *  - Lloyd's iterations with first-min assignment; a cluster that loses
-    *    all its points keeps its center;
-    *  - stops once no center moves more than `tol` (MLlib's rule:
-    *    squared move ≤ tol²) or after `maxIters` iterations.
+    *  - [[lloydSteps]] over the `n` points.
     * Returns the row-major centers and the iteration count. */
   private def lloyd(xs: Array[Double], n: Int, k: Int, maxIters: Int, tol: Double,
                     seed: Long): (Array[Double], Int) = {
@@ -329,34 +370,42 @@ object Clustering {
     val d2 = Array.tabulate(n)(i => sqdist(xs, i, cs, 0, d))
     for (j <- 1 until k) {
       val total = d2.sum
-      val pick =
-        if (total > 0.0) {
-          val r = rnd.nextDouble() * total
-          var acc = 0.0
-          var i = 0
-          var last = 0
-          while (i < n && acc <= r) {
-            if (d2(i) > 0.0) { acc += d2(i); last = i }
-            i += 1
-          }
-          last
-        } else rnd.nextInt(n)
+      val pick = if (total > 0.0) {
+        val r = rnd.nextDouble() * total
+        var (acc, i, last) = (0.0, 0, 0)
+        while (i < n && acc <= r) {
+          if (d2(i) > 0.0) { acc += d2(i); last = i }
+          i += 1
+        }
+        last
+      } else rnd.nextInt(n)
       place(j, pick)
       for (i <- 0 until n) d2(i) = math.min(d2(i), sqdist(xs, i, cs, j, d))
     }
 
-    var iter = 0
-    var converged = false
-    val sums = new Array[Double](k * d)
-    val counts = new Array[Long](k)
-    while (iter < maxIters && !converged) {
-      java.util.Arrays.fill(sums, 0.0)
-      java.util.Arrays.fill(counts, 0L)
+    val iters = lloydSteps(cs, k, maxIters, tol) { (sums, counts) =>
       for (i <- 0 until n) {
         val j = nearest(xs, i, cs, k, d)
         counts(j) += 1
         for (f <- 0 until d) sums(j * d + f) += xs(i * d + f)
       }
+    }
+    (cs, iters)
+  }
+
+  /** Lloyd's iterations on the row-major centers `cs`, in place: `assign`
+    * adds each point's z-point into `sums` and counts it in `counts` under
+    * its first-min center; a center with points moves to their mean, one
+    * with none keeps its place. Stops once no center moved more than `tol`
+    * (MLlib's rule: squared move ≤ tol²) or after `maxIters` iterations;
+    * returns the iteration count. */
+  private def lloydSteps(cs: Array[Double], k: Int, maxIters: Int, tol: Double)(
+      assign: (Array[Double], Array[Long]) => Unit): Int = {
+    val d = FeatureCols.length
+    var (iter, converged) = (0, false)
+    while (iter < maxIters && !converged) {
+      val (sums, counts) = (new Array[Double](k * d), new Array[Long](k))
+      assign(sums, counts)
       converged = true
       for (j <- 0 until k if counts(j) > 0) {
         for (f <- 0 until d) sums(j * d + f) /= counts(j)
@@ -365,7 +414,7 @@ object Clustering {
       }
       iter += 1
     }
-    (cs, iter)
+    iter
   }
 
   /** One fit serves all ML queries in a session (the reference refits per
@@ -400,12 +449,9 @@ object Clustering {
 
   /** Squared euclidean distance of the z-point to centroid `c`, in the
     * shared shape `((dr² + df²) + dm²)` both engines evaluate identically. */
-  private def distCol(c: Array[Double]): Column = {
-    val dr = col("recency_z") - lit(c(0))
-    val df0 = col("frequency_z") - lit(c(1))
-    val dm = col("monetary_z") - lit(c(2))
-    dr * dr + df0 * df0 + dm * dm
-  }
+  private def distCol(c: Array[Double]): Column = FeatureCols.indices.map { f =>
+    val t = col(s"${FeatureCols(f)}_z") - lit(c(f)); t * t
+  }.reduce(_ + _)
 
   /** First-min argmin over pre-computed `__d{i}` columns ([[firstMinSql]]
     * is the textual mirror; PropertySpec pins the tie-break law). */
@@ -421,14 +467,11 @@ object Clustering {
   /** Predictions + per-centroid `__d{i}` squared distances + the explicit
     * argmin `cluster` label (reference `src/model.rs:26-50`). */
   def labeledPredictions(seg: Segmentation): DataFrame =
-    labeled(seg.predictions, seg.model)
+    labeled(seg.predictions, seg.model.clusterCenters.map(_.toArray))
 
-  private def labeled(predictions: DataFrame, model: KMeansModel): DataFrame = {
-    val centers = model.clusterCenters.map(_.toArray)
-    val withD = centers.zipWithIndex.foldLeft(predictions) {
-      case (df, (c, i)) => df.withColumn(s"__d$i", distCol(c))
-    }
-    withD.withColumn("cluster", firstMin(centers.length))
+  private def labeled(df: DataFrame, centers: Array[Array[Double]]): DataFrame = {
+    centers.zipWithIndex.foldLeft(df) { case (df, (c, i)) => df.withColumn(s"__d$i", distCol(c)) }
+      .withColumn("cluster", firstMin(centers.length))
   }
 
   /** A7 — cluster sizes + percentages (reference `src/model.rs:53-61`,
@@ -446,10 +489,9 @@ object Clustering {
   /** M8 — centroid export in normalized space (reference `src/model.rs:165`). */
   def centroids(spark: SparkSession, dir: String): DataFrame = {
     val seg = fitOnDir(spark, dir)
-    val rows = seg.model.clusterCenters.zipWithIndex.map { case (c, i) =>
-      (i.toLong, c(0), c(1), c(2))
-    }.toSeq
-    spark.createDataFrame(rows)
+    val rows = seg.model.clusterCenters.zipWithIndex
+      .map { case (c, i) => (i.toLong, c(0), c(1), c(2)) }
+    spark.createDataFrame(rows.toSeq)
       .toDF("cluster", "recency_z", "frequency_z", "monetary_z")
       .orderBy(col("cluster"))
   }
@@ -497,8 +539,7 @@ object Clustering {
     val seg = fitOnDir(spark, dir)
     val cluster = predictCluster(seg, Array(30.0, 10.0, 500.0))
     val size = labeledPredictions(seg).filter(col("cluster") === cluster).count()
-    val total = seg.scaler.n
-    val pct = math.rint(size.toDouble / total * 10000.0) / 100.0
+    val pct = math.rint(size.toDouble / seg.scaler.n * 10000.0) / 100.0
     spark.createDataFrame(Seq((cluster.toLong, size, pct)))
       .toDF("cluster", "cluster_size", "cluster_pct")
   }
@@ -520,14 +561,10 @@ object Clustering {
     * (reference `src/model.rs:64-119`; sample size `src/main.rs:131-133`).
     * "First" rows are made deterministic by custkey order. */
   def silhouetteSampled(labeled: DataFrame, sampleSize: Int = 100): Double =
-    silhouetteOf(labeled
-      .orderBy(col("custkey"))
-      .select(col("recency_z"), col("frequency_z"), col("monetary_z"),
-        col("cluster"))
-      .limit(sampleSize)
-      .collect()
-      .map(r => (Array(r.getDouble(0), r.getDouble(1), r.getDouble(2)),
-        r.getLong(3))))
+    silhouetteOf(labeled.orderBy(col("custkey"))
+      .select(col("recency_z"), col("frequency_z"), col("monetary_z"), col("cluster"))
+      .limit(sampleSize).collect()
+      .map(r => (Array(r.getDouble(0), r.getDouble(1), r.getDouble(2)), r.getLong(3))))
 
   /** [[silhouetteSampled]]'s score of a sample already drawn: (z-point,
     * cluster) pairs in sample order. */
@@ -546,12 +583,8 @@ object Clustering {
         .map { case (c, js) => c -> js.map(j => dist(xi, sample(j)._1)) }
       val a = byCluster.get(ci).map(ds => ds.sum / ds.size).getOrElse(0.0)
       val others = byCluster.removed(ci).values.map(ds => ds.sum / ds.size)
-      if (others.isEmpty) 0.0
-      else {
-        val b = others.min
-        val m = math.max(a, b)
-        if (m == 0.0) 0.0 else (b - a) / m
-      }
+      val m = if (others.isEmpty) 0.0 else math.max(a, others.min)
+      if (m == 0.0) 0.0 else (others.min - a) / m
     }
     scores.sum / n
   }

@@ -62,7 +62,13 @@ private[graft] object OffsetPrefix {
       .withColumn("__tot", sum(col("__t")).over(
         Window.partitionBy(col(grp)).orderBy(col("__pid")).rowsBetween(
           Window.unboundedPreceding, Window.unboundedFollowing)))
-    part.join(broadcast(offsets), Seq("__pid", grp))
+    // null-safe on the group, as the oracles' PARTITION BY keeps a NULL
+    // group; the columns in the order of a USING join on (__pid, grp), an
+    // input column named like an offset column replaced by it
+    val o = offsets.withColumnRenamed("__pid", "__opid").withColumnRenamed(grp, "__ogrp")
+    val (keys, offs) = (Seq("__pid", grp), Seq("__t", "__off", "__tot"))
+    part.drop(offs: _*).join(broadcast(o), col("__pid") === col("__opid") && col(grp) <=> col("__ogrp"))
+      .select((keys ++ part.columns.filterNot((keys ++ offs).contains) ++ offs).map(col): _*)
   }
 
   /** The group's earlier partitions, over the P×G miniature. */

@@ -8,7 +8,9 @@ import org.apache.spark.mllib.linalg.{Vectors => OldVectors}
 import org.apache.spark.sql.DataFrame
 
 /** Bridge to the `private[clustering]` KMeansModel/KMeansSummary
-  * constructors, so centers fitted outside MLlib become the same model type
+  * constructors: the only way `graft.operators.Clustering` builds its
+  * model, from the centers of its own K-Means (k-means++ on the whole table
+  * or on a sample, then first-min Lloyd's). The model is the type
   * `KMeans.fit` returns: `k` set, and a training summary carrying the
   * iteration count, the training cost and `model.transform(dataset)` as its
   * predictions. */

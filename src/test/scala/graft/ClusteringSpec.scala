@@ -5,7 +5,7 @@ import org.apache.spark.GraftListenerBus
 import org.apache.spark.ml.linalg.Vectors
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerStageCompleted}
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.functions.{col, max, min}
+import org.apache.spark.sql.functions.{col, lit, max, min}
 import org.apache.spark.storage.StorageLevel
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -127,7 +127,7 @@ class ClusteringSpec extends AnyFunSuite {
     assert(report.contains("Centroid 3"))
   }
 
-  // ---- the driver-side fit below Clustering.LocalFitRows, and MLlib above --
+  // ---- the driver-side fit below Clustering.LocalFitRows, sampled above ----
 
   /** The z-points of the fitted rows, in predictions order. */
   private def zPoints(s: Clustering.Segmentation): Array[Array[Double]] =
@@ -143,9 +143,13 @@ class ClusteringSpec extends AnyFunSuite {
   private def nearest(p: Array[Double], cs: Array[Array[Double]]): Int =
     cs.indices.minBy(j => sqdist(p, cs(j)))
 
-  /** The MLlib path on the same input, reached below the bound. */
-  private def fitMllib(df: DataFrame, k: Int): Clustering.Segmentation =
-    Clustering.fitWith(df, k, 300, 1e-4, 42L)(_ => false)
+  /** The sampled path on the same input: `bound` below its row count. */
+  private def fitSampled(df: DataFrame, k: Int, bound: Long): Clustering.Segmentation =
+    Clustering.fitWith(df, k, 300, 1e-4, 42L)(bound)
+
+  /** The sampled path on a sample of about half the rows. */
+  private def fitHalf(df: DataFrame, k: Int): Clustering.Segmentation =
+    fitSampled(df, k, df.count() / 2)
 
   test("the sf0.001 fit runs on the driver and is a Lloyd fixed point") {
     assert(Clustering.fitsLocally(seg.scaler.n))
@@ -180,8 +184,8 @@ class ClusteringSpec extends AnyFunSuite {
       s"inertia ${seg.inertia} vs recomputed $expected")
   }
 
-  test("the MLlib path, called directly, meets the label, size and shape invariants") {
-    val m = fitMllib(rfm, 4)
+  test("the sampled path, called directly, meets the label, size and shape invariants") {
+    val m = fitHalf(rfm, 4)
     val labels = m.predictions.select("prediction").collect().map(_.getInt(0))
     assert(labels.length == rfm.count())
     assert(labels.forall(l => l >= 0 && l < 4))
@@ -189,10 +193,15 @@ class ClusteringSpec extends AnyFunSuite {
     assert(m.model.clusterCenters.length == 4 && m.model.clusterCenters.forall(_.size == 3))
     assert(m.model.summary.clusterSizes.sum == labels.length)
     assert(m.inertia >= 0 && java.lang.Double.isFinite(m.inertia))
-    // the same input, so the same scaler on both paths
-    assert(m.scaler.mu.sameElements(seg.scaler.mu) &&
-      m.scaler.sd.sameElements(seg.scaler.sd) && m.scaler.n == seg.scaler.n)
+    // the same input, so the same scaler on both paths, up to the order
+    // its sums run in over the sampled path's pinned copy
+    assert(m.scaler.n == seg.scaler.n && closeScalers(m.scaler, seg.scaler))
   }
+
+  private def closeScalers(a: Clustering.ScalerStats, b: Clustering.ScalerStats): Boolean =
+    (a.mu ++ a.sd).zip(b.mu ++ b.sd).forall { case (x, y) =>
+      math.abs(x - y) <= 1e-12 * math.max(math.abs(x), math.abs(y))
+    }
 
   // ---- fit's resource contract ---------------------------------------------
 
@@ -277,9 +286,9 @@ class ClusteringSpec extends AnyFunSuite {
   /** The read-outs a segmentation carries equal the frame computations over
     * its `predictions`, on both paths. */
   private def assertReadOuts(name: String, input: DataFrame): Unit = {
-    val (z, _) = Clustering.standardize(input)
+    val (_, inputScaler) = Clustering.standardize(input)
     Seq("driver-side" -> Clustering.fit(input, k = 4),
-      "MLlib" -> fitMllib(input, 4)).foreach { case (path, s) =>
+      "sampled" -> fitHalf(input, 4)).foreach { case (path, s) =>
       val p = s.predictions
       val counts = p.groupBy("prediction").count().collect()
         .map(r => r.getInt(0) -> r.getLong(1)).toMap
@@ -295,7 +304,16 @@ class ClusteringSpec extends AnyFunSuite {
         .select("frequency_z", "monetary_z", "prediction").collect()
         .map(r => (r.getDouble(0), r.getDouble(1), r.getInt(2))).toSeq
       assert(s.scatter == scatter, s"$name, $path: scatter sample differs")
-      // the z columns bit-equal to standardize's, row by row
+      // the z columns bit-equal to standardize's with the fit's scaler, row
+      // by row: the input's own on the driver path, the same stats taken
+      // over its pinned copy on the sampled path
+      val sc = s.scaler
+      if (path == "driver-side")
+        assert(sc.mu.sameElements(inputScaler.mu) && sc.sd.sameElements(inputScaler.sd))
+      else assert(closeScalers(sc, inputScaler), s"$name, $path: scaler")
+      val z = Clustering.FeatureCols.zipWithIndex.foldLeft(input) { case (df, (c, i)) =>
+        df.withColumn(s"${c}_z", (col(c) - lit(sc.mu(i))) / lit(sc.sd(i)))
+      }
       val zs = Seq("recency_z", "frequency_z", "monetary_z")
       val joined = p.select(col("custkey") +: zs.map(c => col(c).as(s"p_$c")): _*)
         .join(z.select(col("custkey") +: zs.map(col): _*), "custkey").collect()
@@ -318,8 +336,8 @@ class ClusteringSpec extends AnyFunSuite {
     assertReadOuts("csv", Retail.requireNonEmpty(csvRfm(), "RFM aggregation"))
   }
 
-  test("the driver path's predictions have the MLlib path's schema and MLlib's labels") {
-    val m = fitMllib(rfm, 4)
+  test("the driver path's predictions have the sampled path's schema and MLlib's labels") {
+    val m = fitHalf(rfm, 4)
     assert(seg.predictions.schema == m.predictions.schema,
       s"${seg.predictions.schema.treeString} vs ${m.predictions.schema.treeString}")
     // the driver's first-min labels against MLlib's transform with the same centers
@@ -348,7 +366,8 @@ class ClusteringSpec extends AnyFunSuite {
     import spark.implicits._
     val df = rows.toDF("custkey", "recency", "frequency", "monetary")
     Seq("driver-side" -> Clustering.fit(df, k = 4),
-      "MLlib" -> fitMllib(df, 4)).foreach { case (path, s) =>
+      // a half sample of these 10 keys holds fewer than k rows
+      "sampled" -> fitSampled(df, 4, rows.length - 1)).foreach { case (path, s) =>
       val cs = s.model.clusterCenters
       assert(cs.length == 4, s"$name, $path: ${cs.length} centers")
       assert(cs.forall(_.toArray.forall(x => java.lang.Double.isFinite(x))),
@@ -369,5 +388,90 @@ class ClusteringSpec extends AnyFunSuite {
   test("fewer distinct points than k give k finite centers on both paths") {
     adversarial("two distinct", (0 until 10).map(i =>
       if (i % 2 == 0) (i.toLong, 5.0, 2.0, 100.0) else (i.toLong, 50.0, 9.0, 900.0)))
+  }
+
+  // ---- the sampled path at scale: quality, determinism, jobs ---------------
+
+  /** 2¹⁸ planted RFM rows (four partitions in the sampled path's cache) in
+    * four segments shaped like the perfbench generator's, one of them a
+    * 0.4% "whale" segment far out in frequency and monetary; custkeys
+    * shuffled over the rows. */
+  private lazy val planted: DataFrame = {
+    import spark.implicits._
+    val rnd = new scala.util.Random(1)
+    val n = 1 << 18
+    // share, then (mean, sd) of recency, frequency and monetary
+    val segments = Seq(
+      (0.700, (30.0, 10.0), (4.0, 1.0), (300.0, 50.0)),
+      (0.246, (300.0, 30.0), (1.5, 0.5), (150.0, 30.0)),
+      (0.050, (20.0, 5.0), (25.0, 5.0), (2000.0, 300.0)),
+      (0.004, (10.0, 3.0), (120.0, 20.0), (40000.0, 5000.0)))
+    def draw(p: (Double, Double)) = p._1 + p._2 * rnd.nextGaussian()
+    val rows = segments.flatMap { case (share, r, f, m) =>
+      Seq.fill(math.round(share * n).toInt)((draw(r), draw(f), draw(m)))
+    }
+    val keys = rnd.shuffle(rows.indices.toVector)
+    val df = rows.zip(keys).map { case ((r, f, m), key) => (10000L + key, r, f, m) }
+      .toDF("custkey", "recency", "frequency", "monetary").cache()
+    assert(df.count() == n)
+    df
+  }
+
+  private val PlantedBound = 1L << 14
+
+  private lazy val plantedSampled = fitSampled(planted, 4, PlantedBound)
+
+  test("above the bound, a sixth-of-the-table sample refines to the driver fit's WCSS") {
+    val n = planted.count()
+    assert(PlantedBound * 6 <= n)
+    val driver = Clustering.fit(planted, k = 4)
+    assert(Clustering.fitsLocally(n))
+    val whales = driver.sizes.min
+    assert(whales > 0 && whales * 200 <= n, s"sizes ${driver.sizes}")
+    assert(plantedSampled.inertia <= 1.01 * driver.inertia,
+      s"sampled WCSS ${plantedSampled.inertia} vs driver ${driver.inertia}")
+  }
+
+  /** Centers, inertia and numIter, as bits. */
+  private def fitBits(s: Clustering.Segmentation) = (
+    s.model.clusterCenters.map(_.toArray.map(java.lang.Double.doubleToRawLongBits).toSeq).toSeq,
+    java.lang.Double.doubleToRawLongBits(s.inertia), s.model.summary.numIter)
+
+  test("the sampled fit is bit-identical across calls and across input partitionings") {
+    val again = fitSampled(planted, 4, PlantedBound)
+    assert(fitBits(again) == fitBits(plantedSampled))
+    val Seq(one, eight) = Seq(1, 8).map { p =>
+      val in = planted.repartition(p)
+      assert(in.rdd.getNumPartitions == p)
+      fitSampled(in, 4, PlantedBound)
+    }
+    assert(fitBits(one) == fitBits(eight), s"${fitBits(one)} vs ${fitBits(eight)}")
+    assert(fitBits(one) == fitBits(plantedSampled))
+  }
+
+  test("above the bound, each full-table step is one aggregate job plus its shuffle stage job") {
+    planted.count()
+    var first, all: Clustering.Segmentation = null
+    val firstJobs = jobsIn { first = Clustering.fitWith(planted, 4, 1, 1e-4, 42L)(PlantedBound) }
+    val allJobs = jobsIn { all = fitSampled(planted, 4, PlantedBound) }
+    assert(first.model.summary.numIter == 1)
+    val steps = all.model.summary.numIter
+    assert(steps > 1, s"$steps steps")
+    assert(allJobs - firstJobs == 2 * (steps - 1), s"$allJobs jobs in $steps steps, $firstJobs in 1")
+    assert(firstJobs == 2 + SampledFitOverheadJobs, s"$firstJobs jobs in one step")
+  }
+
+  /** Jobs of a sampled fit outside its steps: the two stats aggregates,
+    * the pinned cache's shuffle, the sample, the aggregate at the final
+    * centers, and the bounds, scatter and silhouette read-outs. */
+  private val SampledFitOverheadJobs = 14
+
+  test("a sample with fewer than k rows is a declared error") {
+    import spark.implicits._
+    // of custkeys 0..9 only 6 and 9 have an md5 variate below 0.5
+    val df = (0 until 10).map(i => (i.toLong, i.toDouble, 2.0 * i, 3.0 * i))
+      .toDF("custkey", "recency", "frequency", "monetary")
+    val e = intercept[IllegalArgumentException](fitSampled(df, 4, 5))
+    assert(e.getMessage.contains("fewer than k = 4"), e.getMessage)
   }
 }

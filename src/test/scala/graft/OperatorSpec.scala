@@ -1713,6 +1713,36 @@ class OperatorSpec extends AnyFunSuite {
     }
   }
 
+  test("q126/q160 length batches: a NULL bucket is one group, as in the " +
+    "oracles' PARTITION BY") {
+    // every 10th doc has null text, so a null n_words and a NULL bucket
+    val tmp = java.nio.file.Files.createTempDirectory("graft_nullbucket").toString
+    Tables.documents(spark, dir)
+      .withColumn("text",
+        when(col("doc_id") % 10 === 0, lit(null)).otherwise(col("text")))
+      .write.parquet(s"$tmp/documents.parquet")
+    val docs = Tables.documents(spark, tmp)
+    assert(docs.count() == 500 && docs.filter(col("text").isNull).count() == 50)
+    // the oracle's form: one window per bucket over the whole table
+    val naive = docs
+      .select(col("doc_id"), size(split(col("text"), " ")).cast("long").as("n_words"))
+      .withColumn("bucket", expr("n_words div 32"))
+      .withColumn("rn", row_number().over(
+        org.apache.spark.sql.expressions.Window.partitionBy(col("bucket"))
+          .orderBy(col("n_words"), col("doc_id"))))
+      .select(col("doc_id"), col("n_words"), col("bucket"),
+        expr("(rn - 1) div 16").as("batch_id"))
+    def canon(df: org.apache.spark.sql.DataFrame) =
+      df.collect().map(r => (0 until 4).map(i => Option(r.get(i)))).sortBy(_.toString).toSeq
+    val got = canon(TextAnalysis.lengthBatches(spark, tmp))
+    assert(got.size == 500)
+    assert(got.count(_(2).isEmpty) == 50)
+    assert(got == canon(naive))
+    val waste = TextAnalysis.paddingWaste(spark, tmp).collect()
+    assert(waste.map(_.getLong(2)).sum == 500)
+    assert(waste.filter(_.isNullAt(0)).map(_.getLong(2)).sum == 50)
+  }
+
   test("chunking: per-doc token counts reassemble to the word count") {
     val perDoc = TextAnalysis.chunkDocuments(spark, dir)
       .groupBy("doc_id").agg(sum("n_tokens").as("total"))
