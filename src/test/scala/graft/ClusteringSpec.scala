@@ -336,7 +336,12 @@ class ClusteringSpec extends AnyFunSuite {
     assertReadOuts("csv", Retail.requireNonEmpty(csvRfm(), "RFM aggregation"))
   }
 
-  test("the driver path's predictions have the sampled path's schema and MLlib's labels") {
+  test("the driver path's predictions have the MLlib path's schema and MLlib's labels") {
+    // MLlib's transform of the standardized features, called directly and
+    // as the sampled path's predictions
+    val direct = seg.model.transform(Clustering.standardize(rfm)._1).schema
+    assert(seg.predictions.schema == direct,
+      s"${seg.predictions.schema.treeString} vs ${direct.treeString}")
     val m = fitHalf(rfm, 4)
     assert(seg.predictions.schema == m.predictions.schema,
       s"${seg.predictions.schema.treeString} vs ${m.predictions.schema.treeString}")
