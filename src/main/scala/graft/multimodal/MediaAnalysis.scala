@@ -309,11 +309,7 @@ object MediaAnalysis {
        |  SELECT a_id AS src, b_id AS dst FROM pairs
        |  UNION
        |  SELECT b_id AS src, a_id AS dst FROM pairs
-       |), reach(src, dst) AS (
-       |  SELECT src, dst FROM edges
-       |  UNION
-       |  SELECT r.src, e.dst FROM reach r JOIN edges e ON r.dst = e.src
-       |), cl AS (
+       |), ${graft.operators.Dedup.reachCte}, cl AS (
        |  SELECT src AS media_id, least(src, min(dst)) AS cluster_id
        |  FROM reach GROUP BY src
        |)

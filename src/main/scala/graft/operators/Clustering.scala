@@ -218,9 +218,9 @@ object Clustering {
       val sizes = new Array[Long](k)
       val cost = step(features, cs, k)(new Array[Double](k * d), sizes)
       val model = GraftKMeansBridge.model(vectors(cs), numIter, cost, features)
-      // cached while the RFM cache is alive: the read-outs below and every
-      // later stat re-action this frame
-      val predictions = model.transform(features).cache()
+      // not cached: the read-outs below run over the pinned copy, and a
+      // cache here would outlive the fit for the rest of the session
+      val predictions = model.transform(features)
       val b = predictions.agg(min("frequency_z"), max("frequency_z"),
         min("monetary_z"), max("monetary_z")).head()
       val scatter = Charts.scatterSample(predictions, Charts.MaxRenderPoints)
@@ -538,7 +538,7 @@ object Clustering {
   def predictQuery(spark: SparkSession, dir: String): DataFrame = {
     val seg = fitOnDir(spark, dir)
     val cluster = predictCluster(seg, Array(30.0, 10.0, 500.0))
-    val size = labeledPredictions(seg).filter(col("cluster") === cluster).count()
+    val size = seg.sizes(cluster)
     val pct = math.rint(size.toDouble / seg.scaler.n * 10000.0) / 100.0
     spark.createDataFrame(Seq((cluster.toLong, size, pct)))
       .toDF("cluster", "cluster_size", "cluster_pct")

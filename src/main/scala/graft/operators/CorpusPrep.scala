@@ -53,19 +53,9 @@ object CorpusPrep {
        |  SELECT doc_id,
        |    CAST(len(regexp_extract_all(text, '[A-Za-z]+|[0-9]|[^A-Za-z0-9 ]')) AS BIGINT) AS bpe_tokens
        |  FROM documents),
-       |shingled AS (
-       |  SELECT doc_id, unnest(list_distinct(list_transform(
-       |    range(len(string_split(text, ' ')) - 2),
-       |    i -> string_split(text, ' ')[i+1] || ' ' ||
-       |         string_split(text, ' ')[i+2] || ' ' ||
-       |         string_split(text, ' ')[i+3]))) AS shingle
-       |  FROM documents),
-       |sizes AS (SELECT doc_id, count(*) AS n FROM shingled GROUP BY doc_id),
+       |${Dedup.shingledSizesCtes},
        |common AS (
-       |  SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, count(*) AS c
-       |  FROM shingled a JOIN shingled b
-       |    ON a.shingle = b.shingle AND a.doc_id < b.doc_id
-       |  GROUP BY 1, 2),
+       |  ${Dedup.shingleCommonSql}),
        |losers AS (
        |  SELECT DISTINCT doc_b AS doc_id FROM common
        |  JOIN sizes sa ON doc_a = sa.doc_id

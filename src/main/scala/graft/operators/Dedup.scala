@@ -118,6 +118,67 @@ object Dedup {
     Staging.Layout("shingles_k3", version = "b1",
       buckets = Some(Staging.Buckets(shingleBuckets(dir), "shingle")))
 
+  // The shingle oracles' shared SQL. Plain vals: every val that
+  // interpolates them is declared below.
+
+  /** Each document's distinct word 3-shingles as a DuckDB list over
+    * `text`: the SQL twin of [[shingles]]. */
+  private[operators] val shingleListSql: String =
+    """list_distinct(list_transform(
+      |    range(len(string_split(text, ' ')) - 2),
+      |    i -> string_split(text, ' ')[i+1] || ' ' ||
+      |         string_split(text, ' ')[i+2] || ' ' ||
+      |         string_split(text, ' ')[i+3]))""".stripMargin
+
+  /** One (doc_id, shingle) row per distinct shingle of each document. */
+  private val shingledRowsSql: String =
+    s"SELECT doc_id, unnest($shingleListSql) AS shingle\n  FROM documents"
+
+  /** `ws(doc_id, sh)`: each document's shingle list. */
+  private val wsCte: String =
+    s"ws AS (\n  SELECT doc_id, $shingleListSql AS sh\n  FROM documents\n)"
+
+  /** `shingled` unnested from a `ws` CTE. */
+  private[operators] val shingledFromWsCte: String =
+    "shingled AS (\n  SELECT doc_id, unnest(sh) AS shingle FROM ws\n)"
+
+  /** Each document's distinct-shingle count `n` over `shingled`. */
+  private[operators] val shingleSizesSql: String =
+    "SELECT doc_id, count(*) AS n FROM shingled GROUP BY doc_id"
+
+  /** Two shingle rows overlap: same shingle, `a`'s document first. */
+  private val shinglePairOn: String =
+    "ON a.shingle = b.shingle AND a.doc_id < b.doc_id"
+
+  /** Shared-shingle count `c` per document pair over `shingled`. */
+  private[operators] val shingleCommonSql: String =
+    s"""SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, count(*) AS c
+       |  FROM shingled a JOIN shingled b
+       |    $shinglePairOn
+       |  GROUP BY 1, 2""".stripMargin
+
+  /** `shingled` and `sizes` straight from the documents (q31's chain). */
+  private[operators] val shingledSizesCtes: String =
+    s"""shingled AS (
+       |  $shingledRowsSql),
+       |sizes AS ($shingleSizesSql)""".stripMargin
+
+  /** The `numHashes` seeded md5 minima over a `ws` row's shingle list
+    * `sh`, as a DuckDB list: the SQL twin of [[minhashSignatures]]. */
+  private def minhashSigSql(numHashes: Int): String =
+    (0 until numHashes).map { i =>
+      s"""list_min(list_transform(sh, s ->
+         |      ('0x' || substr(md5('$i:' || s), 1, 15))::BIGINT))""".stripMargin
+    }.mkString("[\n    ", ",\n    ", "]")
+
+  /** `ws`, `shingled`, `sizes` and `common`: the MinHash oracles' chain. */
+  private val shingleOverlapCtes: String =
+    s"""$wsCte, $shingledFromWsCte, sizes AS (
+       |  $shingleSizesSql
+       |), common AS (
+       |  $shingleCommonSql
+       |)""".stripMargin
+
   /** Source bytes per 32-bucket unit of the staged index layouts —
     * anchored so the sf0.1 harness snapshot (≈580 KB of documents)
     * derives exactly the 32-bucket baseline; a production deployment
@@ -262,18 +323,11 @@ object Dedup {
   }
 
   def containmentPairsSql(thresholdPpm: Long = 800000L): String =
-    s"""WITH shingled AS (
-       |  SELECT doc_id, unnest(list_distinct(list_transform(
-       |    range(len(string_split(text, ' ')) - 2),
-       |    i -> string_split(text, ' ')[i+1] || ' ' ||
-       |         string_split(text, ' ')[i+2] || ' ' ||
-       |         string_split(text, ' ')[i+3]))) AS shingle
-       |  FROM documents),
-       |sizes AS (SELECT doc_id, count(*) AS n FROM shingled GROUP BY doc_id),
+    s"""WITH $shingledSizesCtes,
        |pairs AS (
        |  SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, count(*) AS inter
        |  FROM shingled a JOIN shingled b
-       |    ON a.shingle = b.shingle AND a.doc_id < b.doc_id
+       |    $shinglePairOn
        |  GROUP BY 1, 2)
        |SELECT p.doc_a, p.doc_b, CAST(p.inter AS BIGINT) AS inter,
        |       CAST(sa.n AS BIGINT) AS na, CAST(sb.n AS BIGINT) AS nb,
@@ -285,25 +339,15 @@ object Dedup {
        |WHERE p.inter * 1000000 // least(sa.n, sb.n) >= $thresholdPpm""".stripMargin
 
   val ngramJaccardSql: String =
-    """WITH shingled AS (
-      |  SELECT doc_id, unnest(list_distinct(list_transform(
-      |    range(len(string_split(text, ' ')) - 2),
-      |    i -> string_split(text, ' ')[i+1] || ' ' ||
-      |         string_split(text, ' ')[i+2] || ' ' ||
-      |         string_split(text, ' ')[i+3]))) AS shingle
-      |  FROM documents),
-      |sizes AS (SELECT doc_id, count(*) AS n FROM shingled GROUP BY doc_id),
-      |common AS (
-      |  SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, count(*) AS c
-      |  FROM shingled a JOIN shingled b
-      |    ON a.shingle = b.shingle AND a.doc_id < b.doc_id
-      |  GROUP BY 1, 2)
-      |SELECT doc_a, doc_b,
-      |       round(CAST(c AS DOUBLE) / (sa.n + sb.n - c), 6) AS jaccard
-      |FROM common
-      |JOIN sizes sa ON doc_a = sa.doc_id
-      |JOIN sizes sb ON doc_b = sb.doc_id
-      |WHERE CAST(c AS DOUBLE) / (sa.n + sb.n - c) >= 0.5""".stripMargin
+    s"""WITH $shingledSizesCtes,
+       |common AS (
+       |  $shingleCommonSql)
+       |SELECT doc_a, doc_b,
+       |       round(CAST(c AS DOUBLE) / (sa.n + sb.n - c), 6) AS jaccard
+       |FROM common
+       |JOIN sizes sa ON doc_a = sa.doc_id
+       |JOIN sizes sb ON doc_b = sb.doc_id
+       |WHERE CAST(c AS DOUBLE) / (sa.n + sb.n - c) >= 0.5""".stripMargin
 
   /** MinHash-LSH near-duplicate pairs, built directly on the dataflow (no
     * MLlib detour — `approxSimilarityJoin` spends most of its time in
@@ -388,18 +432,8 @@ object Dedup {
   def minhashDedupSql(numHashes: Int = 16, bands: Int = 4,
                       threshold: Double = 0.5): String = {
     val r = numHashes / bands
-    val mins = (0 until numHashes).map { i =>
-      s"""list_min(list_transform(sh, s ->
-         |      ('0x' || substr(md5('$i:' || s), 1, 15))::BIGINT))""".stripMargin
-    }.mkString("[\n    ", ",\n    ", "]")
-    s"""WITH ws AS (
-       |  SELECT doc_id, list_distinct(list_transform(
-       |    range(len(string_split(text, ' ')) - 2),
-       |    i -> string_split(text, ' ')[i+1] || ' ' ||
-       |         string_split(text, ' ')[i+2] || ' ' ||
-       |         string_split(text, ' ')[i+3])) AS sh
-       |  FROM documents
-       |), sigs AS (
+    val mins = minhashSigSql(numHashes)
+    s"""WITH $wsCte, sigs AS (
        |  SELECT doc_id, $mins AS sig
        |  FROM ws WHERE len(sh) > 0
        |), banded AS (
@@ -479,10 +513,7 @@ object Dedup {
     * Scala-computed S-curve literals. */
   def lshCurveSql(numHashes: Int = 16, bands: Int = 4): String = {
     val r = numHashes / bands
-    val mins = (0 until numHashes).map { i =>
-      s"""list_min(list_transform(sh, s ->
-         |      ('0x' || substr(md5('$i:' || s), 1, 15))::BIGINT))""".stripMargin
-    }.mkString("[\n    ", ",\n    ", "]")
+    val mins = minhashSigSql(numHashes)
     val collide = (0 until bands)
       .map(bd => s"sa.sig[${bd * r + 1} : ${bd * r + r}] = " +
         s"sb.sig[${bd * r + 1} : ${bd * r + r}]")
@@ -490,23 +521,7 @@ object Dedup {
     val ppmCase = sCurvePpm(numHashes, bands).zipWithIndex
       .map { case (p, k) => s"WHEN $k THEN $p" }
       .mkString("CASE bucket ", " ", " END")
-    s"""WITH ws AS (
-       |  SELECT doc_id, list_distinct(list_transform(
-       |    range(len(string_split(text, ' ')) - 2),
-       |    i -> string_split(text, ' ')[i+1] || ' ' ||
-       |         string_split(text, ' ')[i+2] || ' ' ||
-       |         string_split(text, ' ')[i+3])) AS sh
-       |  FROM documents
-       |), shingled AS (
-       |  SELECT doc_id, unnest(sh) AS shingle FROM ws
-       |), sizes AS (
-       |  SELECT doc_id, count(*) AS n FROM shingled GROUP BY doc_id
-       |), common AS (
-       |  SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, count(*) AS c
-       |  FROM shingled a JOIN shingled b
-       |    ON a.shingle = b.shingle AND a.doc_id < b.doc_id
-       |  GROUP BY 1, 2
-       |), sigs AS (
+    s"""WITH $shingleOverlapCtes, sigs AS (
        |  SELECT doc_id, $mins AS sig
        |  FROM ws WHERE len(sh) > 0
        |), flagged AS (
@@ -575,30 +590,11 @@ object Dedup {
   /** [[minhashErrorAudit]]'s oracle: q31's shingles, q32's signatures, the
     * identical integer error/band chain in DuckDB. */
   def minhashErrorAuditSql(numHashes: Int = 16): String = {
-    val mins = (0 until numHashes).map { i =>
-      s"""list_min(list_transform(sh, s ->
-         |      ('0x' || substr(md5('$i:' || s), 1, 15))::BIGINT))""".stripMargin
-    }.mkString("[\n    ", ",\n    ", "]")
+    val mins = minhashSigSql(numHashes)
     val m = (1 to numHashes)
       .map(i => s"(CASE WHEN sa.sig[$i] = sb.sig[$i] THEN 1 ELSE 0 END)")
       .mkString(" + ")
-    s"""WITH ws AS (
-       |  SELECT doc_id, list_distinct(list_transform(
-       |    range(len(string_split(text, ' ')) - 2),
-       |    i -> string_split(text, ' ')[i+1] || ' ' ||
-       |         string_split(text, ' ')[i+2] || ' ' ||
-       |         string_split(text, ' ')[i+3])) AS sh
-       |  FROM documents
-       |), shingled AS (
-       |  SELECT doc_id, unnest(sh) AS shingle FROM ws
-       |), sizes AS (
-       |  SELECT doc_id, count(*) AS n FROM shingled GROUP BY doc_id
-       |), common AS (
-       |  SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, count(*) AS c
-       |  FROM shingled a JOIN shingled b
-       |    ON a.shingle = b.shingle AND a.doc_id < b.doc_id
-       |  GROUP BY 1, 2
-       |), sigs AS (
+    s"""WITH $shingleOverlapCtes, sigs AS (
        |  SELECT doc_id, $mins AS sig
        |  FROM ws WHERE len(sh) > 0
        |), per_pair AS (
@@ -724,23 +720,7 @@ object Dedup {
   // object — a plain val would freeze "null" into every calibration
   // oracle (the clusterCanonicalSql initialization-order lesson)
   private lazy val calibrationPairCtes: String =
-    s"""ws AS (
-      |  SELECT doc_id, list_distinct(list_transform(
-      |    range(len(string_split(text, ' ')) - 2),
-      |    i -> string_split(text, ' ')[i+1] || ' ' ||
-      |         string_split(text, ' ')[i+2] || ' ' ||
-      |         string_split(text, ' ')[i+3])) AS sh
-      |  FROM documents
-      |), shingled AS (
-      |  SELECT doc_id, unnest(sh) AS shingle FROM ws
-      |), sizes AS (
-      |  SELECT doc_id, count(*) AS n FROM shingled GROUP BY doc_id
-      |), common AS (
-      |  SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, count(*) AS c
-      |  FROM shingled a JOIN shingled b
-      |    ON a.shingle = b.shingle AND a.doc_id < b.doc_id
-      |  GROUP BY 1, 2
-      |), $simhashSigCtes, pair_base AS (
+    s"""$shingleOverlapCtes, $simhashSigCtes, pair_base AS (
       |  SELECT p.doc_a, p.doc_b,
       |         least((p.c * 10) // (sa.n + sb.n - p.c), 9) AS bucket,
       |         CAST(bit_count(xor(ga.simhash, gb.simhash)) AS BIGINT)
@@ -787,6 +767,37 @@ object Dedup {
         s"  SELECT doc_id, simhash, $b AS band," +
           s" (simhash >> $off) & ${(1L << w) - 1} AS key FROM sigs"
     }.mkString("\n  UNION ALL\n")
+
+  /** `skeep`, `sbkg` and `spairs(doc_a, doc_b)`: the SimHash router's
+    * candidate pairs over `sbk`, band buckets above `cap` dropped. */
+  private def governedSimhashPairsCtes(cap: Long): String =
+    s"""skeep AS (
+       |  SELECT band, key FROM sbk GROUP BY band, key
+       |  HAVING count(*) <= $cap
+       |), sbkg AS (
+       |  SELECT s.doc_id, s.simhash, s.band, s.key
+       |  FROM sbk s JOIN skeep k ON s.band = k.band AND s.key = k.key
+       |), spairs AS (
+       |  SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
+       |  FROM sbkg a JOIN sbkg b ON a.band = b.band AND a.key = b.key
+       |  WHERE a.doc_id < b.doc_id
+       |    AND bit_count(xor(a.simhash, b.simhash)) <= 7
+       |)""".stripMargin
+
+  /** `mkeep`, `mbkg` and `mpairs(doc_a, doc_b)`: the MinHash band
+    * candidate pairs over `mbk`, band buckets above `cap` dropped. */
+  private def governedMinhashPairsCtes(cap: Long): String =
+    s"""mkeep AS (
+       |  SELECT band, key FROM mbk GROUP BY band, key
+       |  HAVING count(*) <= $cap
+       |), mbkg AS (
+       |  SELECT m.doc_id, m.band, m.key
+       |  FROM mbk m JOIN mkeep k ON m.band = k.band AND m.key = k.key
+       |), mpairs AS (
+       |  SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
+       |  FROM mbkg a JOIN mbkg b ON a.band = b.band AND a.key = b.key
+       |  WHERE a.doc_id < b.doc_id
+       |)""".stripMargin
 
   /** The q33 SimHash signature CTE chain ending in `sigs(doc_id,
     * simhash)` — ONE definition shared by [[calibrationPairCtes]] and
@@ -961,41 +972,17 @@ object Dedup {
   def routedNearDupAuditSql(numHashes: Int = 16, bands: Int = 4,
       cap: Long = RouterBucketCap): String = {
     val r = numHashes / bands
-    val mins = (0 until numHashes).map { i =>
-      s"""list_min(list_transform(sh, s ->
-         |      ('0x' || substr(md5('$i:' || s), 1, 15))::BIGINT))""".stripMargin
-    }.mkString("[\n    ", ",\n    ", "]")
+    val mins = minhashSigSql(numHashes)
     s"""WITH $calibrationPairCtes, msigs AS (
        |  SELECT doc_id, $mins AS msig
        |  FROM ws WHERE len(sh) > 0
        |), sbk AS (
        |$routerBandKeysSql
-       |), skeep AS (
-       |  SELECT band, key FROM sbk GROUP BY band, key
-       |  HAVING count(*) <= $cap
-       |), sbkg AS (
-       |  SELECT s.doc_id, s.simhash, s.band, s.key
-       |  FROM sbk s JOIN skeep k ON s.band = k.band AND s.key = k.key
-       |), spairs AS (
-       |  SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
-       |  FROM sbkg a JOIN sbkg b ON a.band = b.band AND a.key = b.key
-       |  WHERE a.doc_id < b.doc_id
-       |    AND bit_count(xor(a.simhash, b.simhash)) <= 7
-       |), mbk AS (
+       |), ${governedSimhashPairsCtes(cap)}, mbk AS (
        |  SELECT doc_id, b.band AS band,
        |         msig[b.band * $r + 1 : b.band * $r + $r] AS key
        |  FROM msigs, (SELECT unnest(range($bands)) AS band) b
-       |), mkeep AS (
-       |  SELECT band, key FROM mbk GROUP BY band, key
-       |  HAVING count(*) <= $cap
-       |), mbkg AS (
-       |  SELECT m.doc_id, m.band, m.key
-       |  FROM mbk m JOIN mkeep k ON m.band = k.band AND m.key = k.key
-       |), mpairs AS (
-       |  SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
-       |  FROM mbkg a JOIN mbkg b ON a.band = b.band AND a.key = b.key
-       |  WHERE a.doc_id < b.doc_id
-       |), hits AS (
+       |), ${governedMinhashPairsCtes(cap)}, hits AS (
        |  SELECT pb.bucket,
        |         sp.doc_a IS NOT NULL AS sh_hit,
        |         mp.doc_a IS NOT NULL AS mh_hit
@@ -1210,42 +1197,18 @@ object Dedup {
     * ppm P/R re-derived end to end. */
   def routedDedupRemovalSql(truthPpm: Long = 800000L,
       cap: Long = RouterBucketCap): String = {
-    val mins = (0 until 16).map { i =>
-      s"""list_min(list_transform(sh, s ->
-         |      ('0x' || substr(md5('$i:' || s), 1, 15))::BIGINT))""".stripMargin
-    }.mkString("[\n    ", ",\n    ", "]")
+    val mins = minhashSigSql(16)
     val sbkArms = routerBandKeysSql
     s"""WITH RECURSIVE $calibrationPairCtes, msigs AS (
        |  SELECT doc_id, $mins AS msig
        |  FROM ws WHERE len(sh) > 0
        |), sbk AS (
        |$sbkArms
-       |), skeep AS (
-       |  SELECT band, key FROM sbk GROUP BY band, key
-       |  HAVING count(*) <= $cap
-       |), sbkg AS (
-       |  SELECT s.doc_id, s.simhash, s.band, s.key
-       |  FROM sbk s JOIN skeep k ON s.band = k.band AND s.key = k.key
-       |), spairs AS (
-       |  SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
-       |  FROM sbkg a JOIN sbkg b ON a.band = b.band AND a.key = b.key
-       |  WHERE a.doc_id < b.doc_id
-       |    AND bit_count(xor(a.simhash, b.simhash)) <= 7
-       |), mbk AS (
+       |), ${governedSimhashPairsCtes(cap)}, mbk AS (
        |  SELECT doc_id, b.band AS band,
        |         msig[b.band * 4 + 1 : b.band * 4 + 4] AS key
        |  FROM msigs, (SELECT unnest(range(4)) AS band) b
-       |), mkeep AS (
-       |  SELECT band, key FROM mbk GROUP BY band, key
-       |  HAVING count(*) <= $cap
-       |), mbkg AS (
-       |  SELECT m.doc_id, m.band, m.key
-       |  FROM mbk m JOIN mkeep k ON m.band = k.band AND m.key = k.key
-       |), mpairs AS (
-       |  SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
-       |  FROM mbkg a JOIN mbkg b ON a.band = b.band AND a.key = b.key
-       |  WHERE a.doc_id < b.doc_id
-       |), pred AS (
+       |), ${governedMinhashPairsCtes(cap)}, pred AS (
        |  SELECT doc_a, doc_b FROM spairs
        |  UNION
        |  SELECT doc_a, doc_b FROM mpairs
@@ -2019,20 +1982,10 @@ object Dedup {
     * layouts re-derived, per-bucket occupancies aggregated identically. */
   def routerCandidateCensusSql: String = {
     val sbkArms = routerBandKeysSql
-    val mins = (0 until 16).map { i =>
-      s"""list_min(list_transform(sh, s ->
-         |      ('0x' || substr(md5('$i:' || s), 1, 15))::BIGINT))""".stripMargin
-    }.mkString("[\n    ", ",\n    ", "]")
+    val mins = minhashSigSql(16)
     s"""WITH $simhashSigCtes, sbk AS (
        |$sbkArms
-       |), ws AS (
-       |  SELECT doc_id, list_distinct(list_transform(
-       |    range(len(string_split(text, ' ')) - 2),
-       |    i -> string_split(text, ' ')[i+1] || ' ' ||
-       |         string_split(text, ' ')[i+2] || ' ' ||
-       |         string_split(text, ' ')[i+3])) AS sh
-       |  FROM documents
-       |), msigs AS (
+       |), $wsCte, msigs AS (
        |  SELECT doc_id, $mins AS msig
        |  FROM ws WHERE len(sh) > 0
        |), mbk AS (
@@ -2233,27 +2186,18 @@ object Dedup {
     * audit's totals are the FULL corpus's index sizes with zero one-sided
     * rows — re-derived from the documents table alone. */
   val incrementalIndexAuditSql: String =
-    """WITH ws AS (
-      |  SELECT doc_id, list_distinct(list_transform(
-      |    range(len(string_split(text, ' ')) - 2),
-      |    i -> string_split(text, ' ')[i+1] || ' ' ||
-      |         string_split(text, ' ')[i+2] || ' ' ||
-      |         string_split(text, ' ')[i+3])) AS sh
-      |  FROM documents
-      |), shingled AS (
-      |  SELECT doc_id, unnest(sh) AS shingle FROM ws
-      |)
-      |SELECT 'shingles_k3' AS artifact,
-      |       CAST((SELECT count(*) FROM shingled) AS BIGINT)
-      |         AS n_incremental,
-      |       CAST((SELECT count(*) FROM shingled) AS BIGINT) AS n_rebuild,
-      |       CAST(0 AS BIGINT) AS n_only_incremental,
-      |       CAST(0 AS BIGINT) AS n_only_rebuild
-      |UNION ALL
-      |SELECT 'minhash16',
-      |       CAST((SELECT count(*) FROM ws WHERE len(sh) > 0) AS BIGINT),
-      |       CAST((SELECT count(*) FROM ws WHERE len(sh) > 0) AS BIGINT),
-      |       CAST(0 AS BIGINT), CAST(0 AS BIGINT)""".stripMargin
+    s"""WITH $wsCte, $shingledFromWsCte
+       |SELECT 'shingles_k3' AS artifact,
+       |       CAST((SELECT count(*) FROM shingled) AS BIGINT)
+       |         AS n_incremental,
+       |       CAST((SELECT count(*) FROM shingled) AS BIGINT) AS n_rebuild,
+       |       CAST(0 AS BIGINT) AS n_only_incremental,
+       |       CAST(0 AS BIGINT) AS n_only_rebuild
+       |UNION ALL
+       |SELECT 'minhash16',
+       |       CAST((SELECT count(*) FROM ws WHERE len(sh) > 0) AS BIGINT),
+       |       CAST((SELECT count(*) FROM ws WHERE len(sh) > 0) AS BIGINT),
+       |       CAST(0 AS BIGINT), CAST(0 AS BIGINT)""".stripMargin
 
   // ---------------------------------------------------------------- q303
 
@@ -2314,27 +2258,21 @@ object Dedup {
     * audit totals are the SURVIVING corpus's index sizes with zero
     * one-sided rows — re-derived from the documents table alone. */
   val indexDeleteAuditSql: String =
-    """WITH ws AS (
-      |  SELECT doc_id, list_distinct(list_transform(
-      |    range(len(string_split(text, ' ')) - 2),
-      |    i -> string_split(text, ' ')[i+1] || ' ' ||
-      |         string_split(text, ' ')[i+2] || ' ' ||
-      |         string_split(text, ' ')[i+3])) AS sh
-      |  FROM documents WHERE doc_id % 97 <> 0
-      |), shingled AS (
-      |  SELECT doc_id, unnest(sh) AS shingle FROM ws
-      |)
-      |SELECT 'shingles_k3' AS artifact,
-      |       CAST((SELECT count(*) FROM shingled) AS BIGINT)
-      |         AS n_after_delete,
-      |       CAST((SELECT count(*) FROM shingled) AS BIGINT) AS n_rebuild,
-      |       CAST(0 AS BIGINT) AS n_only_deleted,
-      |       CAST(0 AS BIGINT) AS n_only_rebuild
-      |UNION ALL
-      |SELECT 'minhash16',
-      |       CAST((SELECT count(*) FROM ws WHERE len(sh) > 0) AS BIGINT),
-      |       CAST((SELECT count(*) FROM ws WHERE len(sh) > 0) AS BIGINT),
-      |       CAST(0 AS BIGINT), CAST(0 AS BIGINT)""".stripMargin
+    s"""WITH ws AS (
+       |  SELECT doc_id, $shingleListSql AS sh
+       |  FROM documents WHERE doc_id % 97 <> 0
+       |), $shingledFromWsCte
+       |SELECT 'shingles_k3' AS artifact,
+       |       CAST((SELECT count(*) FROM shingled) AS BIGINT)
+       |         AS n_after_delete,
+       |       CAST((SELECT count(*) FROM shingled) AS BIGINT) AS n_rebuild,
+       |       CAST(0 AS BIGINT) AS n_only_deleted,
+       |       CAST(0 AS BIGINT) AS n_only_rebuild
+       |UNION ALL
+       |SELECT 'minhash16',
+       |       CAST((SELECT count(*) FROM ws WHERE len(sh) > 0) AS BIGINT),
+       |       CAST((SELECT count(*) FROM ws WHERE len(sh) > 0) AS BIGINT),
+       |       CAST(0 AS BIGINT), CAST(0 AS BIGINT)""".stripMargin
 
   // ---------------------------------------------------------------- q305
 
@@ -2483,19 +2421,9 @@ object Dedup {
   /** Oracle for [[dedupSweep]]: q31's pair construction, the same ppm
     * chain, the same literal threshold list. */
   def dedupSweepSql(): String =
-    s"""WITH shingled AS (
-       |  SELECT doc_id, unnest(list_distinct(list_transform(
-       |    range(len(string_split(text, ' ')) - 2),
-       |    i -> string_split(text, ' ')[i+1] || ' ' ||
-       |         string_split(text, ' ')[i+2] || ' ' ||
-       |         string_split(text, ' ')[i+3]))) AS shingle
-       |  FROM documents),
-       |sizes AS (SELECT doc_id, count(*) AS n FROM shingled GROUP BY doc_id),
+    s"""WITH $shingledSizesCtes,
        |common AS (
-       |  SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, count(*) AS c
-       |  FROM shingled a JOIN shingled b
-       |    ON a.shingle = b.shingle AND a.doc_id < b.doc_id
-       |  GROUP BY 1, 2),
+       |  $shingleCommonSql),
        |scored AS (
        |  SELECT p.doc_b, (p.c * 1000000) // (sa.n + sb.n - p.c) AS jppm
        |  FROM common p
@@ -2579,22 +2507,7 @@ object Dedup {
     * Spark aggregator — same sums), value-identical banding and Hamming
     * confirm. */
   def simhashPairsSql(maxHamming: Int = 3): String =
-    s"""WITH toks AS (
-       |  SELECT doc_id, unnest(string_split(text, ' ')) AS tok FROM documents
-       |), hs AS (
-       |  SELECT doc_id, ('0x' || substr(md5(tok), 1, 15))::BIGINT AS h
-       |  FROM toks
-       |), votes AS (
-       |  SELECT doc_id, b.b AS b,
-       |         sum(CASE WHEN (h >> b.b) & 1 = 1 THEN 1 ELSE -1 END) AS v
-       |  FROM hs, (SELECT unnest(range(60)) AS b) b
-       |  GROUP BY doc_id, b.b
-       |), sigs AS (
-       |  SELECT doc_id,
-       |         CAST(sum(CASE WHEN v > 0 THEN 1::BIGINT << b ELSE 0 END)
-       |              AS BIGINT) AS simhash
-       |  FROM votes GROUP BY doc_id
-       |), banded AS (
+    s"""WITH $simhashSigCtes, banded AS (
        |  SELECT doc_id, simhash, b.band AS band,
        |         (simhash >> (b.band * 16)) & 65535 AS key
        |  FROM sigs, (SELECT unnest(range(4)) AS band) b
@@ -2775,6 +2688,15 @@ object Dedup {
       connectedComponents(
         ngramPairsPrepared(spark, dir).select(col("doc_a"), col("doc_b"))))
 
+  /** `reach(src, dst)`: the recursive transitive closure of an `edges`
+    * CTE, under every connected-components oracle. */
+  private[graft] val reachCte: String =
+    """reach(src, dst) AS (
+      |  SELECT src, dst FROM edges
+      |  UNION
+      |  SELECT r.src, e.dst FROM reach r JOIN edges e ON r.dst = e.src
+      |)""".stripMargin
+
   /** The recursive-closure CTE chain ending in `cl(doc_id, cluster_id)` —
     * shared by the q35 oracle and q134's canonical-pick oracle. */
   private[operators] val clusterCtes: String =
@@ -2784,11 +2706,7 @@ object Dedup {
        |  SELECT doc_a AS src, doc_b AS dst FROM pairs
        |  UNION
        |  SELECT doc_b AS src, doc_a AS dst FROM pairs
-       |), reach(src, dst) AS (
-       |  SELECT src, dst FROM edges
-       |  UNION
-       |  SELECT r.src, e.dst FROM reach r JOIN edges e ON r.dst = e.src
-       |), cl AS (
+       |), $reachCte, cl AS (
        |  SELECT src AS doc_id, least(src, min(dst)) AS cluster_id
        |  FROM reach GROUP BY src
        |)""".stripMargin
@@ -3102,24 +3020,19 @@ object Dedup {
   }
 
   val noveltyScoreSql: String =
-    """WITH shingled AS (
-      |  SELECT doc_id, unnest(list_distinct(list_transform(
-      |    range(len(string_split(text, ' ')) - 2),
-      |    i -> string_split(text, ' ')[i+1] || ' ' ||
-      |         string_split(text, ' ')[i+2] || ' ' ||
-      |         string_split(text, ' ')[i+3]))) AS shingle
-      |  FROM documents
-      |), freq AS (
-      |  SELECT shingle, count(*) AS df FROM shingled GROUP BY shingle
-      |)
-      |SELECT doc_id, count(*) AS n_shingles,
-      |       CAST(sum(CASE WHEN df = 1 THEN 1 ELSE 0 END) AS BIGINT)
-      |         AS n_unique,
-      |       CAST(floor(CAST(sum(CASE WHEN df = 1 THEN 1 ELSE 0 END)
-      |                       AS BIGINT) * 1000000
-      |                  / count(*)) AS BIGINT) AS novelty_ppm
-      |FROM shingled JOIN freq USING (shingle)
-      |GROUP BY doc_id""".stripMargin
+    s"""WITH shingled AS (
+       |  $shingledRowsSql
+       |), freq AS (
+       |  SELECT shingle, count(*) AS df FROM shingled GROUP BY shingle
+       |)
+       |SELECT doc_id, count(*) AS n_shingles,
+       |       CAST(sum(CASE WHEN df = 1 THEN 1 ELSE 0 END) AS BIGINT)
+       |         AS n_unique,
+       |       CAST(floor(CAST(sum(CASE WHEN df = 1 THEN 1 ELSE 0 END)
+       |                       AS BIGINT) * 1000000
+       |                  / count(*)) AS BIGINT) AS novelty_ppm
+       |FROM shingled JOIN freq USING (shingle)
+       |GROUP BY doc_id""".stripMargin
 
   /** q142 — cross-split leakage audit: near-duplicate pairs whose members
     * land in DIFFERENT train/val/test splits under the q47 assignment —
@@ -3550,14 +3463,9 @@ object Dedup {
        |       AND (NOT m.is_new OR m.doc_id < n.doc_id)
        |  GROUP BY n.doc_id
        |), shingled AS (
-       |  SELECT doc_id, unnest(list_distinct(list_transform(
-       |    range(len(string_split(text, ' ')) - 2),
-       |    i -> string_split(text, ' ')[i+1] || ' ' ||
-       |         string_split(text, ' ')[i+2] || ' ' ||
-       |         string_split(text, ' ')[i+3]))) AS shingle
-       |  FROM documents
+       |  $shingledRowsSql
        |), sizes AS (
-       |  SELECT doc_id, count(*) AS n FROM shingled GROUP BY doc_id
+       |  $shingleSizesSql
        |), common AS (
        |  SELECT a.doc_id, b.doc_id AS m_id, count(*) AS c
        |  FROM shingled a JOIN shingled b ON a.shingle = b.shingle
@@ -3622,12 +3530,7 @@ object Dedup {
 
   def weightedJaccardSql(thresholdPpm: Long = 500000L): String =
     s"""WITH shingled AS (
-       |  SELECT doc_id, unnest(list_distinct(list_transform(
-       |    range(len(string_split(text, ' ')) - 2),
-       |    i -> string_split(text, ' ')[i+1] || ' ' ||
-       |         string_split(text, ' ')[i+2] || ' ' ||
-       |         string_split(text, ' ')[i+3]))) AS shingle
-       |  FROM documents
+       |  $shingledRowsSql
        |), wsh AS (
        |  SELECT doc_id, shingle, CAST(1000000 // df AS BIGINT) AS w
        |  FROM shingled
@@ -3639,7 +3542,7 @@ object Dedup {
        |  SELECT a.doc_id AS doc_a, b.doc_id AS doc_b,
        |         CAST(sum(a.w) AS BIGINT) AS inter_w
        |  FROM wsh a JOIN wsh b
-       |    ON a.shingle = b.shingle AND a.doc_id < b.doc_id
+       |    $shinglePairOn
        |  GROUP BY 1, 2)
        |SELECT doc_a, doc_b,
        |       CAST(inter_w * 1000000 // (sa.tw + sb.tw - inter_w) AS BIGINT)
@@ -3762,27 +3665,23 @@ object Dedup {
   }
 
   val gramNoveltySql: String =
-    """WITH g AS (
-      |  SELECT doc_id, unnest(list_distinct(list_transform(
-      |    range(len(string_split(text, ' ')) - 2),
-      |    i -> string_split(text, ' ')[i+1] || ' ' ||
-      |         string_split(text, ' ')[i+2] || ' ' ||
-      |         string_split(text, ' ')[i+3]))) AS gram
-      |  FROM documents
-      |), fo AS (
-      |  SELECT gram, min(doc_id) AS first_doc FROM g GROUP BY gram
-      |), per AS (
-      |  SELECT g.doc_id, count(*) AS n_grams,
-      |         sum(CASE WHEN fo.first_doc = g.doc_id THEN 1 ELSE 0 END)
-      |           AS n_novel
-      |  FROM g JOIN fo ON g.gram = fo.gram
-      |  GROUP BY g.doc_id)
-      |SELECT d.doc_id,
-      |       CAST(coalesce(per.n_grams, 0) AS BIGINT) AS n_grams,
-      |       CAST(coalesce(per.n_novel, 0) AS BIGINT) AS n_novel,
-      |       CAST(coalesce(per.n_novel * 1000000 // per.n_grams, 0) AS BIGINT)
-      |         AS novelty_ppm
-      |FROM documents d LEFT JOIN per ON d.doc_id = per.doc_id""".stripMargin
+    s"""WITH g AS (
+       |  SELECT doc_id, unnest($shingleListSql) AS gram
+       |  FROM documents
+       |), fo AS (
+       |  SELECT gram, min(doc_id) AS first_doc FROM g GROUP BY gram
+       |), per AS (
+       |  SELECT g.doc_id, count(*) AS n_grams,
+       |         sum(CASE WHEN fo.first_doc = g.doc_id THEN 1 ELSE 0 END)
+       |           AS n_novel
+       |  FROM g JOIN fo ON g.gram = fo.gram
+       |  GROUP BY g.doc_id)
+       |SELECT d.doc_id,
+       |       CAST(coalesce(per.n_grams, 0) AS BIGINT) AS n_grams,
+       |       CAST(coalesce(per.n_novel, 0) AS BIGINT) AS n_novel,
+       |       CAST(coalesce(per.n_novel * 1000000 // per.n_grams, 0) AS BIGINT)
+       |         AS novelty_ppm
+       |FROM documents d LEFT JOIN per ON d.doc_id = per.doc_id""".stripMargin
 
   /** q261 — PREFIX-FILTERED set-similarity self-join (the PPJoin family:
     * Xiao et al., "Efficient Similarity Joins for Near Duplicate Detection",
@@ -3916,42 +3815,35 @@ object Dedup {
     * same integer prefix length, length filter and final test) —
     * independent implementation, shared math. */
   val prefixSimJoinSql: String =
-    """WITH ws AS (
-      |  SELECT doc_id, list_distinct(list_transform(
-      |    range(len(string_split(text, ' ')) - 2),
-      |    i -> string_split(text, ' ')[i+1] || ' ' ||
-      |         string_split(text, ' ')[i+2] || ' ' ||
-      |         string_split(text, ' ')[i+3])) AS sh
-      |  FROM documents
-      |), tok AS (
-      |  SELECT doc_id, unnest(sh) AS w FROM ws
-      |), df AS (
-      |  SELECT w, count(*) AS df FROM tok GROUP BY w
-      |), ranked AS (
-      |  SELECT t.doc_id, t.w,
-      |         row_number() OVER (PARTITION BY t.doc_id
-      |                            ORDER BY d.df ASC, t.w ASC) AS rnk,
-      |         count(*) OVER (PARTITION BY t.doc_id) AS n
-      |  FROM tok t JOIN df d USING (w)
-      |), pre AS (
-      |  SELECT doc_id, w, n FROM ranked
-      |  WHERE rnk <= n - (3 * n + 4) // 5 + 1
-      |), cand AS (
-      |  SELECT DISTINCT a.doc_id AS a_id, b.doc_id AS b_id,
-      |         a.n AS na, b.n AS nb
-      |  FROM pre a JOIN pre b ON a.w = b.w AND a.doc_id < b.doc_id
-      |  WHERE 5 * least(a.n, b.n) >= 3 * greatest(a.n, b.n)
-      |), inter AS (
-      |  SELECT c.a_id, c.b_id, any_value(c.na) AS n_a, any_value(c.nb) AS n_b,
-      |         count(*) AS inter_cnt
-      |  FROM cand c
-      |  JOIN tok ta ON ta.doc_id = c.a_id
-      |  JOIN tok tb ON tb.doc_id = c.b_id AND tb.w = ta.w
-      |  GROUP BY c.a_id, c.b_id
-      |)
-      |SELECT a_id, b_id, CAST(n_a AS BIGINT) AS n_a, CAST(n_b AS BIGINT) AS n_b,
-      |       CAST(inter_cnt AS BIGINT) AS inter_cnt,
-      |       CAST(inter_cnt * 1000000 // (n_a + n_b - inter_cnt) AS BIGINT)
-      |         AS jac_e6
-      |FROM inter WHERE inter_cnt * 8 >= (n_a + n_b) * 3""".stripMargin
+    s"""WITH $wsCte, tok AS (
+       |  SELECT doc_id, unnest(sh) AS w FROM ws
+       |), df AS (
+       |  SELECT w, count(*) AS df FROM tok GROUP BY w
+       |), ranked AS (
+       |  SELECT t.doc_id, t.w,
+       |         row_number() OVER (PARTITION BY t.doc_id
+       |                            ORDER BY d.df ASC, t.w ASC) AS rnk,
+       |         count(*) OVER (PARTITION BY t.doc_id) AS n
+       |  FROM tok t JOIN df d USING (w)
+       |), pre AS (
+       |  SELECT doc_id, w, n FROM ranked
+       |  WHERE rnk <= n - (3 * n + 4) // 5 + 1
+       |), cand AS (
+       |  SELECT DISTINCT a.doc_id AS a_id, b.doc_id AS b_id,
+       |         a.n AS na, b.n AS nb
+       |  FROM pre a JOIN pre b ON a.w = b.w AND a.doc_id < b.doc_id
+       |  WHERE 5 * least(a.n, b.n) >= 3 * greatest(a.n, b.n)
+       |), inter AS (
+       |  SELECT c.a_id, c.b_id, any_value(c.na) AS n_a, any_value(c.nb) AS n_b,
+       |         count(*) AS inter_cnt
+       |  FROM cand c
+       |  JOIN tok ta ON ta.doc_id = c.a_id
+       |  JOIN tok tb ON tb.doc_id = c.b_id AND tb.w = ta.w
+       |  GROUP BY c.a_id, c.b_id
+       |)
+       |SELECT a_id, b_id, CAST(n_a AS BIGINT) AS n_a, CAST(n_b AS BIGINT) AS n_b,
+       |       CAST(inter_cnt AS BIGINT) AS inter_cnt,
+       |       CAST(inter_cnt * 1000000 // (n_a + n_b - inter_cnt) AS BIGINT)
+       |         AS jac_e6
+       |FROM inter WHERE inter_cnt * 8 >= (n_a + n_b) * 3""".stripMargin
 }

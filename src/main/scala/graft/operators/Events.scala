@@ -342,18 +342,23 @@ object Events {
         col("purchase_id"), col("p_t").as("purchase_t"))
   }
 
-  val asofLastPurchaseSql: String =
-    """WITH clicks AS (
+  /** `clicks(user_id, t, click_id)` and `purch(user_id, t, purchase_id)`:
+    * the click and purchase sides of the click-to-purchase oracles. */
+  private val clicksPurchasesCtes: String =
+    """clicks AS (
       |  SELECT user_id, epoch_ms(CAST(ts AS TIMESTAMP)) AS t,
       |         event_id AS click_id
       |  FROM events WHERE event_type = 'click'),
       |purch AS (
       |  SELECT user_id, epoch_ms(CAST(ts AS TIMESTAMP)) AS t,
       |         max(event_id) AS purchase_id
-      |  FROM events WHERE event_type = 'purchase' GROUP BY 1, 2)
-      |SELECT c.click_id, c.user_id, p.purchase_id, p.t AS purchase_t
-      |FROM clicks c ASOF LEFT JOIN purch p
-      |  ON c.user_id = p.user_id AND c.t >= p.t""".stripMargin
+      |  FROM events WHERE event_type = 'purchase' GROUP BY 1, 2)""".stripMargin
+
+  val asofLastPurchaseSql: String =
+    s"""WITH $clicksPurchasesCtes
+       |SELECT c.click_id, c.user_id, p.purchase_id, p.t AS purchase_t
+       |FROM clicks c ASOF LEFT JOIN purch p
+       |  ON c.user_id = p.user_id AND c.t >= p.t""".stripMargin
 
   /** q172 — event DEBOUNCE: collapse each user's repeats of an event type
     * inside a 5-minute epoch-aligned window to its FIRST delivery (min
@@ -476,14 +481,7 @@ object Events {
   }
 
   def clickConversionForwardSql(windowMs: Long = 2L * 3600 * 1000): String =
-    s"""WITH clicks AS (
-       |  SELECT user_id, epoch_ms(CAST(ts AS TIMESTAMP)) AS t,
-       |         event_id AS click_id
-       |  FROM events WHERE event_type = 'click'),
-       |purch AS (
-       |  SELECT user_id, epoch_ms(CAST(ts AS TIMESTAMP)) AS t,
-       |         max(event_id) AS purchase_id
-       |  FROM events WHERE event_type = 'purchase' GROUP BY 1, 2)
+    s"""WITH $clicksPurchasesCtes
        |SELECT c.click_id, c.user_id, c.t AS click_t,
        |       CASE WHEN p.t - c.t <= $windowMs THEN p.purchase_id END
        |         AS purchase_id,
@@ -1328,6 +1326,65 @@ object Events {
     when(substring(md5(userId.cast(StringType)), 1, 1) < "8", "A")
       .otherwise("B")
 
+  // The experiment oracles' shared SQL. Plain vals: every val that
+  // interpolates them is declared below.
+
+  /** SQL twin of [[variantOf]] over `user_id`. */
+  private val variantSql: String =
+    """CASE WHEN substr(md5(CAST(user_id AS VARCHAR)), 1, 1) < '8'
+      |              THEN 'A' ELSE 'B' END""".stripMargin
+
+  /** |mean_A(x) − mean_B(x)| over rows tagged `v`: the permutation
+    * oracles' test statistic. */
+  private val armMeanGapSql: String =
+    """abs(CAST(sum(CASE WHEN v = 'A' THEN x END) AS DOUBLE)
+      |               / CAST(sum(CASE WHEN v = 'A' THEN 1 ELSE 0 END)
+      |                      AS DOUBLE)
+      |             - CAST(sum(CASE WHEN v = 'B' THEN x END) AS DOUBLE)
+      |               / CAST(sum(CASE WHEN v = 'B' THEN 1 ELSE 0 END)
+      |                      AS DOUBLE))""".stripMargin
+
+  /** `pu(user_id, x)`: per-user purchase micros, the aggregate of
+    * [[purchaseMicrosByVariant]]. */
+  private val purchaseMicrosCte: String =
+    """pu AS (
+      |  SELECT user_id,
+      |         CAST(sum(CASE WHEN event_type = 'purchase'
+      |                       THEN CAST(value AS DECIMAL(24,6))
+      |                       ELSE CAST(0 AS DECIMAL(24,6)) END) * 1000000
+      |              AS BIGINT) AS x
+      |  FROM events GROUP BY user_id
+      |)""".stripMargin
+
+  /** [[purchaseMicrosCte]] plus `pv(variant, x)`, the tagged arms. */
+  private val purchaseArmsCtes: String =
+    s"""$purchaseMicrosCte, pv AS (
+       |  SELECT $variantSql AS variant, x
+       |  FROM pu
+       |)""".stripMargin
+
+  /** `pu(user_id, x, y)` and `pv(variant, x, y)`: purchase micros before
+    * (x) and from (y) the 2024-01-16 cut, tagged by arm — the SQL twin of
+    * [[prePostMicrosByVariant]]. */
+  private val prePostArmsCtes: String =
+    s"""pu AS (
+       |  SELECT user_id,
+       |         CAST(sum(CASE WHEN event_type = 'purchase'
+       |                        AND ts < TIMESTAMP '2024-01-16 00:00:00'
+       |                       THEN CAST(value AS DECIMAL(24,6))
+       |                       ELSE CAST(0 AS DECIMAL(24,6)) END) * 1000000
+       |              AS BIGINT) AS x,
+       |         CAST(sum(CASE WHEN event_type = 'purchase'
+       |                        AND ts >= TIMESTAMP '2024-01-16 00:00:00'
+       |                       THEN CAST(value AS DECIMAL(24,6))
+       |                       ELSE CAST(0 AS DECIMAL(24,6)) END) * 1000000
+       |              AS BIGINT) AS y
+       |  FROM events GROUP BY user_id
+       |), pv AS (
+       |  SELECT $variantSql AS variant, x, y
+       |  FROM pu
+       |)""".stripMargin
+
   // ------------------------------------------------------ survival curve
 
   /** q250 — Kaplan-Meier HAZARD table over user lifetimes: for every
@@ -1480,10 +1537,9 @@ object Events {
        |CROSS JOIN t""".stripMargin
 
   val chiSquareSql: String = contingencyChi2Sql(
-    """  SELECT CASE WHEN substr(md5(CAST(user_id AS VARCHAR)), 1, 1) < '8'
-      |              THEN 'A' ELSE 'B' END AS variant,
-      |         event_type, CAST(count(*) AS BIGINT) AS n_obs
-      |  FROM events GROUP BY 1, 2""".stripMargin,
+    s"""  SELECT $variantSql AS variant,
+       |         event_type, CAST(count(*) AS BIGINT) AS n_obs
+       |  FROM events GROUP BY 1, 2""".stripMargin,
     "variant", "event_type")
 
   // ----------------------------------------------------- Mann-Whitney U
@@ -1524,39 +1580,28 @@ object Events {
   }
 
   val mannWhitneySql: String =
-    """WITH pu AS (
-      |  SELECT user_id,
-      |         CAST(sum(CASE WHEN event_type = 'purchase'
-      |                       THEN CAST(value AS DECIMAL(24,6))
-      |                       ELSE CAST(0 AS DECIMAL(24,6)) END) * 1000000
-      |              AS BIGINT) AS x
-      |  FROM events GROUP BY user_id
-      |), pv AS (
-      |  SELECT CASE WHEN substr(md5(CAST(user_id AS VARCHAR)), 1, 1) < '8'
-      |              THEN 'A' ELSE 'B' END AS variant, x
-      |  FROM pu
-      |), vals AS (
-      |  SELECT x,
-      |         CAST(sum(CASE WHEN variant = 'A' THEN 1 ELSE 0 END)
-      |              AS BIGINT) AS ca,
-      |         CAST(sum(CASE WHEN variant = 'B' THEN 1 ELSE 0 END)
-      |              AS BIGINT) AS cb
-      |  FROM pv GROUP BY x
-      |), cum AS (
-      |  SELECT x, ca, cb,
-      |         CAST(coalesce(sum(cb) OVER (ORDER BY x
-      |           ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0)
-      |           AS BIGINT) AS cumb
-      |  FROM vals
-      |), s AS (
-      |  SELECT CAST(sum(ca) AS BIGINT) AS n_a,
-      |         CAST(sum(cb) AS BIGINT) AS n_b,
-      |         CAST(sum(ca * (2 * cumb + cb)) AS BIGINT) AS u2_a
-      |  FROM cum)
-      |SELECT n_a, n_b, u2_a,
-      |       CAST(2 * n_a * n_b - u2_a AS BIGINT) AS u2_b,
-      |       CAST(u2_a * 1000000 // (2 * n_a * n_b) AS BIGINT) AS auc_ppm
-      |FROM s""".stripMargin
+    s"""WITH $purchaseArmsCtes, vals AS (
+       |  SELECT x,
+       |         CAST(sum(CASE WHEN variant = 'A' THEN 1 ELSE 0 END)
+       |              AS BIGINT) AS ca,
+       |         CAST(sum(CASE WHEN variant = 'B' THEN 1 ELSE 0 END)
+       |              AS BIGINT) AS cb
+       |  FROM pv GROUP BY x
+       |), cum AS (
+       |  SELECT x, ca, cb,
+       |         CAST(coalesce(sum(cb) OVER (ORDER BY x
+       |           ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0)
+       |           AS BIGINT) AS cumb
+       |  FROM vals
+       |), s AS (
+       |  SELECT CAST(sum(ca) AS BIGINT) AS n_a,
+       |         CAST(sum(cb) AS BIGINT) AS n_b,
+       |         CAST(sum(ca * (2 * cumb + cb)) AS BIGINT) AS u2_a
+       |  FROM cum)
+       |SELECT n_a, n_b, u2_a,
+       |       CAST(2 * n_a * n_b - u2_a AS BIGINT) AS u2_b,
+       |       CAST(u2_a * 1000000 // (2 * n_a * n_b) AS BIGINT) AS auc_ppm
+       |FROM s""".stripMargin
 
   // --------------------------------------------- difference-in-differences
 
@@ -1593,47 +1638,30 @@ object Events {
         "delta_a_micros - delta_b_micros AS did_micros")
 
   val diffInDiffSql: String =
-    """WITH pu AS (
-      |  SELECT user_id,
-      |         CAST(sum(CASE WHEN event_type = 'purchase'
-      |                        AND ts < TIMESTAMP '2024-01-16 00:00:00'
-      |                       THEN CAST(value AS DECIMAL(24,6))
-      |                       ELSE CAST(0 AS DECIMAL(24,6)) END) * 1000000
-      |              AS BIGINT) AS x,
-      |         CAST(sum(CASE WHEN event_type = 'purchase'
-      |                        AND ts >= TIMESTAMP '2024-01-16 00:00:00'
-      |                       THEN CAST(value AS DECIMAL(24,6))
-      |                       ELSE CAST(0 AS DECIMAL(24,6)) END) * 1000000
-      |              AS BIGINT) AS y
-      |  FROM events GROUP BY user_id
-      |), pv AS (
-      |  SELECT CASE WHEN substr(md5(CAST(user_id AS VARCHAR)), 1, 1) < '8'
-      |              THEN 'A' ELSE 'B' END AS variant, x, y
-      |  FROM pu
-      |), s AS (
-      |  SELECT variant, CAST(count(*) AS BIGINT) AS n,
-      |         CAST(sum(x) AS BIGINT) AS sx, CAST(sum(y) AS BIGINT) AS sy
-      |  FROM pv GROUP BY variant
-      |), wide AS (
-      |  SELECT max(CASE WHEN variant = 'A' THEN n END) AS n_a,
-      |         max(CASE WHEN variant = 'B' THEN n END) AS n_b,
-      |         max(CASE WHEN variant = 'A' THEN sx END) AS sx_a,
-      |         max(CASE WHEN variant = 'B' THEN sx END) AS sx_b,
-      |         max(CASE WHEN variant = 'A' THEN sy END) AS sy_a,
-      |         max(CASE WHEN variant = 'B' THEN sy END) AS sy_b
-      |  FROM s
-      |), d AS (
-      |  SELECT n_a, n_b,
-      |         CAST(sy_a AS DOUBLE) / CAST(n_a AS DOUBLE)
-      |           - CAST(sx_a AS DOUBLE) / CAST(n_a AS DOUBLE)
-      |           AS delta_a_micros,
-      |         CAST(sy_b AS DOUBLE) / CAST(n_b AS DOUBLE)
-      |           - CAST(sx_b AS DOUBLE) / CAST(n_b AS DOUBLE)
-      |           AS delta_b_micros
-      |  FROM wide)
-      |SELECT n_a, n_b, delta_a_micros, delta_b_micros,
-      |       delta_a_micros - delta_b_micros AS did_micros
-      |FROM d""".stripMargin
+    s"""WITH $prePostArmsCtes, s AS (
+       |  SELECT variant, CAST(count(*) AS BIGINT) AS n,
+       |         CAST(sum(x) AS BIGINT) AS sx, CAST(sum(y) AS BIGINT) AS sy
+       |  FROM pv GROUP BY variant
+       |), wide AS (
+       |  SELECT max(CASE WHEN variant = 'A' THEN n END) AS n_a,
+       |         max(CASE WHEN variant = 'B' THEN n END) AS n_b,
+       |         max(CASE WHEN variant = 'A' THEN sx END) AS sx_a,
+       |         max(CASE WHEN variant = 'B' THEN sx END) AS sx_b,
+       |         max(CASE WHEN variant = 'A' THEN sy END) AS sy_a,
+       |         max(CASE WHEN variant = 'B' THEN sy END) AS sy_b
+       |  FROM s
+       |), d AS (
+       |  SELECT n_a, n_b,
+       |         CAST(sy_a AS DOUBLE) / CAST(n_a AS DOUBLE)
+       |           - CAST(sx_a AS DOUBLE) / CAST(n_a AS DOUBLE)
+       |           AS delta_a_micros,
+       |         CAST(sy_b AS DOUBLE) / CAST(n_b AS DOUBLE)
+       |           - CAST(sx_b AS DOUBLE) / CAST(n_b AS DOUBLE)
+       |           AS delta_b_micros
+       |  FROM wide)
+       |SELECT n_a, n_b, delta_a_micros, delta_b_micros,
+       |       delta_a_micros - delta_b_micros AS did_micros
+       |FROM d""".stripMargin
 
   // ------------------------------------------------------ permutation test
 
@@ -1691,17 +1719,9 @@ object Events {
 
   val permutationTestSql: String = {
     val nPerm = 40
-    s"""WITH pu AS (
+    s"""WITH $purchaseMicrosCte, pv AS (
        |  SELECT user_id,
-       |         CAST(sum(CASE WHEN event_type = 'purchase'
-       |                       THEN CAST(value AS DECIMAL(24,6))
-       |                       ELSE CAST(0 AS DECIMAL(24,6)) END) * 1000000
-       |              AS BIGINT) AS x
-       |  FROM events GROUP BY user_id
-       |), pv AS (
-       |  SELECT user_id,
-       |         CASE WHEN substr(md5(CAST(user_id AS VARCHAR)), 1, 1) < '8'
-       |              THEN 'A' ELSE 'B' END AS variant, x
+       |         $variantSql AS variant, x
        |  FROM pu
        |), tagged AS (
        |  SELECT k, x,
@@ -1712,12 +1732,7 @@ object Events {
        |  FROM pv, (SELECT unnest(range(-1, $nPerm)) AS k)
        |), diffs AS (
        |  SELECT k,
-       |         abs(CAST(sum(CASE WHEN v = 'A' THEN x END) AS DOUBLE)
-       |               / CAST(sum(CASE WHEN v = 'A' THEN 1 ELSE 0 END)
-       |                      AS DOUBLE)
-       |             - CAST(sum(CASE WHEN v = 'B' THEN x END) AS DOUBLE)
-       |               / CAST(sum(CASE WHEN v = 'B' THEN 1 ELSE 0 END)
-       |                      AS DOUBLE)) AS adiff
+       |         $armMeanGapSql AS adiff
        |  FROM tagged GROUP BY k
        |  HAVING sum(CASE WHEN v = 'A' THEN 1 ELSE 0 END) > 0
        |     AND sum(CASE WHEN v = 'B' THEN 1 ELSE 0 END) > 0
@@ -1842,12 +1857,7 @@ object Events {
        |  FROM ue, (SELECT unnest(range(-1, $nPerm)) AS k)
        |), diffs AS (
        |  SELECT event_type, k,
-       |         abs(CAST(sum(CASE WHEN v = 'A' THEN x END) AS DOUBLE)
-       |               / CAST(sum(CASE WHEN v = 'A' THEN 1 ELSE 0 END)
-       |                      AS DOUBLE)
-       |             - CAST(sum(CASE WHEN v = 'B' THEN x END) AS DOUBLE)
-       |               / CAST(sum(CASE WHEN v = 'B' THEN 1 ELSE 0 END)
-       |                      AS DOUBLE)) AS adiff
+       |         $armMeanGapSql AS adiff
        |  FROM tagged GROUP BY 1, 2
        |  HAVING sum(CASE WHEN v = 'A' THEN 1 ELSE 0 END) > 0
        |     AND sum(CASE WHEN v = 'B' THEN 1 ELSE 0 END) > 0
@@ -1956,55 +1966,38 @@ object Events {
   }
 
   val cupedSql: String =
-    """WITH pu AS (
-      |  SELECT user_id,
-      |         CAST(sum(CASE WHEN event_type = 'purchase'
-      |                        AND ts < TIMESTAMP '2024-01-16 00:00:00'
-      |                       THEN CAST(value AS DECIMAL(24,6))
-      |                       ELSE CAST(0 AS DECIMAL(24,6)) END) * 1000000
-      |              AS BIGINT) AS x,
-      |         CAST(sum(CASE WHEN event_type = 'purchase'
-      |                        AND ts >= TIMESTAMP '2024-01-16 00:00:00'
-      |                       THEN CAST(value AS DECIMAL(24,6))
-      |                       ELSE CAST(0 AS DECIMAL(24,6)) END) * 1000000
-      |              AS BIGINT) AS y
-      |  FROM events GROUP BY user_id
-      |), pv AS (
-      |  SELECT CASE WHEN substr(md5(CAST(user_id AS VARCHAR)), 1, 1) < '8'
-      |              THEN 'A' ELSE 'B' END AS variant, x, y
-      |  FROM pu
-      |), stats AS (
-      |  SELECT CAST(count(*) AS BIGINT) AS n, CAST(sum(x) AS BIGINT) AS sx,
-      |         CAST(sum(y) AS BIGINT) AS sy,
-      |         CAST(sum(CAST(x AS HUGEINT) * x) AS HUGEINT) AS sxx,
-      |         CAST(sum(CAST(x AS HUGEINT) * y) AS HUGEINT) AS sxy,
-      |         CAST(sum(CAST(y AS HUGEINT) * y) AS HUGEINT) AS syy
-      |  FROM pv
-      |), cm AS (
-      |  SELECT n, sx,
-      |         CAST(n AS HUGEINT) * sxx - CAST(sx AS HUGEINT) * sx AS cxx,
-      |         CAST(n AS HUGEINT) * sxy - CAST(sx AS HUGEINT) * sy AS cxy,
-      |         CAST(n AS HUGEINT) * syy - CAST(sy AS HUGEINT) * sy AS cyy
-      |  FROM stats
-      |), pooled AS (
-      |  SELECT n, sx,
-      |         CAST(cxy AS DOUBLE) / CAST(cxx AS DOUBLE) AS theta,
-      |         CAST((cxy * 1000 // cxx) * (cxy * 1000 // cyy) AS BIGINT)
-      |           AS r2_e6
-      |  FROM cm
-      |), v AS (
-      |  SELECT variant, CAST(count(*) AS BIGINT) AS n_v,
-      |         CAST(sum(x) AS BIGINT) AS sxv, CAST(sum(y) AS BIGINT) AS syv
-      |  FROM pv GROUP BY variant
-      |), m AS (
-      |  SELECT variant, n_v, theta, r2_e6,
-      |         CAST(syv AS DOUBLE) / CAST(n_v AS DOUBLE) AS mean_y_micros,
-      |         CAST(sxv AS DOUBLE) / CAST(n_v AS DOUBLE)
-      |           - CAST(sx AS DOUBLE) / CAST(n AS DOUBLE) AS dx
-      |  FROM v CROSS JOIN pooled)
-      |SELECT variant, n_v AS n, mean_y_micros,
-      |       mean_y_micros - theta * dx AS mean_adj_micros, theta, r2_e6
-      |FROM m""".stripMargin
+    s"""WITH $prePostArmsCtes, stats AS (
+       |  SELECT CAST(count(*) AS BIGINT) AS n, CAST(sum(x) AS BIGINT) AS sx,
+       |         CAST(sum(y) AS BIGINT) AS sy,
+       |         CAST(sum(CAST(x AS HUGEINT) * x) AS HUGEINT) AS sxx,
+       |         CAST(sum(CAST(x AS HUGEINT) * y) AS HUGEINT) AS sxy,
+       |         CAST(sum(CAST(y AS HUGEINT) * y) AS HUGEINT) AS syy
+       |  FROM pv
+       |), cm AS (
+       |  SELECT n, sx,
+       |         CAST(n AS HUGEINT) * sxx - CAST(sx AS HUGEINT) * sx AS cxx,
+       |         CAST(n AS HUGEINT) * sxy - CAST(sx AS HUGEINT) * sy AS cxy,
+       |         CAST(n AS HUGEINT) * syy - CAST(sy AS HUGEINT) * sy AS cyy
+       |  FROM stats
+       |), pooled AS (
+       |  SELECT n, sx,
+       |         CAST(cxy AS DOUBLE) / CAST(cxx AS DOUBLE) AS theta,
+       |         CAST((cxy * 1000 // cxx) * (cxy * 1000 // cyy) AS BIGINT)
+       |           AS r2_e6
+       |  FROM cm
+       |), v AS (
+       |  SELECT variant, CAST(count(*) AS BIGINT) AS n_v,
+       |         CAST(sum(x) AS BIGINT) AS sxv, CAST(sum(y) AS BIGINT) AS syv
+       |  FROM pv GROUP BY variant
+       |), m AS (
+       |  SELECT variant, n_v, theta, r2_e6,
+       |         CAST(syv AS DOUBLE) / CAST(n_v AS DOUBLE) AS mean_y_micros,
+       |         CAST(sxv AS DOUBLE) / CAST(n_v AS DOUBLE)
+       |           - CAST(sx AS DOUBLE) / CAST(n AS DOUBLE) AS dx
+       |  FROM v CROSS JOIN pooled)
+       |SELECT variant, n_v AS n, mean_y_micros,
+       |       mean_y_micros - theta * dx AS mean_adj_micros, theta, r2_e6
+       |FROM m""".stripMargin
 
   // --------------------------------------------------------- A/B analysis
 
@@ -2070,52 +2063,41 @@ object Events {
   }
 
   val abTestSql: String =
-    """WITH pu AS (
-      |  SELECT user_id,
-      |         CAST(sum(CASE WHEN event_type = 'purchase'
-      |                       THEN CAST(value AS DECIMAL(24,6))
-      |                       ELSE CAST(0 AS DECIMAL(24,6)) END) * 1000000
-      |              AS BIGINT) AS x
-      |  FROM events GROUP BY user_id
-      |), pv AS (
-      |  SELECT CASE WHEN substr(md5(CAST(user_id AS VARCHAR)), 1, 1) < '8'
-      |              THEN 'A' ELSE 'B' END AS variant, x
-      |  FROM pu
-      |), s AS (
-      |  SELECT variant, CAST(count(*) AS BIGINT) AS n,
-      |         CAST(sum(x) AS BIGINT) AS sx,
-      |         CAST(sum(CAST(x AS HUGEINT) * x) AS HUGEINT) AS sxx
-      |  FROM pv GROUP BY variant
-      |), wide AS (
-      |  SELECT max(CASE WHEN variant = 'A' THEN n END) AS n_a,
-      |         max(CASE WHEN variant = 'B' THEN n END) AS n_b,
-      |         max(CASE WHEN variant = 'A' THEN sx END) AS sx_a,
-      |         max(CASE WHEN variant = 'B' THEN sx END) AS sx_b,
-      |         max(CASE WHEN variant = 'A' THEN sxx END) AS sxx_a,
-      |         max(CASE WHEN variant = 'B' THEN sxx END) AS sxx_b
-      |  FROM s
-      |), m AS (
-      |  SELECT n_a, n_b,
-      |         CAST(sx_a AS DOUBLE) / CAST(n_a AS DOUBLE) AS mean_a_micros,
-      |         CAST(sx_b AS DOUBLE) / CAST(n_b AS DOUBLE) AS mean_b_micros,
-      |         (CAST(sxx_a AS DOUBLE)
-      |           - CAST(sx_a AS DOUBLE) * CAST(sx_a AS DOUBLE)
-      |             / CAST(n_a AS DOUBLE))
-      |           / CAST(n_a - 1 AS DOUBLE) AS var_a,
-      |         (CAST(sxx_b AS DOUBLE)
-      |           - CAST(sx_b AS DOUBLE) * CAST(sx_b AS DOUBLE)
-      |             / CAST(n_b AS DOUBLE))
-      |           / CAST(n_b - 1 AS DOUBLE) AS var_b
-      |  FROM wide
-      |), t AS (
-      |  SELECT n_a, n_b, mean_a_micros, mean_b_micros, var_a, var_b,
-      |         (mean_a_micros - mean_b_micros)
-      |           / sqrt(var_a / CAST(n_a AS DOUBLE)
-      |                  + var_b / CAST(n_b AS DOUBLE)) AS t_welch
-      |  FROM m)
-      |SELECT n_a, n_b, mean_a_micros, mean_b_micros, var_a, var_b, t_welch,
-      |       abs(t_welch) > 1.959964 AS significant
-      |FROM t""".stripMargin
+    s"""WITH $purchaseArmsCtes, s AS (
+       |  SELECT variant, CAST(count(*) AS BIGINT) AS n,
+       |         CAST(sum(x) AS BIGINT) AS sx,
+       |         CAST(sum(CAST(x AS HUGEINT) * x) AS HUGEINT) AS sxx
+       |  FROM pv GROUP BY variant
+       |), wide AS (
+       |  SELECT max(CASE WHEN variant = 'A' THEN n END) AS n_a,
+       |         max(CASE WHEN variant = 'B' THEN n END) AS n_b,
+       |         max(CASE WHEN variant = 'A' THEN sx END) AS sx_a,
+       |         max(CASE WHEN variant = 'B' THEN sx END) AS sx_b,
+       |         max(CASE WHEN variant = 'A' THEN sxx END) AS sxx_a,
+       |         max(CASE WHEN variant = 'B' THEN sxx END) AS sxx_b
+       |  FROM s
+       |), m AS (
+       |  SELECT n_a, n_b,
+       |         CAST(sx_a AS DOUBLE) / CAST(n_a AS DOUBLE) AS mean_a_micros,
+       |         CAST(sx_b AS DOUBLE) / CAST(n_b AS DOUBLE) AS mean_b_micros,
+       |         (CAST(sxx_a AS DOUBLE)
+       |           - CAST(sx_a AS DOUBLE) * CAST(sx_a AS DOUBLE)
+       |             / CAST(n_a AS DOUBLE))
+       |           / CAST(n_a - 1 AS DOUBLE) AS var_a,
+       |         (CAST(sxx_b AS DOUBLE)
+       |           - CAST(sx_b AS DOUBLE) * CAST(sx_b AS DOUBLE)
+       |             / CAST(n_b AS DOUBLE))
+       |           / CAST(n_b - 1 AS DOUBLE) AS var_b
+       |  FROM wide
+       |), t AS (
+       |  SELECT n_a, n_b, mean_a_micros, mean_b_micros, var_a, var_b,
+       |         (mean_a_micros - mean_b_micros)
+       |           / sqrt(var_a / CAST(n_a AS DOUBLE)
+       |                  + var_b / CAST(n_b AS DOUBLE)) AS t_welch
+       |  FROM m)
+       |SELECT n_a, n_b, mean_a_micros, mean_b_micros, var_a, var_b, t_welch,
+       |       abs(t_welch) > 1.959964 AS significant
+       |FROM t""".stripMargin
 
   /** q264 — THEIL-SEN robust trend of total daily event value (Theil 1950 /
     * Sen 1968): slope = median over all day PAIRS of (Δy/Δd), intercept =

@@ -175,62 +175,53 @@ object Forget {
     * zero one-sided rows — all re-derivable from the documents and
     * embeddings tables alone. */
   val cascadeAuditSql: String =
-    """WITH kd AS (
-      |  SELECT doc_id, text FROM documents WHERE doc_id % 97 <> 0
-      |), ws AS (
-      |  SELECT doc_id, list_distinct(list_transform(
-      |    range(len(string_split(text, ' ')) - 2),
-      |    i -> string_split(text, ' ')[i+1] || ' ' ||
-      |         string_split(text, ' ')[i+2] || ' ' ||
-      |         string_split(text, ' ')[i+3])) AS sh
-      |  FROM kd
-      |), shingled AS (
-      |  SELECT doc_id, unnest(sh) AS shingle FROM ws
-      |), sizes AS (
-      |  SELECT doc_id, count(*) AS n FROM shingled GROUP BY doc_id
-      |), jp AS (
-      |  SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, count(*) AS c
-      |  FROM shingled a JOIN shingled b
-      |    ON a.shingle = b.shingle AND a.doc_id < b.doc_id
-      |  GROUP BY 1, 2
-      |), jpairs AS (
-      |  SELECT p.doc_a FROM jp p
-      |  JOIN sizes sa ON p.doc_a = sa.doc_id
-      |  JOIN sizes sb ON p.doc_b = sb.doc_id
-      |  WHERE 3 * p.c >= sa.n + sb.n
-      |), ke AS (
-      |  SELECT vec_id, embedding FROM embeddings WHERE vec_id % 97 <> 0
-      |), counts(artifact, n) AS (
-      |  SELECT 'shingles_k3', (SELECT count(*) FROM shingled)
-      |  UNION ALL
-      |  SELECT 'minhash16', (SELECT count(*) FROM ws WHERE len(sh) > 0)
-      |  UNION ALL
-      |  SELECT 'simhash', (SELECT count(*) FROM kd WHERE text IS NOT NULL)
-      |  UNION ALL
-      |  SELECT 'ngrampairs', (SELECT count(*) FROM jpairs)
-      |  UNION ALL
-      |  SELECT 'prefix_k3_t35',
-      |         (SELECT coalesce(sum(n - (3 * n + 4) // 5 + 1), 0) FROM sizes)
-      |  UNION ALL
-      |  SELECT 'shingle_arrays', (SELECT count(*) FROM sizes)
-      |  UNION ALL
-      |  SELECT 'phash_bands',
-      |         (SELECT count(*) FROM kd WHERE doc_id % 3 = 0) +
-      |         (SELECT count(*) FROM kd WHERE doc_id % 9 = 0)
-      |  UNION ALL
-      |  SELECT 'int8codes', (SELECT count(*) FROM ke)
-      |  UNION ALL
-      |  SELECT 'ivf_assign_n16',
-      |         (SELECT count(*) FROM ke
-      |          WHERE list_sum(list_transform(embedding::DOUBLE[],
-      |                x -> x * x)) > 0)
-      |  UNION ALL
-      |  SELECT 'pqcodes_m8_n16', (SELECT count(*) * 8 FROM ke)
-      |)
-      |SELECT artifact,
-      |       CAST(n AS BIGINT) AS n_after_delete,
-      |       CAST(n AS BIGINT) AS n_rebuild,
-      |       CAST(0 AS BIGINT) AS n_only_deleted,
-      |       CAST(0 AS BIGINT) AS n_only_rebuild
-      |FROM counts""".stripMargin
+    s"""WITH kd AS (
+       |  SELECT doc_id, text FROM documents WHERE doc_id % 97 <> 0
+       |), ws AS (
+       |  SELECT doc_id, ${Dedup.shingleListSql} AS sh
+       |  FROM kd
+       |), ${Dedup.shingledFromWsCte}, sizes AS (
+       |  ${Dedup.shingleSizesSql}
+       |), jp AS (
+       |  ${Dedup.shingleCommonSql}
+       |), jpairs AS (
+       |  SELECT p.doc_a FROM jp p
+       |  JOIN sizes sa ON p.doc_a = sa.doc_id
+       |  JOIN sizes sb ON p.doc_b = sb.doc_id
+       |  WHERE 3 * p.c >= sa.n + sb.n
+       |), ke AS (
+       |  SELECT vec_id, embedding FROM embeddings WHERE vec_id % 97 <> 0
+       |), counts(artifact, n) AS (
+       |  SELECT 'shingles_k3', (SELECT count(*) FROM shingled)
+       |  UNION ALL
+       |  SELECT 'minhash16', (SELECT count(*) FROM ws WHERE len(sh) > 0)
+       |  UNION ALL
+       |  SELECT 'simhash', (SELECT count(*) FROM kd WHERE text IS NOT NULL)
+       |  UNION ALL
+       |  SELECT 'ngrampairs', (SELECT count(*) FROM jpairs)
+       |  UNION ALL
+       |  SELECT 'prefix_k3_t35',
+       |         (SELECT coalesce(sum(n - (3 * n + 4) // 5 + 1), 0) FROM sizes)
+       |  UNION ALL
+       |  SELECT 'shingle_arrays', (SELECT count(*) FROM sizes)
+       |  UNION ALL
+       |  SELECT 'phash_bands',
+       |         (SELECT count(*) FROM kd WHERE doc_id % 3 = 0) +
+       |         (SELECT count(*) FROM kd WHERE doc_id % 9 = 0)
+       |  UNION ALL
+       |  SELECT 'int8codes', (SELECT count(*) FROM ke)
+       |  UNION ALL
+       |  SELECT 'ivf_assign_n16',
+       |         (SELECT count(*) FROM ke
+       |          WHERE list_sum(list_transform(embedding::DOUBLE[],
+       |                x -> x * x)) > 0)
+       |  UNION ALL
+       |  SELECT 'pqcodes_m8_n16', (SELECT count(*) * 8 FROM ke)
+       |)
+       |SELECT artifact,
+       |       CAST(n AS BIGINT) AS n_after_delete,
+       |       CAST(n AS BIGINT) AS n_rebuild,
+       |       CAST(0 AS BIGINT) AS n_only_deleted,
+       |       CAST(0 AS BIGINT) AS n_only_rebuild
+       |FROM counts""".stripMargin
 }

@@ -402,6 +402,27 @@ object Graph {
         .repartition(col("src"))
     }
 
+  /** SQL twin of [[copurchaseEdges]] (uncapped): distinct (u, v) part
+    * pairs, u < v, bought in one order. */
+  private val coPurchasePairsSql: String =
+    """SELECT DISTINCT a.l_partkey AS u, b.l_partkey AS v
+      |  FROM lineitem a JOIN lineitem b
+      |    ON a.l_orderkey = b.l_orderkey AND a.l_partkey < b.l_partkey""".stripMargin
+
+  /** Both directions of each `pairs(u, v)` row as (src, dst). */
+  private val bothWaysSql: String =
+    """SELECT u AS src, v AS dst FROM pairs
+      |  UNION ALL
+      |  SELECT v AS src, u AS dst FROM pairs""".stripMargin
+
+  /** `pairs` and `e(src, dst)`: the SQL twin of [[undirectedCopurchase]]. */
+  private val coPurchaseEdgeCtes: String =
+    s"""pairs AS (
+       |  $coPurchasePairsSql
+       |), e AS (
+       |  $bothWaysSql
+       |)""".stripMargin
+
   def bfsHops(spark: SparkSession, dir: String, maxHops: Int = 3): DataFrame = {
     require(maxHops >= 1, s"maxHops must be >= 1, got $maxHops")
     val und = undirectedCopurchase(spark, dir)
@@ -436,15 +457,7 @@ object Graph {
          |  GROUP BY node
          |)""".stripMargin
     }.mkString(", ")
-    s"""WITH pairs AS (
-       |  SELECT DISTINCT a.l_partkey AS u, b.l_partkey AS v
-       |  FROM lineitem a JOIN lineitem b
-       |    ON a.l_orderkey = b.l_orderkey AND a.l_partkey < b.l_partkey
-       |), e AS (
-       |  SELECT u AS src, v AS dst FROM pairs
-       |  UNION ALL
-       |  SELECT v AS src, u AS dst FROM pairs
-       |), d0 AS (
+    s"""WITH $coPurchaseEdgeCtes, d0 AS (
        |  SELECT DISTINCT src AS node, 0 AS d FROM e WHERE src % 100 = 0
        |), $rounds
        |SELECT node AS part, CAST(d AS BIGINT) AS hops FROM d$maxHops""".stripMargin
@@ -514,15 +527,7 @@ object Graph {
          |                              1, 8))::BIGINT % d.deg
          |)""".stripMargin
     }.mkString(", ")
-    s"""WITH pairs AS (
-       |  SELECT DISTINCT a.l_partkey AS u, b.l_partkey AS v
-       |  FROM lineitem a JOIN lineitem b
-       |    ON a.l_orderkey = b.l_orderkey AND a.l_partkey < b.l_partkey
-       |), e AS (
-       |  SELECT u AS src, v AS dst FROM pairs
-       |  UNION ALL
-       |  SELECT v AS src, u AS dst FROM pairs
-       |), ranked AS (
+    s"""WITH $coPurchaseEdgeCtes, ranked AS (
        |  SELECT src, dst,
        |         CAST(row_number() OVER (PARTITION BY src ORDER BY dst) - 1
        |              AS BIGINT) AS rk,
@@ -681,20 +686,18 @@ object Graph {
        |JOIN oc nv ON pairs.v = nv.pk, tot""".stripMargin
 
   val triangleCountsSql: String =
-    """WITH e AS (
-      |  SELECT DISTINCT a.l_partkey AS u, b.l_partkey AS v
-      |  FROM lineitem a JOIN lineitem b
-      |    ON a.l_orderkey = b.l_orderkey AND a.l_partkey < b.l_partkey
-      |), tri AS (
-      |  SELECT e1.u, e1.v, e2.v AS w
-      |  FROM e e1 JOIN e e2 ON e1.v = e2.u
-      |  JOIN e e3 ON e1.u = e3.u AND e2.v = e3.v
-      |), corners AS (
-      |  SELECT u AS part FROM tri
-      |  UNION ALL SELECT v FROM tri
-      |  UNION ALL SELECT w FROM tri
-      |)
-      |SELECT part, count(*) AS n_triangles FROM corners GROUP BY part""".stripMargin
+    s"""WITH e AS (
+       |  $coPurchasePairsSql
+       |), tri AS (
+       |  SELECT e1.u, e1.v, e2.v AS w
+       |  FROM e e1 JOIN e e2 ON e1.v = e2.u
+       |  JOIN e e3 ON e1.u = e3.u AND e2.v = e3.v
+       |), corners AS (
+       |  SELECT u AS part FROM tri
+       |  UNION ALL SELECT v FROM tri
+       |  UNION ALL SELECT w FROM tri
+       |)
+       |SELECT part, count(*) AS n_triangles FROM corners GROUP BY part""".stripMargin
 
   /** q165 — SYNCHRONOUS label-propagation communities (LPA) on the
     * co-purchase graph: labels start as node ids; each round every node
@@ -763,15 +766,7 @@ object Graph {
          |  WHERE rk = 1
          |)""".stripMargin
     }.mkString(", ")
-    s"""WITH pairs AS (
-       |  SELECT DISTINCT a.l_partkey AS u, b.l_partkey AS v
-       |  FROM lineitem a JOIN lineitem b
-       |    ON a.l_orderkey = b.l_orderkey AND a.l_partkey < b.l_partkey
-       |), e AS (
-       |  SELECT u AS src, v AS dst FROM pairs
-       |  UNION ALL
-       |  SELECT v AS src, u AS dst FROM pairs
-       |), l0 AS (
+    s"""WITH $coPurchaseEdgeCtes, l0 AS (
        |  SELECT DISTINCT src AS node, src AS label FROM e
        |), $steps
        |SELECT node AS part, CAST(label AS BIGINT) AS community
@@ -916,9 +911,7 @@ object Graph {
        |  FROM l a JOIN l b ON a.ok = b.ok AND a.pk < b.pk
        |  GROUP BY 1, 2 HAVING count(*) >= $minSupport
        |), e0 AS MATERIALIZED (
-       |  SELECT u AS src, v AS dst FROM pairs
-       |  UNION ALL
-       |  SELECT v AS src, u AS dst FROM pairs
+       |  $bothWaysSql
        |)$stepsSql
        |SELECT src AS part, CAST(count(*) AS BIGINT) AS core_degree
        |FROM e$rounds GROUP BY src""".stripMargin

@@ -59,22 +59,28 @@ object Layout {
       .withColumn("zval", zInterleave(col("xq"), col("yq")))
   }
 
+  /** `q(o_orderkey, xq, yq)`: each order's (custkey, date) key quantized
+    * to 16 bits over the global bounds — the SQL twin of [[quant]], shared
+    * by the Z-order and Hilbert oracles. */
+  private val quantizedOrdersCtes: String =
+    """o AS (
+      |  SELECT o_orderkey, o_custkey AS x, epoch_ms(o_orderdate) AS y
+      |  FROM orders
+      |), b AS (
+      |  SELECT min(x) AS min_x, max(x) AS max_x,
+      |         min(y) AS min_y, max(y) AS max_y FROM o
+      |), q AS (
+      |  SELECT o_orderkey,
+      |         ((x - min_x) * 65535) // greatest(max_x - min_x, 1) AS xq,
+      |         ((y - min_y) * 65535) // greatest(max_y - min_y, 1) AS yq
+      |  FROM o CROSS JOIN b
+      |)""".stripMargin
+
   val zorderSampleSql: String = {
     val interleave = (0 until Bits).map { i =>
       s"(((xq >> $i) & 1) << ${2 * i}) | (((yq >> $i) & 1) << ${2 * i + 1})"
     }.mkString(" | ")
-    s"""WITH o AS (
-       |  SELECT o_orderkey, o_custkey AS x, epoch_ms(o_orderdate) AS y
-       |  FROM orders
-       |), b AS (
-       |  SELECT min(x) AS min_x, max(x) AS max_x,
-       |         min(y) AS min_y, max(y) AS max_y FROM o
-       |), q AS (
-       |  SELECT o_orderkey,
-       |         ((x - min_x) * 65535) // greatest(max_x - min_x, 1) AS xq,
-       |         ((y - min_y) * 65535) // greatest(max_y - min_y, 1) AS yq
-       |  FROM o CROSS JOIN b
-       |)
+    s"""WITH $quantizedOrdersCtes
        |SELECT o_orderkey, xq, yq, ($interleave) AS zval FROM q""".stripMargin
   }
 
@@ -202,18 +208,7 @@ object Layout {
            |  FROM l$step)""".stripMargin
       step += 1
     }
-    s"""WITH o AS (
-       |  SELECT o_orderkey, o_custkey AS x, epoch_ms(o_orderdate) AS y
-       |  FROM orders
-       |), b AS (
-       |  SELECT min(x) AS min_x, max(x) AS max_x,
-       |         min(y) AS min_y, max(y) AS max_y FROM o
-       |), q AS (
-       |  SELECT o_orderkey,
-       |         ((x - min_x) * 65535) // greatest(max_x - min_x, 1) AS xq,
-       |         ((y - min_y) * 65535) // greatest(max_y - min_y, 1) AS yq
-       |  FROM o CROSS JOIN b
-       |), l0 AS (
+    s"""WITH $quantizedOrdersCtes, l0 AS (
        |  SELECT o_orderkey, xq, yq, xq AS hx, yq AS hy, CAST(0 AS BIGINT) AS d
        |  FROM q
        |)$levels

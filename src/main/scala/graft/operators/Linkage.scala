@@ -231,11 +231,7 @@ object Linkage {
        |  SELECT name_a AS src, name_b AS dst FROM pairs
        |  UNION
        |  SELECT name_b, name_a FROM pairs
-       |), reach(src, dst) AS (
-       |  SELECT src, dst FROM edges
-       |  UNION
-       |  SELECT r.src, e.dst FROM reach r JOIN edges e ON r.dst = e.src
-       |), cl AS (
+       |), ${Dedup.reachCte}, cl AS (
        |  SELECT src AS name, least(src, min(dst)) AS cluster_id
        |  FROM reach GROUP BY src
        |), m AS (

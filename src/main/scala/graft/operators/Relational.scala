@@ -553,7 +553,10 @@ object Relational {
         col("revenue"), col("n_orders"), col("gid"))
   }
 
-  val cubeRevenueSql: String =
+  /** Revenue and order count per (segment, year) grouping with its `gid`:
+    * the select of the CUBE and GROUPING SETS oracles, which differ only
+    * in their GROUP BY. */
+  private val segmentYearRevenueSql: String =
     """SELECT coalesce(c_mktsegment, '(all)') AS mktsegment,
       |       CAST(coalesce(year(o_orderdate), -1) AS BIGINT) AS yr,
       |       CAST(sum(CAST(round(o_totalprice * 100) AS BIGINT)) AS DOUBLE)
@@ -561,8 +564,11 @@ object Relational {
       |       count(*) AS n_orders,
       |       CAST(grouping(c_mktsegment) * 2 + grouping(year(o_orderdate))
       |            AS BIGINT) AS gid
-      |FROM orders JOIN customer ON o_custkey = c_custkey
-      |GROUP BY CUBE (c_mktsegment, year(o_orderdate))""".stripMargin
+      |FROM orders JOIN customer ON o_custkey = c_custkey""".stripMargin
+
+  val cubeRevenueSql: String =
+    s"""$segmentYearRevenueSql
+       |GROUP BY CUBE (c_mktsegment, year(o_orderdate))""".stripMargin
 
   /** q96 — explicit GROUPING SETS: the general form cube/rollup specialize.
     * Exactly the three business rollups ((segment, year), (segment), ())
@@ -589,16 +595,9 @@ object Relational {
   }
 
   val groupingSetsRevenueSql: String =
-    """SELECT coalesce(c_mktsegment, '(all)') AS mktsegment,
-      |       CAST(coalesce(year(o_orderdate), -1) AS BIGINT) AS yr,
-      |       CAST(sum(CAST(round(o_totalprice * 100) AS BIGINT)) AS DOUBLE)
-      |         / 100.0 AS revenue,
-      |       count(*) AS n_orders,
-      |       CAST(grouping(c_mktsegment) * 2 + grouping(year(o_orderdate))
-      |            AS BIGINT) AS gid
-      |FROM orders JOIN customer ON o_custkey = c_custkey
-      |GROUP BY GROUPING SETS ((c_mktsegment, year(o_orderdate)),
-      |                        (c_mktsegment), ())""".stripMargin
+    s"""$segmentYearRevenueSql
+       |GROUP BY GROUPING SETS ((c_mktsegment, year(o_orderdate)),
+       |                        (c_mktsegment), ())""".stripMargin
 
   /** Approximate distinct counting (HyperLogLog++) — the 100 TB default for
     * cardinality: constant memory per group, order-independent merge, no
@@ -753,6 +752,20 @@ object Relational {
       .select(col("flag"), col("k").cast(LongType).as("k"),
         col("boundary_cents"))
 
+  /** `daily(day, day_cents)`: order revenue per epoch day in integer
+    * cents, and `grid`: every day from the first to the last — the
+    * gap-filled day series of q183, q190 and q197. */
+  private val dayGridCtes: String =
+    """daily AS (
+      |  SELECT epoch_ms(CAST(o_orderdate AS TIMESTAMP)) // 86400000 AS day,
+      |         CAST(sum(CAST(round(o_totalprice * 100) AS BIGINT)) AS BIGINT)
+      |           AS day_cents
+      |  FROM orders GROUP BY 1
+      |), grid AS (
+      |  SELECT unnest(range((SELECT min(day) FROM daily),
+      |                      (SELECT max(day) FROM daily) + 1)) AS day
+      |)""".stripMargin
+
   /** q183 — 7-day TRAILING moving average of daily order revenue on a
     * gap-filled day grid (q80's gap-fill semantics: a day with no orders
     * contributes zero, so the window always spans calendar days, not
@@ -780,23 +793,15 @@ object Relational {
   }
 
   val movingAvgDailyRevenueSql: String =
-    """WITH daily AS (
-      |  SELECT epoch_ms(CAST(o_orderdate AS TIMESTAMP)) // 86400000 AS day,
-      |         CAST(sum(CAST(round(o_totalprice * 100) AS BIGINT)) AS BIGINT)
-      |           AS day_cents
-      |  FROM orders GROUP BY 1
-      |), grid AS (
-      |  SELECT unnest(range((SELECT min(day) FROM daily),
-      |                      (SELECT max(day) FROM daily) + 1)) AS day
-      |), filled AS (
-      |  SELECT g.day, coalesce(d.day_cents, 0) AS day_cents
-      |  FROM grid g LEFT JOIN daily d ON g.day = d.day)
-      |SELECT day, day_cents,
-      |       CAST(sum(day_cents) OVER w AS BIGINT) AS win_cents,
-      |       CAST(sum(day_cents) OVER w * 100 // count(*) OVER w AS BIGINT)
-      |         AS avg_e2
-      |FROM filled
-      |WINDOW w AS (ORDER BY day ROWS BETWEEN 6 PRECEDING AND CURRENT ROW)""".stripMargin
+    s"""WITH $dayGridCtes, filled AS (
+       |  SELECT g.day, coalesce(d.day_cents, 0) AS day_cents
+       |  FROM grid g LEFT JOIN daily d ON g.day = d.day)
+       |SELECT day, day_cents,
+       |       CAST(sum(day_cents) OVER w AS BIGINT) AS win_cents,
+       |       CAST(sum(day_cents) OVER w * 100 // count(*) OVER w AS BIGINT)
+       |         AS avg_e2
+       |FROM filled
+       |WINDOW w AS (ORDER BY day ROWS BETWEEN 6 PRECEDING AND CURRENT ROW)""".stripMargin
 
   /** q190 — SEASONAL-NAIVE FORECAST BACKTEST: on the q183 gap-filled day
     * grid, forecast each day's revenue as last week's same weekday (lag 7)
@@ -830,29 +835,21 @@ object Relational {
   }
 
   val seasonalBacktestSql: String =
-    """WITH daily AS (
-      |  SELECT epoch_ms(CAST(o_orderdate AS TIMESTAMP)) // 86400000 AS day,
-      |         CAST(sum(CAST(round(o_totalprice * 100) AS BIGINT)) AS BIGINT)
-      |           AS day_cents
-      |  FROM orders GROUP BY 1
-      |), grid AS (
-      |  SELECT unnest(range((SELECT min(day) FROM daily),
-      |                      (SELECT max(day) FROM daily) + 1)) AS day
-      |), filled AS (
-      |  SELECT g.day, coalesce(d.day_cents, 0) AS day_cents
-      |  FROM grid g LEFT JOIN daily d ON g.day = d.day
-      |), lagged AS (
-      |  SELECT day, day_cents,
-      |         lag(day_cents, 7) OVER (ORDER BY day) AS f7,
-      |         lag(day_cents, 1) OVER (ORDER BY day) AS f1
-      |  FROM filled)
-      |SELECT (day + 4) % 7 AS dow, CAST(count(*) AS BIGINT) AS n_days,
-      |       CAST(sum(abs(day_cents - f7)) // count(*) AS BIGINT)
-      |         AS mae7_cents,
-      |       CAST(sum(abs(day_cents - f1)) // count(*) AS BIGINT)
-      |         AS mae1_cents
-      |FROM lagged WHERE f7 IS NOT NULL
-      |GROUP BY (day + 4) % 7""".stripMargin
+    s"""WITH $dayGridCtes, filled AS (
+       |  SELECT g.day, coalesce(d.day_cents, 0) AS day_cents
+       |  FROM grid g LEFT JOIN daily d ON g.day = d.day
+       |), lagged AS (
+       |  SELECT day, day_cents,
+       |         lag(day_cents, 7) OVER (ORDER BY day) AS f7,
+       |         lag(day_cents, 1) OVER (ORDER BY day) AS f1
+       |  FROM filled)
+       |SELECT (day + 4) % 7 AS dow, CAST(count(*) AS BIGINT) AS n_days,
+       |       CAST(sum(abs(day_cents - f7)) // count(*) AS BIGINT)
+       |         AS mae7_cents,
+       |       CAST(sum(abs(day_cents - f1)) // count(*) AS BIGINT)
+       |         AS mae1_cents
+       |FROM lagged WHERE f7 IS NOT NULL
+       |GROUP BY (day + 4) % 7""".stripMargin
 
   /** q193 — REVENUE CONCENTRATION (Gini) across customers, exact:
     * gini_ppm = (2·Σ i·xᵢ − (n+1)·Σx) · 10⁶ div (n·Σx) over revenues
@@ -1024,29 +1021,21 @@ object Relational {
   }
 
   val cusumChangepointSql: String =
-    """WITH daily AS (
-      |  SELECT epoch_ms(CAST(o_orderdate AS TIMESTAMP)) // 86400000 AS day,
-      |         CAST(sum(CAST(round(o_totalprice * 100) AS BIGINT)) AS BIGINT)
-      |           AS day_cents
-      |  FROM orders GROUP BY 1
-      |), grid AS (
-      |  SELECT unnest(range((SELECT min(day) FROM daily),
-      |                      (SELECT max(day) FROM daily) + 1)) AS day
-      |), filled AS (
-      |  SELECT g.day, coalesce(d.day_cents, 0) AS day_cents
-      |  FROM grid g LEFT JOIN daily d ON g.day = d.day
-      |), tot AS (
-      |  SELECT CAST(sum(day_cents) AS BIGINT) AS total_cents,
-      |         CAST(count(*) AS BIGINT) AS n_days
-      |  FROM filled
-      |), cusum AS (
-      |  SELECT day, n_days, total_cents,
-      |         CAST(sum(n_days * day_cents - total_cents)
-      |                OVER (ORDER BY day ROWS BETWEEN UNBOUNDED PRECEDING
-      |                      AND CURRENT ROW) AS BIGINT) AS s
-      |  FROM filled CROSS JOIN tot)
-      |SELECT day AS cp_day, n_days, total_cents, s AS s_scaled
-      |FROM cusum ORDER BY abs(s) DESC, day LIMIT 1""".stripMargin
+    s"""WITH $dayGridCtes, filled AS (
+       |  SELECT g.day, coalesce(d.day_cents, 0) AS day_cents
+       |  FROM grid g LEFT JOIN daily d ON g.day = d.day
+       |), tot AS (
+       |  SELECT CAST(sum(day_cents) AS BIGINT) AS total_cents,
+       |         CAST(count(*) AS BIGINT) AS n_days
+       |  FROM filled
+       |), cusum AS (
+       |  SELECT day, n_days, total_cents,
+       |         CAST(sum(n_days * day_cents - total_cents)
+       |                OVER (ORDER BY day ROWS BETWEEN UNBOUNDED PRECEDING
+       |                      AND CURRENT ROW) AS BIGINT) AS s
+       |  FROM filled CROSS JOIN tot)
+       |SELECT day AS cp_day, n_days, total_cents, s AS s_scaled
+       |FROM cusum ORDER BY abs(s) DESC, day LIMIT 1""".stripMargin
 
   /** q199 — revenue-BAND MIGRATION: customers bucketed into spend
     * quartiles separately for the first and second half of the order

@@ -85,9 +85,11 @@ object Retrieval {
       .limit(k)
   }
 
-  def bm25Sql(terms: Seq[String] = QueryTerms, k: Int = 15): String = {
+  /** `d` (each document's words and length), `totals` and `tf`: the
+    * per-(document, term) counts of `terms` that both BM25 oracles score. */
+  private def bm25TfCtes(terms: Seq[String]): String = {
     val inList = terms.map(t => s"'$t'").mkString(", ")
-    s"""WITH d AS (
+    s"""d AS (
        |  SELECT doc_id, string_split(text, ' ') AS ws,
        |         CAST(len(string_split(text, ' ')) AS BIGINT) AS dl
        |  FROM documents
@@ -98,7 +100,11 @@ object Retrieval {
        |  FROM (SELECT doc_id, dl, unnest(ws) AS term FROM d)
        |  WHERE term IN ($inList)
        |  GROUP BY doc_id, dl, term
-       |), df AS (
+       |)""".stripMargin
+  }
+
+  def bm25Sql(terms: Seq[String] = QueryTerms, k: Int = 15): String = {
+    s"""WITH ${bm25TfCtes(terms)}, df AS (
        |  SELECT term, count(*) AS df FROM tf GROUP BY term
        |), scored AS (
        |  SELECT tf.doc_id,
@@ -179,19 +185,7 @@ object Retrieval {
   }
 
   def rrfFusionSql(laneK: Int = 100, k: Int = 20): String = {
-    val inList = QueryTerms.map(t => s"'$t'").mkString(", ")
-    s"""WITH d AS (
-       |  SELECT doc_id, string_split(text, ' ') AS ws,
-       |         CAST(len(string_split(text, ' ')) AS BIGINT) AS dl
-       |  FROM documents
-       |), totals AS (
-       |  SELECT sum(dl) AS t_tokens, count(*) AS n_docs FROM d
-       |), tf AS (
-       |  SELECT doc_id, dl, term, count(*) AS tf
-       |  FROM (SELECT doc_id, dl, unnest(ws) AS term FROM d)
-       |  WHERE term IN ($inList)
-       |  GROUP BY doc_id, dl, term
-       |), dfx AS (
+    s"""WITH ${bm25TfCtes(QueryTerms)}, dfx AS (
        |  SELECT term, count(*) AS df FROM tf GROUP BY term
        |), bm AS (
        |  SELECT tf.doc_id,
@@ -206,24 +200,7 @@ object Retrieval {
        |  SELECT doc_id, CAST(row_number() OVER
        |           (ORDER BY score DESC, doc_id) AS BIGINT) AS rk_lex
        |  FROM bm
-       |), dims AS (
-       |  SELECT i AS pos, min(v[i]) AS lo, max(v[i]) AS hi
-       |  FROM (SELECT CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
-       |       unnest(range(1, len(v) + 1)) AS r(i)
-       |  GROUP BY i
-       |), model AS (
-       |  SELECT list(lo ORDER BY pos) AS los, list(hi ORDER BY pos) AS his
-       |  FROM dims
-       |), coded AS (
-       |  SELECT vec_id, list_transform(range(1, len(v) + 1), i ->
-       |           CASE WHEN his[i] > los[i]
-       |                THEN CAST(round((v[i] - los[i]) / (his[i] - los[i])
-       |                          * 255.0) - 128.0 AS BIGINT)
-       |                ELSE 0 END) AS codes
-       |  FROM (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v
-       |        FROM embeddings),
-       |       model
-       |), probe AS (
+       |), ${SimilaritySearch.int8CodedCtes}, probe AS (
        |  SELECT vec_id AS probe_id, codes AS pcodes FROM coded
        |  ORDER BY vec_id LIMIT 1
        |), semtop AS (

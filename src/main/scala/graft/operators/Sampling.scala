@@ -92,19 +92,24 @@ object Sampling {
       .select(col("doc_id"), col("lang"))
   }
 
-  val mixtureRebalanceSql: String =
-    """WITH counts AS (
-      |  SELECT lang, count(*) AS n FROM documents GROUP BY lang
-      |), rates AS (
-      |  SELECT lang,
-      |         CAST((SELECT min(n) FROM counts) AS DOUBLE) / CAST(n AS DOUBLE)
-      |           AS rate
-      |  FROM counts
-      |)
-      |SELECT d.doc_id, d.lang
+  /** Keep each document whose md5 variate (the SQL twin of [[hashUnit]])
+    * is below its language's `rates` entry: the mixture oracles' select. */
+  private val keepByLangRateSql: String =
+    """SELECT d.doc_id, d.lang
       |FROM documents d JOIN rates r ON d.lang = r.lang
       |WHERE ('0x' || substr(md5(CAST(d.doc_id AS VARCHAR)), 1, 8))::BIGINT
       |        / 4294967296.0 < r.rate""".stripMargin
+
+  val mixtureRebalanceSql: String =
+    s"""WITH counts AS (
+       |  SELECT lang, count(*) AS n FROM documents GROUP BY lang
+       |), rates AS (
+       |  SELECT lang,
+       |         CAST((SELECT min(n) FROM counts) AS DOUBLE) / CAST(n AS DOUBLE)
+       |           AS rate
+       |  FROM counts
+       |)
+       |$keepByLangRateSql""".stripMargin
 
   /** q125 — TEMPERATURE-weighted mixture (τ = 0.5): per-language keep
     * probability √(min_n / n_l) — the standard compromise between the
@@ -136,18 +141,15 @@ object Sampling {
   }
 
   val temperatureMixtureSql: String =
-    """WITH counts AS (
-      |  SELECT lang, count(*) AS n FROM documents GROUP BY lang
-      |), rates AS (
-      |  SELECT lang,
-      |         sqrt(CAST((SELECT min(n) FROM counts) AS DOUBLE)
-      |              / CAST(n AS DOUBLE)) AS rate
-      |  FROM counts
-      |)
-      |SELECT d.doc_id, d.lang
-      |FROM documents d JOIN rates r ON d.lang = r.lang
-      |WHERE ('0x' || substr(md5(CAST(d.doc_id AS VARCHAR)), 1, 8))::BIGINT
-      |        / 4294967296.0 < r.rate""".stripMargin
+    s"""WITH counts AS (
+       |  SELECT lang, count(*) AS n FROM documents GROUP BY lang
+       |), rates AS (
+       |  SELECT lang,
+       |         sqrt(CAST((SELECT min(n) FROM counts) AS DOUBLE)
+       |              / CAST(n AS DOUBLE)) AS rate
+       |  FROM counts
+       |)
+       |$keepByLangRateSql""".stripMargin
 
   /** q132 — token-budget mixture PLANNING (round 6): the "data recipe"
     * computation run before every training-mix job — given per-language

@@ -118,15 +118,7 @@ object SimilaritySearch {
        |         ${dotColsSql("e.u", "q.qu")} AS cos_raw
        |  FROM un e CROSS JOIN q
        |  WHERE e.vec_id <> q.query_id
-       |), ranked AS (
-       |  SELECT query_id, neighbor_id, cos_raw,
-       |         row_number() OVER (PARTITION BY query_id
-       |                            ORDER BY cos_raw DESC, neighbor_id) AS rk
-       |  FROM scored
-       |)
-       |SELECT query_id, neighbor_id, round(cos_raw, 6) AS cosine,
-       |       CAST(rk AS BIGINT) AS rk
-       |FROM ranked WHERE rk <= $k""".stripMargin
+       |), ${cosineTopKTailSql(k)}""".stripMargin
 
   /** [[bruteForceTopK]] with the ranking done by the [[graft.functions.TopKAgg]]
     * typed aggregator instead of a window: candidates shrink to k rows per
@@ -216,8 +208,7 @@ object SimilaritySearch {
        |  WHERE l.label <> q.query_label
        |), ranked AS (
        |  SELECT query_id, query_label, neighbor_id, neighbor_label, cos_raw,
-       |         row_number() OVER (PARTITION BY query_id
-       |                            ORDER BY cos_raw DESC, neighbor_id) AS rk
+       |         $cosineRankSql AS rk
        |  FROM scored
        |)
        |SELECT query_id, query_label, neighbor_id, neighbor_label,
@@ -291,6 +282,24 @@ object SimilaritySearch {
       |  FROM normed WHERE nrm > 0
       |)""".stripMargin
 
+  /** Each query's (cosine DESC, neighbor_id) rank over `cos_raw`: the
+    * tie-break of every cosine top-k oracle. */
+  private val cosineRankSql: String =
+    """row_number() OVER (PARTITION BY query_id
+      |                            ORDER BY cos_raw DESC, neighbor_id)""".stripMargin
+
+  /** `ranked` over a `scored(query_id, neighbor_id, cos_raw)` CTE and the
+    * top-`k` select of the plain cosine top-k oracles. */
+  private def cosineTopKTailSql(k: Int): String =
+    s"""ranked AS (
+       |  SELECT query_id, neighbor_id, cos_raw,
+       |         $cosineRankSql AS rk
+       |  FROM scored
+       |)
+       |SELECT query_id, neighbor_id, round(cos_raw, 6) AS cosine,
+       |       CAST(rk AS BIGINT) AS rk
+       |FROM ranked WHERE rk <= $k""".stripMargin
+
   /** The banded sign-key expression for [[signKey]]'s plane slice, as
     * DuckDB SQL (bit i = 1<<i within the slice). */
   private[operators] def signKeySql(uCol: String,
@@ -313,15 +322,7 @@ object SimilaritySearch {
        |         ${dotColsSql("e.u", "q.qu")} AS cos_raw
        |  FROM keyed e JOIN q ON e.key = q.key
        |  WHERE e.vec_id <> q.query_id
-       |), ranked AS (
-       |  SELECT query_id, neighbor_id, cos_raw,
-       |         row_number() OVER (PARTITION BY query_id
-       |                            ORDER BY cos_raw DESC, neighbor_id) AS rk
-       |  FROM scored
-       |)
-       |SELECT query_id, neighbor_id, round(cos_raw, 6) AS cosine,
-       |       CAST(rk AS BIGINT) AS rk
-       |FROM ranked WHERE rk <= $k""".stripMargin
+       |), ${cosineTopKTailSql(k)}""".stripMargin
   }
 
   /** q124 — kNN JOIN: every vector's top-`k` cosine neighbors within its
@@ -611,14 +612,18 @@ object SimilaritySearch {
         round(col("cosine"), 6).as("cosine"), col("rk").cast(LongType).as("rk"))
   }
 
+  /** `1 − qu·c` of the query to cell `cid`'s center: the IVF oracles'
+    * probe distance. */
+  private def probeDistSql(centers: Array[Array[Double]]): String =
+    centers.zipWithIndex.map { case (c, i) =>
+      s"WHEN $i THEN 1.0 - ${dotLitSql("qu", c)}"
+    }.mkString("CASE cid ", " ", " END")
+
   /** Oracle for [[ivfFilteredTopK]]: [[ivfTopKSql]]'s read path with the
     * label joined into the indexed table and the equality predicate applied
     * before scoring — DuckDB re-derives the entire filtered search. */
   def ivfFilteredTopKSql(centers: Array[Array[Double]], nQueries: Int = 5,
                          k: Int = 10, nprobe: Int = 2): String = {
-    val probeCase = centers.zipWithIndex.map { case (c, i) =>
-      s"WHEN $i THEN 1.0 - ${dotLitSql("qu", c)}"
-    }.mkString("CASE cid ", " ", " END")
     s"""WITH ${coarseLabCtes(centers)}, lv AS (
        |  SELECT l.vec_id, l.u, l.coarse_id, e.label
        |  FROM lab l JOIN embeddings e USING (vec_id)
@@ -626,7 +631,7 @@ object SimilaritySearch {
        |  SELECT vec_id AS query_id, u AS qu, label AS qlabel
        |  FROM lv ORDER BY vec_id LIMIT $nQueries
        |), cand AS (
-       |  SELECT query_id, qu, qlabel, cid, $probeCase AS pd
+       |  SELECT query_id, qu, qlabel, cid, ${probeDistSql(centers)} AS pd
        |  FROM q, (SELECT unnest(range(${centers.length})) AS cid)
        |), probes AS (
        |  SELECT query_id, qu, qlabel, cid
@@ -641,8 +646,7 @@ object SimilaritySearch {
        |  WHERE e.vec_id <> p.query_id AND e.label = p.qlabel
        |), ranked AS (
        |  SELECT query_id, qlabel, neighbor_id, cos_raw,
-       |         row_number() OVER (PARTITION BY query_id
-       |                            ORDER BY cos_raw DESC, neighbor_id) AS rk
+       |         $cosineRankSql AS rk
        |  FROM scored
        |)
        |SELECT query_id, CAST(qlabel AS BIGINT) AS label, neighbor_id,
@@ -681,13 +685,10 @@ object SimilaritySearch {
     * seeded coarse FIT stays spec-land. */
   def ivfTopKSql(centers: Array[Array[Double]], nQueries: Int = 5,
                  k: Int = 10, nprobe: Int = 2): String = {
-    val probeCase = centers.zipWithIndex.map { case (c, i) =>
-      s"WHEN $i THEN 1.0 - ${dotLitSql("qu", c)}"
-    }.mkString("CASE cid ", " ", " END")
     s"""WITH ${coarseLabCtes(centers)}, q AS (
        |  SELECT vec_id AS query_id, u AS qu FROM lab ORDER BY vec_id LIMIT $nQueries
        |), cand AS (
-       |  SELECT query_id, qu, cid, $probeCase AS pd
+       |  SELECT query_id, qu, cid, ${probeDistSql(centers)} AS pd
        |  FROM q, (SELECT unnest(range(${centers.length})) AS cid)
        |), probes AS (
        |  SELECT query_id, qu, cid
@@ -700,15 +701,7 @@ object SimilaritySearch {
        |         ${dotColsSql("e.u", "p.qu")} AS cos_raw
        |  FROM lab e JOIN probes p ON e.coarse_id = p.cid
        |  WHERE e.vec_id <> p.query_id
-       |), ranked AS (
-       |  SELECT query_id, neighbor_id, cos_raw,
-       |         row_number() OVER (PARTITION BY query_id
-       |                            ORDER BY cos_raw DESC, neighbor_id) AS rk
-       |  FROM scored
-       |)
-       |SELECT query_id, neighbor_id, round(cos_raw, 6) AS cosine,
-       |       CAST(rk AS BIGINT) AS rk
-       |FROM ranked WHERE rk <= $k""".stripMargin
+       |), ${cosineTopKTailSql(k)}""".stripMargin
   }
 
   /** Shared recall scaffolding for the q166/q285 audits: per query, the
@@ -819,23 +812,15 @@ object SimilaritySearch {
   }
 
   val quantizeInt8Sql: String =
-    """WITH dims AS (
-      |  SELECT i AS pos, min(v[i]) AS lo, max(v[i]) AS hi
-      |  FROM (SELECT CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
-      |       unnest(range(1, len(v) + 1)) AS r(i)
-      |  GROUP BY i
-      |), model AS (
-      |  SELECT list(lo ORDER BY pos) AS los, list(hi ORDER BY pos) AS his
-      |  FROM dims
-      |)
-      |SELECT vec_id, CAST(len(v) AS BIGINT) AS n_dims,
-      |       array_to_string(list_transform(range(1, len(v) + 1), i ->
-      |         CASE WHEN his[i] > los[i]
-      |              THEN CAST(round((v[i] - los[i]) / (his[i] - los[i]) * 255.0)
-      |                        - 128.0 AS BIGINT)
-      |              ELSE 0 END), ',') AS codes
-      |FROM (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
-      |     model""".stripMargin
+    s"""WITH $int8ModelCtes
+       |SELECT vec_id, CAST(len(v) AS BIGINT) AS n_dims,
+       |       array_to_string(list_transform(range(1, len(v) + 1), i ->
+       |         CASE WHEN his[i] > los[i]
+       |              THEN CAST(round((v[i] - los[i]) / (his[i] - los[i]) * 255.0)
+       |                        - 128.0 AS BIGINT)
+       |              ELSE 0 END), ',') AS codes
+       |FROM (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
+       |     model""".stripMargin
 
   /** q170 — INT8 retrieval over the q58 quantized codes: top-k by exact
     * INTEGER dot product of int8 code vectors — the memory-bound rescoring
@@ -881,24 +866,7 @@ object SimilaritySearch {
   }
 
   def annInt8TopKSql(nQueries: Int = 5, k: Int = 10): String =
-    s"""WITH dims AS (
-       |  SELECT i AS pos, min(v[i]) AS lo, max(v[i]) AS hi
-       |  FROM (SELECT CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
-       |       unnest(range(1, len(v) + 1)) AS r(i)
-       |  GROUP BY i
-       |), model AS (
-       |  SELECT list(lo ORDER BY pos) AS los, list(hi ORDER BY pos) AS his
-       |  FROM dims
-       |), coded AS (
-       |  SELECT vec_id, list_transform(range(1, len(v) + 1), i ->
-       |           CASE WHEN his[i] > los[i]
-       |                THEN CAST(round((v[i] - los[i]) / (his[i] - los[i])
-       |                          * 255.0) - 128.0 AS BIGINT)
-       |                ELSE 0 END) AS codes
-       |  FROM (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v
-       |        FROM embeddings),
-       |       model
-       |), q AS (
+    s"""WITH $int8CodedCtes, q AS (
        |  SELECT vec_id AS query_id, codes AS qcodes FROM coded
        |  ORDER BY vec_id LIMIT $nQueries
        |), scored AS (
@@ -1068,6 +1036,36 @@ object SimilaritySearch {
 
   private val Int8CodesLayout =
     Staging.Layout("int8codes", "embeddings", Int8CodesVersion)
+
+  // lazy: [[quantizeInt8Sql]], declared above, interpolates these; a
+  // plain val would freeze "null" into its oracle.
+
+  /** The int8 lattice in DuckDB: per-dimension bounds `dims` and their
+    * `model` lists (`los`, `his`) — the SQL twin of [[int8Dims]]. */
+  private lazy val int8ModelCtes: String =
+    """dims AS (
+      |  SELECT i AS pos, min(v[i]) AS lo, max(v[i]) AS hi
+      |  FROM (SELECT CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
+      |       unnest(range(1, len(v) + 1)) AS r(i)
+      |  GROUP BY i
+      |), model AS (
+      |  SELECT list(lo ORDER BY pos) AS los, list(hi ORDER BY pos) AS his
+      |  FROM dims
+      |)""".stripMargin
+
+  /** [[int8ModelCtes]] plus `coded(vec_id, codes)`: every embedding's int8
+    * code list — the SQL twin of [[int8CodedArray]]. */
+  private[operators] lazy val int8CodedCtes: String =
+    s"""$int8ModelCtes, coded AS (
+       |  SELECT vec_id, list_transform(range(1, len(v) + 1), i ->
+       |           CASE WHEN his[i] > los[i]
+       |                THEN CAST(round((v[i] - los[i]) / (his[i] - los[i])
+       |                          * 255.0) - 128.0 AS BIGINT)
+       |                ELSE 0 END) AS codes
+       |  FROM (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v
+       |        FROM embeddings),
+       |       model
+       |)""".stripMargin
   private[graft] def ivfAssignLayout(nlist: Int): Staging.Layout =
     Staging.Layout(s"ivf_assign_n$nlist", "embeddings", IvfAssignVersion)
   private def pqCodesLayout(m: Int, ncodes: Int): Staging.Layout =
@@ -1290,38 +1288,26 @@ object SimilaritySearch {
         expr("total_distortion div n_vecs").as("mean_distortion"))
   }
 
+  /** `anchors(s, cid, asub)`: the captured PQ codebook as literal rows. */
+  private def codebookAnchorsCte(cb: Array[Array[Array[Long]]]): String = {
+    val rows = for (s <- cb.indices; cid <- cb(s).indices)
+      yield s"($s, $cid, [${cb(s)(cid).mkString(", ")}])"
+    s"""anchors AS (
+       |  SELECT * FROM (VALUES
+       |    ${rows.mkString(",\n    ")}) AS t(s, cid, asub)
+       |)""".stripMargin
+  }
+
   /** [[codebookDriftAudit]]'s oracle: the q58 lattice CTEs, the captured
     * codebook as anchor literals, the identical integer min-distance
     * sums, the identical md5 slice routing. */
   def codebookDriftSql(cb: Array[Array[Array[Long]]], m: Int = 8): String = {
     val dsub = cb(0)(0).length
-    val anchorValues = (for (s <- cb.indices; cid <- cb(s).indices) yield
-      s"($s, $cid, [${cb(s)(cid).mkString(", ")}])").mkString(",\n    ")
     val terms = (1 to dsub).map { j =>
       s"(v.codes[a.s * $dsub + $j] - a.asub[$j])" +
         s" * (v.codes[a.s * $dsub + $j] - a.asub[$j])"
     }.mkString(" + ")
-    s"""WITH dims AS (
-       |  SELECT i AS pos, min(v[i]) AS lo, max(v[i]) AS hi
-       |  FROM (SELECT CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
-       |       unnest(range(1, len(v) + 1)) AS r(i)
-       |  GROUP BY i
-       |), model AS (
-       |  SELECT list(lo ORDER BY pos) AS los, list(hi ORDER BY pos) AS his
-       |  FROM dims
-       |), coded AS (
-       |  SELECT vec_id, list_transform(range(1, len(v) + 1), i ->
-       |           CASE WHEN his[i] > los[i]
-       |                THEN CAST(round((v[i] - los[i]) / (his[i] - los[i])
-       |                          * 255.0) - 128.0 AS BIGINT)
-       |                ELSE 0 END) AS codes
-       |  FROM (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v
-       |        FROM embeddings),
-       |       model
-       |), anchors AS (
-       |  SELECT * FROM (VALUES
-       |    $anchorValues) AS t(s, cid, asub)
-       |), mins AS (
+    s"""WITH $int8CodedCtes, ${codebookAnchorsCte(cb)}, mins AS (
        |  SELECT v.vec_id, a.s, min($terms) AS dmin
        |  FROM coded v, anchors a
        |  GROUP BY v.vec_id, a.s
@@ -1609,24 +1595,7 @@ object SimilaritySearch {
        |  $sl
        |), bf AS (
        |  $bf
-       |), dims AS (
-       |  SELECT i AS pos, min(v[i]) AS lo, max(v[i]) AS hi
-       |  FROM (SELECT CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
-       |       unnest(range(1, len(v) + 1)) AS r(i)
-       |  GROUP BY i
-       |), model AS (
-       |  SELECT list(lo ORDER BY pos) AS los, list(hi ORDER BY pos) AS his
-       |  FROM dims
-       |), coded AS (
-       |  SELECT vec_id, list_transform(range(1, len(v) + 1), i ->
-       |           CASE WHEN his[i] > los[i]
-       |                THEN CAST(round((v[i] - los[i]) / (his[i] - los[i])
-       |                          * 255.0) - 128.0 AS BIGINT)
-       |                ELSE 0 END) AS codes
-       |  FROM (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v
-       |        FROM embeddings),
-       |       model
-       |), qc AS (
+       |), $int8CodedCtes, qc AS (
        |  SELECT vec_id AS query_id, codes AS qcodes FROM coded
        |  ORDER BY vec_id LIMIT $nQueries
        |), rescored AS (
@@ -1671,33 +1640,11 @@ object SimilaritySearch {
   def pqAdcTopKSql(cb: Array[Array[Array[Long]]], nQueries: Int = 5,
                    k: Int = 10): String = {
     val dsub = cb(0)(0).length
-    val anchorValues = (for (s <- cb.indices; cid <- cb(s).indices) yield
-      s"($s, $cid, [${cb(s)(cid).mkString(", ")}])").mkString(",\n    ")
     def terms(a: String, b: String, s: String) = (1 to dsub).map { j =>
       s"($a[$s * $dsub + $j] - $b[$j])" +
         s" * ($a[$s * $dsub + $j] - $b[$j])"
     }.mkString(" + ")
-    s"""WITH dims AS (
-       |  SELECT i AS pos, min(v[i]) AS lo, max(v[i]) AS hi
-       |  FROM (SELECT CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
-       |       unnest(range(1, len(v) + 1)) AS r(i)
-       |  GROUP BY i
-       |), model AS (
-       |  SELECT list(lo ORDER BY pos) AS los, list(hi ORDER BY pos) AS his
-       |  FROM dims
-       |), coded AS (
-       |  SELECT vec_id, list_transform(range(1, len(v) + 1), i ->
-       |           CASE WHEN his[i] > los[i]
-       |                THEN CAST(round((v[i] - los[i]) / (his[i] - los[i])
-       |                          * 255.0) - 128.0 AS BIGINT)
-       |                ELSE 0 END) AS codes
-       |  FROM (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v
-       |        FROM embeddings),
-       |       model
-       |), anchors AS (
-       |  SELECT * FROM (VALUES
-       |    $anchorValues) AS t(s, cid, asub)
-       |), cd AS (
+    s"""WITH $int8CodedCtes, ${codebookAnchorsCte(cb)}, cd AS (
        |  SELECT v.vec_id, a.s, a.cid,
        |         ${terms("v.codes", "a.asub", "a.s")} AS d
        |  FROM coded v, anchors a
@@ -1857,24 +1804,7 @@ object SimilaritySearch {
   }
 
   def coresetSampleSql(seeds: Int = 4, target: Int = 64): String =
-    s"""WITH dims AS (
-       |  SELECT i AS pos, min(v[i]) AS lo, max(v[i]) AS hi
-       |  FROM (SELECT CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
-       |       unnest(range(1, len(v) + 1)) AS r(i)
-       |  GROUP BY i
-       |), model AS (
-       |  SELECT list(lo ORDER BY pos) AS los, list(hi ORDER BY pos) AS his
-       |  FROM dims
-       |), coded AS (
-       |  SELECT vec_id, list_transform(range(1, len(v) + 1), i ->
-       |           CASE WHEN his[i] > los[i]
-       |                THEN CAST(round((v[i] - los[i]) / (his[i] - los[i])
-       |                          * 255.0) - 128.0 AS BIGINT)
-       |                ELSE 0 END) AS codes
-       |  FROM (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v
-       |        FROM embeddings),
-       |       model
-       |), anchors AS (
+    s"""WITH $int8CodedCtes, anchors AS (
        |  SELECT vec_id AS seed_id, codes AS scodes FROM (
        |    SELECT vec_id, codes, row_number() OVER (
        |             ORDER BY md5(CAST(vec_id AS VARCHAR)), vec_id) AS rn

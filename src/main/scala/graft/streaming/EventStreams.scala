@@ -790,41 +790,17 @@ object EventStreams {
       shufflePartitions = Some(4), awaitStateFlush = true)
 
   val intervalJoinFullOuterSql: String =
-    """WITH c AS (
-      |  SELECT user_id, event_id, CAST(ts AS TIMESTAMP) AS ts
-      |  FROM events WHERE event_type = 'click'
-      |), e AS (
-      |  SELECT user_id, event_id, CAST(ts AS TIMESTAMP) AS ts
-      |  FROM events WHERE event_type = 'error'
-      |), wm AS (
-      |  SELECT least((SELECT max(ts) FROM c), (SELECT max(ts) FROM e))
-      |           - INTERVAL 1 HOUR AS w
-      |)
-      |SELECT c.user_id, c.event_id AS click_id, e.event_id AS error_id,
-      |       epoch_ms(e.ts) - epoch_ms(c.ts) AS delay_ms
-      |FROM c JOIN e
-      |  ON c.user_id = e.user_id
-      | AND e.ts >= c.ts AND e.ts <= c.ts + INTERVAL 60 MINUTE
-      |UNION ALL
-      |SELECT c.user_id, c.event_id AS click_id,
-      |       CAST(NULL AS BIGINT) AS error_id,
-      |       CAST(NULL AS BIGINT) AS delay_ms
-      |FROM c
-      |WHERE NOT EXISTS (
-      |        SELECT 1 FROM e
-      |        WHERE e.user_id = c.user_id
-      |          AND e.ts >= c.ts AND e.ts <= c.ts + INTERVAL 60 MINUTE)
-      |  AND c.ts + INTERVAL 60 MINUTE < (SELECT w FROM wm)
-      |UNION ALL
-      |SELECT e.user_id, CAST(NULL AS BIGINT) AS click_id,
-      |       e.event_id AS error_id,
-      |       CAST(NULL AS BIGINT) AS delay_ms
-      |FROM e
-      |WHERE NOT EXISTS (
-      |        SELECT 1 FROM c
-      |        WHERE c.user_id = e.user_id
-      |          AND e.ts >= c.ts AND e.ts <= c.ts + INTERVAL 60 MINUTE)
-      |  AND e.ts < (SELECT w FROM wm)""".stripMargin
+    s"""$intervalJoinLeftOuterSql
+       |UNION ALL
+       |SELECT e.user_id, CAST(NULL AS BIGINT) AS click_id,
+       |       e.event_id AS error_id,
+       |       CAST(NULL AS BIGINT) AS delay_ms
+       |FROM e
+       |WHERE NOT EXISTS (
+       |        SELECT 1 FROM c
+       |        WHERE c.user_id = e.user_id
+       |          AND e.ts >= c.ts AND e.ts <= c.ts + INTERVAL 60 MINUTE)
+       |  AND e.ts < (SELECT w FROM wm)""".stripMargin
 
   /** q146 — NATIVE streaming session windows (`session_window`): the
     * merging-window state operator, complementing the two hand-rolled
@@ -906,13 +882,8 @@ object EventStreams {
       OutputMode.Complete, shufflePartitions = Some(4))
   }
 
-  val enrichStreamSql: String =
-    """SELECT c_mktsegment AS mktsegment, count(*) AS n,
-      |       CAST(sum(CAST(round(value * 100) AS BIGINT)) AS BIGINT)
-      |         AS value_cents
-      |FROM events JOIN customer ON user_id = c_custkey
-      |WHERE event_type = 'purchase'
-      |GROUP BY c_mktsegment""".stripMargin
+  // the same per-segment purchase totals as the bucketed batch join
+  val enrichStreamSql: String = graft.operators.Bucketing.bucketedSegmentAggSql
 
   /** q152 — the SLIDING-window aggregate ([[slidingWindowed]]) as a real
     * driven-to-completion streaming contract query: 1-hour windows sliding

@@ -353,16 +353,25 @@ class ClusteringSpec extends AnyFunSuite {
   }
 
   test("fit leaves a caller's cache in place and no cache entry of its own") {
-    val cachedIn = csvRfm().cache()
-    try {
-      Clustering.fit(cachedIn, k = 3)
-      assert(cachedIn.storageLevel != StorageLevel.NONE)
-    } finally cachedIn.unpersist()
-    val uncached = csvRfm()
-    assert(uncached.storageLevel == StorageLevel.NONE)
-    Clustering.fit(uncached, k = 3)
-    assert(uncached.storageLevel == StorageLevel.NONE,
-      "fit left a CacheManager entry for its input's plan")
+    Seq[(String, DataFrame => Clustering.Segmentation)](
+      "driver" -> (Clustering.fit(_, k = 3)),
+      "sampled" -> (fitHalf(_, 3))).foreach { case (path, fit) =>
+      val cachedIn = csvRfm().cache()
+      try {
+        fit(cachedIn)
+        assert(cachedIn.storageLevel != StorageLevel.NONE, path)
+      } finally cachedIn.unpersist()
+      val uncached = csvRfm()
+      assert(uncached.storageLevel == StorageLevel.NONE)
+      val before = spark.sparkContext.getPersistentRDDs.keySet
+      val s = fit(uncached)
+      assert(uncached.storageLevel == StorageLevel.NONE,
+        s"$path: fit left a CacheManager entry for its input's plan")
+      assert(s.predictions.storageLevel == StorageLevel.NONE,
+        s"$path: the predictions stay cached at ${s.predictions.storageLevel}")
+      val left = spark.sparkContext.getPersistentRDDs.keySet.filterNot(before)
+      assert(left.isEmpty, s"$path: fit left persisted RDDs $left")
+    }
   }
 
   // ---- adversarial inputs, on both paths ------------------------------------
@@ -469,7 +478,7 @@ class ClusteringSpec extends AnyFunSuite {
   /** Jobs of a sampled fit outside its steps: the two stats aggregates,
     * the pinned cache's shuffle, the sample, the aggregate at the final
     * centers, and the bounds, scatter and silhouette read-outs. */
-  private val SampledFitOverheadJobs = 14
+  private val SampledFitOverheadJobs = 13
 
   test("a sample with fewer than k rows is a declared error") {
     import spark.implicits._

@@ -27,4 +27,21 @@ class VerifySpec extends AnyFunSuite {
       assert(json == "{\"q_good\": \"SELECT 1 AS id\"}")
     } finally graft.operators.Staging.deleteRecursively(out)
   }
+
+  /** The words of `sql` outside its '...' literals and -- comments (a ''
+    * escape reads as two adjacent literals). */
+  private def codeWords(sql: String): Seq[String] =
+    "[A-Za-z0-9_]+".r.findAllIn(sql.replaceAll("'[^']*'|--[^\n]*", " ")).toSeq
+
+  test("no oracle entry interpolates an uninitialized SQL fragment") {
+    assert(codeWords("WITH null, b AS (SELECT 1)").contains("null"))
+    assert(!codeWords("SELECT 'null', 'it''s null' AS n_null -- null\nFROM t")
+      .contains("null"))
+    // a fragment val read before its initializer has run interpolates as
+    // the word null
+    val bad = SparkEntry.oracleSql.collect {
+      case (name, sql) if codeWords(sql).contains("null") => name
+    }
+    assert(bad.isEmpty, s"null interpolated into ${bad.toSeq.sorted.mkString(", ")}")
+  }
 }
